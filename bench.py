@@ -215,7 +215,7 @@ def _extract_once(transcripts_path: str, cores: int, limit: int | None) -> None:
     # codegen/Arrow paths — measured directly in round 5: the same warm
     # 16-core 500k-turn pass runs 33s vs 40s behind a tiny warmup, a
     # ramp constant that read as ~0.08 of fake anti-scaling in the
-    # linear window.  The warmup sample goes through the same salted
+    # linear window.  The warmup sample goes through the same range
     # repartition, so all `cores` workers start (reuse is by worker
     # process, not by data).
     n_target = limit or total

@@ -3,17 +3,22 @@
 The reference's per-document driver (/root/reference/src/t-pdf:86-145) runs
 one process per PDF; here the whole corpus is one DataFrame pass:
 
-    read -> salt + repartition -> mapInPandas(extract_batch) -> sink
+    read -> range repartition -> mapInPandas(extract_batch) -> sink
 
 Scale design (for a 1000-executor cluster over ~10^12 turns):
 
 * the extraction kernel is a pure function of one row, so parallelism is
-  unconstrained -- we repartition on ``(conv_id, salt)`` where salt splits
-  long conversations (heavy-tail skew, FIXTURES.md section 5) into
-  SALT_TURNS-sized slices.  This keeps conversation locality for the
-  partitioned sink while bounding the largest partition, the explicit
-  salting required by the north rule (AQE cannot rebalance inside
-  mapInPandas groups).
+  unconstrained -- every entry point range-partitions on its natural key
+  (``balanced``): ``(conv_id, turn_idx)``, or ``(bucket, conv_id,
+  turn_idx)`` ahead of the resumable sink.  Range bounds split a skewed
+  conversation (heavy-tail skew, FIXTURES.md section 5) at any turn and
+  give every task the same row count, so a stage of one task per slot
+  runs in one wave; each task still holds one contiguous key range,
+  which keeps conversation locality for the partitioned sink.  This is
+  the explicit skew handling the north rule requires (AQE cannot
+  rebalance inside mapInPandas groups).  The bounds cost one sampling
+  job that re-reads the exchange's child once (25-65 ms per pass on the
+  2.3k-turn benchmark corpus at local[4]).
 * zero per-row Python at the DataFrame level: the kernel runs on Arrow
   batches (spark.sql.execution.arrow.maxRecordsPerBatch bounds memory).
 * resumability: the sink is partitioned by ``bucket`` (hash of conv_id);
@@ -30,20 +35,12 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .extract import extract_turn_auto, extracted_text
 from .schema import EXTRACTION_SCHEMA
-
-_EXTRACTION_WITH_BUCKET = T.StructType(
-    EXTRACTION_SCHEMA.fields + [T.StructField("bucket", T.IntegerType(), False)]
-)
-
-# turns per salt slice: one Arrow batch of a skewed conversation never
-# exceeds this many rows from a single conv
-SALT_TURNS = 256
 
 
 def build_session(
@@ -159,23 +156,26 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def salted(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Repartition on (conv_id, turn-slice salt): conversation locality with
-    bounded per-conv slice size (explicit skew handling).
+def balanced(
+    df: DataFrame, *keys: str | Column, num_partitions: int | None = None
+) -> DataFrame:
+    """Range-partition on ``keys`` into tasks of equal row count: the one
+    shuffle ahead of every extraction stage.  Default: one task per slot
+    (the scheduler's parallelism), so the Python stage runs in one wave.
+
+    Range bounds come from a sample of the keys -- one extra job that
+    re-reads this exchange's child once -- and split a skewed conversation
+    at any turn; each task covers one contiguous key range.
 
     The partition count is ALWAYS explicit: a column-only repartition is an
     AQE-coalescible shuffle, and AQE's size-based coalescing sees only the
     small input bytes -- not the Python kernel cost per row -- so it would
     collapse the extraction stage to a handful of partitions and serialize
-    the mapInPandas work.  Default: 3x the scheduler's parallelism.
+    the mapInPandas work.
     """
-    salt = F.pmod(
-        F.hash(F.col("conv_id"), (F.col("turn_idx") / F.lit(SALT_TURNS)).cast("long")),
-        F.lit(1 << 14),
-    ).alias("_salt")
     if not num_partitions:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 3
-    return df.repartition(num_partitions, F.col("conv_id"), salt)
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(num_partitions, *keys)
 
 
 def extract_transcripts(
@@ -187,9 +187,10 @@ def extract_transcripts(
     sort; leave False for the 100TB path and rely on
     sortWithinPartitions at write time instead.
     """
-    out = salted(df.select("conv_id", "turn_idx", "text"), num_partitions).mapInPandas(
-        _extract_batches, schema=EXTRACTION_SCHEMA
-    )
+    out = balanced(
+        df.select("conv_id", "turn_idx", "text"), "conv_id", "turn_idx",
+        num_partitions=num_partitions,
+    ).mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
     if order:
         out = out.orderBy("conv_id", "turn_idx")
     else:
@@ -246,12 +247,11 @@ def extract_payload_turns(
             inner["_line_px"] = geoms
             yield from _extract_batches(iter([inner]))
 
-    src = df.select("conv_id", "turn_idx", payload_col)
-    if not num_partitions:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 3
-    salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(1 << 14)).alias("_s")
     return (
-        src.repartition(num_partitions, F.col("conv_id"), salt)
+        balanced(
+            df.select("conv_id", "turn_idx", payload_col), "conv_id", "turn_idx",
+            num_partitions=num_partitions,
+        )
         .mapInPandas(batches, schema=EXTRACTION_SCHEMA)
         .sortWithinPartitions("conv_id", "turn_idx")
     )
@@ -334,48 +334,26 @@ def run_resumable_extraction(
         return []
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    src = transcripts.withColumn(
-        "bucket", F.pmod(F.hash("conv_id"), F.lit(n_buckets))
-    )
+    bucket = F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+    src = transcripts.select("conv_id", "turn_idx", "text")
     if done:
-        src = src.filter(~F.col("bucket").isin(sorted(done)))
-    # shuffle on a bucket-dominant composite key, NOT conv_id alone: each
-    # shuffle key maps to exactly one bucket, so a write task emits files
-    # for only the buckets hashed to it -- O(n_buckets * per_bucket)
-    # files total instead of partitions x buckets tiny ones (measured
-    # 6,144 -> ~64 files on a 1M-turn corpus).  per_bucket adds
-    # intra-bucket parallelism when buckets are fewer than cores; the
-    # conv-slice salt inside it still splits skewed conversations
-    salt = F.pmod(
-        F.hash("conv_id", (F.col("turn_idx") / F.lit(SALT_TURNS)).cast("long")),
-        F.lit(1 << 14),
+        src = src.filter(~bucket.isin(sorted(done)))
+    # range shuffle on (bucket, conv_id, turn_idx): equal write tasks, each
+    # covering one contiguous bucket range, so the sink writes at most
+    # tasks + n_buckets - 1 files.  The local sort leads with bucket so it
+    # satisfies the planned write's required ordering; a sort that does
+    # not is replaced by the write's own Sort [bucket] and the files lose
+    # their (conv_id, turn_idx) order
+    (
+        balanced(src, bucket, "conv_id", "turn_idx")
+        .mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
+        .withColumn("bucket", bucket)
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+        .write.mode("overwrite").partitionBy("bucket").parquet(out_path)
     )
-    n_parts = spark.sparkContext.defaultParallelism * 3
-    per_bucket = max(1, n_parts // n_buckets)
-    write_key = F.col("bucket") * per_bucket + F.pmod(salt, F.lit(per_bucket))
-    extracted = (
-        src.select("conv_id", "turn_idx", "text", "bucket")
-        .repartition(n_parts, write_key)
-        .mapInPandas(
-            _extract_batches_with_bucket,
-            schema=_EXTRACTION_WITH_BUCKET,
-        )
-        .sortWithinPartitions("conv_id", "turn_idx")
-    )
-    extracted.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
     with open(manifest, "w") as f:
         json.dump(sorted(done | set(todo)), f)
     return todo
-
-
-def _extract_batches_with_bucket(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        buckets = pdf["bucket"].values
-        for out in _extract_batches(iter([pdf])):
-            out["bucket"] = buckets[: len(out)]
-            yield out
 
 
 def observed_extraction(

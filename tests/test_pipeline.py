@@ -1,4 +1,4 @@
-"""Spark pipeline tests: mapInPandas extraction, salting, lineage, and the
+"""Spark pipeline tests: mapInPandas extraction, balancing, lineage, and the
 checkpoint/resume driver."""
 
 import os
@@ -82,19 +82,79 @@ def test_salting_bounds_partition_size(spark):
     rows, _ = synth.generate(n_convs=1, seed=5, skew_convs=1, skew_factor=200)
     assert len(rows) > 1000
     df = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    from crrf_det_spark.pipeline import salted
+    from crrf_det_spark.pipeline import balanced
 
     import pyspark.sql.functions as F
 
     sizes = (
-        salted(df, num_partitions=16)
+        balanced(df, "conv_id", "turn_idx", num_partitions=16)
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
         .collect()
     )
-    assert len(sizes) > 1, "salting failed: one conversation in one partition"
+    assert len(sizes) > 1, "balancing failed: one conversation in one partition"
     assert max(r["count"] for r in sizes) < len(rows)
+
+
+def _shuffled_skewed_corpus(spark):
+    import random
+
+    rows, _ = synth.generate(40, seed=3, skew_convs=1, skew_factor=20)
+    random.Random(3).shuffle(rows)
+    return rows, spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+
+
+def _written_files(out):
+    return [
+        os.path.join(out, d, f)
+        for d in os.listdir(out) if d.startswith("bucket=")
+        for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")
+    ]
+
+
+def test_resumable_write_files_sorted(spark, tmp_path):
+    """Every written file is sorted by (conv_id, turn_idx), also when the
+    input rows arrive shuffled: the planned partitioned write must not
+    replace the requested local sort with its own Sort [bucket]."""
+    import pyarrow.parquet as pq
+
+    _, df = _shuffled_skewed_corpus(spark)
+    out = str(tmp_path / "extraction")
+    run_resumable_extraction(spark, df, out, n_buckets=8)
+    files = _written_files(out)
+    assert files
+    for path in files:
+        t = pq.read_table(path, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t.column("conv_id").to_pylist(),
+                        t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), path
+
+
+def test_resumable_write_balanced_and_file_count(spark, tmp_path):
+    """One skewed conversation holds a third of the corpus; the write tasks
+    still get equal row counts, and each task covers one contiguous
+    bucket range, so files <= tasks + buckets - 1."""
+    import collections
+    import re
+
+    import pyarrow.parquet as pq
+
+    rows, df = _shuffled_skewed_corpus(spark)
+    n_buckets = 8
+    out = str(tmp_path / "extraction")
+    run_resumable_extraction(spark, df, out, n_buckets=n_buckets)
+    files = _written_files(out)
+    per_task = collections.Counter()
+    for path in files:
+        task = int(re.match(r"part-(\d+)-", os.path.basename(path)).group(1))
+        per_task[task] += pq.read_metadata(path).num_rows
+    assert sum(per_task.values()) == len(rows)
+    # one task per slot; tasks that wrote nothing still count in the mean
+    n_parts = spark.sparkContext.defaultParallelism
+    counts = [per_task.get(t, 0) for t in range(max(n_parts, max(per_task) + 1))]
+    assert max(counts) / (len(rows) / len(counts)) < 1.5, counts
+    assert len(files) <= n_parts + n_buckets - 1, len(files)
 
 
 def test_payload_turns_pdf_and_html(spark):
@@ -201,7 +261,7 @@ def test_payload_turns_differences_lzw_pdf(spark):
 
 def test_single_conversation_skew_is_salted_across_partitions(spark):
     """Worst-case conversation skew: ONE conv with 20k turns must spread
-    across all partitions via the turn-slice salt (north rule: explicit
+    across all partitions via the range bounds (north rule: explicit
     skew handling; AQE cannot rebalance inside mapInPandas groups)."""
     from pyspark.sql import functions as F
 
@@ -218,6 +278,27 @@ def test_single_conversation_skew_is_salted_across_partitions(spark):
     rows = [r.n_rows for r in lin if r.n_rows]
     assert len(rows) == 12              # every partition got work
     assert max(rows) / (sum(rows) / len(rows)) < 3.0
+
+
+def test_payload_turns_spread_one_giant_conversation(spark):
+    """The payload path shares the transcript path's balancing: ONE conv
+    with 20k payloads lands on every partition in near-equal shares."""
+    from pyspark.sql import functions as F
+
+    from crrf_det_spark.pipeline import extract_payload_turns, lineage
+
+    df = spark.range(20_000).select(
+        F.lit("mega-conv").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.concat(
+            F.lit("payload body text number "), F.col("id").cast("string")
+        ).cast("binary").alias("payload"),
+    )
+    lin = lineage(extract_payload_turns(df, num_partitions=12)).collect()
+    rows = [r.n_rows for r in lin if r.n_rows]
+    assert len(rows) == 12              # every partition got work
+    assert sum(rows) == 20_000
+    assert max(rows) / (sum(rows) / len(rows)) < 1.5
 
 
 def test_observed_extraction_metrics(spark):

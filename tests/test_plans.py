@@ -70,6 +70,15 @@ def test_aggregations_are_partial_final(spark, queries):
     assert "partial_sum" in plan or "partial_count" in plan
 
 
+def _assert_one_range_exchange(plan: str) -> None:
+    # exactly one shuffle of any kind, and it is the range exchange with
+    # the explicit (non-AQE-coalescible) count
+    assert plan.count("Exchange ") == 1, plan
+    assert plan.count("Exchange rangepartitioning") == 1, plan
+    assert "REPARTITION_BY_NUM" in plan
+    assert "MapInPandas" in plan
+
+
 def test_extraction_single_explicit_exchange(spark):
 
     from crrf_det_spark.pipeline import extract_transcripts
@@ -78,10 +87,53 @@ def test_extraction_single_explicit_exchange(spark):
         [("c1", 0, "hello world")], "conv_id string, turn_idx int, text string"
     )
     plan = plan_of(extract_transcripts(df, num_partitions=8), mode="simple")
-    # exactly one shuffle, with the explicit (non-AQE-coalescible) count
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "REPARTITION_BY_NUM" in plan
-    assert "MapInPandas" in plan
+    _assert_one_range_exchange(plan)
+
+
+def test_payload_extraction_single_explicit_exchange(spark):
+    from crrf_det_spark.pipeline import extract_payload_turns
+
+    df = spark.createDataFrame(
+        [("c1", 0, bytearray(b"hello world"))],
+        "conv_id string, turn_idx int, payload binary",
+    )
+    plan = plan_of(extract_payload_turns(df, num_partitions=8), mode="simple")
+    _assert_one_range_exchange(plan)
+
+
+def test_resumable_write_single_range_exchange(spark, tmp_path):
+    # the write runs inside run_resumable_extraction, so its executed
+    # plan is read back from the session's SQL status store (kept with
+    # the UI off).  One range exchange on (bucket, conv_id, turn_idx),
+    # and the only Sort is the requested (bucket, conv_id, turn_idx)
+    # one: the planned write found its required ordering satisfied
+    import re
+
+    from crrf_det_spark.pipeline import run_resumable_extraction
+
+    df = spark.createDataFrame(
+        [("c1", 0, "hello world"), ("c2", 3, "another turn")],
+        "conv_id string, turn_idx int, text string",
+    )
+    run_resumable_extraction(spark, df, str(tmp_path / "out"), n_buckets=4)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = execs.apply(execs.size() - 1).physicalPlanDescription()
+    assert "InsertIntoHadoopFsRelationCommand" in plan
+    tree = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"Exchange \(\d+\)", tree)) == 1, plan
+    assert len(re.findall(r"Sort \(\d+\)", tree)) == 1, plan
+    assert "hashpartitioning" not in plan
+    assert re.search(
+        r"rangepartitioning\(pmod\(hash\(conv_id#\d+, 42\), 4\) ASC NULLS FIRST, "
+        r"conv_id#\d+ ASC NULLS FIRST, turn_idx#\d+ ASC NULLS FIRST, \d+\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    ), plan
+    assert re.search(
+        r"Arguments: \[bucket#\d+ ASC NULLS FIRST, conv_id#\d+ ASC NULLS FIRST, "
+        r"turn_idx#\d+ ASC NULLS FIRST\]",
+        plan,
+    ), plan
 
 
 def test_no_cartesian_products_in_contract_queries(spark, queries):
