@@ -1876,7 +1876,7 @@ def _q_extraction_segments(spark, sf):
         F.lit(0).alias("turn_idx"),
         "text",
     )
-    return extract_transcripts(d, order=True).select(
+    return extract_transcripts(d).select(
         "conv_id", "turn_idx", "n_segments", "n_tables", "n_chars_out",
         "extracted_text",
     )
@@ -1911,7 +1911,7 @@ def _q_extraction_html(spark, sf):
         F.lit(0).alias("turn_idx"),
         html.alias("text"),
     )
-    return extract_transcripts(src, order=True).select(
+    return extract_transcripts(src).select(
         "conv_id", "turn_idx", "n_segments", "n_chars_out"
     )
 

@@ -15,7 +15,6 @@ from .dedup import (  # noqa: F401
     simhash_signatures,
     ngram_jaccard_pairs,
     embedding_near_duplicates,
-    hyperplanes,
 )
 from .components import (  # noqa: F401
     duplicate_components,
@@ -23,6 +22,7 @@ from .components import (  # noqa: F401
 )
 from .similarity import (  # noqa: F401
     brute_force_topk,
+    hyperplanes,
     ivf_assign,
     ivf_topk_oneshot,
     ivf_topk_indexed,

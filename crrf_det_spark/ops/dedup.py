@@ -1,21 +1,31 @@
 """Deduplication operators over a documents table (doc_id, text).
 
-Scale notes (the whole point of these shapes):
+Every near-dup operator runs on one set of shared internals:
 
 * exact:     one hash agg; map-side partial, no raw-text shuffle (only the
              64-char digest moves).
-* minhash:   signatures via one numpy pass per Arrow batch (k permutations
-             vectorized as (a*h+b) mod p over the shingle-hash vector);
-             LSH banding turns all-pairs O(n^2) into a per-bucket join.
+* minhash:   one kernel (``_minhash_signatures``) for both unit kinds --
+             char-5 shingles (``minhash_signatures``) and the distinct
+             word set (``minhash_word_signatures``): k permutations
+             vectorized as (a*h+b) mod p over the unit-hash vector in one
+             numpy pass per doc.  Banding goes through one self-join on
+             (band, bucket) (``_band_pairs``), which turns all-pairs
+             O(n^2) into a per-bucket join.  ``minhash_lsh_pairs``
+             (multi-row bands, identical signatures collapsed first) is
+             the scale path; ``minhash_near_pairs_verified`` (one-row
+             bands, exact Jaccard verify) is the value-checked path.
 * simhash:   64-bit signature per doc from token-hash bit votes; near-dup =
              small hamming distance within LSH bands of the signature.
 * jaccard:   candidate pairs from shared shingles (inverted index join),
              verified exactly -- never a cross join.
-* embedding: random-hyperplane LSH buckets, exact cosine within bucket.
+* embedding: hyperplane-sign buckets from ``similarity.lsh_assign``, exact
+             cosine within bucket.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -23,20 +33,21 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import register
 # explicit repartition ahead of every Python kernel (repo invariant);
 # shared with similarity/multimodal via ops/_kernel.py
 from ._kernel import spread as _spread
+from .similarity import lsh_assign
 
 _MERSENNE = (1 << 61) - 1
+SHINGLE_K = 5  # char-shingle width of minhash_signatures
 
 # Java regex \s == [ \t\n\x0B\f\r] (ASCII).  Python str.split() splits on
-# UNICODE whitespace (\xa0,  , ...), which would make the Python-side
+# UNICODE whitespace (\xa0,  , ...), which would make the Python-side
 # signature kernels disagree with the Spark/DuckDB \s+ verify stages and
 # oracles on documents containing non-ASCII whitespace.  All kernel
 # tokenization goes through this to keep the token sets identical.
-import re as _re
-
-_WS_RE = _re.compile(r"[ \t\n\x0b\f\r]+")
+_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _ws_tokens(text) -> list[str]:
@@ -59,19 +70,19 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Char k-shingles -> uint64 hash vector (vectorized rolling hash)."""
+def _shingle_hashes(text) -> np.ndarray:
+    """Char-5 shingles -> uint64 hash vector (vectorized rolling hash)."""
     if text is None:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-    if len(b) < k:
+    if len(b) < SHINGLE_K:
         return np.empty(0, dtype=np.uint64)
     # polynomial hash over a sliding window, vectorized in bounded chunks
     # (the window view itself is zero-copy; only the uint64 upcast of each
     # chunk materializes, so a 10MB doc never allocates a GB-scale temp)
     base = np.uint64(1099511628211)
-    powers = base ** np.arange(k, dtype=np.uint64)
-    view = np.lib.stride_tricks.sliding_window_view(b, k)
+    powers = base ** np.arange(SHINGLE_K, dtype=np.uint64)
+    view = np.lib.stride_tricks.sliding_window_view(b, SHINGLE_K)
     n = view.shape[0]
     out = np.empty(n, dtype=np.uint64)
     chunk = 1 << 18
@@ -81,38 +92,40 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
     return out
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc_id, signature: array<bigint>) via mapInPandas.
+def _md5_low64(token: str) -> int:
+    """md5 low 64 bits little-endian: DuckDB ``md5_number_lower``."""
+    return int.from_bytes(hashlib.md5(token.encode("utf-8")).digest()[8:], "little")
 
-    One numpy pass per batch: shingle-hash vector h, then per permutation i
-    min((a_i*h + b_i) mod p).  Empty/short docs get an all-p signature
-    (never matches anything).
-    """
+
+def _word_hashes(text) -> np.ndarray:
+    """Distinct whitespace tokens -> uint64 md5 hash vector."""
+    return np.array(
+        [_md5_low64(t) for t in set(_ws_tokens(text))], dtype=np.uint64
+    )
+
+
+def _minhash_signatures(
+    docs: DataFrame, text_col: str, num_hashes: int, seed: int, unit_hashes
+) -> DataFrame:
+    """The one minhash kernel: ``unit_hashes(text)`` -> uint64 vector h,
+    then per permutation i min((a_i*h + b_i) mod p) over h mod p, in one
+    numpy pass per doc.  The products wrap at 2^64 before the mod p
+    (uint64 arithmetic); signatures depend on that, so it stays.  Docs
+    with no units get an all-p signature (never matches anything)."""
     rng = np.random.RandomState(seed)
     a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
     b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    p = np.uint64(_MERSENNE)
+    chunk = 1 << 16  # bounds the (num_hashes x units) temp to ~32MB
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunk = 1 << 16  # bounds the (num_hashes x shingles) temp to ~32MB
         for pdf in it:
             sigs = []
             for text in pdf[text_col].values:
-                h = _shingle_hashes(text, shingle_k) % np.uint64(_MERSENNE)
-                if len(h) == 0:
-                    sigs.append([_MERSENNE] * num_hashes)
-                    continue
+                h = unit_hashes(text) % p
                 m_min = np.full(num_hashes, _MERSENNE, dtype=np.uint64)
                 for c0 in range(0, len(h), chunk):
-                    hc = h[c0: c0 + chunk]
-                    m = (a[:, None] * hc[None, :] + b[:, None]) % np.uint64(
-                        _MERSENNE
-                    )
+                    m = (a[:, None] * h[None, c0: c0 + chunk] + b[:, None]) % p
                     np.minimum(m_min, m.min(axis=1), out=m_min)
                 sigs.append(m_min.astype(np.int64).tolist())
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": sigs})
@@ -122,23 +135,62 @@ def minhash_signatures(
     )
 
 
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", num_hashes: int = 64, seed: int = 42
+) -> DataFrame:
+    """(doc_id, signature: array<bigint>): minhash over char-5 shingles
+    (rolling polynomial hash)."""
+    return _minhash_signatures(docs, text_col, num_hashes, seed, _shingle_hashes)
+
+
+def minhash_word_signatures(
+    docs: DataFrame, text_col: str = "text", num_hashes: int = 32, seed: int = 42
+) -> DataFrame:
+    """(doc_id, signature) minhash over the DISTINCT WORD set (not char
+    shingles): estimates the same unigram Jaccard that
+    ``ngram_jaccard_pairs(n=1)`` computes exactly, which makes an
+    LSH-candidates -> exact-verify pipeline value-checkable against a
+    plain SQL Jaccard oracle.  Token hash = md5 low 64 bits (DuckDB
+    ``md5_number_lower`` parity, same as simhash_signatures)."""
+    return _minhash_signatures(docs, text_col, num_hashes, seed, _word_hashes)
+
+
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """Candidate pairs from a (doc_id, band, bucket) table: the self-join
+    on (band, bucket), then distinct (doc_a, doc_b) with doc_a < doc_b.
+    perfbench/eventlog.py finds the band join by the ``band``/``bucket``
+    column names and counts candidates at the distinct's aggregate, so
+    both stay."""
+    return (
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(
+            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     signatures: DataFrame,
     num_bands: int = 16,
     threshold: float = 0.7,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """LSH banding -> candidate pairs -> signature-jaccard verify.
 
     Returns (doc_a, doc_b, sig_jaccard) with doc_a < doc_b and
     sig_jaccard >= threshold.
 
-    ``collapse_identical=True`` (the default, the scale shape): identical
-    signatures are COLLAPSED before banding — one representative (min
-    doc_id) per distinct signature joins in the bands, and members of a
-    signature group are emitted as star edges (rep, member, 1.0), the
-    transitive-closure-equivalent linear representation of the
-    intra-group clique.  The output is then a dedup GRAPH whose connected
+    Identical signatures are COLLAPSED before banding: one representative
+    (min doc_id) per distinct signature joins in the bands, and members
+    of a signature group are emitted as star edges (rep, member, 1.0),
+    the transitive-closure-equivalent linear representation of the
+    intra-group clique.  The output is a dedup GRAPH whose connected
     components equal the naive all-pairs graph's (feed it to
     ``duplicate_components``), not the full clique edge list.  This is
     the hot-bucket defense: an all-identical corpus costs one hash agg +
@@ -148,11 +200,6 @@ def minhash_lsh_pairs(
     point the docs genuinely collide in a band and the work is the
     answer — but B is bounded by the distinct-signature count per
     bucket, which real corpora keep small.
-
-    ``collapse_identical=False`` restores the full per-pair edge list
-    (every colliding pair with its sig_jaccard) — the exact-output shape
-    for callers that need all edges, at the cost of the quadratic
-    hot-bucket risk the default defends against.
 
     The collapse is one aggregation with no per-group array
     materialization: groups carry only (signature, rep_id, n_members),
@@ -172,73 +219,57 @@ def minhash_lsh_pairs(
     scale (a production pipeline would materialize them to a table).
     """
     signatures = signatures.persist()
-    cached = [signatures]
     # band width from the row's own signature length: no driver-side
     # size-probe job (a .first() here costs a whole extra kernel stage)
     rows_per_band = (F.size("signature") / num_bands).cast("int")
 
-    if collapse_identical:
-        groups = (
-            signatures.groupBy("signature")
-            .agg(
-                F.min("doc_id").alias("rep_id"),
-                F.count("*").alias("n_members"),
-            )
-            .persist()
+    groups = (
+        signatures.groupBy("signature")
+        .agg(
+            F.min("doc_id").alias("rep_id"),
+            F.count("*").alias("n_members"),
         )
-        cached.append(groups)
-        # star edges: members of duplicated-signature groups point at the
-        # group rep.  The join key is the 64-bit signature hash (cheap
-        # shuffle/broadcast key); the array-equality residual keeps the
-        # join exact under hash collisions.
-        dup = groups.filter(F.col("n_members") >= 2).select(
-            F.xxhash64("signature").alias("_sh"),
-            F.col("signature").alias("_sig"),
-            "rep_id",
-        )
-        intra = (
-            signatures.withColumn("_sh", F.xxhash64("signature"))
-            .join(dup, "_sh")
-            .filter(
-                (F.col("signature") == F.col("_sig"))
-                & (F.col("doc_id") != F.col("rep_id"))
-            )
-            .select(
-                F.col("rep_id").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-                F.lit(1.0).alias("sig_jaccard"),
-            )
-        )
-        reps = groups.select(F.col("rep_id").alias("doc_id"), "signature")
-    else:
-        intra = None
-        reps = signatures.select("doc_id", "signature")
-    banded = reps.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda i: F.xxhash64(
-                    F.slice(
-                        F.col("signature"), i * rows_per_band + 1, rows_per_band
-                    ),
-                    i,
-                ),
-            )
-        ).alias("band", "bucket"),
+        .persist()
     )
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+    # star edges: members of duplicated-signature groups point at the
+    # group rep.  The join key is the 64-bit signature hash (cheap
+    # shuffle/broadcast key); the array-equality residual keeps the
+    # join exact under hash collisions.
+    dup = groups.filter(F.col("n_members") >= 2).select(
+        F.xxhash64("signature").alias("_sh"),
+        F.col("signature").alias("_sig"),
+        "rep_id",
+    )
+    intra = (
+        signatures.withColumn("_sh", F.xxhash64("signature"))
+        .join(dup, "_sh")
+        .filter(
+            (F.col("signature") == F.col("_sig"))
+            & (F.col("doc_id") != F.col("rep_id"))
         )
         .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
+            F.col("rep_id").alias("doc_a"),
+            F.col("doc_id").alias("doc_b"),
+            F.lit(1.0).alias("sig_jaccard"),
         )
-        .distinct()
+    )
+    reps = groups.select(F.col("rep_id").alias("doc_id"), "signature")
+    cand = _band_pairs(
+        reps.select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(num_bands - 1)),
+                    lambda i: F.xxhash64(
+                        F.slice(
+                            F.col("signature"), i * rows_per_band + 1,
+                            rows_per_band,
+                        ),
+                        i,
+                    ),
+                )
+            ).alias("band", "bucket"),
+        )
     )
     sigs = reps.select(F.col("doc_id"), F.col("signature").alias("sig"))
     verified = cand.join(
@@ -258,59 +289,7 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b", "sig_jaccard")
         .filter(F.col("sig_jaccard") >= threshold)
     )
-    from ..caching import register
-
-    out = cross if intra is None else intra.unionByName(cross)
-    return register(out, *cached)
-
-
-def minhash_word_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc_id, signature) minhash over the DISTINCT WORD set (not char
-    shingles): estimates the same unigram Jaccard that
-    ``ngram_jaccard_pairs(n=1)`` computes exactly, which makes an
-    LSH-candidates -> exact-verify pipeline value-checkable against a
-    plain SQL Jaccard oracle.
-
-    Token hash = md5 low 64 bits little-endian (DuckDB
-    ``md5_number_lower`` parity, same as simhash_signatures) reduced mod
-    the Mersenne prime, then k permutations (a*h+b) mod p vectorized in
-    one numpy pass per doc.
-    """
-    import hashlib
-
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs = []
-            for text in pdf[text_col].values:
-                toks = set(_ws_tokens(text))
-                if not toks:
-                    sigs.append([_MERSENNE] * num_hashes)
-                    continue
-                h = np.array(
-                    [
-                        int.from_bytes(
-                            hashlib.md5(t.encode("utf-8")).digest()[8:], "little"
-                        )
-                        for t in toks
-                    ],
-                    dtype=np.uint64,
-                ) % np.uint64(_MERSENNE)
-                m = (a[:, None] * h[None, :] + b[:, None]) % np.uint64(_MERSENNE)
-                sigs.append(m.min(axis=1).astype(np.int64).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": sigs})
-
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(
-        batches, schema="doc_id long, signature array<long>"
-    )
+    return register(intra.unionByName(cross), signatures, groups)
 
 
 def minhash_near_pairs_verified(
@@ -343,21 +322,10 @@ def minhash_near_pairs_verified(
     # jaccard is undefined (empty word sets), so drop them pre-banding;
     # signature values are < _MERSENNE for any non-empty token set, so
     # checking one element identifies the sentinel.
-    banded = sigs.filter(
-        F.element_at("signature", 1) != F.lit(_MERSENNE)
-    ).select("doc_id", F.posexplode("signature").alias("band", "bucket"))
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+    cand = _band_pairs(
+        sigs.filter(F.element_at("signature", 1) != F.lit(_MERSENNE)).select(
+            "doc_id", F.posexplode("signature").alias("band", "bucket")
         )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
     )
     words = docs.select(
         "doc_id",
@@ -390,8 +358,6 @@ def minhash_near_pairs_verified(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    from ..caching import register
-
     return register(verified, sigs)
 
 
@@ -408,12 +374,6 @@ def simhash_signatures(
     ``hash()`` varies per executor and must never be used in signatures).
     """
 
-    import hashlib
-
-    def _stable64(token: str) -> int:
-        d = hashlib.md5((token + salt).encode("utf-8")).digest()
-        return int.from_bytes(d[8:], "little")
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunk = 1 << 16  # bounds the (tokens x 64) bit temp to ~32MB
         for pdf in it:
@@ -423,7 +383,9 @@ def simhash_signatures(
                 if not toks:
                     out.append(0)
                     continue
-                hashes = np.array([_stable64(t) for t in toks], dtype=np.uint64)
+                hashes = np.array(
+                    [_md5_low64(t + salt) for t in toks], dtype=np.uint64
+                )
                 votes = np.zeros(64, dtype=np.int64)
                 for c0 in range(0, len(hashes), chunk):
                     hc = hashes[c0: c0 + chunk]
@@ -442,52 +404,18 @@ def simhash_signatures(
     )
 
 
-def simhash_near_pairs(
-    signatures: DataFrame, max_hamming: int = 3,
-    collapse_identical: bool = False,
-) -> DataFrame:
+def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs from 64-bit simhashes: band the signature into four
     16-bit chunks (pigeonhole: any pair within hamming distance 3 shares
     at least one exact chunk), join per chunk, verify exact hamming.
 
     Returns (doc_a, doc_b, hamming) with doc_a < doc_b and
-    hamming <= max_hamming.  Exact for max_hamming <= 3 with 4 bands; for
-    larger radii increase the band count accordingly.
-
-    ``collapse_identical=True`` is the hot-bucket defense for corpora
-    with mass-duplicated content (same idea as minhash_lsh_pairs):
-    identical simhash values collapse to one representative before the
-    band join; group members come back as star edges (rep, member, 0)
-    and cross pairs are rep-to-rep — connected components unchanged, but
-    an all-identical corpus costs a hash agg instead of a single-task
-    O(n^2) join.  Default False keeps the exact full edge list (the
-    value-oracle contract shape).
+    hamming <= max_hamming: the full edge list, the value-oracle
+    contract shape.  Exact for max_hamming <= 3 with 4 bands; for larger
+    radii increase the band count accordingly.  The band join carries
+    the signatures through, so it does not share ``_band_pairs``.
     """
     signatures = signatures.persist()
-    if collapse_identical:
-        groups = signatures.groupBy("simhash").agg(
-            F.min("doc_id").alias("rep_id")
-        ).persist()
-        intra = (
-            signatures.alias("m")
-            .join(groups.alias("g"), F.col("m.simhash") == F.col("g.simhash"))
-            .filter(F.col("m.doc_id") > F.col("g.rep_id"))
-            .select(
-                F.col("g.rep_id").alias("doc_a"),
-                F.col("m.doc_id").alias("doc_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        from ..caching import register
-
-        reps = groups.select(F.col("rep_id").alias("doc_id"), "simhash")
-        cross = simhash_near_pairs(reps, max_hamming, collapse_identical=False)
-        out = intra.unionByName(
-            cross.select("doc_a", "doc_b", F.col("hamming").cast("int"))
-        )
-        return register(
-            out, signatures, groups, *getattr(cross, "_crrf_cached", [])
-        )
     banded = signatures.select(
         "doc_id",
         "simhash",
@@ -516,8 +444,6 @@ def simhash_near_pairs(
         )
         .distinct()
     )
-    from ..caching import register
-
     return register(
         cand.withColumn(
             "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -573,92 +499,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_jaccard_pairs_prefix(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact ngram-Jaccard pairs with PPJoin-style prefix + length filters.
-
-    Same result as ``ngram_jaccard_pairs`` but candidates are generated
-    only from each document's *prefix* -- its ``|A| - ceil(t*|A|) + 1``
-    globally-rarest shingles (two sets with Jaccard >= t MUST share a
-    prefix shingle under a common global order).  On zipfian corpora this
-    prunes candidate pairs by orders of magnitude; on adversarially dense
-    vocabularies it degrades gracefully to the plain join.  The length
-    filter (t*|A| <= |B| <= |A|/t) is applied before exact verification
-    via array_intersect.
-    """
-    from pyspark.sql import Window as W
-
-    shingled = docs.select(
-        "doc_id",
-        F.array_distinct(ngrams_of(F.col(text_col), n)).alias("shingles"),
-    ).withColumn("ns", F.size("shingles"))
-    shingled = shingled.filter(F.col("ns") > 0).cache()
-
-    exploded = shingled.select(
-        "doc_id", "ns", F.explode("shingles").alias("shingle")
-    )
-    df_tbl = exploded.groupBy("shingle").agg(F.count("*").alias("df"))
-    # canonical global order: rarest first (df asc, shingle asc tie-break)
-    w = W.partitionBy("doc_id").orderBy("df", "shingle")
-    prefix_len = (
-        F.col("ns") - F.ceil(F.lit(threshold) * F.col("ns")) + 1
-    ).cast("int")
-    prefix = (
-        exploded.join(F.broadcast(df_tbl), "shingle")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select("doc_id", "ns", "shingle")
-    )
-    cand = (
-        prefix.alias("l")
-        .join(
-            prefix.alias("r"),
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col("l.doc_id") < F.col("r.doc_id"))
-            # length filter: |B| in [t*|A|, |A|/t]
-            & (F.col("r.ns") >= F.lit(threshold) * F.col("l.ns"))
-            & (F.col("l.ns") >= F.lit(threshold) * F.col("r.ns")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sets = shingled.select("doc_id", "shingles", "ns")
-    verified = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("shingles").alias("sa"),
-                F.col("ns").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("shingles").alias("sb"),
-                F.col("ns").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    from ..caching import register
-
-    return register(verified, shingled)
-
-
 def ngrams_of(text, n: int):
     """Word n-grams of a text column as an array column (shared helper).
 
@@ -676,15 +516,6 @@ def ngrams_of(text, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def hyperplanes(num_planes: int, dim: int, seed: int = 3) -> np.ndarray:
-    """The seeded Gaussian hyperplane set used by
-    ``embedding_near_duplicates`` — exposed so a value oracle can inline
-    the identical plane constants (e.g. as SQL list literals) and
-    reproduce the bucket assignment bit-for-bit."""
-    rng = np.random.RandomState(seed)
-    return rng.normal(size=(num_planes, dim)).astype("float32")
-
-
 def embedding_near_duplicates(
     embeddings: DataFrame,
     vec_col: str = "embedding",
@@ -693,17 +524,17 @@ def embedding_near_duplicates(
     num_planes: int = 12,
     seed: int = 3,
     max_bucket: int = 10_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Cosine near-duplicate pairs via random-hyperplane LSH buckets +
     exact within-bucket cosine.
 
-    The bucket key is the sign pattern of `num_planes` random projections;
-    exact cosine runs only within buckets (vectorized numpy per bucket via
-    applyInPandas).  Projections and cosines are computed in float64 so
-    the results match an oracle that evaluates the same formulas in
-    SQL-double precision (the planes themselves are float32 values,
-    identical on both sides via ``hyperplanes``).
+    The bucket key is the sign pattern of `num_planes` random projections,
+    assigned by ``similarity.lsh_assign``; exact cosine runs only within
+    buckets (vectorized numpy per bucket via applyInPandas).  Projections
+    and cosines are computed in float64 so the results match an oracle
+    that evaluates the same formulas in SQL-double precision (the planes
+    themselves are float32 values, identical on both sides via
+    ``similarity.hyperplanes``).
 
     Hot-bucket defense: a bucket larger than ``max_bucket`` (a degenerate
     corpus where many vectors share one sign pattern) is SALTED into
@@ -716,39 +547,12 @@ def embedding_near_duplicates(
     only the size-probe aggregation.  Results are identical to the
     unsalted join (asserted in tests/test_ops.py).
     """
-    # the hyperplane set is derived from (num_planes, dim, seed) alone,
-    # so each kernel task regenerates it deterministically from the
-    # width of its own first Arrow batch — no driver-side `.first()` dim
-    # probe (repo invariant: a probe costs one extra kernel job per
-    # call) and no broadcast.  Callers that know the dimension can pass
-    # it to pin the planes independently of the data.
-    def bucketize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = None if dim is None else hyperplanes(
-            num_planes, dim, seed
-        ).astype("float64")
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf[vec_col].values).astype("float64")
-            if P is None:
-                P = hyperplanes(num_planes, V.shape[1], seed).astype(
-                    "float64"
-                )
-            signs = (V @ P.T) > 0
-            keys = (signs * (1 << np.arange(P.shape[0]))).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "bucket": keys.astype("int64"),
-                }
-            )
-
     # persisted: the size aggregate and the join below are two plan
     # branches over this Python-kernel output — without the persist the
-    # bucketize kernel (and its shuffle) runs twice
-    bucketed = _spread(embeddings.select(id_col, vec_col)).mapInPandas(
-        bucketize, schema=f"{id_col} long, {vec_col} array<float>, bucket long"
+    # bucketing kernel (and its shuffle) runs twice
+    bucketed = lsh_assign(
+        embeddings, num_planes=num_planes, seed=seed, vec_col=vec_col,
+        id_col=id_col,
     ).persist()
 
     # block-pair salting: s blocks per bucket (1 unless the bucket is hot);
@@ -813,8 +617,6 @@ def embedding_near_duplicates(
                 "cosine": np.concatenate(out_c) if out_c else [],
             }
         )
-
-    from ..caching import register
 
     return register(
         expanded.groupBy("bucket", "_bi", "_bj")

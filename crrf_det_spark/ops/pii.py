@@ -84,15 +84,15 @@ def contamination_probe(
     corpus document whose whitespace-normalized sha256 digest appears in
     ``benchmark[digest_col]``.
 
-    The benchmark side is broadcast (semi-join build side), so the probe
-    is one map-side corpus scan; exact-match contamination at the
+    The benchmark side is broadcast (left-semi build side), so the probe
+    is one map-side corpus scan and reports each matching document once,
+    however often its digest repeats on the benchmark side; exact-match
+    contamination at the
     document granularity — pair with ``dedup_shingles`` for
     passage-level leakage."""
     dig = docs.select(
         F.col(id_col).alias("doc_id"),
         normalized_digest(F.col(text_col)).alias("digest"),
     )
-    bench = F.broadcast(
-        benchmark.select(F.col(digest_col).alias("digest")).distinct()
-    )
-    return dig.join(bench, "digest").select("doc_id", "digest")
+    bench = F.broadcast(benchmark.select(F.col(digest_col).alias("digest")))
+    return dig.join(bench, "digest", "left_semi").select("doc_id", "digest")

@@ -8,7 +8,9 @@ first:
   + lsh_write_index (materialize PARTITIONED BY bucket at ingest) +
   lsh_topk_indexed (partition-pruned multi-probe: reads only the probed
   buckets, no per-query kernel pass).  Recall < 1.0 by construction;
-  num_planes/probe radius trade recall for cost.
+  num_planes/probe radius trade recall for cost.  ``hyperplanes`` is the
+  one seeded plane set; ``lsh_assign`` is also the bucketing kernel of
+  ``dedup.embedding_near_duplicates``.
 * IVF index: ivf_train (bounded driver-side k-means) + ivf_assign (one
   vectorized nearest-centroid pass) + ivf_write_index (materialize the
   assignment PARTITIONED BY centroid at ingest) + ivf_topk_indexed
@@ -20,14 +22,16 @@ pass; do not point these at a real corpus in a query loop:
 
 * brute_force_topk: exact cosine top-k -- the correctness baseline.  The
   dot product is a pure Catalyst expression (zip_with + aggregate), so the
-  scan stays JVM-side and whole-stage-codegen'd; top-k is an orderBy+limit
-  which Spark executes as a per-partition TakeOrdered (no full sort
-  shuffle).
+  scan stays JVM-side and whole-stage-codegen'd.
 * ivf_topk_oneshot / lsh_bucket_topk_oneshot: one-shot train+assign+probe
   for a single ad-hoc query (the whole corpus passes through the
   assignment kernel each call).  Equality with the indexed variants is
   pinned in tests; the ``_oneshot`` suffix exists so the indexed path is
   the default discovery.
+
+All five top-k entry points end in the same tail (``_topk``): cosine
+projection, then orderBy+limit, which Spark executes as a per-partition
+TakeOrdered (no full sort shuffle).
 """
 
 from __future__ import annotations
@@ -58,6 +62,19 @@ def cosine_col(vec: Column, query: list[float]) -> Column:
     return F.when(norm_v == 0, F.lit(0.0)).otherwise(dot / (norm_v * F.lit(qn)))
 
 
+def _topk(
+    df: DataFrame, query: list[float], k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """The shared top-k tail: (id, cosine) ordered desc with a
+    deterministic tie-break on id; Spark runs orderBy+limit as a
+    per-partition TakeOrdered (no full sort shuffle)."""
+    return (
+        df.select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.col(id_col))
+        .limit(k)
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query: list[float],
@@ -67,13 +84,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (id, cosine) ordered desc, deterministic
     tie-break on id."""
-    return (
-        embeddings.select(
-            F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(embeddings, query, k, vec_col, id_col)
 
 
 def ivf_train(
@@ -200,11 +211,9 @@ def ivf_topk_indexed(
     """
     probes = probe_centroids(centroids, query, n_probe)
     assigned = spark.read.parquet(index_path)
-    return (
-        assigned.filter(F.col("centroid").isin(probes))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return _topk(
+        assigned.filter(F.col("centroid").isin(probes)),
+        query, k, vec_col, id_col,
     )
 
 
@@ -239,11 +248,9 @@ def ivf_topk_oneshot(
     )
     probes = probe_centroids(cent, query, n_probe)
     assigned = ivf_assign(embeddings, cent, vec_col=vec_col, id_col=id_col)
-    return (
-        assigned.filter(F.col("centroid").isin(probes))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return _topk(
+        assigned.filter(F.col("centroid").isin(probes)),
+        query, k, vec_col, id_col,
     )
 
 
@@ -260,7 +267,7 @@ def lsh_bucket_topk_oneshot(
     """Approximate top-k: score only rows whose hyperplane-sign bucket is
     within `probe_bits` bit flips of the query's bucket.
 
-    Planes come from the shared seeded generator ``dedup.hyperplanes``
+    Planes come from the shared seeded generator ``hyperplanes``
     (float32 constants, promoted to float64 in the kernel), so a value
     oracle can inline the identical constants as SQL list literals and
     reproduce the bucket assignment, the query's own bucket, and the
@@ -283,12 +290,20 @@ def lsh_bucket_topk_oneshot(
         embeddings, num_planes=num_planes, seed=seed,
         vec_col=vec_col, id_col=id_col,
     )
-    return (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return _topk(
+        bucketed.filter(F.col("bucket").isin(probes)),
+        query, k, vec_col, id_col,
     )
+
+
+def hyperplanes(num_planes: int, dim: int, seed: int = 3) -> np.ndarray:
+    """The seeded Gaussian hyperplane set behind every sign-bucket key
+    (``lsh_assign``, ``lsh_probe_keys``, ``embedding_near_duplicates``) —
+    exposed so a value oracle can inline the identical plane constants
+    (e.g. as SQL list literals) and reproduce the bucket assignment
+    bit-for-bit."""
+    rng = np.random.RandomState(seed)
+    return rng.normal(size=(num_planes, dim)).astype("float32")
 
 
 def lsh_assign(
@@ -303,8 +318,6 @@ def lsh_assign(
     from (seed, num_planes, dim of its own first batch) — deterministic,
     so every worker and the driver-side ``lsh_probe_keys`` computation
     agree without shipping state or probing the dim from the driver."""
-    from .dedup import hyperplanes
-
     def bucketize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         P = None
         for pdf in it:
@@ -334,8 +347,6 @@ def lsh_probe_keys(
 ) -> list[int]:
     """The bucket keys a query probes: its own hyperplane-sign key plus
     every key within ``probe_bits`` bit flips (multi-probe)."""
-    from .dedup import hyperplanes
-
     planes = hyperplanes(num_planes, len(query), seed=seed).astype("float64")
     qkey = int(((planes @ np.asarray(query, dtype="float64")) > 0).dot(
         1 << np.arange(num_planes)
@@ -384,9 +395,7 @@ def lsh_topk_indexed(
         query, num_planes=num_planes, probe_bits=probe_bits, seed=seed
     )
     assigned = spark.read.parquet(index_path)
-    return (
-        assigned.filter(F.col("bucket").isin(probes))
-        .select(F.col(id_col), cosine_col(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return _topk(
+        assigned.filter(F.col("bucket").isin(probes)),
+        query, k, vec_col, id_col,
     )

@@ -7,7 +7,7 @@ spans, resolves exact + near-duplicate spans corpus-wide, and can strip
 every non-representative occurrence while leaving unique content alone.
 
 Not in the reference (its dedup story stops at file level,
-/root/reference/src/data/file.py); additive LLM-pipeline operator in the
+the reference's src/data/file.py); additive LLM-pipeline operator in the
 SURVEY.md §2 extension family, reusing the doc-level dedup machinery
 (minhash_near_pairs_verified, duplicate_components) over span keys.
 
@@ -15,22 +15,27 @@ Scale notes (the design constraints, in order):
 
 * spans are keyed by a packed 64-bit uid ``doc_id * 2^span_bits +
   span_idx`` — pure arithmetic both directions, so component labels
-  decode back to (doc_id, span_idx) without any join.  ``span_bits=20``
+  decode back to (doc_id, span_idx) without any join.  ``SPAN_BITS=20``
   caps documents at ~1M spans; the packing is guarded by a runtime
   raise_error (never silent corruption).  A corpus whose doc ids exceed
-  2^(63-span_bits) needs a surrogate key upstream — documented, not
+  2^(63-SPAN_BITS) needs a surrogate key upstream — documented, not
   handled here.
 * byte-identical spans are THE dominant boilerplate case (a footer
   repeated across 10M pages is usually byte-identical), so they are
   collapsed by sha256 digest FIRST: one hash agg in which only (uid,
   digest) shuffles, star edges (rep, member) out — never a quadratic
-  band join on the hot footer groups.  Same defense as
-  minhash_lsh_pairs(collapse_identical=True).
+  band join on the hot footer groups.  Same defense as the signature
+  collapse in minhash_lsh_pairs.
 * only one representative per DISTINCT span enters minhash banding +
   exact-Jaccard verification, so the near-dup stage's n is the distinct
   span count, not the corpus span count.
 * components via ops/components.py alternating star-contraction
   (O(log n) rounds, edge set never grows, lineage cut per round).
+* one path for all four operators: spans (paragraphs or k-line
+  shingles) -> ``_resolve_span_components``; the two strip operators
+  then share one reassembly step (``_strip``).  The near-dup stage uses
+  the defaults of minhash_near_pairs_verified (32 hashes, seed 42) and
+  the uid packing uses ``SPAN_BITS``.
 * nothing persists span TEXT: the digest table persists (uid, digest)
   only, and representative text is re-derived by one extra corpus scan
   (split+posexplode is a cheap narrow op; a production pipeline would
@@ -140,13 +145,7 @@ def span_uid(
     )
 
 
-def span_duplicate_edges(
-    spans: DataFrame,
-    num_hashes: int = 32,
-    threshold: float = 0.8,
-    seed: int = 42,
-    span_bits: int = SPAN_BITS,
-) -> DataFrame:
+def span_duplicate_edges(spans: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Duplicate-span edge list (doc_a, doc_b) in span-uid space.
 
     Two edge families, union'd:
@@ -168,9 +167,7 @@ def span_duplicate_edges(
     # and near dedup agree (mirrors the _MERSENNE sentinel filter in
     # minhash_near_pairs_verified); they pass through as unique content.
     keyed = spans.filter(F.trim("span_text") != "").select(
-        span_uid(
-            F.col("doc_id"), F.col("span_idx"), span_bits=span_bits
-        ).alias("uid"),
+        span_uid(F.col("doc_id"), F.col("span_idx")).alias("uid"),
         "span_text",
     )
     # (uid, digest) only — 96 bytes/span, never the text
@@ -192,125 +189,61 @@ def span_duplicate_edges(
         reps.select(
             F.col("uid").alias("doc_id"), F.col("span_text").alias("text")
         ),
-        num_hashes=num_hashes,
         threshold=threshold,
-        seed=seed,
     )
     edges = star.unionByName(near.select("doc_a", "doc_b"))
     return register(edges, dig, groups, *registered(near))
 
 
-def dedup_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    delim: str = r"\n\n+",
-    min_chars: int = 1,
-    num_hashes: int = 32,
-    threshold: float = 0.8,
-    seed: int = 42,
-    span_bits: int = SPAN_BITS,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Resolve duplicate spans across the corpus.
-
-    Returns (doc_id, span_idx, rep_doc_id, rep_span_idx) for every span
-    that belongs to a duplicate component (exact OR unigram-Jaccard >=
-    ``threshold``); (rep_doc_id, rep_span_idx) is the component's
-    min-uid span, the canonical occurrence.  Spans in no component are
-    unique content and are not emitted.
-
+def _resolve_span_components(spans: DataFrame, threshold: float) -> DataFrame:
+    """Shared tail of every span operator: edges -> components -> unpack
+    uids into (doc_id, span_idx, rep_doc_id, rep_span_idx).
     ``duplicate_components`` materializes eagerly (localCheckpoint per
     round), so the edge-stage caches are released before returning —
     nothing stays persisted."""
-    spans = paragraph_spans(
-        docs, text_col=text_col, delim=delim, min_chars=min_chars,
-        id_col=id_col,
-    )
-    return _resolve_span_components(
-        spans, num_hashes=num_hashes, threshold=threshold, seed=seed,
-        span_bits=span_bits,
+    edges = span_duplicate_edges(spans, threshold=threshold)
+    comp = duplicate_components(edges)
+    release(edges)  # components are checkpointed; edge caches done
+    mask = F.lit((1 << SPAN_BITS) - 1)
+    return comp.select(
+        F.shiftright("doc_id", SPAN_BITS).alias("doc_id"),
+        F.col("doc_id").bitwiseAND(mask).alias("span_idx"),
+        F.shiftright("component", SPAN_BITS).alias("rep_doc_id"),
+        F.col("component").bitwiseAND(mask).alias("rep_span_idx"),
     )
 
 
-def dedup_shingles(
+def _strip(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 32,
-    threshold: float = 0.8,
-    seed: int = 42,
-    span_bits: int = SPAN_BITS,
-    id_col: str = "doc_id",
+    text_col: str,
+    id_col: str,
+    comp: DataFrame,
+    pieces: DataFrame,
+    width: int,
+    join_delim: str,
 ) -> DataFrame:
-    """Sub-paragraph dedup: resolve duplicate k-LINE shingles corpus-wide
-    (same edge machinery as ``dedup_spans`` over ``line_shingles``).
-
-    Returns (doc_id, span_idx, rep_doc_id, rep_span_idx) for every
-    shingle in a duplicate component; span_idx is the starting line
-    index, so overlapping hits on an m-line repeated block show up as
-    m-k+1 consecutive span_idx values per occurrence — a consumer strips
-    the covered line range [span_idx, span_idx+k)."""
-    spans = line_shingles(docs, text_col=text_col, k=k, id_col=id_col)
-    return _resolve_span_components(
-        spans, num_hashes=num_hashes, threshold=threshold, seed=seed,
-        span_bits=span_bits,
+    """Shared reassembly of the strip operators: drop every piece
+    (doc_id, idx, piece) covered by a non-representative component entry
+    -- pieces [span_idx, span_idx + width) -- and rejoin the survivors
+    with ``join_delim`` in original order.  One row per input document;
+    a fully stripped document comes back with empty text."""
+    covered = comp.filter(
+        (F.col("doc_id") != F.col("rep_doc_id"))
+        | (F.col("span_idx") != F.col("rep_span_idx"))
+    ).select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.col("span_idx"), F.col("span_idx") + F.lit(width - 1))
+        ).alias("idx"),
     )
-
-
-def strip_repeated_shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 32,
-    threshold: float = 0.8,
-    seed: int = 42,
-    span_bits: int = SPAN_BITS,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The keep-one corpus surface of shingle dedup: every LINE covered
-    by a non-representative duplicate k-line shingle is removed; the
-    representative occurrence (and all unique content) survives.
-
-    Coverage logic: only windows fully inside a repeated m-line block
-    are duplicates (straddling windows contain doc-unique context), and
-    their union covers exactly the block's lines — so stripping the
-    covered line set removes the repeated block and nothing else.
-    Returns (doc_id, text) with surviving lines rejoined by newline in
-    original order; one row per input document."""
-    spans = line_shingles(docs, text_col=text_col, k=k, id_col=id_col)
-    comp = _resolve_span_components(
-        spans, num_hashes=num_hashes, threshold=threshold, seed=seed,
-        span_bits=span_bits,
-    )
-    covered = (
-        comp.filter(
-            (F.col("doc_id") != F.col("rep_doc_id"))
-            | (F.col("span_idx") != F.col("rep_span_idx"))
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(
-                    F.col("span_idx"), F.col("span_idx") + F.lit(k - 1)
-                )
-            ).alias("line_idx"),
-        )
-        .distinct()
-    )
-    doclines = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias(
-            "line_idx", "line"
-        ),
-    )
-    kept = doclines.join(covered, ["doc_id", "line_idx"], "left_anti")
+    kept = pieces.join(covered, ["doc_id", "idx"], "left_anti")
     reassembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("line_idx", "line"))),
-                lambda s: s["line"],
+                F.array_sort(F.collect_list(F.struct("idx", "piece"))),
+                lambda s: s["piece"],
             ),
-            "\n",
+            join_delim,
         ).alias(text_col)
     )
     return (
@@ -323,30 +256,45 @@ def strip_repeated_shingles(
     )
 
 
-def _resolve_span_components(
-    spans: DataFrame,
-    num_hashes: int,
-    threshold: float,
-    seed: int,
-    span_bits: int,
+def dedup_spans(
+    docs: DataFrame,
+    text_col: str = "text",
+    delim: str = r"\n\n+",
+    min_chars: int = 1,
+    threshold: float = 0.8,
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Shared tail of dedup_spans/dedup_shingles: edges -> components ->
-    unpack uids.  ``duplicate_components`` materializes eagerly
-    (localCheckpoint per round), so the edge-stage caches are released
-    before returning — nothing stays persisted."""
-    edges = span_duplicate_edges(
-        spans, num_hashes=num_hashes, threshold=threshold, seed=seed,
-        span_bits=span_bits,
+    """Resolve duplicate spans across the corpus.
+
+    Returns (doc_id, span_idx, rep_doc_id, rep_span_idx) for every span
+    that belongs to a duplicate component (exact OR unigram-Jaccard >=
+    ``threshold``); (rep_doc_id, rep_span_idx) is the component's
+    min-uid span, the canonical occurrence.  Spans in no component are
+    unique content and are not emitted.  Nothing stays persisted."""
+    spans = paragraph_spans(
+        docs, text_col=text_col, delim=delim, min_chars=min_chars,
+        id_col=id_col,
     )
-    comp = duplicate_components(edges)
-    release(edges)  # components are checkpointed; edge caches done
-    cap = 1 << span_bits
-    return comp.select(
-        F.shiftright("doc_id", span_bits).alias("doc_id"),
-        F.col("doc_id").bitwiseAND(F.lit(cap - 1)).alias("span_idx"),
-        F.shiftright("component", span_bits).alias("rep_doc_id"),
-        F.col("component").bitwiseAND(F.lit(cap - 1)).alias("rep_span_idx"),
-    )
+    return _resolve_span_components(spans, threshold)
+
+
+def dedup_shingles(
+    docs: DataFrame,
+    text_col: str = "text",
+    k: int = 3,
+    threshold: float = 0.8,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Sub-paragraph dedup: resolve duplicate k-LINE shingles corpus-wide
+    (same edge machinery as ``dedup_spans`` over ``line_shingles``).
+
+    Returns (doc_id, span_idx, rep_doc_id, rep_span_idx) for every
+    shingle in a duplicate component; span_idx is the starting line
+    index, so overlapping hits on an m-line repeated block show up as
+    m-k+1 consecutive span_idx values per occurrence — a consumer strips
+    the covered line range [span_idx, span_idx+k)."""
+    spans = line_shingles(docs, text_col=text_col, k=k, id_col=id_col)
+    return _resolve_span_components(spans, threshold)
 
 
 def strip_repeated_spans(
@@ -355,10 +303,7 @@ def strip_repeated_spans(
     delim: str = r"\n\n+",
     join_delim: str = "\n\n",
     min_chars: int = 1,
-    num_hashes: int = 32,
     threshold: float = 0.8,
-    seed: int = 42,
-    span_bits: int = SPAN_BITS,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """The span-deduplicated corpus: every non-representative duplicate
@@ -372,34 +317,34 @@ def strip_repeated_spans(
         docs, text_col=text_col, delim=delim, min_chars=min_chars,
         id_col=id_col,
     )
-    edges = span_duplicate_edges(
-        spans, num_hashes=num_hashes, threshold=threshold, seed=seed,
-        span_bits=span_bits,
+    comp = _resolve_span_components(spans, threshold)
+    pieces = spans.select(
+        "doc_id", F.col("span_idx").alias("idx"), F.col("span_text").alias("piece")
     )
-    comp = duplicate_components(edges)
-    release(edges)
-    non_rep = comp.filter(F.col("doc_id") != F.col("component")).select(
-        F.col("doc_id").alias("uid")
+    return _strip(docs, text_col, id_col, comp, pieces, 1, join_delim)
+
+
+def strip_repeated_shingles(
+    docs: DataFrame,
+    text_col: str = "text",
+    k: int = 3,
+    threshold: float = 0.8,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The keep-one corpus surface of shingle dedup: every LINE covered
+    by a non-representative duplicate k-line shingle is removed; the
+    representative occurrence (and all unique content) survives.
+
+    Coverage logic: only windows fully inside a repeated m-line block
+    are duplicates (straddling windows contain doc-unique context), and
+    their union covers exactly the block's lines — so stripping the
+    covered line set removes the repeated block and nothing else.
+    Returns (doc_id, text) with surviving lines rejoined by newline in
+    original order; one row per input document."""
+    spans = line_shingles(docs, text_col=text_col, k=k, id_col=id_col)
+    comp = _resolve_span_components(spans, threshold)
+    pieces = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "piece"),
     )
-    kept = spans.withColumn(
-        "uid", span_uid(F.col("doc_id"), F.col("span_idx"), span_bits)
-    ).join(non_rep, "uid", "left_anti")
-    reassembled = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("span_idx", "span_text"))
-                ),
-                lambda s: s["span_text"],
-            ),
-            join_delim,
-        ).alias(text_col)
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(reassembled, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias(id_col),
-            F.coalesce(text_col, F.lit("")).alias(text_col),
-        )
-    )
+    return _strip(docs, text_col, id_col, comp, pieces, k, "\n")

@@ -179,23 +179,23 @@ def balanced(
 
 
 def extract_transcripts(
-    df: DataFrame, num_partitions: int | None = None, order: bool = False
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
-    """transcripts DataFrame -> extraction DataFrame.
+    """transcripts DataFrame -> extraction DataFrame, globally ordered by
+    (conv_id, turn_idx).
 
-    ``order=True`` adds the verification-stable (conv_id, turn_idx) global
-    sort; leave False for the 100TB path and rely on
-    sortWithinPartitions at write time instead.
+    The input is range-partitioned on (conv_id, turn_idx) before the
+    kernel (``balanced``) and the kernel keeps each partition's rows, so
+    sorting within partitions gives the global order.  An ``orderBy``
+    would add a second range exchange whose bound-sampling job runs the
+    Python kernel a second time.
     """
-    out = balanced(
+    return balanced(
         df.select("conv_id", "turn_idx", "text"), "conv_id", "turn_idx",
         num_partitions=num_partitions,
-    ).mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
-    if order:
-        out = out.orderBy("conv_id", "turn_idx")
-    else:
-        out = out.sortWithinPartitions("conv_id", "turn_idx")
-    return out
+    ).mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA).sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
 
 
 def extract_payload_turns(

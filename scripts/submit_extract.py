@@ -74,7 +74,7 @@ def main(argv: list[str]) -> int:
 
     if args.json_sink:
         write_segments_json(
-            extract_transcripts(transcripts, order=True), args.json_sink
+            extract_transcripts(transcripts), args.json_sink
         )
         print(f"json sink -> {args.json_sink}")
     spark.stop()

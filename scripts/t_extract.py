@@ -66,7 +66,7 @@ def main(argv: list[str]) -> int:
     spark = build_session(app="t_extract", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.read.parquet(args.input)
-    write_segments_json(extract_transcripts(df, order=True), args.output)
+    write_segments_json(extract_transcripts(df), args.output)
     print(f"segments json -> {args.output}")
     spark.stop()
     return 0

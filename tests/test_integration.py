@@ -48,7 +48,7 @@ def test_full_project_run(spark, tmp_path):
     )
 
     # 2. extraction (translate analogue), per-turn text equality
-    extracted = extract_transcripts(src, order=True)
+    extracted = extract_transcripts(src)
     n_turns = extracted.count()
     assert n_turns == len(rows)
 

@@ -64,20 +64,65 @@ class TestDedup:
         assert (1, 3) in pairs and pairs[(1, 3)] >= 0.5
         assert not any(4 in p or 5 in p for p in pairs)
 
-    def test_minhash_lsh_full_edge_list(self, docs_df):
-        # collapse_identical=False restores the per-pair edge list: the
-        # identical docs 1/2 each pair with near-dup 3 (full clique),
-        # where the default graph shape collapses 2 behind rep 1
-        sigs = minhash_signatures(docs_df)
-        full = {
-            (r.doc_a, r.doc_b): r.sig_jaccard
-            for r in minhash_lsh_pairs(
-                sigs, threshold=0.5, collapse_identical=False
-            ).collect()
-        }
-        assert full[(1, 2)] == 1.0
-        assert (1, 3) in full and (2, 3) in full
-        assert full[(1, 3)] == full[(2, 3)]
+    def test_minhash_kernels_match_python_reference(self, spark, docs_df):
+        # both unit kinds share one kernel; recompute every signature in
+        # pure Python (the permutation draws, the unit hashes, and
+        # uint64 arithmetic, which wraps at 2^64 before the mod p).  One
+        # extra document per kernel has more than 1<<16 units, so the
+        # kernel's chunked min crosses a chunk boundary.
+        import hashlib
+        import random
+
+        from crrf_det_spark.ops import minhash_word_signatures
+
+        p, wrap = (1 << 61) - 1, (1 << 64) - 1
+
+        def perms(num_hashes, seed=42):
+            rng = np.random.RandomState(seed)
+            a = rng.randint(1, p, size=num_hashes, dtype=np.int64)
+            b = rng.randint(0, p, size=num_hashes, dtype=np.int64)
+            return [int(x) for x in a], [int(x) for x in b]
+
+        def reference(units, num_hashes):
+            a, b = perms(num_hashes)
+            hs = {u % p for u in units}
+            if not hs:
+                return [p] * num_hashes
+            return [
+                min(((ai * h + bi) & wrap) % p for h in hs)
+                for ai, bi in zip(a, b)
+            ]
+
+        def char5(text):
+            data = text.encode("utf-8")
+            return [
+                sum(data[i + j] * 1099511628211 ** j for j in range(5)) & wrap
+                for i in range(len(data) - 4)
+            ]
+
+        def words(text):
+            toks = {t for t in text.split(" ") if t}
+            return [
+                int.from_bytes(hashlib.md5(t.encode()).digest()[8:], "little")
+                for t in toks
+            ]
+
+        rnd = random.Random(7)
+        long_chars = "".join(rnd.choice("abcdefgh ") for _ in range(70_000))
+        long_words = " ".join(f"w{i}" for i in range(70_000))
+        assert len(char5(long_chars)) > 1 << 16
+        for op, units, num_hashes, long_doc in (
+            (minhash_signatures, char5, 64, long_chars),
+            (minhash_word_signatures, words, 32, long_words),
+        ):
+            df = docs_df.unionByName(
+                spark.createDataFrame([(7, long_doc)], docs_df.schema)
+            )
+            got = {r.doc_id: list(r.signature) for r in op(df).collect()}
+            texts = dict(DOCS + [(7, long_doc)])
+            assert got == {
+                d: reference(units(t), num_hashes) for d, t in texts.items()
+            }, op.__name__
 
     def test_minhash_deterministic(self, docs_df):
         a = minhash_signatures(docs_df).orderBy("doc_id").collect()
@@ -171,22 +216,6 @@ class TestDedup:
         assert 0.3 <= pairs[(1, 3)] < 1.0
         assert (1, 4) not in pairs
 
-    def test_prefix_filter_matches_naive(self, docs_df):
-        from crrf_det_spark.ops.dedup import ngram_jaccard_pairs_prefix
-
-        for thr in (0.3, 0.6):
-            naive = {
-                (r.doc_a, r.doc_b): round(r.jaccard, 9)
-                for r in ngram_jaccard_pairs(docs_df, n=2, threshold=thr).collect()
-            }
-            fast = {
-                (r.doc_a, r.doc_b): round(r.jaccard, 9)
-                for r in ngram_jaccard_pairs_prefix(
-                    docs_df, n=2, threshold=thr
-                ).collect()
-            }
-            assert naive == fast
-
     def test_embedding_near_dup(self, emb_df):
         pairs = {
             (r.doc_a, r.doc_b): r.cosine
@@ -251,27 +280,6 @@ class TestDedup:
             parent[find(r.doc_a)] = find(r.doc_b)
         assert len({find(i) for i in range(n)}) == 1
         assert elapsed < 60, f"adversarial corpus took {elapsed:.1f}s"
-
-    def test_simhash_collapse_identical(self, spark):
-        from crrf_det_spark.ops import simhash_near_pairs, simhash_signatures
-
-        n = 2000
-        df = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("id") % 2 == 0, "alpha beta gamma delta words")
-            .otherwise("totally different other content here")
-            .alias("text"),
-        )
-        got = simhash_near_pairs(
-            simhash_signatures(df), max_hamming=3, collapse_identical=True
-        ).collect()
-        # two identical-signature groups of n/2 -> (n/2 - 1) star edges each
-        # (+ possibly a rep-rep edge if the two sigs are close; they aren't)
-        stars = [r for r in got if r.hamming == 0]
-        assert len(stars) == n - 2
-        reps = {r.doc_a for r in stars}
-        assert reps == {0, 1}
-
 
 class TestComponents:
     def test_adversarial_chain_graph(self, spark):

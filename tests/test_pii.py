@@ -87,6 +87,21 @@ class TestContaminationProbe:
         out = contamination_probe(docs, bench)
         assert sorted(r.doc_id for r in out.collect()) == [1, 3]
 
+    def test_each_doc_reported_once(self, spark):
+        # duplicate digests on the benchmark side, and two corpus docs
+        # sharing one digest: every matching doc comes back exactly once
+        docs = spark.createDataFrame(
+            [(1, "leaked answer"), (2, "leaked  answer"), (3, "clean")],
+            ["doc_id", "text"],
+        )
+        bench = spark.createDataFrame(
+            [("leaked answer",), ("leaked answer",), ("Leaked Answer",)],
+            ["text"],
+        ).select(normalized_digest(F.col("text")).alias("digest"))
+        out = contamination_probe(docs, bench).collect()
+        assert sorted(r.doc_id for r in out) == [1, 2]
+        assert len({r.digest for r in out}) == 1
+
     def test_probe_is_broadcast_semi_join(self, spark):
         docs = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
         bench = spark.createDataFrame([("x",)], ["text"]).select(

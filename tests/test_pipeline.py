@@ -23,7 +23,7 @@ def transcripts_df(spark):
 
 def test_extraction_matches_golden(spark, transcripts_df):
     rows, goldens = synth.generate(n_convs=12, seed=42, skew_convs=1, skew_factor=10)
-    out = extract_transcripts(transcripts_df, order=True).collect()
+    out = extract_transcripts(transcripts_df).collect()
     assert len(out) == len(rows)
     # stable ordering
     keys = [(r.conv_id, r.turn_idx) for r in out]
@@ -37,6 +37,22 @@ def test_extraction_matches_golden(spark, transcripts_df):
         got = [(s.type, s.content) for s in r.segments]
         assert got == [(g["type"], g["content"]) for g in want]
         assert r.extracted_text == "\n".join(g["content"] for g in want)
+
+
+def test_extraction_global_order_from_shuffled_input(spark):
+    # the range exchange ahead of the kernel plus the per-partition sort
+    # give the global (conv_id, turn_idx) order from shuffled input rows,
+    # with exactly one range exchange in the executed plan (an orderBy
+    # on top would add a second one, whose bound sampling reruns the
+    # Python kernel)
+    rows, df = _shuffled_skewed_corpus(spark)
+    out = extract_transcripts(df, num_partitions=8)
+    keys = [(r.conv_id, r.turn_idx) for r in out.collect()]
+    assert keys == sorted((r["conv_id"], r["turn_idx"]) for r in rows)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, plan
+    assert final.count("Exchange rangepartitioning") == 1, plan
 
 
 def test_lineage_totals(spark, transcripts_df):

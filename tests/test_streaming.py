@@ -42,7 +42,7 @@ def test_json_interop(spark, tmp_path):
     in_path = str(tmp_path / "in")
     json_path = str(tmp_path / "segments_json")
     n = _write_corpus(spark, in_path)
-    ext = extract_transcripts(spark.read.parquet(in_path), order=True)
+    ext = extract_transcripts(spark.read.parquet(in_path))
     write_segments_json(ext, json_path)
     back = read_segments_json(spark, json_path)
     assert back.count() == n
