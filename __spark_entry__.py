@@ -2178,13 +2178,8 @@ def _q_mm_binarize(spark, sf):
 
     media = base.mapInPandas(
         synth_payload, schema="media_id long, kind string, payload binary"
-    ).withColumn(
-        "meta",
-        F.lit(None).cast(
-            "struct<width:int,height:int,duration_ms:int,n_frames:int>"
-        ),
     )
-    out = binarize_images(media, fake=False)
+    out = binarize_images(media)
     return out.select(
         "media_id",
         "threshold",
@@ -2243,20 +2238,15 @@ def _q_mm_resize(spark, sf):
 
     media = base.mapInPandas(
         synth_payload, schema="media_id long, kind string, payload binary"
-    ).withColumn(
-        "meta",
-        F.lit(None).cast(
-            "struct<width:int,height:int,duration_ms:int,n_frames:int>"
-        ),
     )
-    resized = resize_images(media, to=(4, 4), fake=False)
+    resized = resize_images(media, to=(4, 4))
 
     def decode_rows(it):
         for pdf in it:
             levels = [
                 " ".join(
                     str(int(v))
-                    for v in decode_image(bytes(p), None, fake=False)[:, 0]
+                    for v in decode_image(bytes(p))[:, 0]
                 )
                 for p in pdf["payload"]
             ]

@@ -52,12 +52,6 @@ def has_html_marker(text: str) -> bool:
     return bool(text) and _HTML_DOC_RE.search(text) is not None
 
 
-def structural_tag_count(text: str) -> int:
-    """Number of structural open+close tags -- the dispatch density
-    signal."""
-    return len(_HTML_OPEN_RE.findall(text)) + len(_HTML_CLOSE_RE.findall(text))
-
-
 def looks_like_html(text: str) -> bool:
     """Cheap dispatch test.  A document marker is decisive; otherwise
     require BOTH an opening structural tag and a closing one -- prose that

@@ -6,18 +6,13 @@ mapInPandas stages.  Uncompressed netpbm payloads (PGM ``P5`` gray, PPM
 ``P6`` rgb) are decoded for REAL in pure numpy -- no external library.
 Compressed formats (jpeg/png/... images, non-PCM audio) use OPTIONAL codec
 libraries: when Pillow / soundfile are importable (any normal cluster),
-``decode_image`` / ``decode_audio`` decode them for real; in containers
-without them (like this one) those formats fall back to the documented
-stub behavior -- ``decode_image`` raises NotImplementedError unless
-``fake=True`` (a deterministic fake decoder seeded from the payload hash
-exercises the full Spark plumbing: schema, partitioning, UDF signature,
-batch shapes), and ``decode_audio`` raises NotImplementedError.  Both
-branches are tested (the codec branch via an injected fake module).
+``decode_image`` / ``decode_audio`` decode them for real; without them
+those formats raise NotImplementedError.  Both branches are tested (the
+codec branch via an injected stand-in module).
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -49,13 +44,6 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 FEATURE_SCHEMA = "media_id long, kind string, feature array<float>, out_width int, out_height int"
-
-
-def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic fake image decode: pixels seeded from payload digest."""
-    seed = int.from_bytes(hashlib.blake2b(payload or b"", digest_size=4).digest(), "little")
-    rng = np.random.RandomState(seed)
-    return rng.randint(0, 256, size=(height or 8, width or 8), dtype=np.uint8)
 
 
 def _parse_pnm(payload: bytes) -> np.ndarray:
@@ -118,14 +106,13 @@ def _pillow_decode(payload: bytes) -> np.ndarray | None:
         raise ValueError(f"malformed image payload: {e}") from e
 
 
-def decode_image(payload: bytes, meta, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """binary payload -> uint8 grayscale array.
 
     Netpbm (P5/P6) payloads decode for real in pure numpy; other formats
     decode through Pillow WHEN IT IS IMPORTABLE (any normal cluster).
-    Without Pillow, non-netpbm formats raise NotImplementedError unless
-    the caller opts into the deterministic fake decoder.  A payload that
-    looks decodable but is truncated/corrupt raises
+    Without Pillow, non-netpbm formats raise NotImplementedError.  A
+    payload that looks decodable but is truncated/corrupt raises
     ``ValueError('malformed ... payload: ...')`` -- batch callers
     (extract_features) catch it and skip the row."""
     if payload and payload[:2] in (b"P5", b"P6"):
@@ -133,13 +120,10 @@ def decode_image(payload: bytes, meta, fake: bool = False) -> np.ndarray:
     img = _pillow_decode(payload)
     if img is not None:
         return img
-    if not fake:
-        raise NotImplementedError(
-            "real decode implemented for netpbm P5/P6 only; other formats "
-            "require Pillow, which is not importable in this container -- "
-            "pass fake=True for the deterministic stub"
-        )
-    return _fake_decode(payload, meta["width"] if meta else 8, meta["height"] if meta else 8)
+    raise NotImplementedError(
+        "real decode implemented for netpbm P5/P6 only; other formats "
+        "require Pillow, which is not importable here"
+    )
 
 
 def _soundfile_decode(payload: bytes) -> tuple[np.ndarray, int] | None:
@@ -324,8 +308,7 @@ def kmeans_binarize(
     return out, thr
 
 
-def binarize_images(media: DataFrame, n_clusters: int = 3,
-                    fake: bool = True) -> DataFrame:
+def binarize_images(media: DataFrame, n_clusters: int = 3) -> DataFrame:
     """image rows -> (media_id, threshold, ink_ratio, width, height):
     decode, adaptive-KMeans binarize (P4), report the threshold picked
     and the fraction of ink (0) pixels.  Malformed payloads are skipped,
@@ -337,15 +320,14 @@ def binarize_images(media: DataFrame, n_clusters: int = 3,
                 "media_id": [], "threshold": [], "ink_ratio": [],
                 "width": [], "height": [],
             }
-            for mid, kind, payload, meta in zip(
+            for mid, kind, payload in zip(
                 pdf["media_id"].values, pdf["kind"].values,
-                pdf["payload"].values, pdf["meta"].values,
+                pdf["payload"].values,
             ):
                 if kind != "image" or payload is None:
                     continue
-                m = meta if meta is not None else {"width": 8, "height": 8}
                 try:
-                    img = decode_image(bytes(payload), m, fake=fake)
+                    img = decode_image(bytes(payload))
                 except ValueError:
                     continue
                 binimg, thr = kmeans_binarize(img, n_clusters=n_clusters)
@@ -362,7 +344,7 @@ def binarize_images(media: DataFrame, n_clusters: int = 3,
                          "width", "height"],
             )
 
-    return spread(media.select("media_id", "kind", "payload", "meta")).mapInPandas(
+    return spread(media.select("media_id", "kind", "payload")).mapInPandas(
         batches,
         schema=(
             "media_id long, threshold int, ink_ratio double, "
@@ -374,27 +356,27 @@ def binarize_images(media: DataFrame, n_clusters: int = 3,
 def extract_features(
     media: DataFrame,
     resize_to: tuple[int, int] = (8, 8),
-    fake: bool = True,
 ) -> DataFrame:
     """media table -> (media_id, kind, feature: array<float>, out dims).
 
-    The kernel decodes (stub), resizes by block-mean (real numpy), and emits
-    a flattened normalized feature vector.  Batch shape and schema are real;
-    only the decode is fake.  Rows whose payload fails decode (malformed
-    netpbm -> ValueError) are SKIPPED, not fatal -- one corrupt blob in a
-    100TB corpus must never kill a task.
+    The kernel decodes image rows, resizes by block-mean (real numpy), and
+    emits a flattened normalized feature vector.  Non-image rows are
+    skipped, and so are rows whose payload fails decode (malformed netpbm
+    -> ValueError) -- one corrupt blob in a 100TB corpus must never kill a
+    task.
     """
     tw, th = resize_to
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats, keep = [], []
-            for k, (payload, meta) in enumerate(
-                zip(pdf["payload"].values, pdf["meta"].values)
+            for k, (kind, payload) in enumerate(
+                zip(pdf["kind"].values, pdf["payload"].values)
             ):
-                m = meta if meta is not None else {"width": 8, "height": 8}
+                if kind != "image" or payload is None:
+                    continue
                 try:
-                    img = decode_image(payload, m, fake=fake)
+                    img = decode_image(bytes(payload))
                 except ValueError:
                     continue  # malformed payload: skip the row
                 # block-mean resize to (th, tw) -- real vectorized kernel
@@ -413,13 +395,15 @@ def extract_features(
                 {
                     "media_id": pdf["media_id"].values[keep],
                     "kind": pdf["kind"].values[keep],
-                    "feature": feats,
+                    # object dtype: an all-skipped batch yields an empty
+                    # list, which pandas would type as float64
+                    "feature": pd.Series(feats, dtype=object),
                     "out_width": tw,
                     "out_height": th,
                 }
             )
 
-    return spread(media.select("media_id", "kind", "payload", "meta")).mapInPandas(
+    return spread(media.select("media_id", "kind", "payload")).mapInPandas(
         batches, schema=FEATURE_SCHEMA
     )
 
@@ -453,7 +437,7 @@ def encode_pgm(img: np.ndarray) -> bytes:
 
 
 def resize_images(
-    media: DataFrame, to: tuple[int, int] = (200, 200), fake: bool = True
+    media: DataFrame, to: tuple[int, int] = (200, 200)
 ) -> DataFrame:
     """image rows -> (media_id, payload, width, height, mean_level):
     decode, area-average resize to ``to=(width, height)``, re-encode as a
@@ -472,15 +456,14 @@ def resize_images(
                 "media_id": [], "payload": [],
                 "width": [], "height": [], "mean_level": [],
             }
-            for mid, kind, payload, meta in zip(
+            for mid, kind, payload in zip(
                 pdf["media_id"].values, pdf["kind"].values,
-                pdf["payload"].values, pdf["meta"].values,
+                pdf["payload"].values,
             ):
                 if kind != "image" or payload is None:
                     continue
-                m = meta if meta is not None else {"width": 8, "height": 8}
                 try:
-                    img = decode_image(bytes(payload), m, fake=fake)
+                    img = decode_image(bytes(payload))
                 except ValueError:
                     continue
                 if not img.size:
@@ -499,7 +482,7 @@ def resize_images(
                          "mean_level"],
             )
 
-    return spread(media.select("media_id", "kind", "payload", "meta")).mapInPandas(
+    return spread(media.select("media_id", "kind", "payload")).mapInPandas(
         batches,
         schema=(
             "media_id long, payload binary, width int, height int, "
@@ -508,9 +491,9 @@ def resize_images(
     )
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """video rows -> one row per sampled frame timestamp (plumbing only;
-    frame decode is the same stub)."""
+    frames are not decoded)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

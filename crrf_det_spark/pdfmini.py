@@ -24,8 +24,9 @@ Two parsing paths, tried in order:
   containing ``BT`` and decode strings as latin-1 — the round-1 behavior,
   unchanged.
 
-Stream codecs (chainable, spec order): FlateDecode (+ PNG predictors),
-LZWDecode (/EarlyChange honored), ASCIIHexDecode, ASCII85Decode,
+Stream codecs (chainable, spec order, /DecodeParms per stage):
+FlateDecode and LZWDecode (+ PNG predictors; LZW honors /EarlyChange),
+ASCIIHexDecode, ASCII85Decode,
 RunLengthDecode (round 5).  Simple-font ``/Encoding /Differences``
 remaps decode through an Adobe-Glyph-List subset + ``/uniXXXX`` names
 (round 5).  Still not supported (the parser skips rather than
@@ -190,47 +191,72 @@ def _runlength_decode(data: bytes) -> bytes | None:
     return bytes(out)
 
 
+def _inflate(data: bytes) -> bytes | None:
+    try:
+        return zlib.decompress(data)
+    except zlib.error:
+        return None
+
+
+_CODECS = {
+    b"FlateDecode": _inflate,
+    b"ASCIIHexDecode": _asciihex_decode,
+    b"ASCII85Decode": _ascii85_decode,
+    b"RunLengthDecode": _runlength_decode,
+}
+_DECODE_PARMS_RE = re.compile(rb"/DecodeParms\s*(\[.*?\]|<<.*?>>)", re.S)
+
+
+def _stage_parms(d: bytes, n_stages: int) -> list[bytes] | None:
+    """The /DecodeParms dict body of each of ``n_stages`` filter stages
+    (b"" for none): one dict for a single filter, or an array parallel to
+    the /Filter array whose entries are dicts or ``null``.  None when the
+    parameters cannot be assigned to stages."""
+    m = _DECODE_PARMS_RE.search(d)
+    if not m:
+        return [b""] * n_stages
+    value = m.group(1)
+    parms = (
+        [value] if value.startswith(b"<<")
+        else re.findall(rb"<<.*?>>|[^\s<>]+", value[1:-1], re.S)
+    )
+    # an indirect reference ("5 0 R") or a count mismatch fits no stage
+    if len(parms) != n_stages or not all(
+        p == b"null" or p.startswith(b"<<") for p in parms
+    ):
+        return None
+    return [b"" if p == b"null" else p for p in parms]
+
+
+def _parm(parms: bytes, key: bytes, default: int) -> int:
+    m = re.search(rb"/" + key + rb"\s+(\d+)", parms)
+    return int(m.group(1)) if m else default
+
+
 def _decode_stream(d: bytes, data: bytes) -> bytes | None:
-    """Apply the dict's /Filter chain (+ /DecodeParms predictor) to raw
-    stream bytes; None when a codec is unsupported or corrupt.  Filters
-    apply left to right per the spec (``[/ASCII85Decode /FlateDecode]``
-    un-ASCIIs first, then inflates)."""
+    """Apply the dict's /Filter chain to raw stream bytes; None when a
+    codec is unsupported or corrupt.  Filters apply left to right per the
+    spec (``[/ASCII85Decode /FlateDecode]`` un-ASCIIs first, then
+    inflates).  Each stage reads its own /DecodeParms entry: a PNG
+    predictor is undone right after the Flate or LZW stage it belongs to,
+    and LZW takes its /EarlyChange from there."""
     fm = re.search(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)", d)
     filters = re.findall(rb"/([A-Za-z0-9]+)", fm.group(1)) if fm else []
-    for f in filters:
-        if f == b"FlateDecode":
-            try:
-                data = zlib.decompress(data)
-            except zlib.error:
-                return None
-        elif f == b"LZWDecode":
-            em = re.search(rb"/EarlyChange\s+(\d+)", d)
-            nxt = _lzw_decode(data, early=int(em.group(1)) if em else 1)
-            if nxt is None:
-                return None
-            data = nxt
-        elif f == b"ASCIIHexDecode":
-            nxt = _asciihex_decode(data)
-            if nxt is None:
-                return None
-            data = nxt
-        elif f == b"ASCII85Decode":
-            nxt = _ascii85_decode(data)
-            if nxt is None:
-                return None
-            data = nxt
-        elif f == b"RunLengthDecode":
-            nxt = _runlength_decode(data)
-            if nxt is None:
-                return None
-            data = nxt
+    stage_parms = _stage_parms(d, len(filters))
+    if stage_parms is None:
+        return None
+    for f, parms in zip(filters, stage_parms):
+        if f == b"LZWDecode":
+            data = _lzw_decode(data, early=_parm(parms, b"EarlyChange", 1))
+        elif f in _CODECS:
+            data = _CODECS[f](data)
         else:
             return None  # image codecs / crypt filters unsupported
-    m = re.search(rb"/Predictor\s+(\d+)", d)
-    if m and int(m.group(1)) >= 10:
-        cm = re.search(rb"/Columns\s+(\d+)", d)
-        columns = int(cm.group(1)) if cm else 1
-        data = _png_unpredict(data, columns)
+        if data is None:
+            return None
+        predicted = _parm(parms, b"Predictor", 1) >= 10
+        if predicted and f in (b"FlateDecode", b"LZWDecode"):
+            data = _png_unpredict(data, _parm(parms, b"Columns", 1))
     return data
 
 
@@ -268,7 +294,7 @@ def _xref_stream_entries(payload: bytes) -> dict[int, tuple[int, int, int]]:
     seen: set[int] = set()
     while offset is not None and offset not in seen and offset < len(payload):
         seen.add(offset)
-        om = _OBJ_RE.match(payload, _skip_objnum_ws(payload, offset))
+        om = _OBJ_RE.match(payload, offset)
         if not om:
             break
         body = om.group(2)
@@ -309,12 +335,6 @@ def _xref_stream_entries(payload: bytes) -> dict[int, tuple[int, int, int]]:
         pm = re.search(rb"/Prev\s+(\d+)", d)
         offset = int(pm.group(1)) if pm else None
     return entries
-
-
-def _skip_objnum_ws(payload: bytes, offset: int) -> int:
-    """xref offsets point at the object NUMBER; _OBJ_RE matches from
-    there, so this is identity — kept for clarity at call sites."""
-    return offset
 
 
 def _objects(payload: bytes) -> dict[int, bytes]:

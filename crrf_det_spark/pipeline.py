@@ -1,9 +1,18 @@
 """Spark extraction pipeline (SURVEY.md section 3.1 re-expression).
 
 The reference's per-document driver (/root/reference/src/t-pdf:86-145) runs
-one process per PDF; here the whole corpus is one DataFrame pass:
+one process per PDF: decode, segment, emit JSON.  Here the whole corpus is
+one DataFrame pass:
 
-    read -> range repartition -> mapInPandas(extract_batch) -> sink
+    read -> range repartition -> mapInPandas(_extract_batches) -> sink
+
+and the per-document work is one row function, ``extract_row``: a turn's
+text or payload bytes in, its ``EXTRACTION_SCHEMA`` columns out.  Every
+entry point -- text turns (``extract_transcripts``), PDF/HTML payloads
+(``extract_payload_turns``), the resumable sink, the stream
+(``streaming.extract_stream``) and the local mode of
+``scripts/t_extract.py`` -- runs that one function, so a turn extracts
+the same way whichever path carries it.
 
 Scale design (for a 1000-executor cluster over ~10^12 turns):
 
@@ -40,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .extract import extract_turn_auto, extracted_text
+from .pdfmini import looks_like_pdf, pdf_text_lines_geometry
 from .schema import EXTRACTION_SCHEMA
 
 
@@ -104,64 +114,79 @@ def build_session(
     return builder.getOrCreate()
 
 
+def extract_row(value: str | bytes | None) -> tuple:
+    """One turn's input value -> its ``EXTRACTION_SCHEMA`` columns after
+    the keys: (segments, extracted_text, n_segments, n_tables,
+    n_chars_in, n_chars_out).
+
+    Text is used as is.  Payload bytes are decoded: a PDF through
+    pdfmini, keeping its TRUE line geometry (baselines on the reference's
+    raster scale, so the grid kernel's group sweep runs the reference's
+    own pixel thresholds -- sub-char leading decisions match what the
+    reference sees in its rasterized pixels); anything else as strict
+    UTF-8, which the auto dispatch routes to the HTML or text-grid path.
+    ``None`` and undecodable bytes become empty text: zero segments,
+    ``n_chars_in`` 0.  The geometry stays inside this call; it never
+    crosses Arrow."""
+    line_px = None
+    if isinstance(value, str):
+        text = value
+    elif value is None:
+        text = ""
+    else:
+        payload = bytes(value)
+        if looks_like_pdf(payload):
+            lines, line_px = pdf_text_lines_geometry(payload)
+            text = "\n".join(lines)
+        else:
+            try:
+                text = payload.decode("utf-8")
+            except UnicodeDecodeError:
+                text = ""
+    segs = extract_turn_auto(text, line_px=line_px)
+    etext = extracted_text(segs)
+    return (
+        [
+            {
+                "cindex": i,
+                "type": s["type"],
+                "content": s["content"],
+                "rows": s["rows"],
+                "box": s["box"],
+            }
+            for i, s in enumerate(segs)
+        ],
+        etext,
+        len(segs),
+        sum(1 for s in segs if s["type"] == "table"),
+        len(text),
+        len(etext),
+    )
+
+
+_COLS = [f.name for f in EXTRACTION_SCHEMA.fields]
+
+
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: one input row -> one output row with nested
-    segments.  All heavy work is numpy inside the batch (SURVEY.md
-    section 2.9)."""
-    cols = [f.name for f in EXTRACTION_SCHEMA.fields]
+    """mapInPandas kernel over ``(conv_id, turn_idx, text | payload)``:
+    ``extract_row`` on the third column, one output row per input row.
+    All heavy work is numpy inside the batch (SURVEY.md section 2.9)."""
     for pdf in batches:
-        segments_c, etext_c, nseg_c, ntab_c, nin_c, nout_c = (
-            [], [], [], [], [], [],
-        )
-        # optional worker-local true-geometry column (payload path)
-        geoms = (
-            pdf["_line_px"].values
-            if "_line_px" in pdf.columns
-            else [None] * len(pdf)
-        )
-        for text, line_px in zip(pdf["text"].values, geoms):
-            segs = extract_turn_auto(
-                text if isinstance(text, str) else "", line_px=line_px
-            )
-            segments_c.append(
-                [
-                    {
-                        "cindex": i,
-                        "type": s["type"],
-                        "content": s["content"],
-                        "rows": s["rows"],
-                        "box": s["box"],
-                    }
-                    for i, s in enumerate(segs)
-                ]
-            )
-            etext = extracted_text(segs)
-            etext_c.append(etext)
-            nseg_c.append(len(segs))
-            ntab_c.append(sum(1 for s in segs if s["type"] == "table"))
-            nin_c.append(len(text) if isinstance(text, str) else 0)
-            nout_c.append(len(etext))
+        out = zip(*map(extract_row, pdf.iloc[:, 2].values))
         yield pd.DataFrame(
             {
                 "conv_id": pdf["conv_id"].values,
                 "turn_idx": pdf["turn_idx"].astype("int32").values,
-                "segments": segments_c,
-                "extracted_text": etext_c,
-                "n_segments": nseg_c,
-                "n_tables": ntab_c,
-                "n_chars_in": nin_c,
-                "n_chars_out": nout_c,
+                **{name: list(col) for name, col in zip(_COLS[2:], out)},
             },
-            columns=cols,
+            columns=_COLS,
         )
 
 
-def balanced(
-    df: DataFrame, *keys: str | Column, num_partitions: int | None = None
-) -> DataFrame:
+def balanced(df: DataFrame, *keys: str | Column) -> DataFrame:
     """Range-partition on ``keys`` into tasks of equal row count: the one
-    shuffle ahead of every extraction stage.  Default: one task per slot
-    (the scheduler's parallelism), so the Python stage runs in one wave.
+    shuffle ahead of every extraction stage.  One task per slot (the
+    scheduler's parallelism), so the Python stage runs in one wave.
 
     Range bounds come from a sample of the keys -- one extra job that
     re-reads this exchange's child once -- and split a skewed conversation
@@ -173,88 +198,36 @@ def balanced(
     collapse the extraction stage to a handful of partitions and serialize
     the mapInPandas work.
     """
-    if not num_partitions:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartitionByRange(num_partitions, *keys)
-
-
-def extract_transcripts(
-    df: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
-    """transcripts DataFrame -> extraction DataFrame, globally ordered by
-    (conv_id, turn_idx).
-
-    The input is range-partitioned on (conv_id, turn_idx) before the
-    kernel (``balanced``) and the kernel keeps each partition's rows, so
-    sorting within partitions gives the global order.  An ``orderBy``
-    would add a second range exchange whose bound-sampling job runs the
-    Python kernel a second time.
-    """
-    return balanced(
-        df.select("conv_id", "turn_idx", "text"), "conv_id", "turn_idx",
-        num_partitions=num_partitions,
-    ).mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA).sortWithinPartitions(
-        "conv_id", "turn_idx"
+    return df.repartitionByRange(
+        df.sparkSession.sparkContext.defaultParallelism, *keys
     )
 
 
-def extract_payload_turns(
-    df: DataFrame, payload_col: str = "payload",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Binary-payload variant of ``extract_transcripts`` for tool-emitted
-    attachments: PDF payloads go through the pure-stdlib text extractor
-    (pdfmini) then the SAME grid kernel; utf-8 payloads dispatch through
-    the HTML/text auto path.  Undecodable payloads yield zero segments
-    (n_chars_in still recorded).
-
-    PDF payloads carry TRUE line geometry (pdfmini tracks the text
-    matrix; pdf_text_lines_geometry converts baselines to the reference's
-    raster scale), so the grid kernel's group sweep runs the reference's
-    own pixel thresholds for them — sub-char leading decisions (split
-    vs same-paragraph) match what the reference sees in its rasterized
-    pixels instead of the quantized text analogue.  The geometry rides a
-    worker-local object column; it never crosses Arrow."""
-    from .pdfmini import looks_like_pdf, pdf_text_lines_geometry
-
-    def batches(it):
-        for pdf_batch in it:
-            texts = []
-            geoms = []
-            for payload in pdf_batch[payload_col].values:
-                if payload is None:
-                    texts.append("")
-                    geoms.append(None)
-                    continue
-                b = bytes(payload)
-                if looks_like_pdf(b):
-                    lines, geom = pdf_text_lines_geometry(b)
-                    texts.append("\n".join(lines))
-                    geoms.append(geom)
-                else:
-                    geoms.append(None)
-                    try:
-                        texts.append(b.decode("utf-8"))
-                    except UnicodeDecodeError:
-                        texts.append("")
-            inner = pd.DataFrame(
-                {
-                    "conv_id": pdf_batch["conv_id"].values,
-                    "turn_idx": pdf_batch["turn_idx"].values,
-                    "text": texts,
-                }
-            )
-            inner["_line_px"] = geoms
-            yield from _extract_batches(iter([inner]))
-
+def _extract(df: DataFrame, value_col: str) -> DataFrame:
+    """Range-partition on (conv_id, turn_idx), run the kernel, and sort
+    within partitions.  The kernel keeps each partition's rows, so the
+    per-partition sort gives the global order; an ``orderBy`` would add a
+    second range exchange whose bound-sampling job runs the Python kernel
+    a second time."""
     return (
-        balanced(
-            df.select("conv_id", "turn_idx", payload_col), "conv_id", "turn_idx",
-            num_partitions=num_partitions,
-        )
-        .mapInPandas(batches, schema=EXTRACTION_SCHEMA)
+        balanced(df.select("conv_id", "turn_idx", value_col), "conv_id", "turn_idx")
+        .mapInPandas(_extract_batches, schema=EXTRACTION_SCHEMA)
         .sortWithinPartitions("conv_id", "turn_idx")
     )
+
+
+def extract_transcripts(df: DataFrame) -> DataFrame:
+    """transcripts DataFrame -> extraction DataFrame, globally ordered by
+    (conv_id, turn_idx)."""
+    return _extract(df, "text")
+
+
+def extract_payload_turns(df: DataFrame) -> DataFrame:
+    """Binary-payload variant of ``extract_transcripts`` for tool-emitted
+    attachments in a ``payload`` column: PDFs through pdfmini with their
+    true line geometry, everything else as strict UTF-8 through the
+    HTML/text auto path (``extract_row``)."""
+    return _extract(df, "payload")
 
 
 def ingest_transcripts(
@@ -356,9 +329,7 @@ def run_resumable_extraction(
     return todo
 
 
-def observed_extraction(
-    df: DataFrame, num_partitions: int | None = None
-):
+def observed_extraction(df: DataFrame):
     """``extract_transcripts`` with free in-flight metrics: returns
     (DataFrame, Observation).  After any action on the DataFrame,
     ``observation.get`` yields {n_rows, n_segments, n_chars_in,
@@ -369,7 +340,7 @@ def observed_extraction(
     from pyspark.sql import Observation
 
     obs = Observation("extract_metrics")
-    out = extract_transcripts(df, num_partitions=num_partitions).observe(
+    out = extract_transcripts(df).observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("n_segments").alias("n_segments"),
@@ -379,12 +350,12 @@ def observed_extraction(
     return out, obs
 
 
-def lineage(extraction: DataFrame, stage: str = "extract") -> DataFrame:
+def lineage(extraction: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics table (north rule): row counts, segment
     counts, byte counts grouped by physical partition."""
     with_pid = extraction.withColumn("partition_id", F.spark_partition_id())
     return with_pid.groupBy("partition_id").agg(
-        F.lit(stage).alias("stage"),
+        F.lit("extract").alias("stage"),
         F.count("*").alias("n_rows"),
         F.sum("n_segments").alias("n_segments"),
         F.sum("n_chars_in").alias("n_bytes_in"),

@@ -9,7 +9,9 @@ Index document identity mirrors the reference: one doc per segment,
 ``_id = (conv_id, turn_idx, cindex)`` with field 'text' or 'table'
 (index.js:37-48; tables are flattened rows joined by newline, index.js:44-47).
 
-TFIDF formula (documented, used identically in the DuckDB oracles):
+TFIDF formula (documented, used identically in the DuckDB oracles; scored
+at query time by ``search.query.search``/``search_many``, with df taken
+per case-folded term):
     tf(d, t)  = occurrences of t in d
     idf(t)    = ln(N / df(t)),  N = total docs, df = docs containing t
     score     = tf * idf
@@ -50,29 +52,4 @@ def build_index(segments: DataFrame, lengths: tuple[int, ...] = (1, 2, 3)) -> Da
         )
         .groupBy("conv_id", "turn_idx", "cindex", "field", "term")
         .agg(F.count("*").alias("tf"))
-    )
-
-
-def tfidf_scores(postings: DataFrame, n_docs: int | None = None) -> DataFrame:
-    """postings -> per (doc, field, term) tfidf scores.
-
-    df/idf are computed with two hash aggs and a broadcast-able join on
-    term (term dictionary is tiny relative to postings).  Pass ``n_docs``
-    when the caller knows the corpus size (a cheap count on the segments
-    table); otherwise it is derived with a distinct-count job over the
-    postings, which is much more expensive.
-    """
-    if n_docs is None:
-        n_docs = postings.select("conv_id", "turn_idx", "cindex").distinct().count()
-    df_by_term = postings.groupBy("term").agg(
-        F.count_distinct("conv_id", "turn_idx", "cindex").alias("df")
-    )
-    return (
-        postings.join(F.broadcast(df_by_term), "term")
-        .withColumn("idf", F.log(F.lit(float(n_docs)) / F.col("df")))
-        .withColumn("tfidf", F.col("tf") * F.col("idf"))
-        .select(
-            "conv_id", "turn_idx", "cindex", "field", "term", "tf", "df",
-            "idf", "tfidf",
-        )
     )

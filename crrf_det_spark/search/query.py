@@ -20,7 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index import build_index, tfidf_scores
+from .index import build_index
 
 
 @dataclass
@@ -109,9 +109,14 @@ def search(
         .filter(F.col("term_l").isin(all_terms))
         .persist()
     )
+    # df per case-folded term over the matched subset, as search_many
+    # takes it: a pinned term's subset holds only its field's postings
     inc = pl.filter(match(q.includes))
-    sc = tfidf_scores(inc, n_docs=n_docs).withColumn(
-        "term_l", F.lower(F.col("term"))
+    df_by_term = inc.groupBy("term_l").agg(
+        F.count_distinct("conv_id", "turn_idx", "cindex").alias("df")
+    )
+    sc = inc.join(F.broadcast(df_by_term), "term_l").withColumn(
+        "tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
     )
     n_terms = len({t for _f, t in q.includes})
     doc_hits = (

@@ -4,9 +4,12 @@ The reference has NO streaming operators (SURVEY.md §2.10): its async-task
 layer is batch with polled progress.  The faithful re-expression is the
 batch pipeline with resumable checkpoints.  This module is the additive
 streaming path for users who ingest transcripts continuously: a
-``readStream`` over an append-only transcripts directory/table, the same
-Arrow-batched extraction kernel per micro-batch, and an append sink with
-exactly-once semantics via the streaming checkpoint.
+``readStream`` over an append-only transcripts directory/table, the batch
+pipeline's own Arrow-batched kernel (``pipeline._extract_batches``, which
+maps the one row function ``pipeline.extract_row``) per micro-batch, and
+an append sink with exactly-once semantics via the streaming checkpoint.
+A streamed turn therefore extracts to the same row as
+``extract_transcripts`` and the resumable sink give for it.
 
 The kernel is stateless per row, so no watermark/state store is needed --
 late rows extract identically whenever they arrive.  On top of it this
@@ -48,7 +51,7 @@ def read_transcript_stream(
 
 
 def extract_stream(transcripts: DataFrame) -> DataFrame:
-    """Streaming extraction: same kernel, per micro-batch.
+    """Streaming extraction: the batch pipeline's kernel, per micro-batch.
 
     No pre-shuffle: a streaming repartition would force a stateful
     exchange; file-source micro-batches already bound partition size via

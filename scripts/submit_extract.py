@@ -53,7 +53,6 @@ def main(argv: list[str]) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from crrf_det_spark.pipeline import (
-        extract_transcripts,
         lineage,
         run_resumable_extraction,
         write_segments_json,
@@ -66,16 +65,15 @@ def main(argv: list[str]) -> int:
     print(f"processed {len(done)} buckets -> {args.output}")
 
     out = spark.read.parquet(args.output)
-    lineage(out, stage="extract").write.mode("overwrite").parquet(
+    lineage(out).write.mode("overwrite").parquet(
         args.output.rstrip("/") + "_lineage"
     )
     n = out.count()
     print(f"extraction rows: {n}")
 
     if args.json_sink:
-        write_segments_json(
-            extract_transcripts(transcripts), args.json_sink
-        )
+        # from the sink just written, not a second kernel pass
+        write_segments_json(out, args.json_sink)
         print(f"json sink -> {args.json_sink}")
     spark.stop()
     return 0

@@ -8,8 +8,13 @@ t-pdf driver, /root/reference/src/t-pdf:86-156).
     # transcripts parquet -> JSON-lines segments (page.N.json analogue)
     python scripts/t_extract.py -i transcripts_parquet_dir -o outdir --spark
 
-The plain-file mode runs the kernel locally (no Spark session) -- handy for
-inspecting one document; the --spark mode runs the full pipeline.
+The plain-file mode runs the pipeline's row function
+(``crrf_det_spark.pipeline.extract_row``) locally, without a Spark session
+-- handy for inspecting one document.  It reads the file as a payload, the
+way ``extract_payload_turns`` does: a PDF through pdfmini with its true
+line geometry, anything else as strict UTF-8 (undecodable bytes give zero
+segments), so one file gives the segments that pipeline gives for it.
+The --spark mode runs the full pipeline.
 """
 
 from __future__ import annotations
@@ -33,28 +38,19 @@ def main(argv: list[str]) -> int:
 
     os.makedirs(args.output, exist_ok=True)
     if not args.spark:
-        from crrf_det_spark.extract import extract_turn_auto, extracted_text
-        from crrf_det_spark.pdfmini import looks_like_pdf, pdf_text
+        from crrf_det_spark.pipeline import extract_row
 
         with open(args.input, "rb") as f:
-            payload = f.read()
-        if looks_like_pdf(payload):
-            text = pdf_text(payload)  # real t-pdf parity: PDF in, JSON out
-        else:
-            text = payload.decode("utf-8", errors="replace")
-        segments = extract_turn_auto(text)
+            segments, etext, n_segments, _, n_chars, _ = extract_row(f.read())
         doc = {
-            "meta": {"chars": len(text), "segments": len(segments)},
-            "content": [
-                {"cindex": i, **{k: s[k] for k in ("type", "content", "rows", "box")}}
-                for i, s in enumerate(segments)
-            ],
-            "extracted_text": extracted_text(segments),
+            "meta": {"chars": n_chars, "segments": n_segments},
+            "content": segments,
+            "extracted_text": etext,
         }
         out = os.path.join(args.output, "doc.json")
         with open(out, "w", encoding="utf-8") as f:
             json.dump(doc, f, ensure_ascii=False, indent=1)
-        print(f"{len(segments)} segments -> {out}")
+        print(f"{n_segments} segments -> {out}")
         return 0
 
     from crrf_det_spark.pipeline import (

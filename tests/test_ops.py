@@ -457,16 +457,16 @@ class TestTextStats:
 
 
 class TestMultimodal:
-    def test_stub_raises_without_fake(self):
+    def test_stub_raises_without_pillow(self):
         from crrf_det_spark.ops.multimodal import decode_image
 
         with pytest.raises(NotImplementedError):
-            decode_image(b"x", {"width": 4, "height": 4}, fake=False)
+            decode_image(b"x")
 
     def test_pillow_branch_dispatch(self, monkeypatch):
         # the optional-codec branch: inject a fake PIL so the dispatch
-        # runs in this Pillow-less container (the stub branch is the
-        # test above)
+        # runs without Pillow installed (the stub branch is the test
+        # above)
         import sys
         import types
 
@@ -486,7 +486,7 @@ class TestMultimodal:
         fake_pil = types.ModuleType("PIL")
         fake_pil.Image = types.SimpleNamespace(open=lambda b: _FakeIm())
         monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-        img = mm.decode_image(b"\x89PNG-ish", None, fake=False)
+        img = mm.decode_image(b"\x89PNG-ish")
         assert img.shape == (4, 6) and img.dtype == np.uint8
 
         # a codec failure maps to the skip-row ValueError contract
@@ -495,7 +495,7 @@ class TestMultimodal:
 
         fake_pil.Image = types.SimpleNamespace(open=_boom)
         with pytest.raises(ValueError, match="malformed image payload"):
-            mm.decode_image(b"\x89PNG-ish", None, fake=False)
+            mm.decode_image(b"\x89PNG-ish")
 
     def test_soundfile_branch_dispatch(self, monkeypatch):
         import sys
@@ -524,7 +524,7 @@ class TestMultimodal:
         # P5 grayscale roundtrip (with a header comment)
         img = np.arange(48, dtype=np.uint8).reshape(6, 8)
         p5 = b"P5\n# comment\n8 6\n255\n" + img.tobytes()
-        got = decode_image(p5, None, fake=False)
+        got = decode_image(p5)
         assert np.array_equal(got, img)
         # P6 rgb -> channel-mean grayscale
         rgb = np.zeros((2, 2, 3), dtype=np.uint8)
@@ -532,12 +532,12 @@ class TestMultimodal:
         rgb[..., 1] = 60
         rgb[..., 2] = 90
         p6 = b"P6\n2 2\n255\n" + rgb.tobytes()
-        got = decode_image(p6, None, fake=False)
+        got = decode_image(p6)
         assert got.shape == (2, 2) and int(got[0, 0]) == 60
         # 16-bit maxval scales to 0..255
         img16 = (np.arange(4, dtype=">u2") * 16384).reshape(2, 2)
         p5_16 = b"P5\n2 2\n65535\n" + img16.tobytes()
-        got = decode_image(p5_16, None, fake=False)
+        got = decode_image(p5_16)
         assert got.dtype == np.uint8 and got[0, 0] == 0
 
     def test_kmeans_binarize_black_on_white(self):
@@ -652,11 +652,11 @@ class TestMultimodal:
             (3, "audio", "audio/wav", b"RIFF....", (None, None, 100, None)),
         ]
         df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-        out = resize_images(df, to=(4, 4), fake=False).collect()
+        out = resize_images(df, to=(4, 4)).collect()
         assert [r.media_id for r in out] == [1]
         r = out[0]
         assert (r.width, r.height) == (4, 4)
-        back = decode_image(bytes(r.payload), None, fake=False)
+        back = decode_image(bytes(r.payload))
         expect = np.floor(
             (levels.reshape(4, 2).astype(float).mean(axis=1)) + 0.5
         ).astype(np.uint8)
@@ -669,8 +669,8 @@ class TestMultimodal:
               (6, 6, None, None))],
             MEDIA_SCHEMA,
         )
-        c = resize_images(cdf, to=(5, 9), fake=False).collect()[0]
-        cback = decode_image(bytes(c.payload), None, fake=False)
+        c = resize_images(cdf, to=(5, 9)).collect()[0]
+        cback = decode_image(bytes(c.payload))
         assert cback.shape == (9, 5) and (cback == 77).all()
 
     def test_binarize_images_through_spark(self, spark):
@@ -688,7 +688,7 @@ class TestMultimodal:
             (3, "audio", "audio/wav", b"RIFF....", (None, None, 100, None)),
         ]
         df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-        out = binarize_images(df, fake=False).collect()
+        out = binarize_images(df).collect()
         # malformed payload skipped, non-image skipped
         assert [r.media_id for r in out] == [1]
         r = out[0]
@@ -752,29 +752,41 @@ class TestMultimodal:
             [(1, "image", "image/x-portable-graymap", p5, (8, 8, None, None))],
             MEDIA_SCHEMA,
         )
-        (row,) = extract_features(df, resize_to=(2, 2), fake=False).collect()
+        (row,) = extract_features(df, resize_to=(2, 2)).collect()
         assert all(abs(v - 128 / 255) < 1e-6 for v in row.feature)
 
     def test_feature_plumbing(self, spark):
         from crrf_det_spark.ops.multimodal import (
             MEDIA_SCHEMA,
+            area_resize,
+            encode_pgm,
             extract_features,
             sample_frames,
         )
 
+        rng = np.random.RandomState(3)
+        imgs = {
+            1: rng.randint(0, 256, size=(12, 16), dtype=np.uint8),
+            2: rng.randint(0, 256, size=(32, 32), dtype=np.uint8),
+        }
+        pgm = "image/x-portable-graymap"
         rows = [
-            (1, "image", "image/png", b"payload-one", (16, 12, None, None)),
-            (2, "image", "image/png", b"payload-two", (32, 32, None, None)),
+            (1, "image", pgm, encode_pgm(imgs[1]), (16, 12, None, None)),
+            (2, "image", pgm, encode_pgm(imgs[2]), (32, 32, None, None)),
             (3, "video", "video/mp4", b"vid", (640, 480, 3500, 105)),
         ]
         df = spark.createDataFrame(rows, MEDIA_SCHEMA)
         feats = extract_features(df, resize_to=(4, 4)).collect()
-        assert len(feats) == 3
-        assert all(len(r.feature) == 16 for r in feats)
-        assert all(0.0 <= v <= 1.0 for r in feats for v in r.feature)
+        # the video row is skipped; image features are the 4x4 block
+        # means of the real pixels
+        assert sorted(r.media_id for r in feats) == [1, 2]
+        for r in feats:
+            want = area_resize(imgs[r.media_id], (4, 4)).ravel() / 255.0
+            assert np.allclose(r.feature, want, atol=1e-6)
         # deterministic across runs
         feats2 = extract_features(df, resize_to=(4, 4)).collect()
-        assert [r.feature for r in feats] == [r.feature for r in feats2]
+        assert ({r.media_id: r.feature for r in feats}
+                == {r.media_id: r.feature for r in feats2})
         frames = sample_frames(df, every_ms=1000).collect()
         assert [(r.media_id, r.frame_ms) for r in frames] == [
             (3, 0), (3, 1000), (3, 2000), (3, 3000),

@@ -417,6 +417,42 @@ def test_asciihex_ascii85_runlength_filters():
     assert _decode_stream(b"/Filter /DCTDecode", b"\xff\xd8") is None
 
 
+def test_decode_parms_apply_per_filter_stage():
+    """/DecodeParms is an array parallel to /Filter: the PNG predictor of
+    the Flate stage is undone right after inflating, BEFORE the next
+    stage run-length-decodes; /EarlyChange comes from the LZW stage's own
+    entry.  Parameters that fit no stage refuse the stream."""
+    from crrf_det_spark.pdfmini import (
+        _decode_stream, _lzw_encode, _png_predict_up,
+    )
+
+    payload = b"BT /F1 11 Tf 72 760 Td (per-stage parameters) Tj ET" * 3
+    rle = b"".join(
+        bytes([len(c) - 1]) + c
+        for c in (payload[i:i + 128] for i in range(0, len(payload), 128))
+    ) + bytes([128])
+    stream = zlib.compress(_png_predict_up(rle, 8))
+    d = (b"/Filter [/FlateDecode /RunLengthDecode] "
+         b"/DecodeParms [<< /Predictor 12 /Columns 8 >> null]")
+    assert _decode_stream(d, stream) == payload
+
+    lzw = _lzw_encode(payload, early=0).hex().encode() + b">"
+    assert _decode_stream(
+        b"/Filter [/ASCIIHexDecode /LZWDecode] "
+        b"/DecodeParms [null << /EarlyChange 0 >>]", lzw
+    ) == payload
+
+    # one dict for a two-stage chain, or an array of the wrong length
+    assert _decode_stream(
+        b"/Filter [/FlateDecode /RunLengthDecode] "
+        b"/DecodeParms << /Predictor 12 /Columns 8 >>", stream
+    ) is None
+    assert _decode_stream(
+        b"/Filter [/FlateDecode /RunLengthDecode] "
+        b"/DecodeParms [<< /Predictor 12 /Columns 8 >>]", stream
+    ) is None
+
+
 def test_ascii85_content_stream_extracts():
     # a whole single-page PDF whose content stream is ASCII85-framed
     import base64

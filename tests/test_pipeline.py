@@ -46,7 +46,7 @@ def test_extraction_global_order_from_shuffled_input(spark):
     # on top would add a second one, whose bound sampling reruns the
     # Python kernel)
     rows, df = _shuffled_skewed_corpus(spark)
-    out = extract_transcripts(df, num_partitions=8)
+    out = extract_transcripts(df)
     keys = [(r.conv_id, r.turn_idx) for r in out.collect()]
     assert keys == sorted((r["conv_id"], r["turn_idx"]) for r in rows)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -103,13 +103,14 @@ def test_salting_bounds_partition_size(spark):
     import pyspark.sql.functions as F
 
     sizes = (
-        balanced(df, "conv_id", "turn_idx", num_partitions=16)
+        balanced(df, "conv_id", "turn_idx")
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
         .collect()
     )
-    assert len(sizes) > 1, "balancing failed: one conversation in one partition"
+    # one task per slot, each holding a slice of the conversation
+    assert len(sizes) == spark.sparkContext.defaultParallelism, sizes
     assert max(r["count"] for r in sizes) < len(rows)
 
 
@@ -194,7 +195,7 @@ def test_payload_turns_pdf_and_html(spark):
     )
     out = {
         (r.conv_id, r.turn_idx): r
-        for r in extract_payload_turns(df, num_partitions=4).collect()
+        for r in extract_payload_turns(df).collect()
     }
     assert out[("c1", 0)].n_tables == 1
     assert "Revenue" in out[("c1", 0)].extracted_text
@@ -224,7 +225,7 @@ def test_payload_turns_cid_cmap_xref_stream_pdf(spark):
         [("c1", 0, bytearray(pdf))],
         "conv_id string, turn_idx int, payload binary",
     )
-    row = extract_payload_turns(df, num_partitions=2).collect()[0]
+    row = extract_payload_turns(df).collect()[0]
     tables = [s for s in row.segments if s.type == "table"]
     assert len(tables) == 1
     assert tables[0].rows[0] == ["Account", "Q1", "Q2"]
@@ -252,7 +253,7 @@ def test_payload_turns_differences_lzw_pdf(spark):
         [("c1", 0, bytearray(pdf))],
         "conv_id string, turn_idx int, payload binary",
     )
-    row = extract_payload_turns(df, num_partitions=2).collect()[0]
+    row = extract_payload_turns(df).collect()[0]
     tables = [s for s in row.segments if s.type == "table"]
     assert len(tables) == 1
     assert tables[0].rows[0] == ["Account", "Q1", "Q2"]
@@ -290,9 +291,10 @@ def test_single_conversation_skew_is_salted_across_partitions(spark):
             F.lit("turn body text number "), F.col("id").cast("string")
         ).alias("text"),
     )
-    lin = lineage(extract_transcripts(df, num_partitions=12)).collect()
+    lin = lineage(extract_transcripts(df)).collect()
     rows = [r.n_rows for r in lin if r.n_rows]
-    assert len(rows) == 12              # every partition got work
+    # every partition (one per slot) got work
+    assert len(rows) == spark.sparkContext.defaultParallelism
     assert max(rows) / (sum(rows) / len(rows)) < 3.0
 
 
@@ -310,9 +312,10 @@ def test_payload_turns_spread_one_giant_conversation(spark):
             F.lit("payload body text number "), F.col("id").cast("string")
         ).cast("binary").alias("payload"),
     )
-    lin = lineage(extract_payload_turns(df, num_partitions=12)).collect()
+    lin = lineage(extract_payload_turns(df)).collect()
     rows = [r.n_rows for r in lin if r.n_rows]
-    assert len(rows) == 12              # every partition got work
+    # every partition (one per slot) got work
+    assert len(rows) == spark.sparkContext.defaultParallelism
     assert sum(rows) == 20_000
     assert max(rows) / (sum(rows) / len(rows)) < 1.5
 
@@ -325,7 +328,7 @@ def test_observed_extraction_metrics(spark):
          ("c2", 0, "third body of text")],
         "conv_id string, turn_idx int, text string",
     )
-    out, obs = observed_extraction(df, num_partitions=4)
+    out, obs = observed_extraction(df)
     rows = out.collect()
     got = obs.get
     assert got["n_rows"] == 3
@@ -367,3 +370,91 @@ def test_ingest_stats_columns(spark):
     from crrf_det_spark.pipeline import extract_transcripts
 
     assert extract_transcripts(ingest_transcripts(df)).count() == 4
+
+
+# ---------------------------------------------------------------------------
+# one row path: every entry point runs pipeline.extract_row
+# ---------------------------------------------------------------------------
+
+_COLS = ["conv_id", "turn_idx", "segments", "extracted_text", "n_segments",
+         "n_tables", "n_chars_in", "n_chars_out"]
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r) for r in df.select(*_COLS).collect()), key=lambda r: r[:2]
+    )
+
+
+def test_one_row_path_turns(spark, tmp_path):
+    """Batch, resumable sink and stream give identical rows for the same
+    turns: they share one kernel."""
+    from crrf_det_spark.streaming import start_extraction_stream
+
+    rows, _ = synth.generate(n_convs=10, seed=11, skew_convs=1, skew_factor=5)
+    in_path = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA).write.parquet(in_path)
+    src = spark.read.parquet(in_path)
+
+    batch = _rows(extract_transcripts(src))
+    assert len(batch) == len(rows)
+
+    sink = str(tmp_path / "sink")
+    run_resumable_extraction(spark, src, sink, n_buckets=4)
+    assert _rows(spark.read.parquet(sink)) == batch
+
+    stream_out = str(tmp_path / "stream")
+    q = start_extraction_stream(
+        spark, in_path, stream_out, str(tmp_path / "ckpt")
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert _rows(spark.read.parquet(stream_out)) == batch
+
+
+def test_one_row_path_payloads_match_t_extract(spark, tmp_path):
+    """``extract_payload_turns`` and the local mode of scripts/t_extract.py
+    give the same segments for the same bytes -- including a PDF whose
+    true 26pt lead keeps its lines in one group (only the geometry-aware
+    decode sees that) and a latin-1 file, which is not UTF-8 and so gives
+    zero segments on both."""
+    import importlib.util
+    import json
+
+    from crrf_det_spark.pdfmini import make_pdf
+    from crrf_det_spark.pipeline import extract_payload_turns
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "t_extract", os.path.join(repo, "scripts", "t_extract.py")
+    )
+    t_extract = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(t_extract)
+
+    payloads = [
+        make_pdf(["alpha beta gamma", "delta epsilon", "zeta eta theta"],
+                 leadings={2: 26}),
+        make_pdf(["Account      Q1      Q2", "Revenue      100     200", "",
+                  "Totals are preliminary and unaudited."]),
+        "Caf\xe9 au lait\nsecond line".encode("latin-1"),
+        b"<html><body><article><p>real content paragraph</p></article>"
+        b"</body></html>",
+        "plain caf\xe9 text\nover two lines".encode("utf-8"),
+    ]
+    df = spark.createDataFrame(
+        [("c", i, bytearray(p)) for i, p in enumerate(payloads)],
+        "conv_id string, turn_idx int, payload binary",
+    )
+    got = {r.turn_idx: r for r in extract_payload_turns(df).collect()}
+    assert got[0].n_segments == 1            # the reference's grouping
+    assert got[2].n_segments == 0            # not UTF-8: empty text
+    for i, payload in enumerate(payloads):
+        path = tmp_path / f"doc{i}"
+        path.write_bytes(payload)
+        assert t_extract.main(["-i", str(path), "-o", str(tmp_path / f"o{i}")]) == 0
+        doc = json.loads((tmp_path / f"o{i}" / "doc.json").read_text("utf-8"))
+        row = got[i]
+        assert doc["content"] == [s.asDict(recursive=True) for s in row.segments]
+        assert doc["extracted_text"] == row.extracted_text
+        assert doc["meta"] == {"chars": row.n_chars_in,
+                               "segments": row.n_segments}

@@ -86,7 +86,7 @@ def test_extraction_single_explicit_exchange(spark):
     df = spark.createDataFrame(
         [("c1", 0, "hello world")], "conv_id string, turn_idx int, text string"
     )
-    plan = plan_of(extract_transcripts(df, num_partitions=8), mode="simple")
+    plan = plan_of(extract_transcripts(df), mode="simple")
     _assert_one_range_exchange(plan)
 
 
@@ -97,7 +97,7 @@ def test_payload_extraction_single_explicit_exchange(spark):
         [("c1", 0, bytearray(b"hello world"))],
         "conv_id string, turn_idx int, payload binary",
     )
-    plan = plan_of(extract_payload_turns(df, num_partitions=8), mode="simple")
+    plan = plan_of(extract_payload_turns(df), mode="simple")
     _assert_one_range_exchange(plan)
 
 
@@ -238,7 +238,7 @@ def test_similarity_and_multimodal_kernels_are_spread(spark):
     for name, df in (
         ("ivf_assign", ivf_assign(emb, cent)),
         ("lsh_bucket_topk_oneshot", lsh_bucket_topk_oneshot(emb, q, k=2, num_planes=4)),
-        ("extract_features", extract_features(media, fake=True)),
+        ("extract_features", extract_features(media)),
     ):
         plan = plan_of(df, mode="simple")
         assert "REPARTITION_BY_NUM" in plan, name

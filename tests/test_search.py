@@ -263,6 +263,33 @@ class TestProject:
                 )
         assert many == solo
 
+    def test_search_case_folds_df_like_search_many(self, spark):
+        # "Revenue" and "revenue" are one term for df: 2 of 3 segments,
+        # so each hit scores ln(3/2) in search(), search_many() and the
+        # DuckDB oracle alike
+        import math
+
+        from crrf_det_spark.search.query import search_many
+
+        segs = spark.createDataFrame(
+            [("c1", 0, 0, "text", "Revenue grew"),
+             ("c1", 1, 0, "text", "revenue fell"),
+             ("c1", 2, 0, "text", "costs rose")],
+            "conv_id string, turn_idx int, cindex int, type string,"
+            " content string",
+        )
+        idx = build_index(segs)
+        want = {("c1", 0): round(math.log(1.5), 6),
+                ("c1", 1): round(math.log(1.5), 6)}
+        solo = {(h.conv_id, h.turn_idx): round(h.score, 6)
+                for h in search(idx, "revenue", force_numeric=False).collect()}
+        many = {(h.conv_id, h.turn_idx): round(h.score, 6)
+                for h in search_many(
+                    idx, [{"filter_name": "r", "query": "revenue"}],
+                    force_numeric=False,
+                ).collect()}
+        assert solo == many == want
+
     def test_search_many_empty_filters_schema_follows_postings(self, spark):
         # zero-parseable-filters path must derive id types from the
         # postings (long conv_ids here), not a hardcoded string schema

@@ -81,12 +81,33 @@ def _submit(args: list[str]) -> subprocess.CompletedProcess:
     )
 
 
+def _parquet_rows(path: str) -> list[tuple]:
+    t = ds.dataset(path, format="parquet", partitioning="hive").to_table(
+        columns=["conv_id", "turn_idx", "extracted_text"]
+    )
+    return sorted(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+
+
+def _json_rows(path: str) -> list[tuple]:
+    import json
+
+    rows = []
+    for name in os.listdir(path):
+        if name.startswith("part-"):
+            with open(os.path.join(path, name), encoding="utf-8") as f:
+                for line in f:
+                    r = json.loads(line)
+                    rows.append((r["conv_id"], r["turn_idx"], r["extracted_text"]))
+    return sorted(rows)
+
+
 def test_spark_submit_py_files_end_to_end(tmp_path):
     transcripts = str(tmp_path / "transcripts.parquet")
     n_turns = _write_transcripts(transcripts)
     zip_path = str(tmp_path / "crrf_det_spark.zip")
     _zip_package(zip_path)
     out = str(tmp_path / "extract_out")
+    json_sink = str(tmp_path / "segments_json")
 
     cmd = [
         _spark_submit(),
@@ -98,6 +119,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         "--input", transcripts,
         "--output", out,
         "--buckets", "4",
+        "--json-sink", json_sink,
     ]
     r1 = _submit(cmd)
     assert r1.returncode == 0, r1.stderr[-4000:]
@@ -111,6 +133,8 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     # lineage table written beside the sink
     lineage_dir = out.rstrip("/") + "_lineage"
     assert ds.dataset(lineage_dir, format="parquet").count_rows() > 0
+    # the JSON sink carries exactly the parquet sink's rows
+    assert _json_rows(json_sink) == _parquet_rows(out)
 
     # resumability: a second identical submission must succeed and leave
     # the sink unchanged (all buckets already recorded in the manifest)
