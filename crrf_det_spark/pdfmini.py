@@ -50,6 +50,8 @@ import zlib
 _STREAM_RE = re.compile(
     rb"<<((?:[^<>]|<<.*?>>)*?)>>\s*stream\r?\n", re.DOTALL
 )
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d|\s+\d+\s+R)")
+_ENDSTREAM_RE = re.compile(rb"\s*endstream")
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)\bendobj", re.DOTALL)
 _ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
@@ -260,17 +262,29 @@ def _decode_stream(d: bytes, data: bytes) -> bytes | None:
     return data
 
 
+def _read_stream(buf: bytes, m: re.Match) -> bytes | None:
+    """Decoded data of the stream whose ``_STREAM_RE`` match is ``m``.
+
+    A direct-integer /Length that ends where only whitespace is left
+    before ``endstream`` gives the data exactly, whatever its last byte.
+    Otherwise (indirect ``/Length N 0 R``, missing or wrong) the data runs
+    to ``endstream`` with trailing CR/LF stripped, which also drops a last
+    data byte that is itself CR or LF."""
+    start = m.end()
+    lm = _LENGTH_RE.search(m.group(1))
+    if lm and _ENDSTREAM_RE.match(buf, start + int(lm.group(1))):
+        return _decode_stream(m.group(1), buf[start:start + int(lm.group(1))])
+    end = buf.find(b"endstream", start)
+    if end < 0:
+        return None
+    return _decode_stream(m.group(1), buf[start:end].rstrip(b"\r\n"))
+
+
 def _object_stream_parts(body: bytes) -> tuple[bytes, bytes] | None:
     """(dict_bytes, decoded_stream_bytes) of an object body holding a
     stream, or None."""
     m = _STREAM_RE.search(body)
-    if not m:
-        return None
-    start = m.end()
-    end = body.find(b"endstream", start)
-    if end < 0:
-        return None
-    data = _decode_stream(m.group(1), body[start:end].rstrip(b"\r\n"))
+    data = _read_stream(body, m) if m else None
     if data is None:
         return None
     return m.group(1), data
@@ -578,11 +592,7 @@ def _page_fonts(
 def _content_streams(payload: bytes):
     """Raw-scan fallback: yield decompressed content-stream bytes."""
     for m in _STREAM_RE.finditer(payload):
-        start = m.end()
-        end = payload.find(b"endstream", start)
-        if end < 0:
-            continue
-        data = _decode_stream(m.group(1), payload[start:end].rstrip(b"\r\n"))
+        data = _read_stream(payload, m)
         if data is not None and b"BT" in data:
             yield data
 
@@ -962,10 +972,6 @@ def pdf_text_lines(payload: bytes) -> list[str]:
     return pdf_text_lines_geometry(payload)[0]
 
 
-def pdf_text(payload: bytes) -> str:
-    return "\n".join(pdf_text_lines(payload))
-
-
 def looks_like_pdf(payload: bytes) -> bool:
     return bool(payload) and payload.startswith(b"%PDF")
 
@@ -1081,10 +1087,6 @@ def make_pdf_diff(lines: list[str]) -> bytes:
         ops.append(f"({enc(ln)}) Tj")
     ops.append("ET")
     content = _lzw_encode("\n".join(ops).encode("latin-1"))
-    if content.endswith((b"\n", b"\r")):
-        # stream readers rstrip \r\n before "endstream"; a pad byte after
-        # the EOD code keeps the real tail out of the strip zone
-        content += b"\x00"
     differences = " ".join(
         ["1"] + ["/zero /one /two /three /four /five /six /seven "
                  "/eight /nine"]

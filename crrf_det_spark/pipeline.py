@@ -186,7 +186,12 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def balanced(df: DataFrame, *keys: str | Column) -> DataFrame:
     """Range-partition on ``keys`` into tasks of equal row count: the one
     shuffle ahead of every extraction stage.  One task per slot (the
-    scheduler's parallelism), so the Python stage runs in one wave.
+    scheduler's parallelism), so the Python stage runs in one wave.  More,
+    smaller tasks lose even with a Python task's start-up down to ~70 ms
+    per extra wave (see ``crrf_det_spark._keep_spark_archives``): on the
+    perfbench workloads at local[4], 2x the slots ran at 0.87x
+    (transcripts) and 0.99x (pdf_payloads) of 1x's throughput, 4x at
+    0.75x and 0.83x.
 
     Range bounds come from a sample of the keys -- one extra job that
     re-reads this exchange's child once -- and split a skewed conversation

@@ -3,11 +3,14 @@ escape edge cases."""
 
 import zlib
 
+import pytest
+
 from crrf_det_spark.pdfmini import (
+    _lzw_decode,
     looks_like_pdf,
     make_pdf,
-    pdf_text,
     pdf_text_lines,
+    pdf_text_lines_geometry,
 )
 
 
@@ -57,21 +60,71 @@ def test_horizontal_td_keeps_line():
 
 
 def test_not_pdf_and_garbage():
-    assert pdf_text(b"") == ""
-    assert pdf_text(b"plain text") == ""
+    assert pdf_text_lines_geometry(b"") == ([], None)
+    assert pdf_text_lines_geometry(b"plain text") == ([], None)
     assert not looks_like_pdf(b"nope")
     # corrupt flate stream is skipped, not raised
     bad = (
         b"%%PDF-1.4\n4 0 obj << /Length 5 /Filter /FlateDecode >> stream\n"
         b"xxxxx\nendstream endobj\n"
     )
-    assert pdf_text(bad) == ""
+    assert pdf_text_lines_geometry(bad) == ([], None)
     # unsupported filter is skipped
     other = (
         b"%%PDF-1.4\n4 0 obj << /Length 5 /Filter /DCTDecode >> stream\n"
         b"\xff\xd8\xff\xe0x\nendstream endobj\n"
     )
-    assert pdf_text(other) == ""
+    assert pdf_text_lines_geometry(other) == ([], None)
+
+
+def _flate_eol_stream(eol: bytes) -> tuple[list[str], bytes]:
+    """Two text lines and a zlib content stream of them whose last byte
+    is ``eol`` (~1 in 256 zlib streams ends in a given byte)."""
+    for i in range(5000):
+        lines = ["Revenue " + "q" * (i % 40), "Cost " + "z" * (i // 40)]
+        content = b"BT /F1 11 Tf 72 760 Td (%s) Tj 0 -14 Td (%s) Tj ET" % (
+            lines[0].encode(), lines[1].encode())
+        data = zlib.compress(content)
+        if data.endswith(eol):
+            return lines, data
+    raise AssertionError(f"no zlib stream ends in {eol!r}")
+
+
+def _lzw_eol_stream(eol: bytes) -> tuple[list[str], bytes]:
+    """Two text lines and an LZW content stream of them whose last byte
+    is ``eol`` and holds data bits: 9-bit codes with no clear and no EOD
+    marker (readers accept both omissions), literal codes except the
+    last, table code 0x100 | eol, which repeats the stream's first "Tj".
+    Appended spaces make the code count a multiple of 8, so that last
+    code's low byte is the stream's last byte."""
+    # table code 258 + i is content[i:i + 2]: "Tj" at i = 8 or 11
+    word = {b"\n": "Hi", b"\r": "Hello"}[eol]
+    content = b"BT (%s) Tj 0 -14 Td (Yo) Tj" % word.encode()
+    content = content[:-2] + b" " * (-(len(content) - 1) % 8) + b"Tj"
+    codes = list(content[:-2]) + [0x100 | eol[0]]
+    bits = "".join(f"{c:09b}" for c in codes)
+    data = int(bits, 2).to_bytes(len(bits) // 8, "big")
+    assert len(bits) % 8 == 0 and data.endswith(eol)
+    assert _lzw_decode(data) == content
+    return [word, "Yo"], data
+
+
+@pytest.mark.parametrize("eol", [b"\n", b"\r"])
+@pytest.mark.parametrize("codec", ["FlateDecode", "LZWDecode"])
+def test_stream_data_ending_in_eol_byte(codec, eol):
+    # stripping CR/LF before `endstream` cut a last data byte that is
+    # itself CR or LF: the stream no longer decoded and the page came out
+    # empty.  The direct /Length keeps it, on both stream paths.
+    make = _flate_eol_stream if codec == "FlateDecode" else _lzw_eol_stream
+    lines, data = make(eol)
+    stream = b"4 0 obj << /Length %d /Filter /%s >> stream\n%s\nendstream" \
+        b" endobj\n" % (len(data), codec.encode(), data)
+    page = make_pdf(["x"], compress=False)
+    document = (page[:page.index(b"4 0 obj")] + stream
+                + page[page.index(b"5 0 obj"):])
+    assert pdf_text_lines(document) == lines
+    raw = b"%PDF-1.4\n" + stream  # no catalog: raw-scan fallback
+    assert pdf_text_lines_geometry(raw) == (lines, None)
 
 
 def test_grid_kernel_over_pdf_table():
