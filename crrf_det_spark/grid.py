@@ -13,10 +13,10 @@ engine re-expresses the same projection-profile / grid-line heuristics over a
   mirroring the reference's ~8px glyph + ~3px leading at 400px scale
   (1 v-unit ~ 2.7px; px thresholds divided by ~2.7 below).
 
-Every public function cites the reference routine it re-expresses.  All code
-here is per-turn and vectorized numpy; it runs inside Arrow batches in the
-Spark pipeline (crrf_det_spark.pipeline) with zero per-row Python at the
-DataFrame level.
+Every public function cites the reference routine it re-expresses.  The
+code is vectorized numpy over one Arrow batch of turns in the Spark
+pipeline (crrf_det_spark.pipeline): ``parse_grids`` runs the layout stages
+per turn and the hspacings/vertical-line stages once over the batch.
 """
 
 from __future__ import annotations
@@ -658,55 +658,97 @@ def row_hspacings_from_rows(
     crop = grid[:, column[0]: column[1]]
     line_idx = [r0 // V_UNIT for (r0, _r1) in rows]
     out = crop[line_idx].copy()
-    _eliminate_narrow_spacing_rows(out)
-    _merge_bullets_matrix(out)
+    _fold_spacing_runs(out)
     return out
 
 
 def row_hspacings_for_groups(
-    grid: np.ndarray, column: list[int], groups: list[list[list[int]]]
-) -> list[np.ndarray]:
-    """Batched ``row_hspacings_from_rows`` for every group of one column.
+    groups: list[tuple[np.ndarray, list[int], list[list[int]]]],
+) -> tuple[list[np.ndarray], list[list]]:
+    """Stages 3 and 4 for every row group of a batch of turns at once:
+    for each ``(grid, column, rows)`` in ``groups``, its hspacings profile
+    (``row_hspacings_from_rows``, returned as a view) and its vertical
+    lines.  The groups' line crops are stacked, each right-padded with
+    content and followed by one content row.  Both folds are strictly
+    per row (the bullet merge reads each row's own quarter width) and no
+    vertical run crosses a content row, so one pass per stack equals one
+    pass per group (tests/test_grid.py::test_hspacings_batched) at a
+    fixed numpy cost per stack.  Stacks are cut by cells
+    (``_stack_chunks``)."""
+    heights = [len(rows) for _grid, _column, rows in groups]
+    widths = [grid[:, column[0]: column[1]].shape[1]
+              for grid, column, _rows in groups]
+    hs_out: list = [None] * len(groups)
+    lines_out: list = [None] * len(groups)
+    for chunk in _stack_chunks(heights, widths):
+        h = np.array([heights[i] for i in chunk], dtype=np.int64)
+        w = np.array([widths[i] for i in chunk], dtype=np.int64)
+        starts = np.zeros(len(chunk), dtype=np.int64)
+        np.cumsum(h[:-1] + 1, out=starts[1:])
+        m = np.zeros((int(starts[-1] + h[-1]), int(w.max())), dtype=np.uint8)
+        for i, s in zip(chunk, starts.tolist()):
+            grid, column, rows = groups[i]
+            m[s: s + len(rows), : widths[i]] = grid[
+                [r0 // V_UNIT for (r0, _r1) in rows], column[0]: column[1]
+            ]
+        _fold_spacing_runs(m, np.repeat(w, h + 1)[: len(m)])
+        lines = vertical_lines_from_hspacings(m, starts)
+        for i, s, ln in zip(chunk, starts.tolist(), lines):
+            hs_out[i] = m[s: s + heights[i], : widths[i]]
+            lines_out[i] = ln
+    return hs_out, lines_out
 
-    Both fold passes are strictly per-row (narrow-run elimination and
-    bullet merging never read across rows), so running them ONCE over
-    the column's concatenated row set is exactly equivalent to one pass
-    per group — pinned by tests/test_grid.py::test_hspacings_batched
-    — while paying the pad/diff/where fixed cost once per column
-    instead of once per group (the hot path at corpus scale: a typical
-    turn has several single-paragraph groups)."""
-    crop = grid[:, column[0]: column[1]]
-    line_idx = [r0 // V_UNIT for rows in groups for (r0, _r1) in rows]
-    if line_idx:
-        big = crop[line_idx].copy()
-        _eliminate_narrow_spacing_rows(big)
-        _merge_bullets_matrix(big)
-    else:
-        big = np.empty((0, crop.shape[1]), dtype=crop.dtype)
-    out: list[np.ndarray] = []
-    i = 0
-    for rows in groups:
-        out.append(big[i: i + len(rows)])
-        i += len(rows)
-    return out
+
+def _stack_chunks(heights: list[int], widths: list[int]) -> list[list[int]]:
+    """Group indices in width order, cut into stacks whose matrix --
+    (rows + one separator between groups) x widest group -- stays within
+    MAX_GRID_CELLS, so one wide turn pads only its own stack.  A lone
+    group always fits: it is a crop of its turn's budgeted grid."""
+    chunks: list[list[int]] = []
+    n_rows = 0
+    for i in sorted(range(len(heights)), key=widths.__getitem__):
+        if not chunks or (
+            (n_rows + len(chunks[-1]) + heights[i]) * widths[i] > MAX_GRID_CELLS
+        ):
+            chunks.append([])
+            n_rows = 0
+        chunks[-1].append(i)
+        n_rows += heights[i]
+    return chunks
 
 
-def _eliminate_narrow_spacing_rows(m: np.ndarray) -> None:
-    """Fold interior spacing runs narrower than MIN_SPACING_SPAN into
-    content, whole matrix at once (leading runs -- the left margin -- are
-    never narrowed, matching the reference where the crop starts inside the
-    column)."""
+def _spacing_runs(m: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Every horizontal spacing run of ``m``: (row, start, exclusive end),
+    row-major."""
     n_rows, width = m.shape
-    # pad both sides with 0 so every run has exactly one start and one end,
-    # keeping np.where's row-major starts/ends aligned 1:1
+    # pad both sides with 0 so every run has exactly one start (+1) and one
+    # end (-1) in its row: the row-major nonzeros pair up start, end, ...
     padded = np.zeros((n_rows, width + 2), dtype=np.int8)
     padded[:, 1:-1] = m
-    d = np.diff(padded, axis=1)
-    sr, sc = np.where(d == 1)
-    _er, ec = np.where(d == -1)
+    edges = np.flatnonzero(np.diff(padded, axis=1))
+    sr, sc = np.divmod(edges[0::2], width + 1)
+    return sr, sc, edges[1::2] - sr * (width + 1)
+
+
+def _zero_runs(m: np.ndarray, r: np.ndarray, c0: np.ndarray, c1: np.ndarray) -> None:
+    """``m[r[k], c0[k]:c1[k]] = 0`` for every k, as one scatter."""
+    n = c1 - c0
+    first = np.cumsum(n) - n
+    m[np.repeat(r, n), np.arange(int(n.sum())) + np.repeat(c0 - first, n)] = 0
+
+
+def _fold_spacing_runs(m: np.ndarray, row_width: np.ndarray | None = None) -> None:
+    """Both hspacings folds, whole matrix at once, from one run scan:
+    interior spacing runs narrower than MIN_SPACING_SPAN become content
+    (leading runs -- the left margin -- are never narrowed, matching the
+    reference where the crop starts inside the column), then the bullet
+    merge (``_merge_bullet_runs``) runs over the runs left, which are
+    exactly the runs a rescan would find."""
+    sr, sc, ec = _spacing_runs(m)
     narrow = (ec - sc < MIN_SPACING_SPAN) & (sc > 0)
-    for ri, ci, ce in zip(sr[narrow], sc[narrow], ec[narrow]):
-        m[ri, ci:ce] = 0
+    _zero_runs(m, sr[narrow], sc[narrow], ec[narrow])
+    keep = ~narrow
+    _merge_bullet_runs(m, sr[keep], sc[keep], ec[keep], row_width)
 
 
 def _merge_bullets(sp: np.ndarray) -> None:
@@ -728,26 +770,22 @@ def _merge_bullets(sp: np.ndarray) -> None:
             merge_start = -1
 
 
-def _merge_bullets_matrix(m: np.ndarray) -> None:
-    """Vectorized ``_merge_bullets`` over every row of the hspacings matrix
-    at once.  Equivalent because each fold decision depends only on the
-    run lengths of the UNMODIFIED row (a fold rewrites a spacing run the
-    sweep has already passed, so later decisions never read it), so all
-    candidate runs can be found in one diff pass and folded together:
+def _merge_bullet_runs(m, sr, sc, ec, row_width) -> None:
+    """Vectorized ``_merge_bullets`` over the row-major spacing runs
+    ``(sr, sc, ec)`` of every row of ``m`` at once.  Equivalent because
+    each fold decision depends only on the run lengths of the UNMODIFIED
+    row (a fold rewrites a spacing run the sweep has already passed, so
+    later decisions never read it), so all candidate runs fold together:
     fold a spacing run when the content run before it is short
     (0 < len <= BULLET_MAX_CONTENT, a bullet glyph), the run starts and
     ends inside the left quarter, and it is narrower than
-    BULLET_MAX_MERGE."""
-    n_rows, width = m.shape
-    quarter = width // 4
-    maxi = max(quarter, 1)
-    padded = np.zeros((n_rows, width + 2), dtype=np.int8)
-    padded[:, 1:-1] = m
-    d = np.diff(padded, axis=1)
-    sr, sc = np.where(d == 1)      # spacing-run starts (row, col)
-    _er, ec = np.where(d == -1)    # spacing-run ends (exclusive)
+    BULLET_MAX_MERGE.  ``row_width`` (None: the matrix width) is each
+    row's own width, whose quarter bounds the merge -- rows of a stack
+    of groups are right-padded with content."""
     if not len(sr):
         return
+    width = m.shape[1] if row_width is None else row_width[sr]
+    maxi = np.maximum(width // 4, 1)
     # content-run length immediately before each spacing run: distance to
     # the previous spacing run's end in the same row (or to col 0)
     prev_ec = np.empty_like(ec)
@@ -764,8 +802,7 @@ def _merge_bullets_matrix(m: np.ndarray) -> None:
         & (ec < maxi)
         & (ec - sc < BULLET_MAX_MERGE)
     )
-    for r, c0, c1 in zip(sr[fold], sc[fold], ec[fold]):
-        m[r, c0:c1] = 0
+    _zero_runs(m, sr[fold], sc[fold], ec[fold])
 
 
 # ---------------------------------------------------------------------------
@@ -774,30 +811,38 @@ def _merge_bullets_matrix(m: np.ndarray) -> None:
 # ---------------------------------------------------------------------------
 
 def vertical_lines_from_hspacings(
-    row_hspacings: np.ndarray,
-) -> list[tuple[tuple[int, int], tuple[int, int]]]:
-    """Maximal all-spacing vertical runs >= 2 rows tall.
+    row_hspacings: np.ndarray, starts
+) -> list[list[tuple[tuple[int, int], tuple[int, int]]]]:
+    """Maximal all-spacing vertical runs >= 2 rows tall, per group of a
+    stack whose groups begin at rows ``starts`` and are separated by
+    content rows (``[0]`` for one group's profile).
 
     Coordinates are ((x, y_top), (x, y_bottom)) in (column-crop char,
     group-row index) space, exactly as the reference.
     """
     n_rows, width = row_hspacings.shape
-    # vectorized run-length per column: pad each column with 0s, diff along
-    # the row axis of the transposed matrix; np.where's row-major order
-    # keeps starts/ends aligned per column
+    # vectorized run-length per column: pad each column with 0s and diff
+    # along the row axis of the transposed matrix; in each padded column
+    # run starts (+1) and ends (-1) alternate, so the row-major nonzeros
+    # pair up as start, end, start, end
     t = np.zeros((width, n_rows + 2), dtype=np.int8)
     t[:, 1:-1] = row_hspacings.T
-    d = np.diff(t, axis=1)
-    sx, sy = np.where(d == 1)      # run start: column x, y_top
-    _ex, ey = np.where(d == -1)    # run end (exclusive): y_bottom + 1
+    edges = np.flatnonzero(np.diff(t, axis=1))
+    sx, sy = np.divmod(edges[0::2], n_rows + 1)  # column x, y_top
+    ey = edges[1::2] - sx * (n_rows + 1)         # y_bottom + 1
     keep = (ey - sy) >= 2          # height >= 2 rows
-    lines = [
-        ((int(x), int(y0)), (int(x), int(y1)))
-        for x, y0, y1 in zip(sx[keep], sy[keep], ey[keep] - 1)
-    ]
-    # sort tall-to-short weighted by top position (pseg.py:749-751)
-    lines.sort(key=lambda ln: (ln[0][1] - ln[1][1]) * ln[0][1])
-    return lines
+    starts = np.asarray(starts, dtype=np.int64)
+    g = np.searchsorted(starts, sy[keep], side="right") - 1
+    x = sx[keep]
+    y0 = sy[keep] - starts[g]
+    y1 = ey[keep] - 1 - starts[g]
+    # per group, sort tall-to-short weighted by top position
+    # (pseg.py:749-751), ties in the per-group (x, y_top) scan order
+    order = np.lexsort((y0, x, (y0 - y1) * y0, g))
+    x, y0, y1 = x[order].tolist(), y0[order].tolist(), y1[order].tolist()
+    lines = list(zip(zip(x, y0), zip(x, y1)))
+    ends = np.cumsum(np.bincount(g, minlength=len(starts))).tolist()
+    return [lines[a:b] for a, b in zip([0] + ends, ends)]
 
 
 # ---------------------------------------------------------------------------
@@ -1255,72 +1300,81 @@ def parse_grid(
     line_geometry: list[dict] | None = None,
     hough_px: dict | None = None,
 ) -> dict:
-    """Run the full stage chain on an occupancy grid.
+    """``parse_grids`` on a batch of one grid."""
+    return parse_grids([grid], [line_geometry], [hough_px])[0]
 
-    ``line_geometry`` / ``hough_px`` (optional): true sub-char geometry
-    from a caller that has it (PDF coordinates, the reference-fixture
-    transcriber).  line_geometry is a list of regions
+
+def parse_grids(
+    grids: list[np.ndarray],
+    line_geometries: list | None = None,
+    hough_pxs: list | None = None,
+) -> list[dict]:
+    """Run the full stage chain on a batch of occupancy grids, one result
+    dict per grid.  Columns, row groups (stages 1-2), the rectangle
+    chain, table build (stage 5) and group boxes (stage 6) run per grid;
+    the hspacings folds and vertical lines (stages 3-4) run once over
+    every row group of the batch (``row_hspacings_for_groups``).
+
+    Per grid, ``line_geometries`` / ``hough_pxs`` (optional): true
+    sub-char geometry from a caller that has it (PDF coordinates, the
+    reference-fixture transcriber).  A line geometry is a list of regions
     ``{"x0": char, "x1": char, "lines": {line: [y0_px, y1_px]}}``; each
     detected column uses the region with max x-overlap for the reference-
     threshold pixel sweep (see row_groups_from_column).  hough_px feeds
     the pixel-space column stage (see columns_from_grid).  Both default
     to None = pure text-space quantized behavior."""
-    columns, spacings = columns_from_grid(grid, hough_px=hough_px)
-    column_row_groups: dict[int, list] = {}
-    column_row_vspacings: dict[int, np.ndarray] = {}
-    column_row_grp_row_spacings: dict[int, dict[int, np.ndarray]] = {}
-    column_row_grp_build_table: dict[int, dict] = {}
-    column_row_grp_cells: dict[int, dict] = {}
+    n = len(grids)
+    line_geometries = line_geometries or [None] * n
+    hough_pxs = hough_pxs or [None] * n
+    out: list[dict] = []
+    groups: list[tuple] = []  # (grid, column, rows) of every row group
+    where: list[tuple] = []   # (result, col_idx, grp_idx) of each
+    for grid, geometry, hough_px in zip(grids, line_geometries, hough_pxs):
+        columns, spacings = columns_from_grid(grid, hough_px=hough_px)
+        res: dict = {"columns": columns, "spacings": spacings,
+                     "column_row_groups": {}, "column_row_vspacings": {}}
+        for key in ("column_row_grp_row_spacings",
+                    "column_row_grp_build_table", "column_row_grp_cells"):
+            res[key] = {i: {} for i in range(len(columns))}
+        for col_idx, column in enumerate(columns):
+            col_groups, vspac = row_groups_from_column(
+                grid, column, line_px=_line_px_for_column(column, geometry)
+            )
+            res["column_row_groups"][col_idx] = col_groups
+            res["column_row_vspacings"][col_idx] = vspac
+            for grp_idx, rows in enumerate(col_groups):
+                groups.append((grid, column, rows))
+                where.append((res, col_idx, grp_idx))
+        res["height"] = grid.shape[0] * V_UNIT
+        res["width"] = grid.shape[1]
+        out.append(res)
 
-    for col_idx, column in enumerate(columns):
-        groups, vspac = row_groups_from_column(
-            grid, column, line_px=_line_px_for_column(column, line_geometry)
-        )
-        column_row_groups[col_idx] = groups
-        column_row_vspacings[col_idx] = vspac
-        column_row_grp_row_spacings[col_idx] = {}
-        column_row_grp_build_table[col_idx] = {}
-        column_row_grp_cells[col_idx] = {}
-        hs_list = row_hspacings_for_groups(grid, column, groups)
-        for grp_idx, rows in enumerate(groups):
-            hs = hs_list[grp_idx]
-            if hs.size == 0:
-                continue
-            column_row_grp_row_spacings[col_idx][grp_idx] = hs
-            lines = vertical_lines_from_hspacings(hs)
-            if not lines:
-                continue
-            rects = group_adjacent_lines(lines)
-            rects = remove_smaller_adjacent_rectangles(rects)
-            rects = remove_edge_rectangles(rects, hs)
-            while rects:
-                if not is_first_rectangle_column_valid(rects, hs):
-                    rects = rects[1:]
-                    continue
-                break
-            rects = remove_busy_column_rectangles(rects, hs)
-            if not rects:
-                continue
-            table_rows, table_cols = build_table(column, rows, rects)
-            column_row_grp_build_table[col_idx][grp_idx] = (table_rows, table_cols)
-            inters, ups, downs = find_intersections(column, rows, table_cols, table_rows)
-            cells = find_cells(inters, ups, downs)
-            column_row_grp_cells[col_idx][grp_idx] = (inters, ups, downs, cells)
+    for (res, col_idx, grp_idx), (_grid, column, rows), hs, lines in zip(
+        where, groups, *row_hspacings_for_groups(groups)
+    ):
+        if hs.size == 0:
+            continue
+        res["column_row_grp_row_spacings"][col_idx][grp_idx] = hs
+        if not lines:
+            continue
+        rects = group_adjacent_lines(lines)
+        rects = remove_smaller_adjacent_rectangles(rects)
+        rects = remove_edge_rectangles(rects, hs)
+        while rects and not is_first_rectangle_column_valid(rects, hs):
+            rects = rects[1:]
+        rects = remove_busy_column_rectangles(rects, hs)
+        if not rects:
+            continue
+        table_rows, table_cols = build_table(column, rows, rects)
+        res["column_row_grp_build_table"][col_idx][grp_idx] = (table_rows, table_cols)
+        inters, ups, downs = find_intersections(column, rows, table_cols, table_rows)
+        cells = find_cells(inters, ups, downs)
+        res["column_row_grp_cells"][col_idx][grp_idx] = (inters, ups, downs, cells)
 
-    bboxes = group_bboxes(grid, columns, column_row_groups)
-    # a text box per group; groups that produced a table are consumed by the
-    # used-token semi-join downstream and yield no text segment
-    text_boxes = [bboxes[k] for k in sorted(bboxes)]
-    return {
-        "group_bboxes": bboxes,
-        "columns": columns,
-        "spacings": spacings,
-        "column_row_groups": column_row_groups,
-        "column_row_vspacings": column_row_vspacings,
-        "column_row_grp_row_spacings": column_row_grp_row_spacings,
-        "column_row_grp_build_table": column_row_grp_build_table,
-        "column_row_grp_cells": column_row_grp_cells,
-        "text_boxes": text_boxes,
-        "height": grid.shape[0] * V_UNIT,
-        "width": grid.shape[1],
-    }
+    for grid, res in zip(grids, out):
+        bboxes = group_bboxes(grid, res["columns"], res["column_row_groups"])
+        res["group_bboxes"] = bboxes
+        # a text box per group; groups that produced a table are consumed by
+        # the used-token semi-join downstream and yield no text segment
+        res["text_boxes"] = [bboxes[key] for key in sorted(bboxes)]
+    return out

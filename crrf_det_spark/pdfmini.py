@@ -597,35 +597,42 @@ def _content_streams(payload: bytes):
             yield data
 
 
-def _decode_literal_bytes(body: bytes) -> bytes:
-    """PDF literal string body (between parens) -> raw string bytes."""
-    out = bytearray()
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == 0x5C and i + 1 < len(body):  # backslash
-            nxt = body[i + 1: i + 2]
-            if nxt in _ESCAPES:
-                out.extend(_ESCAPES[nxt])
-                i += 2
-                continue
-            if nxt.isdigit():  # octal, up to 3 digits
-                j = i + 1
-                while j < min(i + 4, len(body)) and body[j: j + 1].isdigit():
-                    j += 1
-                out.append(int(body[i + 1: j], 8) & 0xFF)
-                i = j
-                continue
-            i += 2  # line continuation / unknown escape: drop backslash
-            continue
-        out.append(c)
-        i += 1
-    return bytes(out)
+# PDF 32000-1 section 7.3.4.2 escapes: octal (1-3 digits), a line
+# continuation (backslash + EOL, dropped with its EOL) or any other byte
+_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|\r\n|[\s\S])")
+_UNESCAPE = {
+    bytes((c,)): _ESCAPES.get(bytes((c,)), bytes((c,)))
+    for c in range(256) if not 0x30 <= c <= 0x37
+}
+_UNESCAPE[b"\r\n"] = _UNESCAPE[b"\r"] = _UNESCAPE[b"\n"] = b""
 
+
+def _unescape(m: re.Match) -> bytes:
+    g = m.group(1)
+    hit = _UNESCAPE.get(g)
+    return bytes((int(g, 8) & 0xFF,)) if hit is None else hit
+
+
+def _decode_literal_bytes(body: bytes) -> bytes:
+    """PDF literal string body (between parens) -> raw string bytes: the
+    known escapes map, a backslash before any other byte is dropped and
+    the byte kept, a backslash before an EOL drops both."""
+    if b"\\" not in body:
+        return body
+    return _ESCAPE_RE.sub(_unescape, body)
+
+
+# literal string body: balanced parentheses nest (up to _LIT_DEPTH deep
+# inside the outer pair), a backslash escapes any byte; possessive so an
+# unclosed string fails in linear time
+_LIT_DEPTH = 4
+_LIT = rb"(?:[^()\\]++|\\[\s\S])*+"
+for _ in range(_LIT_DEPTH):
+    _LIT = rb"(?:[^()\\]++|\\[\s\S]|\(" + _LIT + rb"\))*+"
 
 # one token of a content stream we care about
 _TOK_RE = re.compile(
-    rb"\((?P<lit>(?:[^()\\]|\\.)*)\)"       # literal string
+    rb"\((?P<lit>" + _LIT + rb")\)"          # literal string
     rb"|<(?P<hex>[0-9A-Fa-f\s]*)>"          # hex string
     rb"|/(?P<name>[A-Za-z0-9_.+-]+)"        # name (font selection)
     rb"|(?P<num>[-+]?\d*\.?\d+)"            # number
@@ -717,7 +724,9 @@ def _stream_lines_meta(
                 for _ in range(min(20, round(step / unit) - 1)):
                     lines.append("")
                     metas.append(None)
-            # the nominal leading is the MODAL plausible step, not the
+            # a step that emitted blank lines is a paragraph gap and does
+            # not vote: one-line paragraphs would outvote the leading.
+            # The nominal leading is the MODAL plausible step, not the
             # minimum: a single small positional move (2pt footnote /
             # superscript shift, common in real writers) would poison a
             # min for the rest of the document, turning every normal
@@ -725,12 +734,12 @@ def _stream_lines_meta(
             # at least 0.8x the current font size (glyphs can't
             # single-space tighter than that); ties break to the
             # smaller step so paragraph gaps never outvote leadings.
-            if step >= max(1.0, 0.8 * size):
+            elif step >= max(1.0, 0.8 * size):
                 key = round(step, 1)
-                step_counts[key] = step_counts.get(key, 0) + 1
-                unit = max(
-                    step_counts.items(), key=lambda kv: (kv[1], -kv[0])
-                )[0]
+                n = step_counts[key] = step_counts.get(key, 0) + 1
+                # only this key's count rose, so the mode is it or unit
+                if unit is None or (n, -key) > (step_counts[unit], -unit):
+                    unit = key
         ty = new_ty
 
     def show():
@@ -739,25 +748,26 @@ def _stream_lines_meta(
         shown = True
 
     for m in _TOK_RE.finditer(data):
-        if m.group("lit") is not None:
-            strings.append(_decode_literal_bytes(m.group("lit")))
+        kind = m.lastgroup
+        if kind == "lit":
+            strings.append(_decode_literal_bytes(m.group(kind)))
             continue
-        if m.group("hex") is not None:
-            h = re.sub(rb"\s", b"", m.group("hex"))
+        if kind == "hex":
+            h = re.sub(rb"\s", b"", m.group(kind))
             if len(h) % 2:
                 h += b"0"
             strings.append(bytes.fromhex(h.decode("ascii")))
             continue
-        if m.group("name") is not None:
-            last_name = m.group("name")
+        if kind == "name":
+            last_name = m.group(kind)
             continue
-        if m.group("num") is not None:
+        if kind == "num":
             try:
-                nums.append(float(m.group("num")))
+                nums.append(float(m.group(kind)))
             except ValueError:
                 pass
             continue
-        op = m.group("op")
+        op = m.group(kind)
         if op in (b"Tj", b"TJ"):
             show()
         elif op in (b"'", b'"'):

@@ -6,13 +6,14 @@ one DataFrame pass:
 
     read -> range repartition -> mapInPandas(_extract_batches) -> sink
 
-and the per-document work is one row function, ``extract_row``: a turn's
-text or payload bytes in, its ``EXTRACTION_SCHEMA`` columns out.  Every
-entry point -- text turns (``extract_transcripts``), PDF/HTML payloads
+and the per-document work is one batch function, ``extract_rows``: each
+turn's text or payload bytes in, its ``EXTRACTION_SCHEMA`` columns out,
+with the grid kernel run once over the batch.  Every entry point -- text
+turns (``extract_transcripts``), PDF/HTML payloads
 (``extract_payload_turns``), the resumable sink, the stream
 (``streaming.extract_stream``) and the local mode of
-``scripts/t_extract.py`` -- runs that one function, so a turn extracts
-the same way whichever path carries it.
+``scripts/t_extract.py`` (``extract_row``, a batch of one) -- runs that
+one function, so a turn extracts the same way whichever batch carries it.
 
 Scale design (for a 1000-executor cluster over ~10^12 turns):
 
@@ -28,8 +29,9 @@ Scale design (for a 1000-executor cluster over ~10^12 turns):
   rebalance inside mapInPandas groups).  The bounds cost one sampling
   job that re-reads the exchange's child once (25-65 ms per pass on the
   2.3k-turn benchmark corpus at local[4]).
-* zero per-row Python at the DataFrame level: the kernel runs on Arrow
-  batches (spark.sql.execution.arrow.maxRecordsPerBatch bounds memory).
+* zero per-row Python at the DataFrame level: the kernel runs a whole
+  Arrow batch at a time (spark.sql.execution.arrow.maxRecordsPerBatch
+  bounds memory), so its numpy call overhead is paid per batch.
 * resumability: the sink is partitioned by ``bucket`` (hash of conv_id);
   completed buckets are skipped on restart (replaces the reference's
   Redis-TTL progress keys, /root/reference/src/task/project.py:36-40).
@@ -48,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .extract import extract_turn_auto, extracted_text
+from .extract import extract_turns_auto, extracted_text
 from .pdfmini import looks_like_pdf, pdf_text_lines_geometry
 from .schema import EXTRACTION_SCHEMA
 
@@ -114,10 +116,26 @@ def build_session(
     return builder.getOrCreate()
 
 
-def extract_row(value: str | bytes | None) -> tuple:
-    """One turn's input value -> its ``EXTRACTION_SCHEMA`` columns after
-    the keys: (segments, extracted_text, n_segments, n_tables,
-    n_chars_in, n_chars_out).
+def _decode(value: str | bytes | None) -> tuple[str, dict | None]:
+    """One input value -> (text, true line geometry or None)."""
+    if isinstance(value, str):
+        return value, None
+    if value is None:
+        return "", None
+    payload = bytes(value)
+    if looks_like_pdf(payload):
+        lines, line_px = pdf_text_lines_geometry(payload)
+        return "\n".join(lines), line_px
+    try:
+        return payload.decode("utf-8"), None
+    except UnicodeDecodeError:
+        return "", None
+
+
+def extract_rows(values) -> list[tuple]:
+    """A batch of turns' input values -> for each, its
+    ``EXTRACTION_SCHEMA`` columns after the keys: (segments,
+    extracted_text, n_segments, n_tables, n_chars_in, n_chars_out).
 
     Text is used as is.  Payload bytes are decoded: a PDF through
     pdfmini, keeping its TRUE line geometry (baselines on the reference's
@@ -127,41 +145,38 @@ def extract_row(value: str | bytes | None) -> tuple:
     UTF-8, which the auto dispatch routes to the HTML or text-grid path.
     ``None`` and undecodable bytes become empty text: zero segments,
     ``n_chars_in`` 0.  The geometry stays inside this call; it never
-    crosses Arrow."""
-    line_px = None
-    if isinstance(value, str):
-        text = value
-    elif value is None:
-        text = ""
-    else:
-        payload = bytes(value)
-        if looks_like_pdf(payload):
-            lines, line_px = pdf_text_lines_geometry(payload)
-            text = "\n".join(lines)
-        else:
-            try:
-                text = payload.decode("utf-8")
-            except UnicodeDecodeError:
-                text = ""
-    segs = extract_turn_auto(text, line_px=line_px)
-    etext = extracted_text(segs)
-    return (
-        [
-            {
-                "cindex": i,
-                "type": s["type"],
-                "content": s["content"],
-                "rows": s["rows"],
-                "box": s["box"],
-            }
-            for i, s in enumerate(segs)
-        ],
-        etext,
-        len(segs),
-        sum(1 for s in segs if s["type"] == "table"),
-        len(text),
-        len(etext),
-    )
+    crosses Arrow.  The grid kernel runs once over the batch
+    (``extract.extract_turns_auto``)."""
+    decoded = [_decode(v) for v in values]
+    rows = []
+    for (text, _), segs in zip(decoded, extract_turns_auto(
+        [text for text, _ in decoded], [px for _, px in decoded]
+    )):
+        etext = extracted_text(segs)
+        rows.append((
+            [
+                {
+                    "cindex": i,
+                    "type": s["type"],
+                    "content": s["content"],
+                    "rows": s["rows"],
+                    "box": s["box"],
+                }
+                for i, s in enumerate(segs)
+            ],
+            etext,
+            len(segs),
+            sum(1 for s in segs if s["type"] == "table"),
+            len(text),
+            len(etext),
+        ))
+    return rows
+
+
+def extract_row(value: str | bytes | None) -> tuple:
+    """One turn's input value -> its ``EXTRACTION_SCHEMA`` columns after
+    the keys: ``extract_rows`` on a batch of one."""
+    return extract_rows([value])[0]
 
 
 _COLS = [f.name for f in EXTRACTION_SCHEMA.fields]
@@ -169,10 +184,12 @@ _COLS = [f.name for f in EXTRACTION_SCHEMA.fields]
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel over ``(conv_id, turn_idx, text | payload)``:
-    ``extract_row`` on the third column, one output row per input row.
-    All heavy work is numpy inside the batch (SURVEY.md section 2.9)."""
+    ``extract_rows`` on the third column of each Arrow batch as a whole
+    (Spark hands over up to ``maxRecordsPerBatch`` rows), one output row
+    per input row.  The grid kernel's per-call numpy overhead is paid
+    once per batch, not once per turn (SURVEY.md section 2.9)."""
     for pdf in batches:
-        out = zip(*map(extract_row, pdf.iloc[:, 2].values))
+        out = zip(*extract_rows(pdf.iloc[:, 2].values))
         yield pd.DataFrame(
             {
                 "conv_id": pdf["conv_id"].values,

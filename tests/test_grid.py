@@ -102,7 +102,7 @@ class TestRowGroups:
             for ri in range(scalar.shape[0]):
                 G._merge_bullets(scalar[ri])
             vec = m.copy()
-            G._merge_bullets_matrix(vec)
+            G._merge_bullet_runs(vec, *G._spacing_runs(vec), None)
             assert np.array_equal(scalar, vec), w
 
     def test_vectorized_row_patterns_match_scalar(self):
@@ -161,7 +161,7 @@ class TestVerticalLines:
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
         hs = G.row_hspacings_from_rows(g, cols[0], groups[-1])
-        lines = G.vertical_lines_from_hspacings(hs)
+        lines = G.vertical_lines_from_hspacings(hs, [0])[0]
         xs = {ln[0][0] for ln in lines if ln[1][1] - ln[0][1] == 3}
         # full-height spacing runs exist between the three table columns
         assert any(5 <= x <= 6 for x in xs)
@@ -174,7 +174,7 @@ class TestVerticalLines:
         groups, _ = G.row_groups_from_column(g, cols[0])
         hs = G.row_hspacings_from_rows(g, cols[0], groups[0])
         interior = [
-            ln for ln in G.vertical_lines_from_hspacings(hs)
+            ln for ln in G.vertical_lines_from_hspacings(hs, [0])[0]
             if ln[0][0] not in (0, hs.shape[1] - 1)
         ]
         # ragged-edge runs may exist but none in the single-space interior
@@ -189,7 +189,7 @@ class TestTablevspan:
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
         hs = G.row_hspacings_from_rows(g, cols[0], groups[-1])
-        lines = G.vertical_lines_from_hspacings(hs)
+        lines = G.vertical_lines_from_hspacings(hs, [0])[0]
         rects = G.group_adjacent_lines(lines)
         rects = G.remove_smaller_adjacent_rectangles(rects)
         rects = G.remove_edge_rectangles(rects, hs)
@@ -294,14 +294,15 @@ class TestOccupancy:
 
 
 def test_hspacings_batched():
-    """row_hspacings_for_groups (one fold pass per column) must be
-    byte-identical to row_hspacings_from_rows per group — the per-row
-    fold semantics make concatenation exact."""
+    """row_hspacings_for_groups (one fold pass over every group of the
+    batch, stacked) must be byte-identical to row_hspacings_from_rows per
+    group, and its vertical lines to each group's own — the per-row fold
+    semantics and the content separator rows make stacking exact."""
     from crrf_det_spark import synth
 
     rows, _ = synth.generate(n_convs=40, seed=31, skew_convs=2,
                              skew_factor=20)
-    checked = 0
+    flat = []
     for r in rows:
         text = r["text"] or ""
         if not text.strip() or "<" in text:
@@ -310,10 +311,14 @@ def test_hspacings_batched():
         columns, _sp = G.columns_from_grid(grid)
         for column in columns:
             groups, _v = G.row_groups_from_column(grid, column)
-            batched = G.row_hspacings_for_groups(grid, column, groups)
-            assert len(batched) == len(groups)
-            for rws, hs in zip(groups, batched):
-                ref = G.row_hspacings_from_rows(grid, column, rws)
-                assert np.array_equal(hs, ref)
-                checked += 1
-    assert checked > 100
+            flat.extend((grid, column, rws) for rws in groups)
+    # a bullet-shaped row stacked with wider groups: its fold must use its
+    # own quarter width (here: no fold), not the stack's
+    grid, _lines = G.occupancy_from_text("x  yyyy\nx  yyyy")
+    flat.append((grid, [0, 7], [[0, 3], [4, 7]]))
+    batched, lines = G.row_hspacings_for_groups(flat)
+    assert len(batched) == len(lines) == len(flat) > 100
+    for (grid, column, rws), hs, ln in zip(flat, batched, lines):
+        ref = G.row_hspacings_from_rows(grid, column, rws)
+        assert np.array_equal(hs, ref)
+        assert ln == G.vertical_lines_from_hspacings(ref, [0])[0]

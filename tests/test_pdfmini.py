@@ -50,6 +50,26 @@ def test_hex_strings_and_octal():
     assert pdf_text_lines(payload) == ["Hi!", "Hi"]
 
 
+@pytest.mark.parametrize("literal, text", [
+    (rb"(ab\8c)", "ab8c"),              # not octal: backslash dropped
+    (rb"(ab\9)", "ab9"),
+    (rb"(a\qb)", "aqb"),                # unknown escape keeps its byte
+    (b"(ab\\\ncd)", "abcd"),            # backslash + LF: continuation
+    (b"(ab\\\r\ncd)", "abcd"),          # backslash + CRLF drops both
+    (b"(a (b) c)", "a (b) c"),          # balanced parentheses nest
+    (b"(x (y (z) y) x)", "x (y (z) y) x"),
+])
+def test_literal_strings_per_spec(literal, text):
+    """PDF 32000-1 section 7.3.4.2 literal strings through the content
+    stream interpreter."""
+    content = b"BT 72 760 Td " + literal + b" Tj ET"
+    payload = (
+        b"%%PDF-1.4\n4 0 obj << /Length %d >> stream\n%s\nendstream endobj\n"
+        % (len(content), content)
+    )
+    assert pdf_text_lines(payload) == [text]
+
+
 def test_horizontal_td_keeps_line():
     content = b"BT 72 760 Td (left) Tj 200 0 Td (right) Tj ET"
     payload = (
@@ -288,6 +308,19 @@ def test_skipped_slot_big_leading_inserts_blank():
     # gap heuristic restores one blank line per extra leading multiple
     payload = make_pdf(["a", "b", "c"], leadings={2: 28})
     assert pdf_text_lines(payload) == ["a", "b", "", "c"]
+
+
+def test_paragraph_gaps_do_not_outvote_leading():
+    # one-line paragraphs separated by 2x moves outnumber the single
+    # leadings; a step that emitted blank lines must not vote, or the 2x
+    # step becomes the leading and later gaps lose their blank lines
+    lines = ["title line a", "title line b", "p one", "p two", "p three",
+             "p four"]
+    payload = make_pdf(lines, leadings={i: 28 for i in range(2, 6)})
+    assert pdf_text_lines(payload) == [
+        "title line a", "title line b", "", "p one", "", "p two", "",
+        "p three", "", "p four",
+    ]
 
 
 def test_geometry_bands():

@@ -458,3 +458,33 @@ def test_one_row_path_payloads_match_t_extract(spark, tmp_path):
         assert doc["extracted_text"] == row.extracted_text
         assert doc["meta"] == {"chars": row.n_chars_in,
                                "segments": row.n_segments}
+
+
+def test_payload_rows_independent_of_arrow_batch_size(spark):
+    """The kernel runs a whole Arrow batch at once; a batch of one row
+    and a batch of every row of a task give the same rows."""
+    from crrf_det_spark.pdfmini import make_pdf
+    from crrf_det_spark.pipeline import extract_payload_turns
+
+    rows, _ = synth.generate(n_convs=6, seed=13, skew_convs=1, skew_factor=5)
+    payloads = [
+        r["text"].encode("utf-8") if r["text"].startswith("<")
+        else make_pdf(r["text"].split("\n"))
+        for r in rows
+    ] + [None, b"", b"\xff\xfe not utf-8"]
+    df = spark.createDataFrame(
+        [("c", i, None if p is None else bytearray(p))
+         for i, p in enumerate(payloads)],
+        "conv_id string, turn_idx int, payload binary",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    got = {}
+    try:
+        for n in (1, 2048):
+            spark.conf.set(key, str(n))
+            got[n] = _rows(extract_payload_turns(df))
+    finally:
+        spark.conf.set(key, old)
+    assert len(got[1]) == len(payloads)
+    assert got[1] == got[2048]

@@ -88,6 +88,33 @@ def test_batched_join_equals_sequential(text, boxes):
     assert list(seq_tokens.used) == list(batch_tokens.used)
 
 
+# every kind of whitespace str.split and the regex \s agree on, mixed
+# with ASCII and wide ink
+WS_LINE = st.text(
+    alphabet=st.sampled_from(list(
+        "ab7_ \t\r\x0b\x0c\x1c\x1f\x85\xa0\u1680\u2007\u2028\u3000\xe9\u6f22\U0001f600"
+    )),
+    max_size=14,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(WS_LINE, max_size=6))
+def test_tokenize_lines_matches_regex_tokens(lines):
+    """The batched tokenizer (str.split + whitespace mask) finds exactly
+    the regex \\S+ tokens, with their line and char offsets."""
+    from crrf_det_spark.extract import tokenize_lines
+    from crrf_det_spark.grid import LINE_H, V_UNIT
+
+    toks = tokenize_lines(lines)
+    got = [(t, *(int(v) for v in b)) for t, b in zip(toks.texts, toks.boxes)]
+    assert got == [
+        (m.group(), li * V_UNIT, m.start(), li * V_UNIT + LINE_H, m.end())
+        for li, ln in enumerate(lines)
+        for m in re.finditer(r"\S+", ln)
+    ]
+
+
 def test_batched_join_chunk_halving_equals_sequential(monkeypatch):
     """Force the MAX_JOIN_CELLS adaptive halving (normally only hit by
     multi-million-token unbroken paragraphs) and assert the join is still
