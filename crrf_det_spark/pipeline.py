@@ -248,7 +248,7 @@ def extract_payload_turns(df: DataFrame) -> DataFrame:
     """Binary-payload variant of ``extract_transcripts`` for tool-emitted
     attachments in a ``payload`` column: PDFs through pdfmini with their
     true line geometry, everything else as strict UTF-8 through the
-    HTML/text auto path (``extract_row``)."""
+    HTML/text auto path (``extract_rows``)."""
     return _extract(df, "payload")
 
 

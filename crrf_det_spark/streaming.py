@@ -6,7 +6,7 @@ batch pipeline with resumable checkpoints.  This module is the additive
 streaming path for users who ingest transcripts continuously: a
 ``readStream`` over an append-only transcripts directory/table, the batch
 pipeline's own Arrow-batched kernel (``pipeline._extract_batches``, which
-maps the one row function ``pipeline.extract_row``) per micro-batch, and
+runs the one batch function ``pipeline.extract_rows``) per micro-batch, and
 an append sink with exactly-once semantics via the streaming checkpoint.
 A streamed turn therefore extracts to the same row as
 ``extract_transcripts`` and the resumable sink give for it.

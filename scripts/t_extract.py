@@ -8,7 +8,7 @@ t-pdf driver, /root/reference/src/t-pdf:86-156).
     # transcripts parquet -> JSON-lines segments (page.N.json analogue)
     python scripts/t_extract.py -i transcripts_parquet_dir -o outdir --spark
 
-The plain-file mode runs the pipeline's row function
+The plain-file mode runs the pipeline's batch function on a batch of one
 (``crrf_det_spark.pipeline.extract_row``) locally, without a Spark session
 -- handy for inspecting one document.  It reads the file as a payload, the
 way ``extract_payload_turns`` does: a PDF through pdfmini with its true
