@@ -32,11 +32,13 @@ from .htmlx import html_segments, looks_like_html
 _ASCII_SPACE = np.array([chr(c).isspace() for c in range(128)])
 
 # Cap on the (box, candidate token) pairs of one chunk of the batched
-# join in Tokens.take_overlapping_many (8M pairs ~ 64 MB per float64
-# temporary).  Grid-budget-passing turns can still hold millions of
-# tokens in one unbroken y-window (a single-paragraph log paste); cutting
-# the boxes into chunks by pairs keeps the join's peak memory bounded.
-MAX_JOIN_CELLS = 8_000_000
+# join in Tokens.take_overlapping_many.  At its peak a chunk holds six
+# 8-byte arrays of one value per pair (the two pair indices, the x
+# overlap and three 1-D coordinate gathers for y), so 4M pairs ~ 200 MB.
+# Grid-budget-passing turns can still hold millions of tokens in one
+# unbroken y-window (a single-paragraph log paste); cutting the boxes
+# into chunks by pairs keeps the join's peak memory bounded.
+MAX_JOIN_CELLS = 4_000_000
 
 
 class Tokens:
@@ -98,6 +100,16 @@ class Tokens:
         self.used[idx] = True
         return [self.texts[i] for i in idx]
 
+    def _overlap(self, barr, bi, ti, lo: int, hi: int) -> np.ndarray:
+        """Per-pair overlap of box ``bi`` and token ``ti`` along one axis
+        (coordinates ``lo``/``hi``), one 1-D gather at a time."""
+        ov = barr[bi, hi]
+        np.minimum(ov, self.boxes[ti, hi], out=ov)
+        start = barr[bi, lo]
+        np.maximum(start, self.boxes[ti, lo], out=start)
+        ov -= start
+        return ov
+
     def take_overlapping_many(self, boxes: list) -> list[list[str]]:
         """Batched first-writer-wins join: one call for ALL boxes (in
         priority order) instead of one scan per box.
@@ -131,16 +143,14 @@ class Tokens:
                 lo[b0:b1] + cnt - cum[b0:b1], cnt
             )
             b0 = b1
-            b = barr[bi]
-            t = self.boxes[ti]
-            x_ov = np.minimum(b[:, 3], t[:, 3]) - np.maximum(b[:, 1], t[:, 1])
-            y_ov = np.minimum(b[:, 2], t[:, 2]) - np.maximum(b[:, 0], t[:, 0])
-            hit = (
-                (x_ov > 0)
-                & (y_ov > 0)
-                & (x_ov * y_ov > self.thr[ti])
-                & ~self.used[ti]
-            )
+            x_ov = self._overlap(barr, bi, ti, 1, 3)
+            hit = x_ov > 0
+            y_ov = self._overlap(barr, bi, ti, 0, 2)
+            hit &= y_ov > 0
+            x_ov *= y_ov
+            del y_ov
+            hit &= x_ov > self.thr[ti]
+            hit &= ~self.used[ti]
             # pairs run box-major, so after a stable sort by token each
             # token's first box leads its run
             ti = ti[hit]
@@ -170,22 +180,20 @@ def tokenize_lines(lines: list[str]) -> Tokens:
 
     ``lines`` may be a whole batch of turns, one after the other: token
     y is the line's index in the list, so turns never overlap.  One
-    ``str.split`` plus one mask of the whitespace it splits on; each
-    token's line and in-line offsets come from the mask's edges and the
-    cumulative line-start offsets."""
+    ``str.split`` plus one mask of the whitespace it splits on, read off
+    the UTF-32 code points (a lookup for ASCII, ``str.isspace`` once per
+    distinct other code point); each token's line and in-line offsets
+    come from the mask's edges and the cumulative line-start offsets."""
     text = "\n".join(lines)
     texts = text.split()
     if not texts:
         return Tokens([], np.empty((0, 4), dtype=np.float64))
     padded = f" {text} "  # every token has a space before and after
-    if padded.isascii():
-        space = _ASCII_SPACE[np.frombuffer(padded.encode("ascii"), np.uint8)]
-    else:
-        cp = np.frombuffer(padded.encode("utf-32-le", "surrogatepass"), np.uint32)
-        wide = cp > 0x7F
-        space = _ASCII_SPACE[np.where(wide, 0, cp)]
-        u, inv = np.unique(cp[wide], return_inverse=True)
-        space[wide] = np.array([chr(c).isspace() for c in u.tolist()], bool)[inv]
+    cp = np.frombuffer(padded.encode("utf-32-le", "surrogatepass"), np.uint32)
+    wide = cp > 0x7F
+    space = _ASCII_SPACE[np.where(wide, 0, cp)]
+    u, inv = np.unique(cp[wide], return_inverse=True)
+    space[wide] = np.array([chr(c).isspace() for c in u.tolist()], bool)[inv]
     ink = ~space
     s = np.flatnonzero(space[:-1] & ink[1:])  # char index of token start
     e = np.flatnonzero(ink[:-1] & space[1:])  # char index of token end

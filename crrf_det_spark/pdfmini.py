@@ -720,12 +720,16 @@ def _stream_lines_meta(
             new_ty = (ty + dy) if (ty is not None and dy is not None) else None
         if dy is not None and dy < 0:
             step = -dy
+            gap = round(step / unit) if unit is not None else 0
             if unit is not None and step > 1.5 * unit:
-                for _ in range(min(20, round(step / unit) - 1)):
+                for _ in range(min(20, gap - 1)):
                     lines.append("")
                     metas.append(None)
-            # a step that emitted blank lines is a paragraph gap and does
-            # not vote: one-line paragraphs would outvote the leading.
+            # a step within 10% of a whole multiple (2x or more) of the
+            # leading is a paragraph gap and does not vote: one-line
+            # paragraphs would outvote the leading.  Other larger steps
+            # still vote, so a body leading 1.6x an earlier small-type
+            # leading takes over once it is the mode.
             # The nominal leading is the MODAL plausible step, not the
             # minimum: a single small positional move (2pt footnote /
             # superscript shift, common in real writers) would poison a
@@ -734,7 +738,8 @@ def _stream_lines_meta(
             # at least 0.8x the current font size (glyphs can't
             # single-space tighter than that); ties break to the
             # smaller step so paragraph gaps never outvote leadings.
-            elif step >= max(1.0, 0.8 * size):
+            paragraph = gap >= 2 and abs(step - gap * unit) <= 0.1 * gap * unit
+            if not paragraph and step >= max(1.0, 0.8 * size):
                 key = round(step, 1)
                 n = step_counts[key] = step_counts.get(key, 0) + 1
                 # only this key's count rose, so the mode is it or unit

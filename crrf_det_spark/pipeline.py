@@ -154,16 +154,8 @@ def extract_rows(values) -> list[tuple]:
     )):
         etext = extracted_text(segs)
         rows.append((
-            [
-                {
-                    "cindex": i,
-                    "type": s["type"],
-                    "content": s["content"],
-                    "rows": s["rows"],
-                    "box": s["box"],
-                }
-                for i, s in enumerate(segs)
-            ],
+            [{"cindex": i, "type": s["type"], "content": s["content"],
+              "rows": s["rows"], "box": s["box"]} for i, s in enumerate(segs)],
             etext,
             len(segs),
             sum(1 for s in segs if s["type"] == "table"),

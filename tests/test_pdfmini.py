@@ -323,6 +323,25 @@ def test_paragraph_gaps_do_not_outvote_leading():
     ]
 
 
+def test_larger_body_leading_takes_over_from_small_header():
+    # an 8pt header at 9.6pt leading, then 11pt body at 16pt: 16/9.6 is
+    # no whole multiple, so the body steps vote and become the leading
+    # after a few lines instead of a blank line after every body line
+    body = [f"body {i}" for i in range(8)]
+    content = b"BT /F1 8 Tf 72 760 Td (head a) Tj 0 -9.6 Td (head b) Tj " \
+        b"0 -9.6 Td (head c) Tj /F1 11 Tf " + b" ".join(
+            b"0 -16 Td (%s) Tj" % ln.encode() for ln in body
+        ) + b" ET"
+    payload = (
+        b"%%PDF-1.4\n4 0 obj << /Length %d >> stream\n%s\nendstream endobj\n"
+        % (len(content), content)
+    )
+    assert pdf_text_lines(payload) == [
+        "head a", "head b", "head c",
+        "", "body 0", "", "body 1", "", "body 2", *body[3:],
+    ]
+
+
 def test_geometry_bands():
     from crrf_det_spark.pdfmini import pdf_text_lines_geometry
 

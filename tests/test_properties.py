@@ -116,10 +116,11 @@ def test_tokenize_lines_matches_regex_tokens(lines):
 
 
 def test_batched_join_chunk_halving_equals_sequential(monkeypatch):
-    """Force the MAX_JOIN_CELLS adaptive halving (normally only hit by
-    multi-million-token unbroken paragraphs) and assert the join is still
-    exactly the sequential first-writer-wins loop, including when chunks
-    degrade all the way to n == 1."""
+    """Force the join into many small chunks of (box, token) pairs by
+    patching MAX_JOIN_CELLS (normally only hit by multi-million-token
+    unbroken paragraphs) and assert the join is still exactly the
+    sequential first-writer-wins loop, including at a cap of 1 pair, where
+    every box whose window is larger goes into a chunk by itself."""
     import crrf_det_spark.extract as extract_mod
     from crrf_det_spark.extract import tokenize_lines
     from crrf_det_spark.grid import occupancy_from_text
@@ -141,7 +142,7 @@ def test_batched_join_chunk_halving_equals_sequential(monkeypatch):
     seq_tokens = tokenize_lines(lines)
     expected = [seq_tokens.take_overlapping(b) for b in boxes]
 
-    for cap in (1, 37, 512):  # n==1 path, mid halving, light halving
+    for cap in (1, 37, 512):  # one box per chunk, then fewer chunks
         monkeypatch.setattr(extract_mod, "MAX_JOIN_CELLS", cap)
         batch_tokens = tokenize_lines(lines)
         got = batch_tokens.take_overlapping_many(boxes)
