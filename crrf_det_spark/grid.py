@@ -15,14 +15,18 @@ engine re-expresses the same projection-profile / grid-line heuristics over a
 
 Every public function cites the reference routine it re-expresses.  The
 code is vectorized numpy over one Arrow batch of turns in the Spark
-pipeline (crrf_det_spark.pipeline): ``parse_grids`` runs the layout stages
-per turn and the hspacings/vertical-line stages once over the batch.
+pipeline (crrf_det_spark.pipeline): ``parse_grids`` runs columns, row
+groups and group boxes per turn, and the hspacings folds, vertical lines
+and the tablevspan chain with its intersection search (stages 3-5) once
+per stack of every row group of the batch; only ``build_table`` and
+``find_cells`` run per table.
 """
 
 from __future__ import annotations
 
 import bisect
 import re
+from typing import NamedTuple
 
 import numpy as np
 
@@ -646,57 +650,63 @@ def row_groups_from_column(
 # (analogue of row_hspacings_from_row_groups, pseg.py:612-704)
 # ---------------------------------------------------------------------------
 
-def row_hspacings_from_rows(
-    grid: np.ndarray, column: list[int], rows: list[list[int]]
-) -> np.ndarray:
-    """2-D profile (n_rows x column_width), 1=spacing 0=content.
+class Stack(NamedTuple):
+    """Stages 3-4 of one stack of row groups.  ``m`` holds every member's
+    hspacings profile (1=spacing 0=content): member k in rows
+    ``starts[k]:starts[k] + h[k]`` and columns ``:w[k]``, right-padded
+    with content and followed by one content row.  ``runs`` are m's
+    spacing runs (row, start, exclusive end), row-major;
+    ``first_content`` / ``last_content`` each row's first / last content
+    column within its member's width; ``lines`` the
+    vertical lines (``vertical_lines_from_hspacings``)."""
 
-    Vectorized like the reference's diff/where idiom (pseg.py:662-669):
-    spacing runs narrower than MIN_SPACING_SPAN are folded into content, and
-    short left-edge bullets are merged rightward (pseg.py:677-698).
-    """
-    crop = grid[:, column[0]: column[1]]
-    line_idx = [r0 // V_UNIT for (r0, _r1) in rows]
-    out = crop[line_idx].copy()
-    _fold_spacing_runs(out)
-    return out
+    m: np.ndarray
+    starts: np.ndarray
+    h: np.ndarray
+    w: np.ndarray
+    runs: tuple
+    first_content: np.ndarray
+    last_content: np.ndarray
+    lines: tuple
+
+    def hs(self, k: int) -> np.ndarray:
+        """Member k's profile, a view of ``m``."""
+        s = int(self.starts[k])
+        return self.m[s: s + int(self.h[k]), : int(self.w[k])]
 
 
 def row_hspacings_for_groups(
     groups: list[tuple[np.ndarray, list[int], list[list[int]]]],
-) -> tuple[list[np.ndarray], list[list]]:
-    """Stages 3 and 4 for every row group of a batch of turns at once:
-    for each ``(grid, column, rows)`` in ``groups``, its hspacings profile
-    (``row_hspacings_from_rows``, returned as a view) and its vertical
-    lines.  The groups' line crops are stacked, each right-padded with
-    content and followed by one content row.  Both folds are strictly
-    per row (the bullet merge reads each row's own quarter width) and no
-    vertical run crosses a content row, so one pass per stack equals one
-    pass per group (tests/test_grid.py::test_hspacings_batched) at a
-    fixed numpy cost per stack.  Stacks are cut by cells
-    (``_stack_chunks``)."""
-    heights = [len(rows) for _grid, _column, rows in groups]
-    widths = [grid[:, column[0]: column[1]].shape[1]
-              for grid, column, _rows in groups]
-    hs_out: list = [None] * len(groups)
-    lines_out: list = [None] * len(groups)
-    for chunk in _stack_chunks(heights, widths):
-        h = np.array([heights[i] for i in chunk], dtype=np.int64)
-        w = np.array([widths[i] for i in chunk], dtype=np.int64)
-        starts = np.zeros(len(chunk), dtype=np.int64)
-        np.cumsum(h[:-1] + 1, out=starts[1:])
-        m = np.zeros((int(starts[-1] + h[-1]), int(w.max())), dtype=np.uint8)
-        for i, s in zip(chunk, starts.tolist()):
-            grid, column, rows = groups[i]
-            m[s: s + len(rows), : widths[i]] = grid[
-                [r0 // V_UNIT for (r0, _r1) in rows], column[0]: column[1]
-            ]
-        _fold_spacing_runs(m, np.repeat(w, h + 1)[: len(m)])
-        lines = vertical_lines_from_hspacings(m, starts)
-        for i, s, ln in zip(chunk, starts.tolist(), lines):
-            hs_out[i] = m[s: s + heights[i], : widths[i]]
-            lines_out[i] = ln
-    return hs_out, lines_out
+) -> Stack:
+    """Stages 3 and 4 for a stack of row groups at once: for each
+    ``(grid, column, rows)`` in ``groups``, the rows' column crop with
+    spacing runs narrower than MIN_SPACING_SPAN folded into content and
+    short left-edge bullets merged rightward (pseg.py:662-698), then the
+    vertical lines.  Both folds are strictly per row (the bullet merge
+    reads each row's own quarter width) and no vertical run crosses a
+    content row, so one pass per stack equals one pass per group
+    (tests/test_grid.py::test_hspacings_batched) at a fixed numpy cost
+    per stack."""
+    h = np.array([len(rows) for _grid, _column, rows in groups], dtype=np.int64)
+    w = np.array([grid[:, column[0]: column[1]].shape[1]
+                  for grid, column, _rows in groups], dtype=np.int64)
+    starts = np.zeros(len(groups), dtype=np.int64)
+    np.cumsum(h[:-1] + 1, out=starts[1:])
+    m = np.zeros((int(starts[-1] + h[-1]), int(w.max())), dtype=np.uint8)
+    for (grid, column, rows), s, width in zip(groups, starts.tolist(), w.tolist()):
+        m[s: s + len(rows), :width] = grid[
+            [r0 // V_UNIT for (r0, _r1) in rows], column[0]: column[1]
+        ]
+    row_w = np.repeat(w, h + 1)[: len(m)]
+    sr, sc, ec = _fold_spacing_runs(m, row_w)
+    first = np.zeros(len(m), dtype=np.int64)
+    lead = sc == 0
+    first[sr[lead]] = ec[lead]
+    last = row_w - 1
+    trail = ec == row_w[sr]
+    last[sr[trail]] = sc[trail] - 1
+    return Stack(m, starts, h, w, (sr, sc, ec), first, last,
+                 vertical_lines_from_hspacings(m, starts))
 
 
 def _stack_chunks(heights: list[int], widths: list[int]) -> list[list[int]]:
@@ -717,6 +727,13 @@ def _stack_chunks(heights: list[int], widths: list[int]) -> list[list[int]]:
     return chunks
 
 
+def _ranges(first: np.ndarray, n: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The ranges ``[first[k], first[k] + n[k])`` concatenated, and each
+    range's offset in the concatenation."""
+    off = np.cumsum(n) - n
+    return np.repeat(first - off, n) + np.arange(int(n.sum())), off
+
+
 def _spacing_runs(m: np.ndarray) -> tuple[np.ndarray, ...]:
     """Every horizontal spacing run of ``m``: (row, start, exclusive end),
     row-major."""
@@ -733,68 +750,44 @@ def _spacing_runs(m: np.ndarray) -> tuple[np.ndarray, ...]:
 def _zero_runs(m: np.ndarray, r: np.ndarray, c0: np.ndarray, c1: np.ndarray) -> None:
     """``m[r[k], c0[k]:c1[k]] = 0`` for every k, as one scatter."""
     n = c1 - c0
-    first = np.cumsum(n) - n
-    m[np.repeat(r, n), np.arange(int(n.sum())) + np.repeat(c0 - first, n)] = 0
+    m[np.repeat(r, n), _ranges(c0, n)[0]] = 0
 
 
-def _fold_spacing_runs(m: np.ndarray, row_width: np.ndarray | None = None) -> None:
+def _fold_spacing_runs(
+    m: np.ndarray, row_width: np.ndarray | None = None
+) -> tuple[np.ndarray, ...]:
     """Both hspacings folds, whole matrix at once, from one run scan:
     interior spacing runs narrower than MIN_SPACING_SPAN become content
     (leading runs -- the left margin -- are never narrowed, matching the
     reference where the crop starts inside the column), then the bullet
     merge (``_merge_bullet_runs``) runs over the runs left, which are
-    exactly the runs a rescan would find."""
+    exactly the runs a rescan would find.  Returns the spacing runs that
+    survive both folds."""
     sr, sc, ec = _spacing_runs(m)
     narrow = (ec - sc < MIN_SPACING_SPAN) & (sc > 0)
     _zero_runs(m, sr[narrow], sc[narrow], ec[narrow])
-    keep = ~narrow
-    _merge_bullet_runs(m, sr[keep], sc[keep], ec[keep], row_width)
+    sr, sc, ec = sr[~narrow], sc[~narrow], ec[~narrow]
+    keep = ~_merge_bullet_runs(m, sr, sc, ec, row_width)
+    return sr[keep], sc[keep], ec[keep]
 
 
-def _merge_bullets(sp: np.ndarray) -> None:
-    quarter = len(sp) // 4
-    # fast path: no spacing in the left quarter -> nothing to merge
-    if quarter and not sp[:quarter].any():
-        return
-    c_len = 0
-    merge_start = -1
-    for i in range(min(len(sp), max(quarter, 1))):
-        if sp[i] == 1:
-            if 0 < c_len <= BULLET_MAX_CONTENT:
-                merge_start = i
-            c_len = 0
-        else:
-            if 0 <= merge_start and i - merge_start < BULLET_MAX_MERGE:
-                sp[merge_start:i] = 0
-            c_len += 1
-            merge_start = -1
-
-
-def _merge_bullet_runs(m, sr, sc, ec, row_width) -> None:
-    """Vectorized ``_merge_bullets`` over the row-major spacing runs
-    ``(sr, sc, ec)`` of every row of ``m`` at once.  Equivalent because
-    each fold decision depends only on the run lengths of the UNMODIFIED
-    row (a fold rewrites a spacing run the sweep has already passed, so
-    later decisions never read it), so all candidate runs fold together:
-    fold a spacing run when the content run before it is short
-    (0 < len <= BULLET_MAX_CONTENT, a bullet glyph), the run starts and
-    ends inside the left quarter, and it is narrower than
-    BULLET_MAX_MERGE.  ``row_width`` (None: the matrix width) is each
-    row's own width, whose quarter bounds the merge -- rows of a stack
-    of groups are right-padded with content."""
-    if not len(sr):
-        return
+def _merge_bullet_runs(m, sr, sc, ec, row_width) -> np.ndarray:
+    """Bullet merge (pseg.py:677-698) over the row-major spacing runs
+    ``(sr, sc, ec)`` of every row of ``m`` at once; returns which runs
+    were folded.  Each fold decision depends only on the run lengths of
+    the UNMODIFIED row (a fold rewrites a spacing run the reference's
+    sweep has already passed, so later decisions never read it), so all
+    candidate runs fold together: fold a spacing run when the content
+    run before it is short (0 < len <= BULLET_MAX_CONTENT, a bullet
+    glyph), the run starts and ends inside the left quarter, and it is
+    narrower than BULLET_MAX_MERGE.  ``row_width`` (None: the matrix
+    width) is each row's own width, whose quarter bounds the merge --
+    rows of a stack of groups are right-padded with content."""
     width = m.shape[1] if row_width is None else row_width[sr]
     maxi = np.maximum(width // 4, 1)
     # content-run length immediately before each spacing run: distance to
     # the previous spacing run's end in the same row (or to col 0)
-    prev_ec = np.empty_like(ec)
-    prev_ec[0] = 0
-    prev_ec[1:] = ec[:-1]
-    same_row = np.empty(len(sr), dtype=bool)
-    same_row[0] = False
-    same_row[1:] = sr[1:] == sr[:-1]
-    clen = sc - np.where(same_row, prev_ec, 0)
+    clen = sc - _previous_end(sr, ec)
     fold = (
         (clen > 0)
         & (clen <= BULLET_MAX_CONTENT)
@@ -803,6 +796,15 @@ def _merge_bullet_runs(m, sr, sc, ec, row_width) -> None:
         & (ec - sc < BULLET_MAX_MERGE)
     )
     _zero_runs(m, sr[fold], sc[fold], ec[fold])
+    return fold
+
+
+def _previous_end(sr: np.ndarray, ec: np.ndarray) -> np.ndarray:
+    """End of the previous row-major run in the same row, else 0."""
+    prev = np.zeros_like(ec)
+    same_row = sr[1:] == sr[:-1]
+    prev[1:][same_row] = ec[:-1][same_row]
+    return prev
 
 
 # ---------------------------------------------------------------------------
@@ -812,13 +814,15 @@ def _merge_bullet_runs(m, sr, sc, ec, row_width) -> None:
 
 def vertical_lines_from_hspacings(
     row_hspacings: np.ndarray, starts
-) -> list[list[tuple[tuple[int, int], tuple[int, int]]]]:
+) -> tuple[np.ndarray, ...]:
     """Maximal all-spacing vertical runs >= 2 rows tall, per group of a
     stack whose groups begin at rows ``starts`` and are separated by
     content rows (``[0]`` for one group's profile).
 
-    Coordinates are ((x, y_top), (x, y_bottom)) in (column-crop char,
-    group-row index) space, exactly as the reference.
+    Returns arrays ``(x, y_top, y_bottom, group)`` in (column-crop char,
+    group-row index) space, exactly as the reference's
+    ((x, y_top), (x, y_bottom)), grouped by group and in the reference's
+    order within each.
     """
     n_rows, width = row_hspacings.shape
     # vectorized run-length per column: pad each column with 0s and diff
@@ -839,218 +843,209 @@ def vertical_lines_from_hspacings(
     # per group, sort tall-to-short weighted by top position
     # (pseg.py:749-751), ties in the per-group (x, y_top) scan order
     order = np.lexsort((y0, x, (y0 - y1) * y0, g))
-    x, y0, y1 = x[order].tolist(), y0[order].tolist(), y1[order].tolist()
-    lines = list(zip(zip(x, y0), zip(x, y1)))
-    ends = np.cumsum(np.bincount(g, minlength=len(starts))).tolist()
-    return [lines[a:b] for a, b in zip([0] + ends, ends)]
+    return x[order], y0[order], y1[order], g[order]
 
 
 # ---------------------------------------------------------------------------
 # stage 5: tablevspan chain (analogue of class tablevspan, pseg.py:785-1185)
+#
+# Each step runs once per stack, over every row group in it.  Rectangles
+# are parallel arrays (``Rects``) grouped by stack member; the row tests
+# read the stack's per-row content extents and spacing runs, so no step
+# slices a group's profile.
 # ---------------------------------------------------------------------------
 
 Rect = tuple[tuple[int, int], tuple[int, int]]
 
 
-def group_adjacent_lines(lines: list) -> list[Rect]:
-    """Adjacent same-height lines -> rectangles (pseg.py:795-815)."""
-    rects: list[Rect] = []
-    if not lines:
-        return rects
-    rect = lines[0]
-    for line in lines[1:]:
-        if (
-            line[1][1] == rect[1][1]
-            and line[0][1] == rect[0][1]
-            and (rect[0][0] - line[0][0] == 1 or line[0][0] - rect[1][0] == 1)
-        ):
-            rect = (
-                (min(line[0][0], rect[0][0]), rect[0][1]),
-                (max(line[0][0], rect[1][0]), rect[1][1]),
-            )
-        else:
-            rects.append(rect)
-            rect = line
-    rects.append(rect)
-    return rects
+class Rects(NamedTuple):
+    """Rectangles of a stack's row groups as parallel arrays: member
+    ``g`` of the stack, x in column-crop chars, y in group rows
+    (inclusive), the reference's ((x0, y0), (x1, y1)).  Grouped by g, in
+    each group's chain order."""
+
+    g: np.ndarray
+    x0: np.ndarray
+    y0: np.ndarray
+    x1: np.ndarray
+    y1: np.ndarray
+
+    def take(self, sel) -> Rects:
+        return Rects(*(a[sel] for a in self))
 
 
-def remove_smaller_adjacent_rectangles(rects: list[Rect]) -> list[Rect]:
+def _group_firsts(g: np.ndarray) -> np.ndarray:
+    """Index of each group's first entry in a grouped array."""
+    return np.flatnonzero(np.r_[True, g[1:] != g[:-1]]) if len(g) else g
+
+
+def group_adjacent_lines(lines: tuple) -> Rects:
+    """Adjacent same-height lines -> rectangles (pseg.py:795-815).  Lines
+    of one height and top share a sort key in stage-4 order, where they
+    are x-ascending, so a rectangle is a run of lines with the same
+    group, top and bottom at consecutive x (the reference's "one left of
+    the rectangle" case cannot occur)."""
+    x, y0, y1, g = lines
+    new = np.ones(len(x), dtype=bool)
+    new[1:] = ((g[1:] != g[:-1]) | (y0[1:] != y0[:-1])
+               | (y1[1:] != y1[:-1]) | (x[1:] != x[:-1] + 1))
+    ends = np.ones(len(x), dtype=bool)
+    ends[:-1] = new[1:]
+    first, last = np.flatnonzero(new), np.flatnonzero(ends)
+    return Rects(g[first], x[first], y0[first], x[last], y1[first])
+
+
+def remove_smaller_adjacent_rectangles(rects: Rects) -> Rects:
     """Drop rects horizontally touching a taller-or-equal neighbour
     (pseg.py:817-844).
 
-    The touch predicate needs exact x-adjacency (key.x1 + 1 == rect.x0 or
-    key.x0 == rect.x1 + 1), so pairs are enumerated per x-boundary with
-    numpy broadcasting instead of the reference's all-pairs Python scan --
-    same pair set (a rect can never be value-equal to its cross-boundary
-    key, so the reference's rect == key skip is vacuous here), but
-    O(sum of boundary-bucket products) in C, which matters for degenerate
-    multi-thousand-rect groups."""
-    n = len(rects)
-    if n < 2:
-        return list(rects)
-    if n <= 48:
-        # typical pages have a handful of rects; the plain pair scan beats
-        # numpy setup overhead there
-        removed_l = [False] * n
-        for key in rects:
-            kh = key[1][1] - key[0][1]
-            for j, rect in enumerate(rects):
-                if rect == key:
-                    continue
-                if (
-                    (key[1][0] + 1 == rect[0][0]
-                     or key[0][0] == rect[1][0] + 1)
-                    and min(key[1][1], rect[1][1])
-                    - max(key[0][1], rect[0][1]) > 0
-                    and rect[1][1] - rect[0][1] <= kh
-                ):
-                    removed_l[j] = True
-        return [r for r, dead in zip(rects, removed_l) if not dead]
-    # large groups: bucket candidate pairs by (x-boundary, y-band).  A
-    # touching pair must share an x-boundary AND y-overlap, hence share at
-    # least one y-band; repeated pair visits across bands are harmless
-    # (the kill mark is idempotent).  Near-linear when rects are short
-    # (the degenerate many-rect case), exact always.
-    from collections import defaultdict
-
-    band_h = 64
-    removed = [False] * n
-    right_at: dict[int, list[int]] = defaultdict(list)  # boundary x0 = b
-    left_at: dict[int, list[int]] = defaultdict(list)   # boundary x1+1 = b
-    for j, r in enumerate(rects):
-        right_at[r[0][0]].append(j)
-        left_at[r[1][0] + 1].append(j)
-    for b, ri_list in right_at.items():
-        li_list = left_at.get(b)
-        if not li_list:
-            continue
-        bands_l: dict[int, list[int]] = defaultdict(list)
-        for i in li_list:
-            for band in range(
-                rects[i][0][1] // band_h, rects[i][1][1] // band_h + 1
-            ):
-                bands_l[band].append(i)
-        for j in ri_list:
-            (_xj0, yj0), (_xj1, yj1) = rects[j]
-            hj = yj1 - yj0
-            seen: set[int] = set()
-            for band in range(yj0 // band_h, yj1 // band_h + 1):
-                for i in bands_l.get(band, ()):
-                    if i in seen:
-                        continue
-                    seen.add(i)
-                    (_xi0, yi0), (_xi1, yi1) = rects[i]
-                    if min(yi1, yj1) - max(yi0, yj0) > 0:
-                        hi = yi1 - yi0
-                        if hj <= hi:
-                            removed[j] = True
-                        if hi <= hj:
-                            removed[i] = True
-    return [r for r, dead in zip(rects, removed) if not dead]
-
-
-def remove_edge_rectangles(rects: list[Rect], row_hspacings: np.ndarray) -> list[Rect]:
-    """Drop rects hugging the column edges, 1-char-wide rects, and rects
-    whose entire left/right side is blank (pseg.py:846-878)."""
-    width = row_hspacings.shape[1]
-    out = [
-        r
-        for r in rects
-        if not (r[0][0] == 0 or r[1][0] == width - 1 or r[1][0] - r[0][0] < 1)
-    ]
-    out.sort(key=lambda r: r[0][0])
-    kept = []
-    for (x0, y0), (x1, y1) in out:
-        left = row_hspacings[y0: y1 + 1, 0: x0 + 1]
-        right = row_hspacings[y0: y1 + 1, x1:width]
-        if np.all(left == 1) or np.all(right == 1):
-            continue
-        kept.append(((x0, y0), (x1, y1)))
-    return kept
-
-
-def is_first_rectangle_column_valid(
-    rects: list[Rect], row_hspacings: np.ndarray
-) -> bool:
-    """First table column must be >=60% filled and not anomalously short
-    (pseg.py:880-927)."""
-    if not rects:
-        return False
-    (x0, y0), (x1, y1) = rects[0]
-    filled = sum(
-        1
-        for i in range(y0, y1 + 1)
-        if row_hspacings[i, 0:x0].sum() < x0
-    )
-    height = 0.6 * (y1 - y0 + 1)
-    filled2 = 0
-    height2 = height
-    if len(rects) > 1:
-        (bx0, by0), (bx1, by1) = rects[1]
-        height2 = 0.6 * (by1 - by0 + 1)
-        filled2 = sum(
-            1
-            for i in range(by0, by1 + 1)
-            if row_hspacings[i, 0:bx0].sum() < bx0
-        )
-    if filled < height and filled2 < height2:
-        return False
-    if len(rects) > 1:
-        (x0, y0), (x1, y1) = rects[0]
-        col_heights = [r[1][1] - r[0][1] for r in rects[1:]]
-        thrs = float(np.median(col_heights))
-        cmax = float(np.max(col_heights))
-        bottoms = {r[1][1] for r in rects[1:]}
-        if (
-            y1 - y0 < thrs
-            and y1 - y0 < cmax / 2
-            and (y1 not in bottoms or y1 - y0 < 3)
-        ):
-            return False
-    return True
-
-
-def remove_busy_column_rectangles(
-    rects: list[Rect], row_hspacings: np.ndarray
-) -> list[Rect]:
-    """Kill the table if the two leftmost regions are prose-busy
-    (pseg.py:929-974), vectorized run-length instead of the reference's
-    per-pixel loop."""
-    if not rects:
+    A touching pair shares an x-boundary (left.x1 + 1 == right.x0) and
+    overlaps in y, so one member's top lies inside the other's span.  Two
+    range searches over rects keyed by (group, boundary, top) find both
+    kinds of pair.  Rects that share a boundary column each hold their
+    own vertical run of it, so they are disjoint in y and a top lies in
+    at most one partner's span: the pairs number O(rects) however many
+    rects a group has."""
+    g, x0, y0, x1, y1 = rects
+    if len(g) < 2:
         return rects
-    width = row_hspacings.shape[1]
-    r1 = (0, rects[0][0][0])
-    r2 = (
-        (rects[0][1][0], rects[1][0][0])
-        if len(rects) >= 2
-        else (rects[0][1][0], width)
+    span = int(y1.max()) + 2
+    as_left = (g * (int(x1.max()) + 3) + x1 + 1) * span   # boundary x1 + 1
+    as_right = (g * (int(x1.max()) + 3) + x0) * span      # boundary x0
+    lo = np.argsort(as_left + y0, kind="stable")
+    ro = np.argsort(as_right + y0, kind="stable")
+    kl, kr = (as_left + y0)[lo], (as_right + y0)[ro]
+    # lefts whose top lies in [top, bottom) of a right ...
+    q, p = _pairs(np.searchsorted(kl, as_right + y0),
+                  np.searchsorted(kl, as_right + y1))
+    left, right = [lo[p]], [q]
+    # ... and rights whose top lies in (top, bottom) of a left
+    q, p = _pairs(np.searchsorted(kr, as_left + y0, side="right"),
+                  np.searchsorted(kr, as_left + y1))
+    left.append(q)
+    right.append(ro[p])
+    left, right = np.concatenate(left), np.concatenate(right)
+    hl, hr = y1[left] - y0[left], y1[right] - y0[right]
+    touch = np.minimum(y1[left], y1[right]) - np.maximum(y0[left], y0[right]) > 0
+    dead = np.zeros(len(g), dtype=bool)
+    dead[right[touch & (hr <= hl)]] = True
+    dead[left[touch & (hl <= hr)]] = True
+    return rects.take(~dead)
+
+
+def _pairs(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(query, position) for every position in ``[lo[q], hi[q])``."""
+    n = np.maximum(hi - lo, 0)
+    return np.repeat(np.arange(len(lo)), n), _ranges(lo, n)[0]
+
+
+def remove_edge_rectangles(rects: Rects, stack: Stack) -> Rects:
+    """Drop rects hugging the column edges, 1-char-wide rects, and rects
+    whose entire left/right side is blank (pseg.py:846-878); the rest in
+    x0 order per group.  The left side ``[0, x0]`` is blank when every
+    row of the rect has its first content column right of x0, the right
+    side ``[x1, width)`` when every row has its last one left of x1."""
+    g, x0, y0, x1, y1 = rects
+    rects = rects.take(np.flatnonzero(
+        (x0 != 0) & (x1 != stack.w[g] - 1) & (x1 - x0 >= 1)
+    ))
+    rects = rects.take(np.lexsort((rects.x0, rects.g)))
+    if not len(rects.g):
+        return rects
+    rows, off = _ranges(stack.starts[rects.g] + rects.y0, rects.y1 - rects.y0 + 1)
+    blank = (
+        (np.minimum.reduceat(stack.first_content[rows], off) > rects.x0)
+        | (np.maximum.reduceat(stack.last_content[rows], off) < rects.x1)
     )
+    return rects.take(~blank)
 
-    def busy_rows(lo: int, hi: int) -> tuple[int, int]:
-        if hi <= lo:
-            return 0, 0
-        content = row_hspacings[:, lo:hi] == 0
-        # per-position current-run length via the cumsum-reset trick, whole
-        # matrix at once; max over positions = longest content run per row
-        c = content.astype(np.int32)
-        s = c.cumsum(axis=1)
-        reset = np.where(~content, s, 0)
-        run_at = s - np.maximum.accumulate(reset, axis=1)
-        longest = run_at.max(axis=1)
-        has_any = content.any(axis=1)
-        n_busy = int(
-            ((longest >= BUSY_COLUMN_CONTENT_RUN_LENGTH) & has_any).sum()
-        )
-        return n_busy, int(has_any.sum())
 
-    b1, a1 = busy_rows(*r1)
-    b2, a2 = busy_rows(*r2)
-    if (b1 >= BUSY_COLUMN_ROW_COUNT and b2 >= BUSY_COLUMN_ROW_COUNT) or (
-        b1 >= a1 - 1 and b2 >= a2 - 1 and a1 >= 2 and a2 >= 2
-    ):
-        return []
-    return rects
+def is_first_rectangle_column_valid(rects: Rects, stack: Stack) -> np.ndarray:
+    """Per group of ``rects``: is its first rect a valid first table
+    column (pseg.py:880-927)?  It (or else the second rect) must be >=60%
+    filled -- rows with content left of it -- and it must not be
+    anomalously short against the rects after it."""
+    g, x0, y0, x1, y1 = rects
+    first = _group_firsts(g)
+    count = np.diff(np.append(first, len(g)))
+    two = count > 1
+    h = y1 - y0
+    # filled rows of each group's first and second rect
+    head = rects.take(np.concatenate([first, first[two] + 1]))
+    rows, off = _ranges(stack.starts[head.g] + head.y0, head.y1 - head.y0 + 1)
+    filled = np.add.reduceat(
+        stack.first_content[rows] < np.repeat(head.x0, head.y1 - head.y0 + 1), off,
+        dtype=np.int64,
+    )
+    height = 0.6 * (h[first] + 1)
+    filled2 = np.zeros(len(first), dtype=np.int64)
+    filled2[two] = filled[len(first):]
+    height2 = height.copy()
+    height2[two] = 0.6 * (h[first[two] + 1] + 1)
+    valid = ~((filled[: len(first)] < height) & (filled2 < height2))
+    # against the rects after it: median and max height, shared bottom
+    rest = np.ones(len(g), dtype=bool)
+    rest[first] = False
+    by_height = h[rest][np.lexsort((h[rest], g[rest]))]
+    n = count[two] - 1
+    at = (np.cumsum(count - 1) - (count - 1))[two]
+    median = (by_height[at + (n - 1) // 2] + by_height[at + n // 2]) / 2
+    tallest = by_height[at + n - 1]
+    top = first[two]
+    key = int(y1.max()) + 1
+    shared = np.isin(g[top] * key + y1[top], g[rest] * key + y1[rest])
+    h0 = h[top]
+    valid[two] &= ~(
+        (h0 < median) & (h0 < tallest / 2) & (~shared | (h0 < 3))
+    )
+    return valid
+
+
+def remove_busy_column_rectangles(rects: Rects, stack: Stack) -> Rects:
+    """Kill a group's table if the two leftmost regions are prose-busy
+    (pseg.py:929-974): left of its first rect, and from the first rect
+    to the second (or the column edge).  A row is busy in a region when
+    a content run -- a gap between the stack's spacing runs -- clipped
+    to the region is at least BUSY_COLUMN_CONTENT_RUN_LENGTH long."""
+    if not len(rects.g):
+        return rects
+    first = _group_firsts(rects.g)
+    count = np.diff(np.append(first, len(rects.g)))
+    grp = rects.g[first]
+    # the two regions per group: [0, hi1) and [lo2, hi2)
+    hi1 = rects.x0[first]
+    lo2 = rects.x1[first]
+    hi2 = np.where(count > 1, rects.x0[np.minimum(first + 1, len(rects.g) - 1)],
+                   stack.w[grp])
+    rows, off = _ranges(stack.starts[grp], stack.h[grp])
+    member = np.repeat(np.arange(len(grp)), stack.h[grp])
+    at = np.full(len(stack.m), -1)
+    at[rows] = np.arange(len(rows))
+    # content runs of those rows: before each spacing run, and after the
+    # last one (or the whole row) up to the row's width
+    sr, sc, ec = stack.runs
+    mine = at[sr] >= 0
+    sr, sc, ec = sr[mine], sc[mine], ec[mine]
+    tail = np.zeros(len(rows), dtype=np.int64)
+    np.maximum.at(tail, at[sr], ec)
+    pos = np.concatenate([at[sr], np.arange(len(rows))])
+    start = np.concatenate([_previous_end(sr, ec), tail])
+    end = np.concatenate([sc, stack.w[grp][member]])
+    k = member[pos]
+    counts = []
+    for lo, hi in ((0, hi1[k]), (lo2[k], hi2[k])):
+        longest = np.zeros(len(rows), dtype=np.int64)
+        np.maximum.at(longest, pos, np.minimum(end, hi) - np.maximum(start, lo))
+        counts.append((
+            np.add.reduceat(longest >= BUSY_COLUMN_CONTENT_RUN_LENGTH, off,
+                            dtype=np.int64),
+            np.add.reduceat(longest > 0, off, dtype=np.int64),
+        ))
+    (b1, a1), (b2, a2) = counts
+    busy = ((b1 >= BUSY_COLUMN_ROW_COUNT) & (b2 >= BUSY_COLUMN_ROW_COUNT)) | (
+        (b1 >= a1 - 1) & (b2 >= a2 - 1) & (a1 >= 2) & (a2 >= 2)
+    )
+    return rects.take(~np.repeat(busy, count))
 
 
 def build_table(
@@ -1101,81 +1096,139 @@ def build_table(
 
 
 def find_intersections(
-    column: list[int], rows: list[list[int]], table_cols: set, table_rows: set
-) -> tuple[list, set, set]:
-    """Raster the separator lines and detect cross intersections
-    (pseg.py:1044-1126), restricted to known rows x cols like the
-    reference's optimized lookup (pseg.py:1106-1119)."""
-    col_shift = int(column[0])
-    row_shift = int(rows[0][0])
-    height = rows[-1][1] - rows[0][0]
-    width = column[1] - 1 - column[0]
-    img = np.ones((height + 1, width + 1), dtype=np.uint8)
-    first_row, last_row = 10000, 0
-    for r in table_rows:
-        img[int(r[0]) - row_shift, int(r[1]) - col_shift: int(r[3]) - col_shift + 1] = 0
-    for c in table_cols:
-        first_row = min(first_row, int(c[0]))
-        last_row = max(last_row, int(c[2]))
-        img[int(c[0]) - row_shift: int(c[2]) - row_shift + 1, int(c[1]) - col_shift] = 0
-    cross = np.array([[1, 0, 1], [0, 0, 0], [1, 0, 1]], dtype=np.uint8)
-    cross_dw = np.array([[1, 1, 1], [0, 0, 0], [1, 0, 1]], dtype=np.uint8)
-    cross_uw = np.array([[1, 0, 1], [0, 0, 0], [1, 1, 1]], dtype=np.uint8)
-    intersections = [
-        (first_row - row_shift, 0),
-        (first_row - row_shift, img.shape[1] - 1),
-        (last_row - row_shift, 0),
-        (last_row - row_shift, img.shape[1] - 1),
-    ]
-    ups: set = set()
-    downs: set = set()
-    # vectorized [1,0,1] pattern match along the four border edges
-    # (replaces the reference's per-pixel window compare, pseg.py:1064-1093)
-    def _edge_hits(edge: np.ndarray) -> np.ndarray:
-        return (
-            np.nonzero(
-                (edge[:-2] == 1) & (edge[1:-1] == 0) & (edge[2:] == 1)
-            )[0]
-            + 1
-        )
+    columns: list, rows: list, table_cols: list, table_rows: list
+) -> list[tuple[list, set, set]]:
+    """Separator intersections of every table at once (pseg.py:1044-1126):
+    table t's raster spans its group (``rows[t]``) by its column
+    (``columns[t]``), with a 0 on every separator line; intersections
+    are its four corner points (top and bottom of the column
+    separators), the [1, 0, 1] hits along its four borders and the
+    cross or T hits at known row x column separators (the reference's
+    optimized lookup, pseg.py:1106-1119).
 
-    for r in _edge_hits(img[:, 0]):
-        intersections.append((int(r), 0))
-    for r in _edge_hits(img[:, img.shape[1] - 1]):
-        intersections.append((int(r), img.shape[1] - 1))
-    for c in _edge_hits(img[0, :]):
-        intersections.append((0, int(c)))
-    for c in _edge_hits(img[img.shape[0] - 1, :]):
-        intersections.append((img.shape[0] - 1, int(c)))
-    # vectorized cross-pattern match over the known rows x cols candidate
-    # grid (the reference's optimized lookup, pseg.py:1106-1119, without
-    # the per-candidate Python window compare)
-    cand_r = np.array(
-        sorted({int(t[0] - row_shift) for t in table_rows}), dtype=np.int64
+    No raster is drawn: a pixel is 0 when its row is a row separator
+    (``build_table`` draws each across the whole column) or a column
+    separator at its x spans it, which one search over the column
+    separators sorted by (table, x, top) answers.  Cross and T hits need
+    a column separator just above or below a row separator, so only
+    those (row, x) pairs are tested."""
+    n = len(columns)
+    if not n:
+        return []
+    H = np.array([r[-1][1] - r[0][0] + 1 for r in rows], dtype=np.int64)
+    W = np.array([c[1] - c[0] for c in columns], dtype=np.int64)
+    top = [int(r[0][0]) for r in rows]
+    left = [int(c[0]) for c in columns]
+    h_at = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(H, out=h_at[1:])
+    w_at = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(W, out=w_at[1:])
+    # row separators, as rows of a stack of the tables' rows
+    row_at = np.sort(np.array(
+        [h_at[t] + int(ln[0]) - top[t] for t, lines in enumerate(table_rows)
+         for ln in lines], dtype=np.int64))
+    on_row = np.zeros(int(h_at[-1]), dtype=bool)
+    on_row[row_at] = True
+    # column separators: table, top, x, bottom
+    ct = np.repeat(np.arange(n), [len(cols) for cols in table_cols])
+    ys, cx, ye = np.array(
+        [(int(c[0]) - top[t], int(c[1]) - left[t], int(c[2]) - top[t])
+         for t, cols in enumerate(table_cols) for c in cols], dtype=np.int64,
+    ).reshape(-1, 3).T
+    pitch = int(H.max()) + 1
+    at_x = w_at[ct] + cx
+    order = np.lexsort((ys, at_x))
+    at_x, ys_s, ye_s = at_x[order], ys[order], ye[order]
+    keys = at_x * pitch + ys_s
+    reach = np.maximum.accumulate(at_x * pitch + ye_s) - at_x * pitch
+
+    def zero(t, r, c):
+        q = w_at[t] + c
+        i = np.searchsorted(keys, q * pitch + r, side="right") - 1
+        j = np.maximum(i, 0)
+        return on_row[h_at[t] + r] | ((i >= 0) & (at_x[j] == q) & (reach[j] >= r))
+
+    def column_border(x):
+        """Zero pixels down column ``x[t]`` of every table, stacked."""
+        on = cx == x[ct]
+        d = np.zeros(len(on_row) + 1, dtype=np.int32)
+        np.add.at(d, h_at[ct[on]] + ys[on], 1)
+        np.add.at(d, h_at[ct[on]] + ye[on] + 1, -1)
+        return on_row | (np.cumsum(d[:-1], dtype=np.int32) > 0)
+
+    def row_border(y):
+        """Zero pixels along row ``y[t]`` of every table, stacked."""
+        z = np.repeat(on_row[h_at[:-1] + y], W)
+        on = (ys <= y[ct]) & (ye >= y[ct])
+        z[w_at[ct[on]] + cx[on]] = True
+        return z
+
+    def isolated(z, at):
+        """(table, position) of every [1, 0, 1] in ``z``, whose tables
+        start at ``at``, off each table's ends."""
+        hit = np.zeros(len(z), dtype=bool)
+        hit[1:-1] = z[1:-1] & ~z[:-2] & ~z[2:]
+        hit[at[:-1]] = hit[at[1:] - 1] = False
+        p = np.flatnonzero(hit)
+        t = np.searchsorted(at, p, side="right") - 1
+        return t, p - at[t]
+
+    # border hits (pseg.py:1064-1093)
+    none = np.zeros(n, dtype=np.int64)
+    lt, lr = isolated(column_border(none), h_at)
+    rt, rr = isolated(column_border(W - 1), h_at)
+    tt, tc = isolated(row_border(none), w_at)
+    bt, bc = isolated(row_border(H - 1), w_at)
+    # cross / T hits: rows within a column separator's reach, inside
+    q, p = _pairs(
+        np.searchsorted(row_at, h_at[ct] + np.maximum(ys - 1, 1)),
+        np.searchsorted(row_at, h_at[ct] + np.minimum(ye + 1, H[ct] - 2), side="right"),
     )
-    cand_c = np.array(
-        sorted({int(t[1] - col_shift) for t in table_cols}), dtype=np.int64
+    inside = (cx[q] >= 1) & (cx[q] <= W[ct[q]] - 2)
+    q, p = q[inside], p[inside]
+    span = int(W.max()) + 1
+    row, ic = np.divmod(np.unique(row_at[p] * span + cx[q]), span)
+    it = np.searchsorted(h_at, row, side="right") - 1
+    ir = row - h_at[it]
+    # the 3x3 window's rows above and below (its middle row is the row
+    # separator): blank corners, and not blank both above and below
+    (a0, above, a2), (b0, below, b2) = ~zero(
+        it, ir + np.array([[[-1]], [[1]]]), ic + np.array([[-1], [0], [1]])
     )
-    cand_r = cand_r[(cand_r >= 1) & (cand_r + 2 <= img.shape[0])]
-    cand_c = cand_c[(cand_c >= 1) & (cand_c + 2 <= img.shape[1])]
-    if len(cand_r) and len(cand_c):
-        win = np.lib.stride_tricks.sliding_window_view(img, (3, 3))
-        w = win[np.ix_(cand_r - 1, cand_c - 1)]  # (R, C, 3, 3)
-        eq_plain = (w == cross).all(axis=(-1, -2))
-        eq_dw = (w == cross_dw).all(axis=(-1, -2))
-        eq_uw = (w == cross_uw).all(axis=(-1, -2))
-        any_hit = eq_plain | eq_dw | eq_uw
-        for ri, ci in zip(*np.nonzero(any_hit)):
-            r, c = int(cand_r[ri]), int(cand_c[ci])
-            intersections.append((r, c))
-            if eq_dw[ri, ci]:
-                downs.add((r, c))
-            elif eq_uw[ri, ci]:
-                ups.add((r, c))
-    if len(intersections) == 4:
-        intersections = []
-    intersections.sort(key=lambda p: p[0] * 100000 + p[1])
-    return intersections, ups, downs
+    hit = a0 & a2 & b0 & b2 & ~(above & below)
+    # T kinds: 1 = down (blank above), 2 = up (blank below), 0 = cross
+    kind = ((above & ~below) + 2 * (~above & below))[hit].tolist()
+    it, ir, ic = it[hit], ir[hit], ic[hit]
+    # corners: top and bottom of the column separators (every table has
+    # one per rect)
+    by_table = np.flatnonzero(np.r_[True, ct[1:] != ct[:-1]])
+    first_row = np.minimum.reduceat(ys, by_table)
+    last_row = np.maximum.reduceat(ye, by_table)
+    et = np.concatenate([np.repeat(np.arange(n), 4), lt, rt, tt, bt, it])
+    er = np.concatenate([
+        np.stack([first_row, first_row, last_row, last_row], 1).ravel(),
+        lr, rr, np.zeros_like(tt), H[bt] - 1, ir,
+    ])
+    ec = np.concatenate([
+        np.stack([none, W - 1, none, W - 1], 1).ravel(),
+        np.zeros_like(lt), W[rt] - 1, tc, bc, ic,
+    ])
+    # per table in the reference's order: key row * 100000 + col, ties
+    # stable over corners, borders, then row-major cross/T hits
+    order = np.lexsort((np.arange(len(et)), er * 100000 + ec, et))
+    et, er, ec = et[order], er[order].tolist(), ec[order].tolist()
+    bounds = np.searchsorted(et, np.arange(n + 1)).tolist()
+    tees = np.searchsorted(it, np.arange(n + 1)).tolist()
+    ir, ic = ir.tolist(), ic.tolist()
+    out = []
+    for t in range(n):
+        a, b = bounds[t], bounds[t + 1]
+        sets: tuple[set, set, set] = (set(), set(), set())  # cross, down, up
+        for k in range(tees[t], tees[t + 1]):
+            sets[kind[k]].add((ir[k], ic[k]))
+        out.append(([] if b - a == 4 else list(zip(er[a:b], ec[a:b])),
+                    sets[2], sets[1]))
+    return out
 
 
 def find_cells(intersections: list, ups: set, downs: set) -> list:
@@ -1223,6 +1276,44 @@ def find_cells(intersections: list, ups: set, downs: set) -> list:
     # as tie-break so duplicate-start cells order deterministically
     cells = sorted(set(cells))
     return cells
+
+
+def _stack_tables(stack: Stack, groups: list[tuple]) -> dict[int, tuple]:
+    """Stage 5 over one stack whose members are ``groups`` (grid, column,
+    rows): member index -> (rects, (table_rows, table_cols), (inters,
+    ups, downs, cells)) for every member that yields a table.  Each step
+    runs once over every group of the stack; ``build_table`` and
+    ``find_cells`` run per table."""
+    rects = group_adjacent_lines(stack.lines)
+    rects = remove_smaller_adjacent_rectangles(rects)
+    rects = remove_edge_rectangles(rects, stack)
+    # drop leading rects until the first column is valid (pseg.py:880)
+    while len(rects.g):
+        valid = is_first_rectangle_column_valid(rects, stack)
+        if valid.all():
+            break
+        keep = np.ones(len(rects.g), dtype=bool)
+        keep[_group_firsts(rects.g)[~valid]] = False
+        rects = rects.take(keep)
+    rects = remove_busy_column_rectangles(rects, stack)
+    first = _group_firsts(rects.g)
+    bounds = np.append(first, len(rects.g)).tolist()
+    x0, y0, x1, y1 = (a.tolist() for a in rects[1:])
+    tables = []
+    for k, a, b in zip(rects.g[first].tolist(), bounds, bounds[1:]):
+        _grid, column, rows = groups[k]
+        rl = list(zip(zip(x0[a:b], y0[a:b]), zip(x1[a:b], y1[a:b])))
+        tables.append((k, rl, build_table(column, rows, rl)))
+    found = find_intersections(
+        [groups[k][1] for k, _rl, _bt in tables],
+        [groups[k][2] for k, _rl, _bt in tables],
+        [bt[1] for _k, _rl, bt in tables],
+        [bt[0] for _k, _rl, bt in tables],
+    )
+    return {
+        k: (rl, bt, (inters, ups, downs, find_cells(inters, ups, downs)))
+        for (k, rl, bt), (inters, ups, downs) in zip(tables, found)
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -1310,10 +1401,13 @@ def parse_grids(
     hough_pxs: list | None = None,
 ) -> list[dict]:
     """Run the full stage chain on a batch of occupancy grids, one result
-    dict per grid.  Columns, row groups (stages 1-2), the rectangle
-    chain, table build (stage 5) and group boxes (stage 6) run per grid;
-    the hspacings folds and vertical lines (stages 3-4) run once over
-    every row group of the batch (``row_hspacings_for_groups``).
+    dict per grid.  Columns, row groups (stages 1-2) and group boxes
+    (stage 6) run per grid; the hspacings folds and vertical lines
+    (stages 3-4, ``row_hspacings_for_groups``) and the rectangle chain
+    with the intersection search (stage 5, ``_stack_tables``) run once per
+    stack of row groups -- every row group of the batch, cut into stacks
+    by cells (``_stack_chunks``); ``build_table`` and ``find_cells`` run
+    per table.
 
     Per grid, ``line_geometries`` / ``hough_pxs`` (optional): true
     sub-char geometry from a caller that has it (PDF coordinates, the
@@ -1349,27 +1443,25 @@ def parse_grids(
         res["width"] = grid.shape[1]
         out.append(res)
 
-    for (res, col_idx, grp_idx), (_grid, column, rows), hs, lines in zip(
-        where, groups, *row_hspacings_for_groups(groups)
+    profiles: list = [None] * len(groups)
+    tables: dict[int, tuple] = {}
+    for chunk in _stack_chunks(
+        [len(rows) for _grid, _column, rows in groups],
+        [grid[:, column[0]: column[1]].shape[1] for grid, column, _rows in groups],
     ):
-        if hs.size == 0:
-            continue
-        res["column_row_grp_row_spacings"][col_idx][grp_idx] = hs
-        if not lines:
-            continue
-        rects = group_adjacent_lines(lines)
-        rects = remove_smaller_adjacent_rectangles(rects)
-        rects = remove_edge_rectangles(rects, hs)
-        while rects and not is_first_rectangle_column_valid(rects, hs):
-            rects = rects[1:]
-        rects = remove_busy_column_rectangles(rects, hs)
-        if not rects:
-            continue
-        table_rows, table_cols = build_table(column, rows, rects)
-        res["column_row_grp_build_table"][col_idx][grp_idx] = (table_rows, table_cols)
-        inters, ups, downs = find_intersections(column, rows, table_cols, table_rows)
-        cells = find_cells(inters, ups, downs)
-        res["column_row_grp_cells"][col_idx][grp_idx] = (inters, ups, downs, cells)
+        members = [groups[i] for i in chunk]
+        stack = row_hspacings_for_groups(members)
+        for k, i in enumerate(chunk):
+            profiles[i] = stack.hs(k)
+        for k, found in _stack_tables(stack, members).items():
+            tables[chunk[k]] = found
+    for i, (res, col_idx, grp_idx) in enumerate(where):
+        if profiles[i].size:
+            res["column_row_grp_row_spacings"][col_idx][grp_idx] = profiles[i]
+        if i in tables:
+            _rects, table, cells = tables[i]
+            res["column_row_grp_build_table"][col_idx][grp_idx] = table
+            res["column_row_grp_cells"][col_idx][grp_idx] = cells
 
     for grid, res in zip(grids, out):
         bboxes = group_bboxes(grid, res["columns"], res["column_row_groups"])

@@ -93,7 +93,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", _driver_memory())
         # Python kernel workers are forked once and reused across tasks
         # (Spark's default, pinned here because the scaling instrument
         # depends on it: a fresh fork per task would charge interpreter
@@ -114,6 +114,14 @@ def build_session(
             "spark.shuffle.spill.compress", "false"
         )
     return builder.getOrCreate()
+
+
+def _driver_memory() -> str:
+    """Half the machine's physical memory, at most 24g: the other half
+    is left to the Python kernel workers (a fixed 24g let the JVM heap
+    outgrow a 16 GB machine)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(total // 2, 24 << 30) >> 20}m"
 
 
 def _decode(value: str | bytes | None) -> tuple[str, dict | None]:

@@ -28,6 +28,53 @@ def _grid(text):
     return g, lines
 
 
+def _hs(grid, column, rows):
+    """One group's hspacings profile, as a stack of one."""
+    return G.row_hspacings_for_groups([(grid, column, rows)]).hs(0)
+
+
+def _hs_ref(grid, column, rows):
+    """One group's hspacings profile, folded on its own."""
+    out = grid[[r0 // G.V_UNIT for (r0, _r1) in rows], column[0]: column[1]].copy()
+    G._fold_spacing_runs(out)
+    return out
+
+
+def _vlines(hs):
+    """One profile's vertical lines as ((x, y_top), (x, y_bottom))."""
+    x, y0, y1, _g = G.vertical_lines_from_hspacings(hs, [0])
+    return list(zip(zip(x.tolist(), y0.tolist()), zip(x.tolist(), y1.tolist())))
+
+
+def _rects(rects):
+    """Rect tuples of one group as a batch of one."""
+    a = np.array([(x0, y0, x1, y1) for (x0, y0), (x1, y1) in rects],
+                 dtype=np.int64).reshape(-1, 4)
+    return G.Rects(np.zeros(len(a), dtype=np.int64), *a.T)
+
+
+def _tuples(rects):
+    x0, y0, x1, y1 = (a.tolist() for a in rects[1:])
+    return list(zip(zip(x0, y0), zip(x1, y1)))
+
+
+def _merge_bullets(sp):
+    """The reference's scalar bullet merge over one row (pseg.py:677-698)."""
+    quarter = len(sp) // 4
+    c_len = 0
+    merge_start = -1
+    for i in range(min(len(sp), max(quarter, 1))):
+        if sp[i] == 1:
+            if 0 < c_len <= G.BULLET_MAX_CONTENT:
+                merge_start = i
+            c_len = 0
+        else:
+            if 0 <= merge_start and i - merge_start < G.BULLET_MAX_MERGE:
+                sp[merge_start:i] = 0
+            c_len += 1
+            merge_start = -1
+
+
 # stage 01: columns (ref test_columns_from_image, test_pseg.py:32-76)
 class TestColumns:
     def test_single_column(self):
@@ -90,9 +137,9 @@ class TestRowGroups:
                 ya = int(rng.integers(0, 200))
                 yb = ya + int(rng.integers(1, 90))
                 rects.append(((x, ya), (x + w, yb)))
-            assert G.remove_smaller_adjacent_rectangles(rects) == naive(
-                rects
-            ), rects
+            assert _tuples(
+                G.remove_smaller_adjacent_rectangles(_rects(rects))
+            ) == naive(rects), rects
 
     def test_vectorized_bullet_merge_matches_scalar(self):
         rng = np.random.default_rng(23)
@@ -100,7 +147,7 @@ class TestRowGroups:
             m = (rng.random((48, w)) < 0.45).astype(np.uint8)
             scalar = m.copy()
             for ri in range(scalar.shape[0]):
-                G._merge_bullets(scalar[ri])
+                _merge_bullets(scalar[ri])
             vec = m.copy()
             G._merge_bullet_runs(vec, *G._spacing_runs(vec), None)
             assert np.array_equal(scalar, vec), w
@@ -140,7 +187,7 @@ class TestRowHspacings:
         g, _ = _grid(text)
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
-        hs = G.row_hspacings_from_rows(g, cols[0], groups[0])
+        hs = _hs(g, cols[0], groups[0])
         # single space at col 2 folded into content; 2-wide gap at 5-6 kept
         assert hs[0, 2] == 0
         assert hs[0, 5] == 1 and hs[0, 6] == 1
@@ -149,7 +196,7 @@ class TestRowHspacings:
         g, _ = _grid(TABLE_TURN)
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
-        hs = G.row_hspacings_from_rows(g, cols[0], groups[-1])
+        hs = _hs(g, cols[0], groups[-1])
         assert hs.shape[0] == 4  # 4 table lines
 
 
@@ -160,8 +207,8 @@ class TestVerticalLines:
         g, _ = _grid(TABLE_TURN)
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
-        hs = G.row_hspacings_from_rows(g, cols[0], groups[-1])
-        lines = G.vertical_lines_from_hspacings(hs, [0])[0]
+        hs = _hs(g, cols[0], groups[-1])
+        lines = _vlines(hs)
         xs = {ln[0][0] for ln in lines if ln[1][1] - ln[0][1] == 3}
         # full-height spacing runs exist between the three table columns
         assert any(5 <= x <= 6 for x in xs)
@@ -172,9 +219,9 @@ class TestVerticalLines:
         g, _ = _grid(text)
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
-        hs = G.row_hspacings_from_rows(g, cols[0], groups[0])
+        hs = _hs(g, cols[0], groups[0])
         interior = [
-            ln for ln in G.vertical_lines_from_hspacings(hs, [0])[0]
+            ln for ln in _vlines(hs)
             if ln[0][0] not in (0, hs.shape[1] - 1)
         ]
         # ragged-edge runs may exist but none in the single-space interior
@@ -188,18 +235,17 @@ class TestTablevspan:
         g, _ = _grid(text)
         cols, _ = G.columns_from_grid(g)
         groups, _ = G.row_groups_from_column(g, cols[0])
-        hs = G.row_hspacings_from_rows(g, cols[0], groups[-1])
-        lines = G.vertical_lines_from_hspacings(hs, [0])[0]
-        rects = G.group_adjacent_lines(lines)
+        stack = G.row_hspacings_for_groups([(g, cols[0], groups[-1])])
+        rects = G.group_adjacent_lines(stack.lines)
         rects = G.remove_smaller_adjacent_rectangles(rects)
-        rects = G.remove_edge_rectangles(rects, hs)
-        while rects:
-            if not G.is_first_rectangle_column_valid(rects, hs):
-                rects = rects[1:]
+        rects = G.remove_edge_rectangles(rects, stack)
+        while len(rects.g):
+            if not G.is_first_rectangle_column_valid(rects, stack)[0]:
+                rects = rects.take(slice(1, None))
                 continue
             break
-        rects = G.remove_busy_column_rectangles(rects, hs)
-        return rects, hs, cols, groups
+        rects = G.remove_busy_column_rectangles(rects, stack)
+        return _tuples(rects), stack.hs(0), cols, groups
 
     def test_table_rects_survive(self):
         rects, hs, _, _ = self._rects(TABLE_TURN)
@@ -211,7 +257,9 @@ class TestTablevspan:
         table_rows, table_cols = G.build_table(cols[0], rows, rects)
         assert len(table_rows) == 3  # separators between 4 rows
         assert len(table_cols) == 2
-        inters, ups, downs = G.find_intersections(cols[0], rows, table_cols, table_rows)
+        inters, ups, downs = G.find_intersections(
+            [cols[0]], [rows], [table_cols], [table_rows]
+        )[0]
         cells = G.find_cells(inters, ups, downs)
         assert len(cells) == 12  # 4 rows x 3 cols
 
@@ -295,8 +343,8 @@ class TestOccupancy:
 
 def test_hspacings_batched():
     """row_hspacings_for_groups (one fold pass over every group of the
-    batch, stacked) must be byte-identical to row_hspacings_from_rows per
-    group, and its vertical lines to each group's own — the per-row fold
+    batch, stacked) must be byte-identical to each group folded on its
+    own, and its vertical lines to each group's own — the per-row fold
     semantics and the content separator rows make stacking exact."""
     from crrf_det_spark import synth
 
@@ -316,9 +364,11 @@ def test_hspacings_batched():
     # own quarter width (here: no fold), not the stack's
     grid, _lines = G.occupancy_from_text("x  yyyy\nx  yyyy")
     flat.append((grid, [0, 7], [[0, 3], [4, 7]]))
-    batched, lines = G.row_hspacings_for_groups(flat)
-    assert len(batched) == len(lines) == len(flat) > 100
-    for (grid, column, rws), hs, ln in zip(flat, batched, lines):
-        ref = G.row_hspacings_from_rows(grid, column, rws)
-        assert np.array_equal(hs, ref)
-        assert ln == G.vertical_lines_from_hspacings(ref, [0])[0]
+    stack = G.row_hspacings_for_groups(flat)
+    assert len(flat) > 100
+    x, y0, y1, g = (a.tolist() for a in stack.lines)
+    for k, (grid, column, rws) in enumerate(flat):
+        ref = _hs_ref(grid, column, rws)
+        assert np.array_equal(stack.hs(k), ref)
+        assert [((a, b), (a, c)) for a, b, c, gg in zip(x, y0, y1, g)
+                if gg == k] == _vlines(ref)

@@ -44,7 +44,8 @@ def test_trace_sees_the_batched_stages():
     sample = [t.encode("utf-8") for t in texts[:40]]
     sample += [make_pdf(t.split("\n")) for t in texts[40:60]]
     out = kt.trace(SimpleNamespace(name="pdf_payloads", sample=sample))
-    for stage in ("grid.hspacings_s", "extract.tokenize_lines_s",
+    for stage in ("grid.hspacings_s", "grid.rect_filters_s",
+                  "grid.table_build_s", "extract.tokenize_lines_s",
                   "extract.collect_s", "pdfmini.parse_s"):
         assert out[stage] > 0, stage
     assert out["extract.path_count.pdf"] == 20

@@ -21,6 +21,15 @@ def transcripts_df(spark):
     return spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA).cache()
 
 
+def test_driver_memory_fits_the_machine(spark):
+    """The session's driver heap is sized from the machine: it never
+    asks for more than the physical memory there is."""
+    value = spark.sparkContext.getConf().get("spark.driver.memory")
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    asked = int(value[:-1]) * units[value[-1].lower()]
+    assert 0 < asked <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
 def test_extraction_matches_golden(spark, transcripts_df):
     rows, goldens = synth.generate(n_convs=12, seed=42, skew_convs=1, skew_factor=10)
     out = extract_transcripts(transcripts_df).collect()
