@@ -85,10 +85,11 @@ def _bench_dedup_minhash(spark, sf):
     # star-edge output, explicit kernel spread, no driver size probe), so
     # absolute times compare an improved implementation of the same
     # operation, not byte-identical code -- BENCH.md records the change.
-    # (The same-named CONTRACT query is the exact-verified variant, whose
-    # one-row bands degrade to near-all-pairs on this synthetic dense
-    # corpus -- an oracle-checking construction, not the 100TB shape, so
-    # it is excluded from the bench like dedup_jaccard.)
+    # (The same-named CONTRACT query is the exact unigram Jaccard join,
+    # dedup_jaccard under a second key; on this synthetic dense corpus
+    # its answer is ~3M pairs, an oracle-checking construction rather
+    # than the 100TB shape, so it is excluded from the bench like
+    # dedup_jaccard.)
     from pyspark.sql import functions as F  # noqa: F401
 
     from crrf_det_spark.ops import minhash_lsh_pairs, minhash_signatures

@@ -1235,12 +1235,18 @@ def find_cells(intersections: list, ups: set, downs: set) -> list:
     """Pair top-left / bottom-right corners into cells with row/col spans
     (pseg.py:1128-1185)."""
     inter_set = set(intersections)
+    # per column, the list positions of its intersections (ascending): the
+    # next intersection in a column at or after a position is one bisect
+    by_col: dict = {}
+    for i, (_row, col) in enumerate(intersections):
+        by_col.setdefault(col, []).append(i)
     cells = []
     for idx, (row, col) in enumerate(intersections):
         if (row, col) in ups:
             continue
         if idx >= len(intersections) - 1:
             continue
+        in_col = by_col[col]
         col_span = 0
         row_span = 0
         next_col = None
@@ -1252,11 +1258,8 @@ def find_cells(intersections: list, ups: set, downs: set) -> list:
                 next_col = None
                 next_row = None
                 break
-            next_row = None
-            for i in range(idx + 1 + row_span, len(intersections)):
-                if intersections[i][1] == col:
-                    next_row = intersections[i][0]
-                    break
+            k = bisect.bisect_left(in_col, idx + 1 + row_span)
+            next_row = intersections[in_col[k]][0] if k < len(in_col) else None
             if (next_row, next_col) in downs:
                 col_span += 1
                 continue

@@ -9,8 +9,6 @@ from .dedup import (  # noqa: F401
     exact_duplicates,
     minhash_signatures,
     minhash_lsh_pairs,
-    minhash_word_signatures,
-    minhash_near_pairs_verified,
     simhash_near_pairs,
     simhash_signatures,
     ngram_jaccard_pairs,

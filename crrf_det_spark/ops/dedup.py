@@ -4,20 +4,20 @@ Every near-dup operator runs on one set of shared internals:
 
 * exact:     one hash agg; map-side partial, no raw-text shuffle (only the
              64-char digest moves).
-* minhash:   one kernel (``_minhash_signatures``) for both unit kinds --
-             char-5 shingles (``minhash_signatures``) and the distinct
-             word set (``minhash_word_signatures``): k permutations
-             vectorized as (a*h+b) mod p over the unit-hash vector in one
-             numpy pass per doc.  Banding goes through one self-join on
-             (band, bucket) (``_band_pairs``), which turns all-pairs
-             O(n^2) into a per-bucket join.  ``minhash_lsh_pairs``
-             (multi-row bands, identical signatures collapsed first) is
-             the scale path; ``minhash_near_pairs_verified`` (one-row
-             bands, exact Jaccard verify) is the value-checked path.
+* jaccard:   the one EXACT set-similarity join (``ngram_jaccard_pairs``),
+             all Catalyst: distinct word-ngram sets, a rarest-first global
+             token order, PPJoin prefix + length filters for candidates,
+             then an exact ``array_intersect`` verify -- never a cross
+             join.  Span and shingle dedup (ops/spans.py) and every
+             exact-Jaccard contract query run on it.
+* minhash:   the APPROXIMATE scale path.  ``minhash_signatures`` over
+             char-5 shingles: k permutations vectorized as (a*h+b) mod p
+             over the shingle-hash vector in one numpy pass per doc;
+             ``minhash_lsh_pairs`` bands them through one self-join on
+             (band, bucket) (``_band_pairs``) and verifies by signature
+             agreement.
 * simhash:   64-bit signature per doc from token-hash bit votes; near-dup =
              small hamming distance within LSH bands of the signature.
-* jaccard:   candidate pairs from shared shingles (inverted index join),
-             verified exactly -- never a cross join.
 * embedding: hyperplane-sign buckets from ``similarity.lsh_assign``, exact
              cosine within bucket.
 """
@@ -41,6 +41,9 @@ from .similarity import lsh_assign
 
 _MERSENNE = (1 << 61) - 1
 SHINGLE_K = 5  # char-shingle width of minhash_signatures
+# slack on ngram_jaccard_pairs' prefix and length bounds: t*|x| in doubles
+# may land just above the integer the exact bound needs
+_FILTER_EPS = 1e-6
 
 # Java regex \s == [ \t\n\x0B\f\r] (ASCII).  Python str.split() splits on
 # UNICODE whitespace (\xa0,  , ...), which would make the Python-side
@@ -97,21 +100,15 @@ def _md5_low64(token: str) -> int:
     return int.from_bytes(hashlib.md5(token.encode("utf-8")).digest()[8:], "little")
 
 
-def _word_hashes(text) -> np.ndarray:
-    """Distinct whitespace tokens -> uint64 md5 hash vector."""
-    return np.array(
-        [_md5_low64(t) for t in set(_ws_tokens(text))], dtype=np.uint64
-    )
-
-
-def _minhash_signatures(
-    docs: DataFrame, text_col: str, num_hashes: int, seed: int, unit_hashes
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", num_hashes: int = 64, seed: int = 42
 ) -> DataFrame:
-    """The one minhash kernel: ``unit_hashes(text)`` -> uint64 vector h,
-    then per permutation i min((a_i*h + b_i) mod p) over h mod p, in one
-    numpy pass per doc.  The products wrap at 2^64 before the mod p
-    (uint64 arithmetic); signatures depend on that, so it stays.  Docs
-    with no units get an all-p signature (never matches anything)."""
+    """(doc_id, signature: array<bigint>): minhash over char-5 shingles
+    (rolling polynomial hash h), per permutation i min((a_i*h + b_i) mod
+    p) over h mod p, in one numpy pass per doc.  The products wrap at
+    2^64 before the mod p (uint64 arithmetic); signatures depend on that,
+    so it stays.  Docs with no shingles get an all-p signature (never
+    matches anything)."""
     rng = np.random.RandomState(seed)
     a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
     b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
@@ -122,7 +119,7 @@ def _minhash_signatures(
         for pdf in it:
             sigs = []
             for text in pdf[text_col].values:
-                h = unit_hashes(text) % p
+                h = _shingle_hashes(text) % p
                 m_min = np.full(num_hashes, _MERSENNE, dtype=np.uint64)
                 for c0 in range(0, len(h), chunk):
                     m = (a[:, None] * h[None, c0: c0 + chunk] + b[:, None]) % p
@@ -133,26 +130,6 @@ def _minhash_signatures(
     return _spread(docs.select("doc_id", text_col)).mapInPandas(
         batches, schema="doc_id long, signature array<long>"
     )
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 64, seed: int = 42
-) -> DataFrame:
-    """(doc_id, signature: array<bigint>): minhash over char-5 shingles
-    (rolling polynomial hash)."""
-    return _minhash_signatures(docs, text_col, num_hashes, seed, _shingle_hashes)
-
-
-def minhash_word_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 32, seed: int = 42
-) -> DataFrame:
-    """(doc_id, signature) minhash over the DISTINCT WORD set (not char
-    shingles): estimates the same unigram Jaccard that
-    ``ngram_jaccard_pairs(n=1)`` computes exactly, which makes an
-    LSH-candidates -> exact-verify pipeline value-checkable against a
-    plain SQL Jaccard oracle.  Token hash = md5 low 64 bits (DuckDB
-    ``md5_number_lower`` parity, same as simhash_signatures)."""
-    return _minhash_signatures(docs, text_col, num_hashes, seed, _word_hashes)
 
 
 def _band_pairs(banded: DataFrame) -> DataFrame:
@@ -292,75 +269,6 @@ def minhash_lsh_pairs(
     return register(intra.unionByName(cross), signatures, groups)
 
 
-def minhash_near_pairs_verified(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    threshold: float = 0.8,
-    seed: int = 42,
-) -> DataFrame:
-    """Production minhash-dedup shape: LSH candidate pairs -> EXACT
-    unigram-Jaccard verification.  Returns (doc_a, doc_b, jaccard) with
-    jaccard >= threshold over the distinct word sets.
-
-    Banding uses one row per band (num_bands = num_hashes), so a pair
-    with true Jaccard j is missed only with probability (1-j)^num_hashes
-    — at j=0.8, k=32 that is 2^-74: recall is 1.0 for any practical
-    corpus, and every candidate is verified exactly, so the result equals
-    the exact-join ``ngram_jaccard_pairs(n=1)`` while touching only pairs
-    that collide in a band.  On corpora with low cross-doc similarity the
-    candidate set is tiny; on dense corpora it degrades toward all-pairs
-    and multi-row bands (minhash_lsh_pairs) are the scale path.
-    """
-    sigs = minhash_word_signatures(
-        docs, text_col=text_col, num_hashes=num_hashes, seed=seed
-    ).persist()
-    # empty/whitespace-only docs carry the all-_MERSENNE sentinel
-    # signature; they would collide with EACH OTHER in every band,
-    # producing C(n_empty, 2) candidate pairs that the null-jaccard
-    # verify then discards — a quadratic hot-bucket for free.  Their
-    # jaccard is undefined (empty word sets), so drop them pre-banding;
-    # signature values are < _MERSENNE for any non-empty token set, so
-    # checking one element identifies the sentinel.
-    cand = _band_pairs(
-        sigs.filter(F.element_at("signature", 1) != F.lit(_MERSENNE)).select(
-            "doc_id", F.posexplode("signature").alias("band", "bucket")
-        )
-    )
-    words = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-        ).alias("ws"),
-    ).withColumn("nw", F.size("ws"))
-    verified = (
-        cand.join(
-            words.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("ws").alias("wa"),
-                F.col("nw").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            words.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("ws").alias("wb"),
-                F.col("nw").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("wa", "wb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return register(verified, sigs)
-
-
 def simhash_signatures(
     docs: DataFrame, text_col: str = "text", salt: str = ""
 ) -> DataFrame:
@@ -460,43 +368,78 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact word-ngram Jaccard over candidate pairs that share >=1 shingle.
+    """Exact word-ngram Jaccard: (doc_a, doc_b, jaccard) for every pair
+    with doc_a < doc_b whose distinct n-gram sets have Jaccard >=
+    ``threshold``.  Docs with no n-gram are in no pair.
 
-    All-SQL shape: shingle explode -> inverted-index self-join ->
-    intersection counts -> |A u B| = |A| + |B| - |A n B|.
-    """
-    shingled = docs.select(
-        "doc_id",
-        F.array_distinct(
-            ngrams_of(F.col(text_col), n)
-        ).alias("shingles"),
-    ).withColumn("n_shingles", F.size("shingles"))
-    posting = shingled.select(
-        "doc_id", "n_shingles", F.explode("shingles").alias("shingle")
+    Candidates come from a PPJoin prefix filter (Xiao et al., WWW 2008):
+    under one global order, rarest token first (document frequency, then
+    the token), two sets with Jaccard >= t share a token among the first
+    |x| - ceil(t*|x|) + 1 of each; the length filter t*|x| <= |y| <=
+    |x|/t holds for them too.  The candidates are then verified exactly
+    (|A n B| / (|A| + |B| - |A n B|) in doubles).  The prefix and length
+    bounds are widened by ``_FILTER_EPS`` so they never reject a pair the
+    double verify accepts; a longer prefix only adds candidates.
+
+    All Catalyst: each set's order is an ``array_sort`` of its (df,
+    token) structs against a broadcast df table -- no window, no Python.
+    The token sets are persisted (read by the df count, the prefix and
+    both sides of the verify) and registered on the result."""
+    sets = (
+        docs.select(
+            "doc_id",
+            F.array_distinct(ngrams_of(F.col(text_col), n)).alias("s"),
+        )
+        .withColumn("ns", F.size("s"))
+        .filter(F.col("ns") > 0)
+        .persist()
     )
-    inter = (
-        posting.alias("l")
+    posting = sets.select("doc_id", "ns", F.explode("s").alias("tok"))
+    dfreq = posting.groupBy("tok").agg(F.count("*").alias("df"))
+    t = F.lit(threshold)
+    eps = F.lit(_FILTER_EPS)
+    prefix_len = F.col("ns") - F.ceil(t * F.col("ns") - eps) + 1
+    prefix = (
+        posting.join(F.broadcast(dfreq), "tok")
+        .groupBy("doc_id", "ns")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("order"))
+        .select(
+            "doc_id",
+            "ns",
+            F.explode(F.slice("order", 1, prefix_len.cast("int"))).alias("p"),
+        )
+        .select("doc_id", "ns", F.col("p.tok").alias("tok"))
+    )
+    cand = (
+        prefix.alias("l")
         .join(
-            posting.alias("r"),
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+            prefix.alias("r"),
+            (F.col("l.tok") == F.col("r.tok"))
+            & (F.col("l.doc_id") < F.col("r.doc_id"))
+            & (F.col("r.ns") >= t * F.col("l.ns") - eps)
+            & (F.col("l.ns") >= t * F.col("r.ns") - eps),
         )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.n_shingles").alias("na"),
-            F.col("r.n_shingles").alias("nb"),
+        .select(
+            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
         )
-        .agg(F.count("*").alias("n_common"))
+        .distinct()
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
+    # |A n B| bound once inside a lambda: written out twice, the filter
+    # pushed into the join condition would intersect each pair twice more
+    jaccard = F.element_at(
+        F.transform(
+            F.array(F.size(F.array_intersect("sa", "sb"))),
+            lambda c: c / (F.col("na") + F.col("nb") - c),
+        ),
+        1,
+    )
+    verified = (
+        cand.join(sets.toDF("doc_a", "sa", "na"), "doc_a")
+        .join(sets.toDF("doc_b", "sb", "nb"), "doc_b")
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
     )
+    return register(verified, sets)
 
 
 def ngrams_of(text, n: int):

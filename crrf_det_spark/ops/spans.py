@@ -9,7 +9,7 @@ every non-representative occurrence while leaving unique content alone.
 Not in the reference (its dedup story stops at file level,
 the reference's src/data/file.py); additive LLM-pipeline operator in the
 SURVEY.md §2 extension family, reusing the doc-level dedup machinery
-(minhash_near_pairs_verified, duplicate_components) over span keys.
+(ngram_jaccard_pairs, duplicate_components) over span keys.
 
 Scale notes (the design constraints, in order):
 
@@ -26,16 +26,16 @@ Scale notes (the design constraints, in order):
   digest) shuffles, star edges (rep, member) out — never a quadratic
   band join on the hot footer groups.  Same defense as the signature
   collapse in minhash_lsh_pairs.
-* only one representative per DISTINCT span enters minhash banding +
-  exact-Jaccard verification, so the near-dup stage's n is the distinct
-  span count, not the corpus span count.
+* only one representative per DISTINCT span enters the exact unigram
+  Jaccard join (``ngram_jaccard_pairs`` with n=1: prefix-filtered
+  candidates, exact verify, all Catalyst), so the near-dup stage's n is
+  the distinct span count, not the corpus span count.
 * components via ops/components.py alternating star-contraction
   (O(log n) rounds, edge set never grows, lineage cut per round).
 * one path for all four operators: spans (paragraphs or k-line
   shingles) -> ``_resolve_span_components``; the two strip operators
-  then share one reassembly step (``_strip``).  The near-dup stage uses
-  the defaults of minhash_near_pairs_verified (32 hashes, seed 42) and
-  the uid packing uses ``SPAN_BITS``.
+  then share one reassembly step (``_strip``); the uid packing uses
+  ``SPAN_BITS``.
 * nothing persists span TEXT: the digest table persists (uid, digest)
   only, and representative text is re-derived by one extra corpus scan
   (split+posexplode is a cheap narrow op; a production pipeline would
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..caching import register, registered, release
 from .components import duplicate_components
-from .dedup import minhash_near_pairs_verified
+from .dedup import ngram_jaccard_pairs
 
 SPAN_BITS = 20
 
@@ -152,8 +152,8 @@ def span_duplicate_edges(spans: DataFrame, threshold: float = 0.8) -> DataFrame:
     * star edges (rep_uid, member_uid) linking byte-identical spans to
       the min-uid representative of their sha256 digest group;
     * near edges between distinct-span representatives with exact
-      unigram Jaccard >= ``threshold`` (LSH candidates -> exact verify,
-      ops/dedup.py minhash_near_pairs_verified).
+      unigram Jaccard >= ``threshold`` (ops/dedup.py
+      ngram_jaccard_pairs, n=1).
 
     The union's connected components equal the components of the full
     pairwise >=threshold graph: a member is byte-identical to its rep,
@@ -164,8 +164,8 @@ def span_duplicate_edges(spans: DataFrame, threshold: float = 0.8) -> DataFrame:
     (caching.register) per repo convention."""
     # spans whose token set is empty (whitespace-only) can never satisfy
     # a Jaccard threshold — exclude them BEFORE digest grouping so exact
-    # and near dedup agree (mirrors the _MERSENNE sentinel filter in
-    # minhash_near_pairs_verified); they pass through as unique content.
+    # and near dedup agree (the Jaccard join drops empty sets too); they
+    # pass through as unique content.
     keyed = spans.filter(F.trim("span_text") != "").select(
         span_uid(F.col("doc_id"), F.col("span_idx")).alias("uid"),
         "span_text",
@@ -185,10 +185,11 @@ def span_duplicate_edges(spans: DataFrame, threshold: float = 0.8) -> DataFrame:
         .select(F.col("rep").alias("doc_a"), F.col("uid").alias("doc_b"))
     )
     reps = keyed.join(groups.select(F.col("rep").alias("uid")), "uid")
-    near = minhash_near_pairs_verified(
+    near = ngram_jaccard_pairs(
         reps.select(
             F.col("uid").alias("doc_id"), F.col("span_text").alias("text")
         ),
+        n=1,
         threshold=threshold,
     )
     edges = star.unionByName(near.select("doc_a", "doc_b"))

@@ -65,27 +65,26 @@ class TestDedup:
         assert not any(4 in p or 5 in p for p in pairs)
 
     def test_minhash_kernels_match_python_reference(self, spark, docs_df):
-        # both unit kinds share one kernel; recompute every signature in
-        # pure Python (the permutation draws, the unit hashes, and
-        # uint64 arithmetic, which wraps at 2^64 before the mod p).  One
-        # extra document per kernel has more than 1<<16 units, so the
-        # kernel's chunked min crosses a chunk boundary.
-        import hashlib
+        # recompute every char-5 signature in pure Python (the
+        # permutation draws, the shingle hashes, and uint64 arithmetic,
+        # which wraps at 2^64 before the mod p).  One extra document has
+        # more than 1<<16 shingles, so the kernel's chunked min crosses a
+        # chunk boundary.
         import random
 
-        from crrf_det_spark.ops import minhash_word_signatures
-
         p, wrap = (1 << 61) - 1, (1 << 64) - 1
+        num_hashes = 64
+        rng = np.random.RandomState(42)
+        a = [int(x) for x in rng.randint(1, p, size=num_hashes, dtype=np.int64)]
+        b = [int(x) for x in rng.randint(0, p, size=num_hashes, dtype=np.int64)]
 
-        def perms(num_hashes, seed=42):
-            rng = np.random.RandomState(seed)
-            a = rng.randint(1, p, size=num_hashes, dtype=np.int64)
-            b = rng.randint(0, p, size=num_hashes, dtype=np.int64)
-            return [int(x) for x in a], [int(x) for x in b]
-
-        def reference(units, num_hashes):
-            a, b = perms(num_hashes)
-            hs = {u % p for u in units}
+        def reference(text):
+            data = text.encode("utf-8")
+            hs = {
+                sum(data[i + j] * 1099511628211 ** j for j in range(5)) & wrap
+                for i in range(len(data) - 4)
+            }
+            hs = {h % p for h in hs}
             if not hs:
                 return [p] * num_hashes
             return [
@@ -93,36 +92,15 @@ class TestDedup:
                 for ai, bi in zip(a, b)
             ]
 
-        def char5(text):
-            data = text.encode("utf-8")
-            return [
-                sum(data[i + j] * 1099511628211 ** j for j in range(5)) & wrap
-                for i in range(len(data) - 4)
-            ]
-
-        def words(text):
-            toks = {t for t in text.split(" ") if t}
-            return [
-                int.from_bytes(hashlib.md5(t.encode()).digest()[8:], "little")
-                for t in toks
-            ]
-
         rnd = random.Random(7)
-        long_chars = "".join(rnd.choice("abcdefgh ") for _ in range(70_000))
-        long_words = " ".join(f"w{i}" for i in range(70_000))
-        assert len(char5(long_chars)) > 1 << 16
-        for op, units, num_hashes, long_doc in (
-            (minhash_signatures, char5, 64, long_chars),
-            (minhash_word_signatures, words, 32, long_words),
-        ):
-            df = docs_df.unionByName(
-                spark.createDataFrame([(7, long_doc)], docs_df.schema)
-            )
-            got = {r.doc_id: list(r.signature) for r in op(df).collect()}
-            texts = dict(DOCS + [(7, long_doc)])
-            assert got == {
-                d: reference(units(t), num_hashes) for d, t in texts.items()
-            }, op.__name__
+        long_doc = "".join(rnd.choice("abcdefgh ") for _ in range(70_000))
+        assert len(long_doc.encode()) - 4 > 1 << 16
+        df = docs_df.unionByName(
+            spark.createDataFrame([(7, long_doc)], docs_df.schema)
+        )
+        got = {r.doc_id: list(r.signature) for r in minhash_signatures(df).collect()}
+        texts = dict(DOCS + [(7, long_doc)])
+        assert got == {d: reference(t) for d, t in texts.items()}
 
     def test_minhash_deterministic(self, docs_df):
         a = minhash_signatures(docs_df).orderBy("doc_id").collect()
@@ -161,24 +139,79 @@ class TestDedup:
         }
         assert got3 == {p: h for p, h in brute.items() if h <= 3}
 
-    def test_minhash_verified_equals_exact_jaccard(self, docs_df):
-        # the LSH-candidates -> exact-verify pipeline must return exactly
-        # the pairs the exact unigram-Jaccard join finds (recall 1.0 with
-        # one-row bands at any realistic threshold)
-        from crrf_det_spark.ops import minhash_near_pairs_verified
+    def test_ngram_jaccard_equals_brute_force(self, spark):
+        # the one exact Jaccard join (prefix + length filtered candidates)
+        # returns exactly the brute-force pairs: a seeded corpus with
+        # empty, single-token, duplicate and \xa0-containing docs (Java
+        # \s does not split on \xa0), the DOCS fixture, and the dense
+        # vocabulary of the sf0.001 documents table
+        import random
+        import re
 
-        got = {
-            (r.doc_a, r.doc_b): round(r.jaccard, 6)
-            for r in minhash_near_pairs_verified(
-                docs_df, threshold=0.5
-            ).collect()
-        }
-        exact = {
-            (r.doc_a, r.doc_b): round(r.jaccard, 6)
-            for r in ngram_jaccard_pairs(docs_df, n=1, threshold=0.5).collect()
-        }
-        assert got == exact
-        assert (1, 2) in got and got[(1, 2)] == 1.0
+        from test_plans import SF
+
+        ws = re.compile(r"[ \t\n\x0b\f\r]+")
+        rnd = random.Random(11)
+        vocab = [f"w{i}" for i in range(40)] + ["x\xa0y", "x", "y"]
+        docs = [(100 + d, t) for d, t in DOCS]
+        for d in range(150):
+            k = rnd.choice([0, 1, 1, 2, 3, 5, 8, 13, 20])
+            top = rnd.randint(2, len(vocab))
+            docs.append((200 + d, " ".join(
+                rnd.choice(vocab[:top]) for _ in range(k))))
+        docs += [(400, ""), (401, "   "), (402, "solo"), (403, "solo"),
+                 (404, docs[-1][1]), (405, docs[-1][1] + " \xa0")]
+        dense = [
+            (r.doc_id + 1000, r.text) for r in spark.read.parquet(
+                f"{SF}/documents.parquet").select("doc_id", "text").collect()
+        ]
+        big = spark.createDataFrame(docs + dense, "doc_id long, text string")
+
+        def grams(text, n):
+            toks = [t for t in ws.split(text or "") if t]
+            return {" ".join(toks[i: i + n]) for i in range(len(toks) - n + 1)}
+
+        def jaccards(rows, n):
+            sets = [(d, s) for d, s in ((d, grams(x, n)) for d, x in rows) if s]
+            out = {}
+            for i, (a, sa) in enumerate(sets):
+                for b, sb in sets[i + 1:]:
+                    c = len(sa & sb)
+                    if c:
+                        out[(min(a, b), max(a, b))] = c / (len(sa) + len(sb) - c)
+            return out
+
+        for n in (1, 3):
+            every = jaccards(docs + dense, n)
+            for t in (0.2, 1 / 3, 0.5, 0.7, 0.8, 0.9, 1.0):
+                got = {
+                    (r.doc_a, r.doc_b): r.jaccard
+                    for r in ngram_jaccard_pairs(big, n=n, threshold=t).collect()
+                }
+                assert got == {p: j for p, j in every.items() if j >= t}, (n, t)
+        assert got  # t=1.0, n=3: the duplicate docs
+
+    def test_jaccard_filters_never_reject_a_verified_pair(self):
+        # the prefix and length bounds are computed in doubles like the
+        # verify; for every set-size pair and overlap the verify accepts,
+        # the length filter passes and the overlap reaches into both
+        # prefixes (PPJoin: |x n y| >= |x| - prefix_len(|x|) + 1)
+        import math
+
+        from crrf_det_spark.ops.dedup import _FILTER_EPS as eps
+
+        for t in (0.2, 1 / 3, 0.5, 0.7, 0.8, 0.9, 1.0):
+            def prefix_len(n):
+                return n - math.ceil(t * n - eps) + 1
+
+            for na in range(1, 65):
+                assert 1 <= prefix_len(na) <= na
+                for nb in range(1, 65):
+                    for c in range(min(na, nb) + 1):
+                        if c / (na + nb - c) >= t:
+                            assert nb >= t * na - eps and na >= t * nb - eps
+                            assert c >= na - prefix_len(na) + 1, (t, na, nb, c)
+                            assert c >= nb - prefix_len(nb) + 1, (t, na, nb, c)
 
     def test_simhash_matches_duckdb_md5(self, docs_df):
         # the token hash is DuckDB's md5_number_lower by construction;
@@ -335,13 +368,9 @@ class TestComponents:
     def test_end_to_end_dedup_resolution(self, spark, docs_df):
         # the full pipeline the module exists for: near-dup edges ->
         # components -> deduplicated corpus with one rep per cluster
-        from crrf_det_spark.ops import (
-            duplicate_components,
-            keep_representatives,
-            minhash_near_pairs_verified,
-        )
+        from crrf_det_spark.ops import duplicate_components, keep_representatives
 
-        edges = minhash_near_pairs_verified(docs_df, threshold=0.5)
+        edges = ngram_jaccard_pairs(docs_df, n=1, threshold=0.5)
         comps = duplicate_components(edges)
         rows = {r.doc_id: r.component for r in comps.collect()}
         assert rows == {1: 1, 2: 1, 3: 1}  # docs 1,2,3 cluster; 1 is rep

@@ -202,18 +202,25 @@ def test_signature_kernels_are_spread(spark):
     # MapInPandas: a single-file parquet source otherwise serializes the
     # whole Python stage into one worker (measured 3.3s -> 0.4s on the
     # 5000-doc corpus when this was fixed)
-    from crrf_det_spark.ops import (
-        minhash_signatures,
-        minhash_word_signatures,
-        simhash_signatures,
-    )
+    from crrf_det_spark.ops import minhash_signatures, simhash_signatures
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    for op in (minhash_signatures, minhash_word_signatures,
-               simhash_signatures):
+    for op in (minhash_signatures, simhash_signatures):
         plan = plan_of(op(d), mode="simple")
         assert "REPARTITION_BY_NUM" in plan, op.__name__
         assert "MapInPandas" in plan, op.__name__
+
+
+def test_span_dedup_runs_no_python_stage(spark):
+    # span and shingle near-edges come from the exact Jaccard join, which
+    # is all Catalyst: no Python stage in the edge plan of dedup_spans
+    # (its components stage checkpoints eagerly, so the edge stage is
+    # where the plan can be read)
+    from crrf_det_spark.ops import paragraph_spans, span_duplicate_edges
+
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = plan_of(span_duplicate_edges(paragraph_spans(d)), mode="simple")
+    assert "MapInPandas" not in plan
 
 
 def test_similarity_and_multimodal_kernels_are_spread(spark):

@@ -137,7 +137,7 @@ class TestDedupSpans:
 
         before = spark.sparkContext._jsc.getPersistentRDDs().size()
         edges = span_duplicate_edges(paragraph_spans(_corpus(spark)))
-        assert len(registered(edges)) == 3  # digests, groups, signatures
+        assert len(registered(edges)) == 3  # digests, groups, token sets
         edges.count()
         release(edges)
         after = spark.sparkContext._jsc.getPersistentRDDs().size()

@@ -181,6 +181,51 @@ def ref_find_intersections(column, rows, table_cols, table_rows):
     return inters, ups, downs
 
 
+def ref_find_cells(intersections, ups, downs):
+    """The corner pairing as first written (pseg.py:1128-1185): for every
+    corner, a linear scan forward for the next intersection in its
+    column."""
+    inter_set = set(intersections)
+    cells = []
+    for idx, (row, col) in enumerate(intersections):
+        if (row, col) in ups:
+            continue
+        if idx >= len(intersections) - 1:
+            continue
+        col_span = 0
+        row_span = 0
+        next_col = None
+        next_row = None
+        while True:
+            try:
+                next_col = intersections[idx + 1 + col_span][1]
+            except IndexError:
+                next_col = None
+                next_row = None
+                break
+            next_row = None
+            for i in range(idx + 1 + row_span, len(intersections)):
+                if intersections[i][1] == col:
+                    next_row = intersections[i][0]
+                    break
+            if (next_row, next_col) in downs:
+                col_span += 1
+                continue
+            if (next_row, next_col) not in inter_set:
+                col_span += 1
+                continue
+            if next_col == col:
+                col_span += 1
+                continue
+            if next_row == row:
+                row_span += 1
+                continue
+            break
+        if next_row is not None and next_row > row and next_col > col:
+            cells.append((row, col, next_row, next_col))
+    return sorted(set(cells))
+
+
 def ref_chain(column, rows, hs):
     """One group's stage 5: final rects, and the table (or None)."""
     rects = ref_group_adjacent_lines(ref_lines(hs))
@@ -194,7 +239,7 @@ def ref_chain(column, rows, hs):
     table_rows, table_cols = G.build_table(column, rows, rects)
     inters, ups, downs = ref_find_intersections(column, rows, table_cols, table_rows)
     return rects, ((table_rows, table_cols),
-                   (inters, ups, downs, G.find_cells(inters, ups, downs)))
+                   (inters, ups, downs, ref_find_cells(inters, ups, downs)))
 
 
 # ---------------------------------------------------------------------------
@@ -377,3 +422,28 @@ def test_stage5_memory_stays_within_stack_budget(monkeypatch):
     big = {key: b for key, b in held.items() if key[1] >= budget // 2}
     assert {name for name, _c in big} >= {"find_intersections", "find_cells"}
     assert all(b <= 4 * c for (_name, c), b in big.items()), big
+
+
+def test_find_cells_matches_reference_on_a_noise_turn(monkeypatch):
+    """An aligned noise turn (two-space gaps, half the lines cut short)
+    builds one table of ~10^5 intersections, where the per-column index
+    of find_cells matters; its cells equal the linear-scan reference."""
+    rng = random.Random(0)
+    line = ("a  b  cd  " * 151)[:1500]
+    text = "\n".join(
+        line[: rng.randrange(1, len(line))] if rng.random() < 0.5 else line
+        for _ in range(300)
+    )
+    calls = []
+    find_cells = G.find_cells
+
+    def spy(inters, ups, downs):
+        out = find_cells(inters, ups, downs)
+        calls.append((inters, ups, downs, out))
+        return out
+
+    monkeypatch.setattr(G, "find_cells", spy)
+    extract_turn(text)
+    assert sum(len(c[0]) for c in calls) > 100_000
+    for inters, ups, downs, out in calls:
+        assert out == ref_find_cells(inters, ups, downs)
