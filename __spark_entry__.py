@@ -2,7 +2,7 @@
 
 One ``queries()`` entry per implemented operator family from SURVEY.md §2
 (names carry the operator ids), each paired with a DuckDB ``oracle_sql()``
-unless the op is not SQL-expressible (extraction kernel, minhash/simhash
+unless the op is not SQL-expressible (extraction kernel, simhash
 signatures) -- those get rows-only checks.
 
 Conventions shared by both sides so value-hashes match:
@@ -1458,18 +1458,19 @@ def _q_ann_ivf(spark, sf):
     # -> probe -> rank) is still exercised and value-checked.  Production
     # uses n_probe < n_centroids for the scan-fraction win; partial-probe
     # recall is covered by TestSimilarity::test_ivf_finds_top1.
-    from crrf_det_spark.ops.similarity import ivf_topk_oneshot
+    from crrf_det_spark.ops import ivf_assign, ivf_topk, ivf_train
 
     emb = _t(spark, sf, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     query = [1.0 if i % 7 == 0 else 0.1 for i in range(dim)]
-    return ivf_topk_oneshot(
-        emb, query, k=10, n_centroids=8, n_probe=8, sample_fraction=0.5
+    cent = ivf_train(emb, n_centroids=8, sample_fraction=0.5)
+    return ivf_topk(
+        ivf_assign(emb, cent), cent, query, k=10, n_probe=8
     ).select("vec_id", F.round("cosine", 4).alias("cosine"))
 
 
 def _q_ann_lsh(spark, sf):
-    # hyperplane-LSH approximate top-k (ops/similarity.lsh_bucket_topk_oneshot):
+    # hyperplane-LSH approximate top-k (ops/similarity.lsh_topk):
     # bucket = 8-bit sign pattern of seeded hyperplane projections; only
     # rows whose bucket is within 1 bit flip of the query's bucket are
     # scored.  The oracle (_oracle_ann_lsh) inlines the identical float32
@@ -1477,13 +1478,14 @@ def _q_ann_lsh(spark, sf):
     # bucket, the xor-based probe test, and the within-probe cosine top-k
     # entirely in SQL — so the pruning decision itself is value-checked,
     # not just the final ranking.
-    from crrf_det_spark.ops import lsh_bucket_topk_oneshot
+    from crrf_det_spark.ops import lsh_assign, lsh_topk
 
     emb = _t(spark, sf, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     query = [1.0 if i % 7 == 0 else 0.1 for i in range(dim)]
-    out = lsh_bucket_topk_oneshot(
-        emb, query, k=10, num_planes=8, probe_bits=1, seed=3
+    out = lsh_topk(
+        lsh_assign(emb, num_planes=8, seed=3), query, k=10, num_planes=8,
+        probe_bits=1, seed=3,
     )
     return out.select("vec_id", F.round("cosine", 4).alias("cosine"))
 
@@ -2328,10 +2330,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curation_report": _q_curation_report,
         "extraction_segments": _q_extraction_segments,
         "extraction_html": _q_extraction_html,
-        # the exact unigram Jaccard join under its historical key (no
-        # LSH stage is left in front of it; the bench.py key of the same
-        # name times the approximate minhash scale path)
-        "dedup_minhash": _q_dedup_jaccard,
         "dedup_simhash": _q_dedup_simhash,
         "dedup_embedding": _q_dedup_embedding,
         "search_tfidf_query": _q_search_tfidf_query,
@@ -2388,7 +2386,6 @@ def oracle_sql() -> dict[str, str]:
         # agreeing at the > 0 boundary; expected tail risk, not a
         # regression, if a future sf ever flips a near-zero projection.
         "ann_lsh": _oracle_ann_lsh(),
-        "dedup_minhash": _O_DEDUP_JACCARD,
         "dedup_simhash": _O_DEDUP_SIMHASH,
         # CAVEAT: dedup_embedding relies on numpy-matmul vs DuckDB
         # sequential float summation agreeing at sign/threshold/rounding

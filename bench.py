@@ -57,7 +57,6 @@ HEADLINE = [
     "w4_sessionize",
     "j1_interval_join",
     "a9_tfidf",
-    "dedup_minhash",
     "ann_topk",
     "extraction_segments",
     "extraction_html",
@@ -75,31 +74,6 @@ def _session(cores: int):
     )
     s.sparkContext.setLogLevel("ERROR")
     return s
-
-
-def _bench_dedup_minhash(spark, sf):
-    # the SCALE path: char-shingle minhash signatures + multi-row-band LSH
-    # with sig-jaccard verification -- the same algorithm family and
-    # parameters round 1 benched under this key.  The round-2
-    # implementation is optimized (identical-signature collapse,
-    # star-edge output, explicit kernel spread, no driver size probe), so
-    # absolute times compare an improved implementation of the same
-    # operation, not byte-identical code -- BENCH.md records the change.
-    # (The same-named CONTRACT query is the exact unigram Jaccard join,
-    # dedup_jaccard under a second key; on this synthetic dense corpus
-    # its answer is ~3M pairs, an oracle-checking construction rather
-    # than the 100TB shape, so it is excluded from the bench like
-    # dedup_jaccard.)
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from crrf_det_spark.ops import minhash_lsh_pairs, minhash_signatures
-
-    d = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-    sigs = minhash_signatures(d, num_hashes=32)
-    return minhash_lsh_pairs(sigs, num_bands=8, threshold=0.5)
-
-
-BENCH_ONLY = {"dedup_minhash": _bench_dedup_minhash}
 
 
 def _warm_python_workers(spark) -> None:
@@ -132,9 +106,8 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, dict]]:
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for _run in range(N_RUNS):
         for name in HEADLINE:
-            fn = BENCH_ONLY.get(name) or qs[name]
             t0 = time.time()
-            df = fn(spark, SF_DIR)
+            df = qs[name](spark, SF_DIR)
             df.count()
             samples[name].append(round(time.time() - t0, 3))
     medians = {n: round(statistics.median(v), 3) for n, v in samples.items()}

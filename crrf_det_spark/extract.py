@@ -70,36 +70,6 @@ class Tokens:
     def __len__(self):
         return len(self.texts)
 
-    def take_overlapping(self, box) -> list[str]:
-        """Consume and return (in reading order) all unused tokens whose
-        overlap with ``box`` (ymin, xmin, ymax, xmax) exceeds their
-        threshold -- the first-writer-wins semi-join (aggr.py:69-72).
-
-        The scan is windowed to tokens whose y-extent can overlap the box
-        (ymin sorted => searchsorted), turning the cells x tokens join from
-        O(cells * tokens) into O(cells * log(tokens) + hits)."""
-        if not len(self.texts):
-            return []
-        lo = int(np.searchsorted(self._y0, box[0] - self._hmax, side="left"))
-        hi = int(np.searchsorted(self._y0, box[2], side="left"))
-        if lo >= hi:
-            return []
-        b = self.boxes[lo:hi]
-        x_ov = np.minimum(box[3], b[:, 3]) - np.maximum(box[1], b[:, 1])
-        y_ov = np.minimum(box[2], b[:, 2]) - np.maximum(box[0], b[:, 0])
-        hit = (
-            (x_ov > 0)
-            & (y_ov > 0)
-            & (np.maximum(x_ov, 0) * np.maximum(y_ov, 0) > self.thr[lo:hi])
-            & ~self.used[lo:hi]
-        )
-        idx = np.nonzero(hit)[0]
-        if len(idx) == 0:
-            return []
-        idx = idx + lo
-        self.used[idx] = True
-        return [self.texts[i] for i in idx]
-
     def _overlap(self, barr, bi, ti, lo: int, hi: int) -> np.ndarray:
         """Per-pair overlap of box ``bi`` and token ``ti`` along one axis
         (coordinates ``lo``/``hi``), one 1-D gather at a time."""
@@ -118,8 +88,8 @@ class Tokens:
         each token to the FIRST box in the list whose overlap exceeds the
         token's threshold (thresholds are static per token), so the join
         collapses to one ragged list of (box, candidate token) pairs --
-        each box's candidates are its own y-window, as in
-        ``take_overlapping`` -- and a min-box pick per token.  Boxes go in
+        each box's candidates are its own y-window (ymin sorted =>
+        searchsorted) -- and a min-box pick per token.  Boxes go in
         chunks of at most MAX_JOIN_CELLS pairs, so the temporaries stay
         bounded even for degenerate giant turns (a box whose window alone
         is larger goes by itself; the used mask carries between chunks,

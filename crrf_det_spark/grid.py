@@ -410,27 +410,11 @@ def columns_from_grid(
 # stage 2: row groups (analogue of row_groups_from_columns, pseg.py:389-609)
 # ---------------------------------------------------------------------------
 
-def _row_pattern(crop_line: np.ndarray) -> int:
-    """Content pattern of one line: 0=full 1=left 2=right 3=middle
-    (pseg.py:456-467)."""
-    w = crop_line.shape[0]
-    half = w // 2
-    quar = half // 2
-    if half == 0:
-        return 0
-    if crop_line[:half].all():
-        return 2
-    if crop_line[w - half:].all():
-        return 1
-    if quar and crop_line[:quar].all() and crop_line[w - quar:].all():
-        return 3
-    return 0
-
-
 def _row_patterns(crop: np.ndarray) -> np.ndarray:
-    """Vectorized ``_row_pattern`` over every line of a column crop at once
-    (same precedence: left-half white -> 2, right-half white -> 1, both
-    quarters white -> 3)."""
+    """Content pattern of every line of a column crop at once: 0=full
+    1=left 2=right 3=middle (pseg.py:456-467), with the reference's
+    per-line precedence: left-half white -> 2, right-half white -> 1,
+    both quarters white -> 3."""
     n_lines, w = crop.shape
     half = w // 2
     quar = half // 2

@@ -239,6 +239,8 @@ def html_segments(text: str) -> list[dict]:
             "type": "text", "content": stripped, "rows": None,
             "box": [0, 0, G.LINE_H, len(stripped)],
         }]
+    from .extract import extract_turn, flatten_table  # lazy: avoids import cycle
+
     segments: list[dict] = []
     v = 0
     for item in p.out:
@@ -247,8 +249,6 @@ def html_segments(text: str) -> list[dict]:
             # text so aligned tables inside <pre> get real table
             # detection (the reference's core strength), with boxes
             # re-based into this document's v-space
-            from .extract import extract_turn  # lazy: avoids import cycle
-
             inner = extract_turn(item["raw"])
             for s in inner:
                 b = s["box"]
@@ -267,7 +267,7 @@ def html_segments(text: str) -> list[dict]:
             rows = item["rows"]
             width = max(len(r) for r in rows)
             rows = [r + [""] * (width - len(r)) for r in rows]
-            content = "\n".join("\t".join(r) for r in rows)
+            content = flatten_table(rows)
             segments.append({
                 "type": "table", "content": content, "rows": rows,
                 "box": [v, 0, v + G.LINE_H, max(len(content), 1)],

@@ -7,8 +7,6 @@ Arrow-batched pandas UDFs, never per-row Python)."""
 
 from .dedup import (  # noqa: F401
     exact_duplicates,
-    minhash_signatures,
-    minhash_lsh_pairs,
     simhash_near_pairs,
     simhash_signatures,
     ngram_jaccard_pairs,
@@ -22,14 +20,12 @@ from .similarity import (  # noqa: F401
     brute_force_topk,
     hyperplanes,
     ivf_assign,
-    ivf_topk_oneshot,
-    ivf_topk_indexed,
+    ivf_topk,
     ivf_train,
     ivf_write_index,
     lsh_assign,
-    lsh_bucket_topk_oneshot,
     lsh_probe_keys,
-    lsh_topk_indexed,
+    lsh_topk,
     lsh_write_index,
     probe_centroids,
 )

@@ -1,6 +1,6 @@
 """Connected-components resolution for dedup edge lists.
 
-The dedup operators (minhash/simhash/jaccard/embedding) emit near-duplicate
+The dedup operators (simhash/jaccard/embedding) emit near-duplicate
 PAIR/STAR edge lists; the step every training-data pipeline runs next is to
 resolve those edges into clusters and keep one representative per cluster.
 This module is that consumer.

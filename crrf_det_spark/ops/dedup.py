@@ -10,12 +10,6 @@ Every near-dup operator runs on one set of shared internals:
              then an exact ``array_intersect`` verify -- never a cross
              join.  Span and shingle dedup (ops/spans.py) and every
              exact-Jaccard contract query run on it.
-* minhash:   the APPROXIMATE scale path.  ``minhash_signatures`` over
-             char-5 shingles: k permutations vectorized as (a*h+b) mod p
-             over the shingle-hash vector in one numpy pass per doc;
-             ``minhash_lsh_pairs`` bands them through one self-join on
-             (band, bucket) (``_band_pairs``) and verifies by signature
-             agreement.
 * simhash:   64-bit signature per doc from token-hash bit votes; near-dup =
              small hamming distance within LSH bands of the signature.
 * embedding: hyperplane-sign buckets from ``similarity.lsh_assign``, exact
@@ -39,8 +33,6 @@ from ..caching import register
 from ._kernel import spread as _spread
 from .similarity import lsh_assign
 
-_MERSENNE = (1 << 61) - 1
-SHINGLE_K = 5  # char-shingle width of minhash_signatures
 # slack on ngram_jaccard_pairs' prefix and length bounds: t*|x| in doubles
 # may land just above the integer the exact bound needs
 _FILTER_EPS = 1e-6
@@ -73,200 +65,9 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _shingle_hashes(text) -> np.ndarray:
-    """Char-5 shingles -> uint64 hash vector (vectorized rolling hash)."""
-    if text is None:
-        return np.empty(0, dtype=np.uint64)
-    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-    if len(b) < SHINGLE_K:
-        return np.empty(0, dtype=np.uint64)
-    # polynomial hash over a sliding window, vectorized in bounded chunks
-    # (the window view itself is zero-copy; only the uint64 upcast of each
-    # chunk materializes, so a 10MB doc never allocates a GB-scale temp)
-    base = np.uint64(1099511628211)
-    powers = base ** np.arange(SHINGLE_K, dtype=np.uint64)
-    view = np.lib.stride_tricks.sliding_window_view(b, SHINGLE_K)
-    n = view.shape[0]
-    out = np.empty(n, dtype=np.uint64)
-    chunk = 1 << 18
-    for c0 in range(0, n, chunk):
-        w = view[c0: c0 + chunk].astype(np.uint64)
-        out[c0: c0 + chunk] = (w * powers).sum(axis=1)
-    return out
-
-
 def _md5_low64(token: str) -> int:
     """md5 low 64 bits little-endian: DuckDB ``md5_number_lower``."""
     return int.from_bytes(hashlib.md5(token.encode("utf-8")).digest()[8:], "little")
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 64, seed: int = 42
-) -> DataFrame:
-    """(doc_id, signature: array<bigint>): minhash over char-5 shingles
-    (rolling polynomial hash h), per permutation i min((a_i*h + b_i) mod
-    p) over h mod p, in one numpy pass per doc.  The products wrap at
-    2^64 before the mod p (uint64 arithmetic); signatures depend on that,
-    so it stays.  Docs with no shingles get an all-p signature (never
-    matches anything)."""
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    p = np.uint64(_MERSENNE)
-    chunk = 1 << 16  # bounds the (num_hashes x units) temp to ~32MB
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs = []
-            for text in pdf[text_col].values:
-                h = _shingle_hashes(text) % p
-                m_min = np.full(num_hashes, _MERSENNE, dtype=np.uint64)
-                for c0 in range(0, len(h), chunk):
-                    m = (a[:, None] * h[None, c0: c0 + chunk] + b[:, None]) % p
-                    np.minimum(m_min, m.min(axis=1), out=m_min)
-                sigs.append(m_min.astype(np.int64).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": sigs})
-
-    return _spread(docs.select("doc_id", text_col)).mapInPandas(
-        batches, schema="doc_id long, signature array<long>"
-    )
-
-
-def _band_pairs(banded: DataFrame) -> DataFrame:
-    """Candidate pairs from a (doc_id, band, bucket) table: the self-join
-    on (band, bucket), then distinct (doc_a, doc_b) with doc_a < doc_b.
-    perfbench/eventlog.py finds the band join by the ``band``/``bucket``
-    column names and counts candidates at the distinct's aggregate, so
-    both stay."""
-    return (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-
-def minhash_lsh_pairs(
-    signatures: DataFrame,
-    num_bands: int = 16,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """LSH banding -> candidate pairs -> signature-jaccard verify.
-
-    Returns (doc_a, doc_b, sig_jaccard) with doc_a < doc_b and
-    sig_jaccard >= threshold.
-
-    Identical signatures are COLLAPSED before banding: one representative
-    (min doc_id) per distinct signature joins in the bands, and members
-    of a signature group are emitted as star edges (rep, member, 1.0),
-    the transitive-closure-equivalent linear representation of the
-    intra-group clique.  The output is a dedup GRAPH whose connected
-    components equal the naive all-pairs graph's (feed it to
-    ``duplicate_components``), not the full clique edge list.  This is
-    the hot-bucket defense: an all-identical corpus costs one hash agg +
-    a broadcast join + n-1 output rows instead of a single-task O(n^2)
-    band join (stress-tested in tests/test_ops.py).  Buckets that are
-    hot WITHOUT signature equality keep their O(B^2) cost — at that
-    point the docs genuinely collide in a band and the work is the
-    answer — but B is bounded by the distinct-signature count per
-    bucket, which real corpora keep small.
-
-    The collapse is one aggregation with no per-group array
-    materialization: groups carry only (signature, rep_id, n_members),
-    and star edges come from joining the signature table against the
-    n_members >= 2 groups — empty on an all-unique corpus (AQE folds the
-    join to a broadcast of zero rows, so unique corpora pay almost
-    nothing for the defense), one broadcast row on an all-identical one
-    (each partition emits its star edges map-side; a skewed non-broadcast
-    case degrades to an AQE skew-split shuffle join on the signature
-    hash).
-
-    The signature table is persisted here: the plan references it several
-    times (group agg, star join, band join, verify join), and without
-    the persist each branch would re-run the upstream signature
-    mapInPandas job.  Signatures are ~num_hashes longs per doc -- orders
-    of magnitude smaller than the corpus text -- so this holds at any
-    scale (a production pipeline would materialize them to a table).
-    """
-    signatures = signatures.persist()
-    # band width from the row's own signature length: no driver-side
-    # size-probe job (a .first() here costs a whole extra kernel stage)
-    rows_per_band = (F.size("signature") / num_bands).cast("int")
-
-    groups = (
-        signatures.groupBy("signature")
-        .agg(
-            F.min("doc_id").alias("rep_id"),
-            F.count("*").alias("n_members"),
-        )
-        .persist()
-    )
-    # star edges: members of duplicated-signature groups point at the
-    # group rep.  The join key is the 64-bit signature hash (cheap
-    # shuffle/broadcast key); the array-equality residual keeps the
-    # join exact under hash collisions.
-    dup = groups.filter(F.col("n_members") >= 2).select(
-        F.xxhash64("signature").alias("_sh"),
-        F.col("signature").alias("_sig"),
-        "rep_id",
-    )
-    intra = (
-        signatures.withColumn("_sh", F.xxhash64("signature"))
-        .join(dup, "_sh")
-        .filter(
-            (F.col("signature") == F.col("_sig"))
-            & (F.col("doc_id") != F.col("rep_id"))
-        )
-        .select(
-            F.col("rep_id").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(1.0).alias("sig_jaccard"),
-        )
-    )
-    reps = groups.select(F.col("rep_id").alias("doc_id"), "signature")
-    cand = _band_pairs(
-        reps.select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                    lambda i: F.xxhash64(
-                        F.slice(
-                            F.col("signature"), i * rows_per_band + 1,
-                            rows_per_band,
-                        ),
-                        i,
-                    ),
-                )
-            ).alias("band", "bucket"),
-        )
-    )
-    sigs = reps.select(F.col("doc_id"), F.col("signature").alias("sig"))
-    verified = cand.join(
-        sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"),
-        "doc_a",
-    ).join(
-        sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"),
-        "doc_b",
-    )
-    # fraction of equal signature positions estimates jaccard
-    eq = F.filter(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        lambda v: v == 1,
-    )
-    cross = (
-        verified.withColumn("sig_jaccard", F.size(eq) / F.size("sig_a"))
-        .select("doc_a", "doc_b", "sig_jaccard")
-        .filter(F.col("sig_jaccard") >= threshold)
-    )
-    return register(intra.unionByName(cross), signatures, groups)
 
 
 def simhash_signatures(
@@ -321,7 +122,7 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
     hamming <= max_hamming: the full edge list, the value-oracle
     contract shape.  Exact for max_hamming <= 3 with 4 bands; for larger
     radii increase the band count accordingly.  The band join carries
-    the signatures through, so it does not share ``_band_pairs``.
+    the signatures through to the hamming verify.
     """
     signatures = signatures.persist()
     banded = signatures.select(

@@ -6,30 +6,28 @@ first:
 
 * LSH index: lsh_assign (one vectorized hyperplane-sign bucketing pass)
   + lsh_write_index (materialize PARTITIONED BY bucket at ingest) +
-  lsh_topk_indexed (partition-pruned multi-probe: reads only the probed
-  buckets, no per-query kernel pass).  Recall < 1.0 by construction;
+  lsh_topk (multi-probe over the bucketed rows; on the written index the
+  probe filter prunes partitions, so only the probed buckets are read and
+  no per-query kernel pass runs).  Recall < 1.0 by construction;
   num_planes/probe radius trade recall for cost.  ``hyperplanes`` is the
   one seeded plane set; ``lsh_assign`` is also the bucketing kernel of
   ``dedup.embedding_near_duplicates``.
 * IVF index: ivf_train (bounded driver-side k-means) + ivf_assign (one
   vectorized nearest-centroid pass) + ivf_write_index (materialize the
-  assignment PARTITIONED BY centroid at ingest) + ivf_topk_indexed
-  (partition-pruned probe: reads n_probe/n_centroids of the data, no
-  per-query kernel pass).
+  assignment PARTITIONED BY centroid at ingest) + ivf_topk (probe over
+  the assigned rows; on the written index it reads n_probe/n_centroids
+  of the data, no per-query kernel pass).
 
-AD-HOC / ORACLE SHAPES — correct, but every query pays a full-corpus
-pass; do not point these at a real corpus in a query loop:
+``ivf_topk`` and ``lsh_topk`` take any assigned frame: the
+``ivf_assign``/``lsh_assign`` output (an ad-hoc query: the whole corpus
+passes through the assignment kernel per call) or
+``spark.read.parquet(index_path)`` of a written index.
 
-* brute_force_topk: exact cosine top-k -- the correctness baseline.  The
-  dot product is a pure Catalyst expression (zip_with + aggregate), so the
-  scan stays JVM-side and whole-stage-codegen'd.
-* ivf_topk_oneshot / lsh_bucket_topk_oneshot: one-shot train+assign+probe
-  for a single ad-hoc query (the whole corpus passes through the
-  assignment kernel each call).  Equality with the indexed variants is
-  pinned in tests; the ``_oneshot`` suffix exists so the indexed path is
-  the default discovery.
+brute_force_topk is the exact cosine top-k -- the correctness baseline.
+The dot product is a pure Catalyst expression (zip_with + aggregate), so
+the scan stays JVM-side and whole-stage-codegen'd.
 
-All five top-k entry points end in the same tail (``_topk``): cosine
+All three top-k entry points end in the same tail (``_topk``): cosine
 projection, then orderBy+limit, which Spark executes as a per-partition
 TakeOrdered (no full sort shuffle).
 """
@@ -191,9 +189,8 @@ def ivf_write_index(
     ).parquet(path)
 
 
-def ivf_topk_indexed(
-    spark,
-    index_path: str,
+def ivf_topk(
+    assigned: DataFrame,
     centroids: np.ndarray,
     query: list[float],
     k: int = 10,
@@ -201,97 +198,19 @@ def ivf_topk_indexed(
     id_col: str = "vec_id",
     n_probe: int = 3,
 ) -> DataFrame:
-    """Approximate top-k over a materialized IVF index (``ivf_write_index``).
+    """Approximate top-k over IVF-assigned rows (``ivf_assign`` output or
+    an ``ivf_write_index`` index read back): only rows of the ``n_probe``
+    centroids nearest the query are scored.
 
-    The centroid IN-filter is a partition-column predicate: Catalyst
-    prunes the non-probed centroid directories before any IO (asserted in
-    tests/test_plans.py), so the scan touches only the probed fraction of
-    the corpus and there is NO per-query assignment kernel pass — the
-    100 TB shape the one-shot ``ivf_topk_oneshot`` docstring promises.
+    On a written index the centroid IN-filter is a partition-column
+    predicate: Catalyst prunes the non-probed centroid directories before
+    any IO (asserted in tests/test_plans.py), so the scan touches only
+    the probed fraction of the corpus and there is NO per-query
+    assignment kernel pass.
     """
     probes = probe_centroids(centroids, query, n_probe)
-    assigned = spark.read.parquet(index_path)
     return _topk(
         assigned.filter(F.col("centroid").isin(probes)),
-        query, k, vec_col, id_col,
-    )
-
-
-def ivf_topk_oneshot(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    n_probe: int = 3,
-    sample_fraction: float = 0.2,
-    seed: int = 11,
-    iters: int = 8,
-    max_train: int = 100_000,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k, one-shot: train + assign +
-    probe in a single query (the whole corpus passes through the
-    assignment kernel).  For repeated queries over a static corpus,
-    materialize the assignment once with ``ivf_train`` + ``ivf_assign`` +
-    ``ivf_write_index`` and query via ``ivf_topk_indexed``, which prunes
-    to the probed centroid partitions instead.
-    """
-    cent = ivf_train(
-        embeddings,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        sample_fraction=sample_fraction,
-        seed=seed,
-        iters=iters,
-        max_train=max_train,
-    )
-    probes = probe_centroids(cent, query, n_probe)
-    assigned = ivf_assign(embeddings, cent, vec_col=vec_col, id_col=id_col)
-    return _topk(
-        assigned.filter(F.col("centroid").isin(probes)),
-        query, k, vec_col, id_col,
-    )
-
-
-def lsh_bucket_topk_oneshot(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-    probe_bits: int = 1,
-    seed: int = 3,
-) -> DataFrame:
-    """Approximate top-k: score only rows whose hyperplane-sign bucket is
-    within `probe_bits` bit flips of the query's bucket.
-
-    Planes come from the shared seeded generator ``hyperplanes``
-    (float32 constants, promoted to float64 in the kernel), so a value
-    oracle can inline the identical constants as SQL list literals and
-    reproduce the bucket assignment, the query's own bucket, and the
-    bit-flip probe test bit-for-bit (see __spark_entry__ ``ann_lsh``).
-    NOTE (round-3 behavior change): this switched the plane constants
-    from float64 to float32-truncated, so bucket assignments — and hence
-    approximate results — for the same (seed, num_planes) differ from
-    pre-round-3 runs; comparisons against older outputs are expected to
-    diverge and are not a regression.
-
-    One-shot shape: the whole corpus passes through the assignment
-    kernel per query.  For repeated queries over a static corpus,
-    materialize the assignment once with ``lsh_assign`` +
-    ``lsh_write_index`` and query via ``lsh_topk_indexed``, which prunes
-    to the probed bucket partitions instead."""
-    probes = lsh_probe_keys(
-        query, num_planes=num_planes, probe_bits=probe_bits, seed=seed
-    )
-    bucketed = lsh_assign(
-        embeddings, num_planes=num_planes, seed=seed,
-        vec_col=vec_col, id_col=id_col,
-    )
-    return _topk(
-        bucketed.filter(F.col("bucket").isin(probes)),
         query, k, vec_col, id_col,
     )
 
@@ -372,9 +291,8 @@ def lsh_write_index(
     ).parquet(path)
 
 
-def lsh_topk_indexed(
-    spark,
-    index_path: str,
+def lsh_topk(
+    bucketed: DataFrame,
     query: list[float],
     k: int = 10,
     vec_col: str = "embedding",
@@ -383,19 +301,27 @@ def lsh_topk_indexed(
     probe_bits: int = 1,
     seed: int = 3,
 ) -> DataFrame:
-    """Approximate top-k over a materialized LSH index (``lsh_write_index``).
+    """Approximate top-k over LSH-bucketed rows (``lsh_assign`` output or
+    a ``lsh_write_index`` index read back): score only rows whose
+    hyperplane-sign bucket is within ``probe_bits`` bit flips of the
+    query's bucket.  ``num_planes``/``seed`` must match the
+    ``lsh_assign`` call that bucketed the rows.
 
-    The bucket IN-filter is a partition-column predicate: Catalyst prunes
-    the non-probed bucket directories before any IO (asserted in
-    tests/test_plans.py), so the scan touches only the probed fraction of
-    the corpus and there is NO per-query assignment kernel pass.
-    ``num_planes``/``seed`` must match the ``lsh_assign`` call that built
-    the index."""
+    Planes come from the shared seeded generator ``hyperplanes`` (float32
+    constants, promoted to float64 in the kernel), so a value oracle can
+    inline the identical constants as SQL list literals and reproduce the
+    bucket assignment, the query's own bucket, and the bit-flip probe
+    test bit-for-bit (see __spark_entry__ ``ann_lsh``).
+
+    On a written index the bucket IN-filter is a partition-column
+    predicate: Catalyst prunes the non-probed bucket directories before
+    any IO (asserted in tests/test_plans.py), so the scan touches only
+    the probed fraction of the corpus and there is NO per-query
+    assignment kernel pass."""
     probes = lsh_probe_keys(
         query, num_planes=num_planes, probe_bits=probe_bits, seed=seed
     )
-    assigned = spark.read.parquet(index_path)
     return _topk(
-        assigned.filter(F.col("bucket").isin(probes)),
+        bucketed.filter(F.col("bucket").isin(probes)),
         query, k, vec_col, id_col,
     )

@@ -24,8 +24,7 @@ Scale notes (the design constraints, in order):
   repeated across 10M pages is usually byte-identical), so they are
   collapsed by sha256 digest FIRST: one hash agg in which only (uid,
   digest) shuffles, star edges (rep, member) out — never a quadratic
-  band join on the hot footer groups.  Same defense as the signature
-  collapse in minhash_lsh_pairs.
+  near-dup join on the hot footer groups.
 * only one representative per DISTINCT span enters the exact unigram
   Jaccard join (``ngram_jaccard_pairs`` with n=1: prefix-filtered
   candidates, exact verify, all Catalyst), so the near-dup stage's n is

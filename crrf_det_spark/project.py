@@ -7,9 +7,10 @@ over the whole corpus; hits carry the union of matching filters' labels;
 a master index records per-file (here per-conversation) segment counts.
 
 Spark-first: the reference's nested file x filter loop becomes ONE pass --
-filters are a tiny broadcast side; per-filter hits are unioned and grouped.
-At 100TB the corpus is scanned once per run (not once per filter) because
-each filter's predicate is evaluated column-wise over the same scan.
+the filters' (term, filter, pin, exclude) entries are a small literal
+relation broadcast-joined to the postings by term; per-filter hits are
+grouped.  At 100TB the corpus is scanned once per run (not once per
+filter) because every filter's terms are matched over the same scan.
 """
 
 from __future__ import annotations
@@ -35,8 +36,9 @@ def run_filters(
 
     Genuinely ONE pass: ``search_many`` pushes the union of every
     filter's terms into a single postings scan and resolves all filters
-    with broadcast joins + hash aggs (the reference re-runs its index
-    per file per filter).  The result is materialized eagerly — hit
+    with broadcast hash joins against literal relations (the entries,
+    the per-(term, pin) df table, the labels) + hash aggs (the reference
+    re-runs its index per file per filter).  The result is materialized eagerly — hit
     lists are small by construction, and the reference also materializes
     them (to per-file segs JSON) — which lets the internal postings
     subset cache be dropped immediately.  Call ``caching.release`` on

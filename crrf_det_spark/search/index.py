@@ -10,8 +10,8 @@ Index document identity mirrors the reference: one doc per segment,
 (index.js:37-48; tables are flattened rows joined by newline, index.js:44-47).
 
 TFIDF formula (documented, used identically in the DuckDB oracles; scored
-at query time by ``search.query.search``/``search_many``, with df taken
-per case-folded term):
+at query time by ``search.query.search_many``, the one query executor,
+with df taken per case-folded term over the matched postings):
     tf(d, t)  = occurrences of t in d
     idf(t)    = ln(N / df(t)),  N = total docs, df = docs containing t
     score     = tf * idf

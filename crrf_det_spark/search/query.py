@@ -10,6 +10,10 @@ Re-expresses the reference's query path:
   surfaces segments containing at least one normalized number
 * TFIDF score sum + per-turn grouping with collected cindex list, sorted
   by score desc (index.js:118-141)
+
+One executor: ``search_many`` runs a batch of filters in one pass over
+the postings; ``search`` is ``search_many`` over one filter and
+``search_adhoc`` is ``search`` over a prefiltered index.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import register, registered
 from .index import build_index
 
 
@@ -60,92 +65,24 @@ def search(
     force_numeric: bool = True,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Run a boolean query -> per-turn results (conv_id, turn_idx, cindex
-    list, score) ordered by score desc.
+    """Run one boolean query -> per-turn results (conv_id, turn_idx,
+    cindex list, score) ordered by (score desc, conv_id, turn_idx).
 
-    Execution shape (scale-first): the query's term IN-list is pushed into
-    the postings scan FIRST, so tf/df/idf are computed only for the handful
-    of query terms -- never a corpus-wide TFIDF table.  The
-    all-terms-present check is one hash agg counting distinct matched
-    terms; excludes are a left_anti join.  No driver-side loops.
-
-    ``n_docs`` (corpus size for idf) should be passed when known cheaply;
-    otherwise derived with a distinct-count over the postings.
+    ``search_many`` over a single filter: the same executor, so one query
+    and a batch of filters can never score differently.  The persisted
+    postings subset stays registered on the result (release it with
+    caching.materialize/release).  ``n_docs`` (corpus size for idf)
+    should be passed when known cheaply; otherwise it is derived with a
+    distinct-count over the postings.
     """
-    q = parse_query(terms)
-    if not q.includes:
-        return _empty_hits(postings)
-    if force_numeric:
-        q.includes.append((None, "numericvalue"))
-
-    if n_docs is None:
-        n_docs = (
-            postings.select("conv_id", "turn_idx", "cindex").distinct().count()
-        )
-
-    def match(includes):
-        conds = None
-        for fieldname, term in includes:
-            c = F.col("term_l") == term
-            if fieldname:
-                c = c & (F.col("field") == fieldname)
-            conds = c if conds is None else (conds | c)
-        return conds
-
-    # One term-IN filter over the postings, evaluated ONCE and persisted:
-    # the plan references the matched subset three times (tf/df agg, idf
-    # join, exclude anti-join); without the persist each branch would
-    # re-run the upstream index build.  The subset is tiny by construction
-    # (<= query_terms x docs rows), so this is safe at any corpus size --
-    # against a materialized postings table the IN-list additionally pushes
-    # into the scan.
-    all_terms = sorted(
-        {t for _f, t in q.includes} | {t for _f, t in q.excludes}
+    hits = search_many(
+        postings, [{"filter_name": "", "query": terms}], force_numeric, n_docs
     )
-    from ..caching import register
-
-    pl = (
-        postings.withColumn("term_l", F.lower(F.col("term")))
-        .filter(F.col("term_l").isin(all_terms))
-        .persist()
-    )
-    # df per case-folded term over the matched subset, as search_many
-    # takes it: a pinned term's subset holds only its field's postings
-    inc = pl.filter(match(q.includes))
-    df_by_term = inc.groupBy("term_l").agg(
-        F.count_distinct("conv_id", "turn_idx", "cindex").alias("df")
-    )
-    sc = inc.join(F.broadcast(df_by_term), "term_l").withColumn(
-        "tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
-    )
-    n_terms = len({t for _f, t in q.includes})
-    doc_hits = (
-        sc.groupBy("conv_id", "turn_idx", "cindex")
-        .agg(
-            F.count_distinct("term_l").alias("n_matched"),
-            F.sum("tfidf").alias("score"),
-        )
-        .filter(F.col("n_matched") == n_terms)
-    )
-    if q.excludes:
-        exc = pl.filter(match(q.excludes)).select(
-            "conv_id", "turn_idx", "cindex"
-        ).distinct()
-        doc_hits = doc_hits.join(
-            exc, ["conv_id", "turn_idx", "cindex"], "left_anti"
-        )
-    # group hits per turn: cindex list + summed score (index.js:124-141).
-    # (tail shared with search_many's per-filter grouping)
-    # pl stays persisted while the returned plan is live (three branches
-    # reference it); callers release it with caching.materialize/release.
     return register(
-        doc_hits.groupBy("conv_id", "turn_idx")
-        .agg(
-            F.sort_array(F.collect_list("cindex")).alias("cindex"),
-            F.sum("score").alias("score"),
-        )
-        .orderBy(F.desc("score"), "conv_id", "turn_idx"),
-        pl,
+        hits.select("conv_id", "turn_idx", "cindex", "score").orderBy(
+            F.desc("score"), "conv_id", "turn_idx"
+        ),
+        *registered(hits),
     )
 
 
@@ -179,7 +116,7 @@ def search_adhoc(
     """
     q = parse_query(terms)
     if not q.includes:
-        return _empty_hits(build_index(segments.limit(0), lengths))
+        return search(build_index(segments.limit(0), lengths), terms)
     if n_docs is None:
         n_docs = segments.count()
     includes = list(q.includes)
@@ -206,36 +143,31 @@ def search_adhoc(
     return search(postings, terms, force_numeric=force_numeric, n_docs=n_docs)
 
 
-def _empty_hits(postings: DataFrame, with_filter_cols: bool = False) -> DataFrame:
-    """Zero-row hits frame whose conv_id/turn_idx/cindex types are DERIVED
-    from the postings table (a hardcoded schema would mismatch callers
-    whose ids are longs, breaking later unions)."""
-    out = (
+def _empty_hits(postings: DataFrame) -> DataFrame:
+    """Zero-row ``search_many`` result whose conv_id/turn_idx/cindex types
+    are DERIVED from the postings table (a hardcoded schema would
+    mismatch callers whose ids are longs, breaking later unions)."""
+    return (
         postings.limit(0)
         .groupBy("conv_id", "turn_idx")
         .agg(
             F.sort_array(F.collect_list("cindex")).alias("cindex"),
             F.sum(F.lit(0.0)).alias("score"),
         )
+        .withColumn("filter_name", F.lit(None).cast("string"))
+        .withColumn("labels", F.lit(None).cast("array<string>"))
     )
-    if with_filter_cols:
-        out = out.withColumn("filter_name", F.lit(None).cast("string")).withColumn(
-            "labels", F.lit(None).cast("array<string>")
-        )
-    return out
 
 
 def _normalize_includes(
     includes: list[tuple[str | None, str]],
 ) -> list[tuple[str | None, str]]:
-    """Collapse duplicate include entries per query the way ``search()``'s
-    row-level OR filter implicitly does: exact duplicates merge, and a
-    term that appears both field-pinned and unpinned (or pinned to two
-    different fields) becomes one unpinned entry — the OR of its match
-    conditions admits the same rows, n_matched counts distinct TERMS, and
-    df is taken over the matched subset, so this is exactly search()'s
-    behavior.  Without it, a joined term map would score one postings row
-    once per matching map entry (double-counting, e.g. a query already
+    """Collapse duplicate include entries per query: exact duplicates
+    merge, and a term that appears both field-pinned and unpinned (or
+    pinned to two different fields) becomes one unpinned entry -- the OR
+    of its match conditions admits the same rows, and n_matched counts
+    distinct TERMS.  Without it, one postings row would match (and score)
+    once per entry of its term (double-counting, e.g. a query already
     containing 'numericvalue' plus the forced include)."""
     norm: dict[str, str | None] = {}
     for fieldname, term in includes:
@@ -247,32 +179,62 @@ def _normalize_includes(
     return [(f, t) for t, f in norm.items()]
 
 
+def _sql_literal(v) -> str:
+    """A SQL literal for a str/bool/int/list[str] value; strings go in as
+    hex binary literals, so no text needs escaping."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, list):
+        return f"CAST(array({', '.join(map(_sql_literal, v))}) AS ARRAY<STRING>)"
+    return f"CAST(X'{v.encode().hex()}' AS STRING)"
+
+
+def _literal_rows(spark, names: list[str], rows: list[tuple]) -> DataFrame:
+    """A small relation from Python rows as a VALUES literal, which
+    Catalyst resolves to a local relation: no Python pass at plan time
+    (``createDataFrame`` serializes the rows through one), no Spark job
+    to broadcast it (an ``inline`` of a literal array runs one), and
+    hash lookups when joined (a literal map scans its keys one by one
+    per lookup: 2x slower ``run_filters`` at 500 filters)."""
+    values = ", ".join(
+        f"({', '.join(map(_sql_literal, r))})" for r in rows
+    )
+    cols = ", ".join(f"`{n}`" for n in names)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+
+
 def search_many(
     postings: DataFrame,
     filters: list[dict],
     force_numeric: bool = True,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Run MANY boolean queries in ONE pass over the postings — the batch
+    """Run MANY boolean queries in ONE pass over the postings -- the batch
     shape behind ``project.run_filters`` (the reference loops files x
-    filters; a driver-side loop of ``search()`` calls here would scan the
-    corpus once per filter).
+    filters; a driver-side loop of single queries would scan the corpus
+    once per filter).
 
-    filters: [{filter_name, query, labels}].  Per-filter results are
-    identical to ``search()`` (asserted in tests/test_search.py): tf and
-    df come from the same postings subset, field-pinned terms use the
-    per-(term, field) df, every include must match, any exclude kills the
-    doc.  Returns (conv_id, turn_idx, cindex: array<int>, score,
-    filter_name, labels).
+    filters: [{filter_name, query, labels}].  tf and df come from the
+    matched postings subset, a field-pinned term uses the per-(term,
+    field) df, every include must match, any exclude kills the doc.
+    Returns (conv_id, turn_idx, cindex: array<int>, score, filter_name,
+    labels).
 
     Shape: ONE term-IN filter over the postings (union of every filter's
-    terms) evaluated once and persisted; a tiny broadcast (filter, term,
-    field, exclude) map joins against it; per-(filter, doc) hash aggs do
-    the AND/score logic.  The persisted subset is registered on the
-    result for caching.materialize/release.
+    terms), then a broadcast hash join with the (term, filter, pin,
+    exclude, n_terms) entries and the field-pin test; the matched rows
+    are persisted (three branches read them) and registered on the
+    result for caching.materialize/release.  df is ONE aggregation of
+    the matched include rows keyed by (term, pin): an unpinned entry
+    matches every field of its term and a pinned entry only its own
+    field, so this is the global df for unpinned terms and the
+    per-field df for pinned ones.  Labels join the per-filter result
+    rows as a broadcast.  Both join sides are VALUES literals
+    (``_literal_rows``), so no Python pass runs at plan time and every
+    lookup is a hash probe whatever the number of filters.
     """
-    from ..caching import register
-
     parsed = []
     for f in filters:
         q = parse_query(f["query"])
@@ -284,85 +246,51 @@ def search_many(
         q.excludes = sorted(set(q.excludes))
         parsed.append((f["filter_name"], q, f.get("labels", [])))
 
-    spark = postings.sparkSession
     if not parsed:
-        return _empty_hits(postings, with_filter_cols=True)
+        return _empty_hits(postings)
 
     if n_docs is None:
         n_docs = (
             postings.select("conv_id", "turn_idx", "cindex").distinct().count()
         )
 
-    map_rows = []
-    for name, q, _labels in parsed:
-        for fieldname, term in q.includes:
-            map_rows.append((name, fieldname, term, False))
-        for fieldname, term in q.excludes:
-            map_rows.append((name, fieldname, term, True))
-    term_map = spark.createDataFrame(
-        map_rows, "filter_name string, fieldname string, term_l string,"
-        " exclude boolean"
+    # "" pins no field (an equi-join key, unlike null)
+    entry_rows = [
+        (term, name, fieldname or "", exclude, len(q.includes))
+        for name, q, _labels in parsed
+        for exclude, terms in ((False, q.includes), (True, q.excludes))
+        for fieldname, term in terms
+    ]
+    spark = postings.sparkSession
+    entries = _literal_rows(
+        spark, ["term_l", "filter_name", "pin", "exclude", "n_terms"],
+        entry_rows,
     )
-    n_terms = spark.createDataFrame(
-        [(name, len({t for _f, t in q.includes})) for name, q, _l in parsed],
-        "filter_name string, n_terms int",
-    )
-    labels_tbl = spark.createDataFrame(
-        [(name, list(labels)) for name, _q, labels in parsed],
-        "filter_name string, labels array<string>",
+    labels = _literal_rows(
+        spark, ["filter_name", "labels"],
+        [(name, list(lb)) for name, _q, lb in parsed],
     )
 
-    all_terms = sorted({r[2] for r in map_rows})
-    pl = (
+    doc = ["conv_id", "turn_idx", "cindex"]
+    matched = (
         postings.withColumn("term_l", F.lower(F.col("term")))
-        .filter(F.col("term_l").isin(all_terms))
+        .filter(F.col("term_l").isin(sorted({r[0] for r in entry_rows})))
+        .join(F.broadcast(entries), "term_l")
+        .filter((F.col("pin") == "") | (F.col("pin") == F.col("field")))
+        .select(*doc, "term_l", "tf", "filter_name", "pin", "exclude", "n_terms")
         .persist()
     )
 
-    # per-term df exactly as search() computes it: over the matched subset,
-    # globally for unpinned terms, per-field for pinned terms
-    doc = ["conv_id", "turn_idx", "cindex"]
-    df_any = pl.groupBy("term_l").agg(F.count_distinct(*doc).alias("df_any"))
-    df_fld = pl.groupBy("term_l", "field").agg(
-        F.count_distinct(*doc).alias("df_fld")
-    )
-
-    matched = pl.join(
-        F.broadcast(term_map),
-        (pl["term_l"] == term_map["term_l"])
-        & (
-            term_map["fieldname"].isNull()
-            | (term_map["fieldname"] == pl["field"])
-        ),
-    ).select(
-        "filter_name",
-        "fieldname",
-        "exclude",
-        pl["term_l"].alias("term_l"),
-        "field",
-        "tf",
-        *doc,
-    )
-
-    inc = (
-        matched.filter(~F.col("exclude"))
-        .join(F.broadcast(df_any), "term_l")
-        .join(F.broadcast(df_fld), ["term_l", "field"])
-        .withColumn(
-            "df",
-            F.when(F.col("fieldname").isNull(), F.col("df_any")).otherwise(
-                F.col("df_fld")
-            ),
-        )
-        .withColumn("tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")))
-    )
+    inc = matched.filter(~F.col("exclude"))
+    df = inc.groupBy("term_l", "pin").agg(F.count_distinct(*doc).alias("df"))
     doc_hits = (
-        inc.groupBy("filter_name", *doc)
+        inc.join(F.broadcast(df), ["term_l", "pin"])
+        .withColumn("tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")))
+        .groupBy("filter_name", "n_terms", *doc)
         .agg(
             F.count_distinct("term_l").alias("n_matched"),
             F.sum("tfidf").alias("score"),
         )
-        .join(F.broadcast(n_terms), "filter_name")
         .filter(F.col("n_matched") == F.col("n_terms"))
     )
     exc = matched.filter(F.col("exclude")).select("filter_name", *doc).distinct()
@@ -374,7 +302,7 @@ def search_many(
             F.sort_array(F.collect_list("cindex")).alias("cindex"),
             F.sum("score").alias("score"),
         )
-        .join(F.broadcast(labels_tbl), "filter_name")
+        .join(F.broadcast(labels), "filter_name")
         .select("conv_id", "turn_idx", "cindex", "score", "filter_name", "labels")
     )
-    return register(out, pl)
+    return register(out, matched)

@@ -75,6 +75,23 @@ def _merge_bullets(sp):
             merge_start = -1
 
 
+def _row_pattern(crop_line: np.ndarray) -> int:
+    """The reference's scalar content pattern of one line: 0=full
+    1=left 2=right 3=middle (pseg.py:456-467)."""
+    w = crop_line.shape[0]
+    half = w // 2
+    quar = half // 2
+    if half == 0:
+        return 0
+    if crop_line[:half].all():
+        return 2
+    if crop_line[w - half:].all():
+        return 1
+    if quar and crop_line[:quar].all() and crop_line[w - quar:].all():
+        return 3
+    return 0
+
+
 # stage 01: columns (ref test_columns_from_image, test_pseg.py:32-76)
 class TestColumns:
     def test_single_column(self):
@@ -158,7 +175,7 @@ class TestRowGroups:
             crop = (rng.random((64, w)) < 0.7).astype(np.uint8)
             vec = G._row_patterns(crop)
             for i in range(crop.shape[0]):
-                assert vec[i] == G._row_pattern(crop[i]), (w, i)
+                assert vec[i] == _row_pattern(crop[i]), (w, i)
 
     def test_blank_line_splits_groups(self):
         text = "para one line a\npara one line b\n\npara two line a"

@@ -11,9 +11,11 @@ from crrf_det_spark.ops import (
     exact_duplicates,
     fingerprint,
     language_id,
-    lsh_bucket_topk_oneshot,
-    minhash_lsh_pairs,
-    minhash_signatures,
+    ivf_assign,
+    ivf_topk,
+    ivf_train,
+    lsh_assign,
+    lsh_topk,
     ngram_jaccard_pairs,
     simhash_signatures,
 )
@@ -53,59 +55,6 @@ class TestDedup:
         groups = exact_duplicates(docs_df).collect()
         assert len(groups) == 1
         assert list(groups[0].doc_ids) == [1, 2]
-
-    def test_minhash_lsh(self, docs_df):
-        sigs = minhash_signatures(docs_df)
-        pairs = {
-            (r.doc_a, r.doc_b): r.sig_jaccard
-            for r in minhash_lsh_pairs(sigs, threshold=0.5).collect()
-        }
-        assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
-        assert (1, 3) in pairs and pairs[(1, 3)] >= 0.5
-        assert not any(4 in p or 5 in p for p in pairs)
-
-    def test_minhash_kernels_match_python_reference(self, spark, docs_df):
-        # recompute every char-5 signature in pure Python (the
-        # permutation draws, the shingle hashes, and uint64 arithmetic,
-        # which wraps at 2^64 before the mod p).  One extra document has
-        # more than 1<<16 shingles, so the kernel's chunked min crosses a
-        # chunk boundary.
-        import random
-
-        p, wrap = (1 << 61) - 1, (1 << 64) - 1
-        num_hashes = 64
-        rng = np.random.RandomState(42)
-        a = [int(x) for x in rng.randint(1, p, size=num_hashes, dtype=np.int64)]
-        b = [int(x) for x in rng.randint(0, p, size=num_hashes, dtype=np.int64)]
-
-        def reference(text):
-            data = text.encode("utf-8")
-            hs = {
-                sum(data[i + j] * 1099511628211 ** j for j in range(5)) & wrap
-                for i in range(len(data) - 4)
-            }
-            hs = {h % p for h in hs}
-            if not hs:
-                return [p] * num_hashes
-            return [
-                min(((ai * h + bi) & wrap) % p for h in hs)
-                for ai, bi in zip(a, b)
-            ]
-
-        rnd = random.Random(7)
-        long_doc = "".join(rnd.choice("abcdefgh ") for _ in range(70_000))
-        assert len(long_doc.encode()) - 4 > 1 << 16
-        df = docs_df.unionByName(
-            spark.createDataFrame([(7, long_doc)], docs_df.schema)
-        )
-        got = {r.doc_id: list(r.signature) for r in minhash_signatures(df).collect()}
-        texts = dict(DOCS + [(7, long_doc)])
-        assert got == {d: reference(t) for d, t in texts.items()}
-
-    def test_minhash_deterministic(self, docs_df):
-        a = minhash_signatures(docs_df).orderBy("doc_id").collect()
-        b = minhash_signatures(docs_df).orderBy("doc_id").collect()
-        assert [r.signature for r in a] == [r.signature for r in b]
 
     def test_simhash_near(self, docs_df):
         sigs = {r.doc_id: r.simhash for r in simhash_signatures(docs_df).collect()}
@@ -280,39 +229,6 @@ class TestDedup:
         }
         assert plain == salted and len(plain) > 50
 
-    def test_minhash_adversarial_identical_corpus(self, spark):
-        # all-identical corpus: signature collapse must produce n-1 star
-        # edges from one hash agg, not a single-task O(n^2) band join
-        import time
-
-        from crrf_det_spark.ops import minhash_lsh_pairs, minhash_signatures
-
-        n = 3000
-        df = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.lit("the same document text repeated everywhere").alias("text"),
-        )
-        t0 = time.time()
-        got = minhash_lsh_pairs(
-            minhash_signatures(df, num_hashes=16), num_bands=4
-        ).collect()
-        elapsed = time.time() - t0
-        # two-level star edges: n-1 edges whose connected components merge
-        # all n docs into one cluster (clique-equivalent under closure)
-        assert len(got) == n - 1
-        assert all(r.sig_jaccard == 1.0 for r in got)
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in got:
-            parent[find(r.doc_a)] = find(r.doc_b)
-        assert len({find(i) for i in range(n)}) == 1
-        assert elapsed < 60, f"adversarial corpus took {elapsed:.1f}s"
 
 class TestComponents:
     def test_adversarial_chain_graph(self, spark):
@@ -403,30 +319,24 @@ class TestSimilarity:
 
     def test_lsh_finds_top1(self, emb_df):
         q = list(emb_df.filter("vec_id=1").first().embedding)
-        got = lsh_bucket_topk_oneshot(emb_df, q, k=2, num_planes=4).collect()
+        got = lsh_topk(
+            lsh_assign(emb_df, num_planes=4), q, k=2, num_planes=4
+        ).collect()
         assert got[0].vec_id == 1
 
     def test_ivf_finds_top1(self, emb_df):
-        from crrf_det_spark.ops.similarity import ivf_topk_oneshot
-
         q = list(emb_df.filter("vec_id=1").first().embedding)
-        got = ivf_topk_oneshot(
-            emb_df, q, k=2, n_centroids=3, n_probe=2, sample_fraction=1.0
-        ).collect()
+        cent = ivf_train(emb_df, n_centroids=3, sample_fraction=1.0)
+        got = ivf_topk(ivf_assign(emb_df, cent), cent, q, k=2, n_probe=2).collect()
         assert got[0].vec_id == 1
         assert got[0].cosine == pytest.approx(1.0, abs=1e-6)
 
     def test_ivf_indexed_equals_oneshot(self, spark, tmp_path):
         # the materialized-index path (train once, assign once, write
-        # partitioned by centroid) must return exactly what the one-shot
-        # per-query-kernel variant returns, for several queries
-        from crrf_det_spark.ops import (
-            ivf_assign,
-            ivf_topk_oneshot,
-            ivf_topk_indexed,
-            ivf_train,
-            ivf_write_index,
-        )
+        # partitioned by centroid) must return exactly what the direct
+        # assign + top-k composition on the same centroids returns, for
+        # several queries
+        from crrf_det_spark.ops import ivf_write_index
 
         rng = np.random.RandomState(3)
         rows = [
@@ -442,12 +352,14 @@ class TestSimilarity:
             q = rows[qi][1]
             one_shot = [
                 (r.vec_id, round(r.cosine, 9))
-                for r in ivf_topk_oneshot(df, q, k=5, n_probe=2, **kw).collect()
+                for r in ivf_topk(
+                    ivf_assign(df, cent), cent, q, k=5, n_probe=2
+                ).collect()
             ]
             indexed = [
                 (r.vec_id, round(r.cosine, 9))
-                for r in ivf_topk_indexed(
-                    spark, path, cent, q, k=5, n_probe=2
+                for r in ivf_topk(
+                    spark.read.parquet(path), cent, q, k=5, n_probe=2
                 ).collect()
             ]
             assert indexed == one_shot

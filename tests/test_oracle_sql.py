@@ -198,3 +198,13 @@ def test_spans_oracle_on_chain_paragraph_corpus():
         (1000 + d * 30 + 3, j) for d in range(20) for j in range(3)
     }
     assert got_nodes == expect_nodes
+
+
+def test_contract_keys_match_and_bench_times_only_contract_queries():
+    # every queries() key has a same-named oracle_sql() entry and vice
+    # versa, and the bench's headline names are all contract queries, so
+    # no query timed by bench.py can lack an oracle check
+    import bench
+
+    assert set(entry.queries()) == set(entry.oracle_sql())
+    assert set(bench.HEADLINE) <= set(entry.queries())

@@ -163,8 +163,9 @@ def test_tagging_no_single_partition_window(spark):
 
 
 def test_search_many_broadcasts_filter_map(spark):
-    # the (filter, term, field, exclude) map must join as a broadcast --
-    # a shuffle join keyed on term would move the postings subset again
+    # the (term, filter, pin, exclude) entries, the per-(term, pin) df
+    # table and the labels must join as broadcasts -- a shuffle join
+    # keyed on term would move the matched postings again
     from crrf_det_spark.search import build_index
     from crrf_det_spark.search.query import search_many
 
@@ -202,13 +203,12 @@ def test_signature_kernels_are_spread(spark):
     # MapInPandas: a single-file parquet source otherwise serializes the
     # whole Python stage into one worker (measured 3.3s -> 0.4s on the
     # 5000-doc corpus when this was fixed)
-    from crrf_det_spark.ops import minhash_signatures, simhash_signatures
+    from crrf_det_spark.ops import simhash_signatures
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    for op in (minhash_signatures, simhash_signatures):
-        plan = plan_of(op(d), mode="simple")
-        assert "REPARTITION_BY_NUM" in plan, op.__name__
-        assert "MapInPandas" in plan, op.__name__
+    plan = plan_of(simhash_signatures(d), mode="simple")
+    assert "REPARTITION_BY_NUM" in plan
+    assert "MapInPandas" in plan
 
 
 def test_span_dedup_runs_no_python_stage(spark):
@@ -227,9 +227,8 @@ def test_similarity_and_multimodal_kernels_are_spread(spark):
     # same invariant as the signature kernels: every mapInPandas input
     # carries an explicit repartition so a single-file parquet source
     # can't serialize the Python stage into one worker
-    from crrf_det_spark.ops import lsh_bucket_topk_oneshot
+    from crrf_det_spark.ops import ivf_assign, lsh_assign, lsh_topk
     from crrf_det_spark.ops.multimodal import extract_features
-    from crrf_det_spark.ops.similarity import ivf_assign
 
     import numpy as np
 
@@ -244,7 +243,7 @@ def test_similarity_and_multimodal_kernels_are_spread(spark):
     )
     for name, df in (
         ("ivf_assign", ivf_assign(emb, cent)),
-        ("lsh_bucket_topk_oneshot", lsh_bucket_topk_oneshot(emb, q, k=2, num_planes=4)),
+        ("lsh_topk", lsh_topk(lsh_assign(emb, num_planes=4), q, k=2, num_planes=4)),
         ("extract_features", extract_features(media)),
     ):
         plan = plan_of(df, mode="simple")
@@ -261,7 +260,7 @@ def test_ivf_indexed_query_prunes_partitions(spark, tmp_path):
 
     from crrf_det_spark.ops import (
         ivf_assign,
-        ivf_topk_indexed,
+        ivf_topk,
         ivf_train,
         ivf_write_index,
     )
@@ -274,7 +273,7 @@ def test_ivf_indexed_query_prunes_partitions(spark, tmp_path):
     cent = ivf_train(df, n_centroids=4, sample_fraction=1.0)
     path = str(tmp_path / "ivf_index")
     ivf_write_index(ivf_assign(df, cent), path)
-    q = ivf_topk_indexed(spark, path, cent, rows[0][1], k=3, n_probe=2)
+    q = ivf_topk(spark.read.parquet(path), cent, rows[0][1], k=3, n_probe=2)
     plan = plan_of(q)
     scan_chunk = plan[plan.index("Scan parquet"):]
     part_line = next(
@@ -290,15 +289,10 @@ def test_lsh_indexed_query_prunes_partitions(spark, tmp_path):
     # family: the materialized index is partitioned by bucket; the probe
     # filter must prune directories before IO with no per-query
     # assignment kernel, and the indexed result must equal the one-shot
-    # lsh_bucket_topk_oneshot on the same corpus/query
+    # lsh_topk over lsh_assign on the same corpus/query
     import numpy as np
 
-    from crrf_det_spark.ops import (
-        lsh_assign,
-        lsh_bucket_topk_oneshot,
-        lsh_topk_indexed,
-        lsh_write_index,
-    )
+    from crrf_det_spark.ops import lsh_assign, lsh_topk, lsh_write_index
 
     rng = np.random.RandomState(11)
     rows = [
@@ -307,7 +301,7 @@ def test_lsh_indexed_query_prunes_partitions(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     path = str(tmp_path / "lsh_index")
     lsh_write_index(lsh_assign(df, num_planes=4), path)
-    q = lsh_topk_indexed(spark, path, rows[0][1], k=5, num_planes=4)
+    q = lsh_topk(spark.read.parquet(path), rows[0][1], k=5, num_planes=4)
     plan = plan_of(q)
     scan_chunk = plan[plan.index("Scan parquet"):]
     part_line = next(
@@ -315,7 +309,9 @@ def test_lsh_indexed_query_prunes_partitions(spark, tmp_path):
     )
     assert "bucket" in part_line and "IN" in part_line, part_line
     assert "MapInPandas" not in plan
-    one_shot = lsh_bucket_topk_oneshot(df, rows[0][1], k=5, num_planes=4).collect()
+    one_shot = lsh_topk(
+        lsh_assign(df, num_planes=4), rows[0][1], k=5, num_planes=4
+    ).collect()
     assert q.collect() == one_shot
 
 

@@ -8,6 +8,7 @@ guarantee that every pdftotext word lands in exactly one cell or text box
 import re
 from collections import Counter
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from crrf_det_spark.extract import extract_turn
@@ -71,6 +72,38 @@ BOX = st.tuples(
                  max(b[0], b[2]) + 1, max(b[1], b[3]) + 1))
 
 
+def take_overlapping(tokens, box) -> list[str]:
+    """The sequential reference of ``Tokens.take_overlapping_many``: consume
+    and return (in reading order) all unused tokens whose overlap with
+    ``box`` (ymin, xmin, ymax, xmax) exceeds their threshold -- the
+    first-writer-wins semi-join (aggr.py:69-72), one box at a time.
+
+    The scan is windowed to tokens whose y-extent can overlap the box
+    (ymin sorted => searchsorted), turning the cells x tokens join from
+    O(cells * tokens) into O(cells * log(tokens) + hits)."""
+    if not len(tokens.texts):
+        return []
+    lo = int(np.searchsorted(tokens._y0, box[0] - tokens._hmax, side="left"))
+    hi = int(np.searchsorted(tokens._y0, box[2], side="left"))
+    if lo >= hi:
+        return []
+    b = tokens.boxes[lo:hi]
+    x_ov = np.minimum(box[3], b[:, 3]) - np.maximum(box[1], b[:, 1])
+    y_ov = np.minimum(box[2], b[:, 2]) - np.maximum(box[0], b[:, 0])
+    hit = (
+        (x_ov > 0)
+        & (y_ov > 0)
+        & (np.maximum(x_ov, 0) * np.maximum(y_ov, 0) > tokens.thr[lo:hi])
+        & ~tokens.used[lo:hi]
+    )
+    idx = np.nonzero(hit)[0]
+    if len(idx) == 0:
+        return []
+    idx = idx + lo
+    tokens.used[idx] = True
+    return [tokens.texts[i] for i in idx]
+
+
 @settings(max_examples=200, deadline=None)
 @given(TURN, st.lists(BOX, min_size=0, max_size=150))
 def test_batched_join_equals_sequential(text, boxes):
@@ -82,7 +115,7 @@ def test_batched_join_equals_sequential(text, boxes):
     _, lines = occupancy_from_text(text)
     seq_tokens = tokenize_lines(lines)
     batch_tokens = tokenize_lines(lines)
-    expected = [seq_tokens.take_overlapping(b) for b in boxes]
+    expected = [take_overlapping(seq_tokens, b) for b in boxes]
     got = batch_tokens.take_overlapping_many(boxes)
     assert got == expected
     assert list(seq_tokens.used) == list(batch_tokens.used)
@@ -140,7 +173,7 @@ def test_batched_join_chunk_halving_equals_sequential(monkeypatch):
 
     _, lines = occupancy_from_text(text)
     seq_tokens = tokenize_lines(lines)
-    expected = [seq_tokens.take_overlapping(b) for b in boxes]
+    expected = [take_overlapping(seq_tokens, b) for b in boxes]
 
     for cap in (1, 37, 512):  # one box per chunk, then fewer chunks
         monkeypatch.setattr(extract_mod, "MAX_JOIN_CELLS", cap)

@@ -2,6 +2,8 @@
 ngrams, inverted index, TFIDF boolean queries with exclusions and field
 prefixes, regex search, and batch project runs."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -218,7 +220,10 @@ class TestProject:
 
     def test_search_many_equals_per_filter_search(self, segments_df):
         # one-pass multi-filter resolution must agree with N independent
-        # search() calls, including field-pinned terms and excludes
+        # search() calls, including field-pinned terms and excludes, and
+        # with TFIDF worked by hand over the 5 SEGMENTS: 'revenue' is in
+        # 2 docs (tf 1), 'steel' in 1 table; the exclude does not touch
+        # df
         from crrf_det_spark.search.query import search_many
 
         filters = self.FILTERS + [
@@ -236,13 +241,20 @@ class TestProject:
                     list(h.cindex),
                     round(h.score, 9),
                 )
-        assert many == solo
+        rev = round(math.log(5 / 2), 9)
+        want = {
+            ("rev", "c1", 0): ([0], rev),
+            ("rev", "c2", 0): ([0], rev),
+            ("metals", "c1", 0): ([1], round(math.log(5), 9)),
+            ("rg", "c1", 0): ([0], rev),
+        }
+        assert many == solo == want
 
     def test_search_many_duplicate_and_pinned_terms(self, segments_df):
-        # a query already containing the forced numericvalue term, plus a
-        # term listed both field-pinned and unpinned: search() scores each
-        # matching postings row exactly once (row-level OR), so the
-        # one-pass map join must not double-count
+        # 'numericvalue' listed AND forced, and 'revenue' both pinned and
+        # unpinned: each collapses to one unpinned term, so each hit row
+        # scores once -- revenue ln(5/2) (2 docs) + numericvalue ln(5/4)
+        # (4 docs), never twice
         from crrf_det_spark.search.query import search_many
 
         filters = [
@@ -261,14 +273,42 @@ class TestProject:
                     list(h.cindex),
                     round(h.score, 9),
                 )
-        assert many == solo
+        score = round(math.log(5 / 2) + math.log(5 / 4), 9)
+        want = {(n, c, 0): ([0], score)
+                for n in ("dup", "pin") for c in ("c1", "c2")}
+        assert many == solo == want
+
+    def test_search_many_pinned_term_uses_field_df(self, segments_df):
+        # numericvalue is in 4 docs: 2 tables (tf 2 each) and 2 texts
+        # (tf 1 each); pinned, a term takes its per-field df, unpinned
+        # the global one; an exclude removes only the doc it matches
+        from crrf_det_spark.search.query import search_many
+
+        filters = [
+            {"filter_name": "tab", "query": "table:numericvalue"},
+            {"filter_name": "txt", "query": "text:numericvalue"},
+            {"filter_name": "any", "query": "numericvalue -text:revenue"},
+        ]
+        idx = build_index(segments_df)
+        got = {
+            (h.filter_name, h.conv_id, h.turn_idx): (list(h.cindex), round(h.score, 9))
+            for h in search_many(idx, filters, force_numeric=False).collect()
+        }
+        tab, txt = round(2 * math.log(5 / 2), 9), round(math.log(5 / 2), 9)
+        anyf = round(2 * math.log(5 / 4), 9)
+        assert got == {
+            ("tab", "c1", 0): ([1], tab),
+            ("tab", "c2", 1): ([0], tab),
+            ("txt", "c1", 0): ([0], txt),
+            ("txt", "c2", 0): ([0], txt),
+            ("any", "c1", 0): ([1], anyf),
+            ("any", "c2", 1): ([0], anyf),
+        }
 
     def test_search_case_folds_df_like_search_many(self, spark):
         # "Revenue" and "revenue" are one term for df: 2 of 3 segments,
         # so each hit scores ln(3/2) in search(), search_many() and the
         # DuckDB oracle alike
-        import math
-
         from crrf_det_spark.search.query import search_many
 
         segs = spark.createDataFrame(
@@ -304,16 +344,87 @@ class TestProject:
         assert out.count() == 0
         assert dict(out.dtypes)["conv_id"] == "bigint"
 
-    def test_run_filters_releases_all_caches(self, spark, segments_df):
-        from crrf_det_spark.caching import release
+    def test_search_many_builds_no_python_side_tables(
+        self, spark, segments_df, monkeypatch
+    ):
+        # the query entries (with n_terms) and the labels are VALUES
+        # literals that Catalyst resolves: no DataFrame is built from
+        # Python lists (each would be a Python pass at plan time)
+        from pyspark.sql import SparkSession
 
-        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        from crrf_det_spark.search.query import search_many
+
         idx = build_index(segments_df)
+
+        def refuse(*_a, **_k):
+            raise AssertionError("search_many called createDataFrame")
+
+        monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+        out = search_many(
+            idx, self.FILTERS, force_numeric=False, n_docs=len(SEGMENTS)
+        )
+        monkeypatch.undo()
+        got = {(h.filter_name, h.conv_id, h.turn_idx): list(h.labels)
+               for h in out.collect()}
+        assert got == {
+            ("rev", "c1", 0): ["finance"],
+            ("rev", "c2", 0): ["finance"],
+            ("metals", "c1", 0): ["commodity", "metal"],
+        }
+
+    def test_search_many_embeds_any_text(self, spark):
+        # filter names, labels and terms enter the plan as SQL literals:
+        # quotes, backslashes and non-ASCII text must come back unchanged
+        from crrf_det_spark.search.query import search_many
+
+        segs = spark.createDataFrame(
+            [("c1", 0, 0, "text", "naïve café o'brien 東京"),
+             ("c2", 0, 0, "text", "naïve other 東京")],
+            "conv_id string, turn_idx int, cindex int, type string,"
+            " content string",
+        )
+        filters = [
+            {"filter_name": "f'1\\", "query": "naïve \"o'brien\"",
+             "labels": ["a'b", "ü"]},
+            {"filter_name": "東", "query": "東京 -café", "labels": []},
+        ]
+        got = {
+            (h.filter_name, h.conv_id): (list(h.cindex), round(h.score, 9),
+                                         list(h.labels))
+            for h in search_many(
+                build_index(segs), filters, force_numeric=False
+            ).collect()
+        }
+        assert got == {
+            ("f'1\\", "c1"): ([0], round(math.log(2), 9), ["a'b", "ü"]),
+            ("東", "c2"): ([0], 0.0, []),
+        }
+
+    def test_run_filters_releases_all_caches(self, spark):
+        from crrf_det_spark.caching import registered, release
+
+        # own inputs, cached and computed before counting: a shared
+        # fixture would be first cached inside the window, and a plan
+        # identical to an earlier test's would share (and on release
+        # drop) that test's cache entry
+        segs = spark.createDataFrame(
+            SEGMENTS,
+            "conv_id string, turn_idx int, cindex int, type string, content string",
+        ).cache()
+        segs.count()
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        idx = build_index(segs)
         hits = run_filters(idx, self.FILTERS, force_numeric=False)
         hits.collect()
         # run_filters materialized the (small) hit table and already
-        # dropped its internal postings-subset cache; release drops the
-        # hit table itself -> net-zero cached RDDs from the whole call
+        # dropped every intermediate registered on it: only the hit
+        # table itself is cached
+        assert registered(hits) == []
+        assert jsc.getPersistentRDDs().size() == before + 1
+        # release drops the hit table -> net-zero cached RDDs from the
+        # whole call
         release(hits)
-        after = spark.sparkContext._jsc.getPersistentRDDs().size()
-        assert after == before
+        assert not hits.is_cached
+        assert jsc.getPersistentRDDs().size() == before
+        segs.unpersist()
