@@ -333,15 +333,17 @@ def extract_turns(
     box[0]*10000+box[1] key, /root/reference/src/t-pdf:30).
 
     ``line_pxs[k]`` (optional): turn k's true per-line pixel ink bands
-    ``{line_index: [y0_px, y1_px)}`` (a PDF payload's glyph coordinates,
-    pdfmini.pdf_text_lines_geometry); its group sweep then runs the
-    reference's own pixel thresholds (grid.py row_groups_from_column).
+    ``[y0_px, y1_px)`` (a PDF payload's glyph coordinates), as
+    ``{line_index: [y0, y1]}`` or as pdfmini.pdf_text_lines_geometries'
+    ``(line indices, (k, 2) bands)`` arrays; its group sweep then runs
+    the reference's own pixel thresholds (grid.py
+    row_groups_from_column).
 
-    Occupancy and the layout-deciding grid stages run per turn;
-    tokenization, hspacings/vertical lines and the word-in-box join run
-    once over the batch, each turn's lines stacked below the previous
-    turn's, cut where the held grids reach ``grid.MAX_GRID_CELLS`` (so
-    at most two turn budgets are held).  A turn whose own grid would
+    Occupancy runs per turn; tokenization, the grid stages (grid.py
+    parse_grids) and the word-in-box join run once over the batch, each
+    turn's lines stacked below the previous turn's, cut where the held
+    grids reach ``grid.MAX_GRID_CELLS`` (so at most two turn budgets are
+    held).  A turn whose own grid would
     exceed the budget (multi-megabyte lines, million-line dumps) takes
     the O(chars) paragraph-flow fallback.
     """

@@ -15,11 +15,13 @@ engine re-expresses the same projection-profile / grid-line heuristics over a
 
 Every public function cites the reference routine it re-expresses.  The
 code is vectorized numpy over one Arrow batch of turns in the Spark
-pipeline (crrf_det_spark.pipeline): ``parse_grids`` runs columns, row
-groups and group boxes per turn, and the hspacings folds, vertical lines
-and the tablevspan chain with its intersection search (stages 3-5) once
-per stack of every row group of the batch; only ``build_table`` and
-``find_cells`` run per table.
+pipeline (crrf_det_spark.pipeline): ``parse_grids`` runs columns and row
+groups (stages 1-2) once per stack of the batch's grids, the hspacings
+folds, vertical lines and the tablevspan chain with its intersection
+search (stages 3-5) once per stack of every row group of the batch, and
+group boxes per turn; only the column heuristics, the row-group sweep's
+decision loop (per column), ``build_table`` and ``find_cells`` (per
+table) run in smaller units.
 """
 
 from __future__ import annotations
@@ -92,14 +94,6 @@ BOILERPLATE_RE = re.compile(
     r"|Page \d+(?: of \d+)?"
     r"|[-=_~*]{4,})\s*$"
 )
-
-
-def v_start(line: int) -> int:
-    return V_UNIT * line
-
-
-def v_end(line: int) -> int:
-    return V_UNIT * line + LINE_H
 
 
 # ---------------------------------------------------------------------------
@@ -337,13 +331,38 @@ def _columns_from_hough_px(hough_px: dict) -> tuple[list, list]:
     )
 
 
-def columns_from_grid(
-    grid: np.ndarray, hough_px: dict | None = None
-) -> tuple[list[list[int]], list[list[int]]]:
-    """Detect page columns from near-full-height blank char-column runs.
+class _GridStack(NamedTuple):
+    """A batch of occupancy grids stacked for stages 1-2: grid k in rows
+    ``starts[k]:starts[k] + h[k]`` and columns ``:w[k]`` of ``m``,
+    right-padded with content and followed by one content row."""
 
-    Returns (columns, spacings); both are ``[left, right)`` half-open char
-    ranges (deviation from the reference's inclusive-right for clarity).
+    m: np.ndarray
+    starts: np.ndarray
+    h: np.ndarray
+    w: np.ndarray
+
+
+def _stack_grids(grids: list[np.ndarray]) -> _GridStack:
+    """``grids`` stacked (also the row groups' crops, stage 3)."""
+    h = np.array([g.shape[0] for g in grids], dtype=np.int64)
+    w = np.array([g.shape[1] for g in grids], dtype=np.int64)
+    starts = np.zeros(len(grids), dtype=np.int64)
+    np.cumsum(h[:-1] + 1, out=starts[1:])
+    m = np.zeros((int(starts[-1] + h[-1]), int(w.max())), dtype=np.uint8)
+    for g, s in zip(grids, starts.tolist()):
+        m[s: s + g.shape[0], : g.shape[1]] = g
+    return _GridStack(m, starts, h, w)
+
+
+def columns_from_grid(
+    stack: _GridStack, hough_pxs: list | None = None
+) -> list[tuple[list[list[int]], list[list[int]]]]:
+    """Detect page columns from near-full-height blank char-column runs,
+    for every grid of a stack.
+
+    Returns (columns, spacings) per grid; both are ``[left, right)``
+    half-open char ranges (deviation from the reference's inclusive-right
+    for clarity).
 
     The reference finds full-height white verticals with a probabilistic
     Hough transform at ``line_gap=0`` (pseg.py:240) — i.e. a CONTIGUOUS
@@ -354,279 +373,292 @@ def columns_from_grid(
     blank gutter — verified against the reference's own golden pages in
     tests/test_reference_fixtures.py.)
 
-    ``hough_px`` (optional): a caller with sub-char x-geometry (PDF
-    coordinates, the fixture transcriber) passes the TRUE qualifying
-    pixel-column runs; the whole stage then runs in pixel space with the
+    ``hough_pxs[k]`` (optional): a caller with sub-char x-geometry (PDF
+    coordinates, the fixture transcriber) passes grid k's TRUE qualifying
+    pixel-column runs; its whole stage then runs in pixel space with the
     reference's own constants (see _columns_from_hough_px) — spacing
     widths stop being quantized to 5px multiples, which is what decides
     the narrow-spacing merge and collapse gates on table-heavy pages.
+
+    The run scan runs once over the stack; only the column heuristics run
+    per grid.
     """
-    if hough_px is not None:
-        return _columns_from_hough_px(hough_px)
-    n_lines, width = grid.shape
-    # longest contiguous blank run per char column, fully vectorized (the
-    # kernel runs per turn inside Arrow batches — a python loop over lines
-    # would cost ~n_lines iterations per turn at corpus scale): with
-    # s = cumsum(blank) down each column, the blank-run length ending at
-    # line l is s[l] - s[last zero at or before l]; that last-zero value
-    # is the running max of s masked to content lines (s is nondecreasing),
-    # so three whole-grid ops give every run length at once.
-    s = np.cumsum(grid, axis=0, dtype=np.int32)
-    at_content = np.where(grid == 0, s, 0)
-    last_zero = np.maximum.accumulate(at_content, axis=0)
-    best = (s - last_zero).max(axis=0)
-    is_space_col = best >= COLUMN_BLANK_FRACTION * n_lines
+    hough_pxs = hough_pxs or [None] * len(stack.h)
+    # longest contiguous blank run per char column: with s = cumsum(blank)
+    # down each column, the blank-run length ending at a row is s minus s
+    # at the last content row at or before it; that is the running max of
+    # s masked to content rows (s is nondecreasing).  The content row
+    # after each grid ends its runs, so one pass serves the whole stack;
+    # it runs on the transposed stack, where each char column is
+    # contiguous.
+    mt = np.ascontiguousarray(stack.m.T)
+    s = np.cumsum(mt, axis=1, dtype=np.int32)
+    s -= np.maximum.accumulate(np.where(mt, 0, s), axis=1)
+    best = np.maximum.reduceat(s, stack.starts, axis=1).T
+    is_space = best >= COLUMN_BLANK_FRACTION * stack.h[:, None]
 
     # run-length the qualifying columns into spacings (pseg.py:244-259)
-    spacings: list[list[int]] = []
-    columns: list[list[int]] = []
-    x = 0
-    while x < width:
-        if is_space_col[x]:
-            x0 = x
-            while x < width and is_space_col[x]:
-                x += 1
-            spacings.append([x0, x])
-        else:
-            x0 = x
-            while x < width and not is_space_col[x]:
-                x += 1
-            columns.append([x0, x])
+    first = np.ones_like(is_space)
+    first[:, 1:] = is_space[:, 1:] != is_space[:, :-1]
+    g, x0 = np.nonzero(first & (np.arange(len(mt)) < stack.w[:, None]))
+    x1 = np.append(x0[1:], 0)
+    ends = np.append(g[1:] != g[:-1], True)
+    x1[ends] = stack.w[g[ends]]
+    runs: list[tuple[list, list]] = [([], []) for _ in hough_pxs]  # (columns, spacings)
+    for k, a, b, space in zip(g.tolist(), x0.tolist(), x1.tolist(),
+                              is_space[g, x0].tolist()):
+        runs[k][space].append([a, b])
 
-    # guarantee sentinel edge margins so downstream heuristics that
-    # reference spacings[0]/spacings[-1] (page margins, always present in
-    # the reference thanks to the 3.5% side clearing) stay well-defined.
-    if not spacings or spacings[0][0] != 0:
-        spacings.insert(0, [0, 0])
-    if spacings[-1][1] != width:
-        spacings.append([width, width])
-
-    return _column_heuristics(
-        columns, spacings, width, MIN_COLUMN_SPACING, MIN_COLUMN_WIDTH
-    )
+    out = []
+    for (columns, spacings), width, hough_px in zip(runs, stack.w.tolist(), hough_pxs):
+        if hough_px is not None:
+            out.append(_columns_from_hough_px(hough_px))
+            continue
+        # guarantee sentinel edge margins so downstream heuristics that
+        # reference spacings[0]/spacings[-1] (page margins, always present
+        # in the reference thanks to the 3.5% side clearing) stay
+        # well-defined.
+        if not spacings or spacings[0][0] != 0:
+            spacings.insert(0, [0, 0])
+        if spacings[-1][1] != width:
+            spacings.append([width, width])
+        out.append(_column_heuristics(
+            columns, spacings, width, MIN_COLUMN_SPACING, MIN_COLUMN_WIDTH
+        ))
+    return out
 
 
 # ---------------------------------------------------------------------------
 # stage 2: row groups (analogue of row_groups_from_columns, pseg.py:389-609)
 # ---------------------------------------------------------------------------
 
-def _row_patterns(crop: np.ndarray) -> np.ndarray:
-    """Content pattern of every line of a column crop at once: 0=full
-    1=left 2=right 3=middle (pseg.py:456-467), with the reference's
-    per-line precedence: left-half white -> 2, right-half white -> 1,
-    both quarters white -> 3."""
-    n_lines, w = crop.shape
-    half = w // 2
+def _row_patterns(
+    content: np.ndarray, rows: np.ndarray, c0: np.ndarray, c1: np.ndarray
+) -> np.ndarray:
+    """Content pattern of stack rows ``rows`` over char ranges ``[c0,
+    c1)``: 0=full 1=left 2=right 3=middle (pseg.py:456-467), with the
+    reference's per-line precedence: left-half white -> 2, right-half
+    white -> 1, both quarters white -> 3.  ``content`` holds each stack
+    row's prefix sums of content cells."""
+    half = (c1 - c0) // 2
     quar = half // 2
-    pat = np.zeros(n_lines, dtype=np.int8)
-    if half:
-        if quar:
-            pat[
-                crop[:, :quar].all(axis=1) & crop[:, w - quar:].all(axis=1)
-            ] = 3
-        pat[crop[:, w - half:].all(axis=1)] = 1
-        pat[crop[:, :half].all(axis=1)] = 2
+    at0, at1 = content[rows, c0], content[rows, c1]
+    pat = np.zeros(len(rows), dtype=np.int8)
+    pat[(quar > 0) & (content[rows, c0 + quar] == at0)
+        & (content[rows, c1 - quar] == at1)] = 3
+    pat[(half > 0) & (content[rows, c1 - half] == at1)] = 1
+    pat[(half > 0) & (content[rows, c0 + half] == at0)] = 2
     return pat
 
 
-def row_groups_from_column(
-    grid: np.ndarray,
-    column: list[int],
-    line_px: dict[int, tuple[float, float]] | None = None,
-) -> tuple[list[list[list[int]]], np.ndarray]:
-    """Rows (one per text line, in v-units) grouped by vertical spacing.
+def _fill_bands(
+    line: np.ndarray, y0: np.ndarray, y1: np.ndarray,
+    anchor: np.ndarray, fill: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+) -> None:
+    """Give the ``fill`` lines the band interpolated between their
+    nearest ``anchor`` lines within their column's range ``[lo, hi)``,
+    or, with anchors on one side only, extrapolated at REF_LINE_PITCH_PX
+    per line; ``y0``/``y1`` are updated in place."""
+    j = np.arange(len(line))
+    prev = np.maximum.accumulate(np.where(anchor, j, -1))
+    nxt = np.minimum.accumulate(np.where(anchor, j, len(j))[::-1])[::-1]
+    f = np.flatnonzero(fill)
+    p, n, ii = prev[f], nxt[f], line[f]
+    has_p, has_n = p >= lo[f], n < hi[f]
+    both = has_p & has_n
+    k, p_, n_ = f[both], p[both], n[both]
+    t = (line[k] - line[p_]) / (line[n_] - line[p_])
+    y0[k] = y0[p_] + t * (y0[n_] - y0[p_])
+    y1[k] = y1[p_] + t * (y1[n_] - y1[p_])
+    above = has_p & ~has_n
+    k, p_ = f[above], p[above]
+    d = (ii[above] - line[p_]) * REF_LINE_PITCH_PX
+    y0[k], y1[k] = y0[p_] + d, y1[p_] + d
+    below = ~has_p
+    k, n_ = f[below], n[below]
+    d = (line[n_] - ii[below]) * REF_LINE_PITCH_PX
+    y0[k], y1[k] = y0[n_] - d, y1[n_] - d
 
-    Returns (row_groups, row_vspacings) for one column.  row_groups is a
-    list of groups; each group is a list of ``[v_start, v_end]`` rows.
-    row_vspacings mirrors the reference's per-line 0=text/1=spacing vector
-    (pseg.py:443-447), indexed by text line.
+
+def row_groups_from_column(
+    stack: _GridStack,
+    items: list[tuple[int, list[int], tuple[np.ndarray, np.ndarray] | None]],
+) -> list[tuple[list[list[list[int]]], np.ndarray]]:
+    """Rows (one per text line, in v-units) grouped by vertical spacing,
+    for every ``(grid index in stack, column, line bands)`` item.
+
+    Returns (row_groups, row_vspacings) per item.  row_groups is a list
+    of groups; each group is a list of ``[v_start, v_end]`` rows.
+    row_vspacings mirrors the reference's per-line 0=text/1=spacing
+    vector (pseg.py:443-447), indexed by text line.
 
     The grouping re-expresses the reference's bottom-up stateful sweep
-    (pseg.py:487-570): hard split on tall spacing, compact-single-row split,
-    title split, and soft split on spacing > 1.75x the running average, plus
-    the text-space block rule (MIN_BLOCK_SPLIT: a blank line always splits,
-    the analogue of the blur-connector, pseg.py:183).
+    (pseg.py:487-570): hard split on tall spacing, compact-single-row
+    split, title split, and soft split on spacing > 1.75x the running
+    average, plus the text-space block rule (MIN_BLOCK_SPLIT: a blank
+    line always splits, the analogue of the blur-connector, pseg.py:183).
 
-    ``line_px`` (optional): true pixel ink extent ``{text_line: (y0, y1)}``
-    (half-open ``[y0, y1)``) for this column's lines, from a caller that
-    has sub-char geometry (PDF y-coordinates, the reference-fixture
-    transcriber).  When given, every spacing/height DECISION runs in pixel
-    space with the reference's own thresholds (pseg.py:415-423): the
-    text-space block rule is dropped (a blank line is just a wide gap
-    whose true size is now known) and the quantized v-unit thresholds are
-    replaced by the REF_*_PX constants.  Output rows stay in v-units.
-    Lines absent from ``line_px`` fall back to the documented scale
-    (REF_LINE_PITCH_PX per line, LINE_H*PX_PER_VUNIT content).
+    Line bands (optional): ``(lines, bands)``, the true pixel ink extent
+    ``[y0, y1)`` of some of the grid's lines (indices below its line
+    count) as a ``(k, 2)`` array, from
+    a caller that has sub-char geometry (PDF y-coordinates, the
+    reference-fixture transcriber).  When one of the column's content
+    lines has a band, every spacing/height DECISION runs in pixel space
+    with the reference's own thresholds (pseg.py:415-423): the text-space
+    block rule is dropped (a blank line is just a wide gap whose true
+    size is now known) and the quantized v-unit thresholds are replaced
+    by the REF_*_PX constants.  Output rows stay in v-units.  Content
+    lines without a band interpolate between their nearest banded
+    neighbours, or extrapolate at REF_LINE_PITCH_PX per line past the
+    outermost one -- a raw line_index * pitch fallback would sit in a
+    different coordinate system than its neighbours' raster y's and drive
+    arbitrary split/merge decisions (round-4 ADVICE).  With no banded
+    content line the column runs quantized: never mix coordinate
+    systems.
+
+    One pre-pass over the stack measures every item's lines as arrays:
+    content, row patterns (from per-row prefix sums of content) and the
+    spacing/height tests that need no sweep state.  Only the bottom-up
+    decision loop runs per column, over plain floats.
     """
-    crop = grid[:, column[0]: column[1]]
-    n_lines = crop.shape[0]
-    line_blank = crop.all(axis=1)
-    row_vspacings = line_blank.astype(np.uint8)
+    if not items:
+        return []
+    gi = np.array([k for k, _c, _b in items], dtype=np.int64)
+    w = stack.w[gi]
+    c0 = np.minimum([c[0] for _k, c, _b in items], w)
+    c1 = np.maximum(c0, np.minimum([c[1] for _k, c, _b in items], w))
+    h = stack.h[gi]
+    off = np.zeros(len(items) + 1, dtype=np.int64)
+    np.cumsum(h, out=off[1:])
+    line = np.arange(off[-1]) - np.repeat(off[:-1], h)
+    rows = np.repeat(stack.starts[gi], h) + line
+    content = np.zeros((len(stack.m), stack.m.shape[1] + 1), dtype=np.int32)
+    np.cumsum(stack.m == 0, axis=1, dtype=np.int32, out=content[:, 1:])
+    ca, cb = np.repeat(c0, h), np.repeat(c1, h)
+    vspacings = (content[rows, ca] == content[rows, cb]).astype(np.uint8)
+    nb = np.flatnonzero(vspacings == 0)
+    lo = np.searchsorted(nb, off[:-1])
+    hi = np.searchsorted(nb, off[1:])
+    pat = _row_patterns(content, rows[nb], ca[nb], cb[nb])
+    del content
 
-    pat = _row_patterns(crop)
-    nonblank = np.nonzero(~line_blank)[0]
-    all_rows: list[list[int]] = [[v_start(i), v_end(i)] for i in nonblank]
-    all_patterns: list[int] = [int(p) for p in pat[nonblank]]
-    if not all_rows:
-        return [], row_vspacings
+    # measurement space: quantized v-units (inclusive row ends), or true
+    # pixels for a column with a banded content line
+    has = np.zeros(len(line), dtype=bool)
+    y0 = np.zeros(len(line))
+    y1 = np.zeros(len(line))
+    banded = [k for k, (_g, _c, b) in enumerate(items) if b is not None and len(b[0])]
+    if banded:
+        at = np.concatenate([off[k] + items[k][2][0] for k in banded])
+        bands = np.concatenate([items[k][2][1] for k in banded])
+        has[at] = True
+        y0[at], y1[at] = bands[:, 0], bands[:, 1]
+    line, has, y0, y1 = line[nb], has[nb], y0[nb], y1[nb]
+    n_anchor = np.zeros(len(nb) + 1, dtype=np.int64)
+    np.cumsum(has, out=n_anchor[1:])
+    px = np.repeat(n_anchor[hi] > n_anchor[lo], hi - lo)
+    _fill_bands(line, y0, y1, has, px & ~has,
+                np.repeat(lo, hi - lo), np.repeat(hi, hi - lo))
+    top = np.where(px, y0, V_UNIT * line)
+    bot = np.where(px, y1 - 1.0, V_UNIT * line + LINE_H)
 
-    # px mode needs at least one TRUE band among this column's content
-    # lines: with zero anchors every band would be synthetic and the px
-    # thresholds meaningless — fall back to quantized mode instead
-    # (round-4 ADVICE: never mix coordinate systems).
-    anchors = (
-        [int(i) for i in nonblank if line_px.get(int(i)) is not None]
-        if line_px is not None else []
+    def th(px_value, quantized_value):
+        return np.where(px, px_value, quantized_value)
+
+    th_single = th(REF_MIN_SINGLE_ROW_GROUP_HEIGHT_PX, MIN_SINGLE_ROW_GROUP_HEIGHT)
+    height = bot - top
+    # spacing[i]: from line i's bottom to line i+1's top, the gap the
+    # sweep meets at line i (its column's last line has none)
+    spacing, nxt_height, last_spacing = (np.zeros(len(top)) for _ in range(3))
+    spacing[:-1] = top[1:] - bot[:-1]
+    nxt_height[:-1] = height[1:]
+    hard = (
+        (spacing >= th(REF_MIN_SPACING_HARD_SPLIT_PX, MIN_SPACING_HARD_SPLIT))
+        # text-space block rule (quantized mode only)
+        | (~px & (spacing >= MIN_BLOCK_SPLIT))
+        | ((nxt_height >= th_single)
+           & (spacing > th(REF_COMPACT_MIN_SPACING_PX, 1)))
     )
-    if not anchors:
-        # quantized v-unit measurement space (inclusive row ends)
-        meas = all_rows
-        th_hard = MIN_SPACING_HARD_SPLIT
-        th_soft = MIN_SPACING_SOFT_SPLIT
-        th_single = MIN_SINGLE_ROW_GROUP_HEIGHT
-        th_title_sp = TITLE_MIN_SPACING
-        th_title_h = TITLE_MIN_HEIGHT
-        th_outer_lo, th_outer_hi = 2, MIN_BLOCK_SPLIT
-        th_compact = 1
-        th_block = MIN_BLOCK_SPLIT
-    else:
-        # true pixel measurement space, reference thresholds verbatim.
-        # [y0, y1) half-open extents convert to the reference's inclusive
-        # row convention (rows[i] = [first_ink_row, last_ink_row]).
-        # Lines WITHOUT true geometry (pdfmini emits meta=None when ty is
-        # unknown) interpolate between their nearest true-geometry
-        # neighbors — a raw line_index * pitch fallback would sit in a
-        # different coordinate system than its neighbors' raster y's and
-        # drive arbitrary split/merge decisions (round-4 ADVICE).
-        meas = []
-        for i in nonblank:
-            ii = int(i)
-            ext = line_px.get(ii)
-            if ext is None:
-                at = bisect.bisect_left(anchors, ii)
-                p = anchors[at - 1] if at > 0 else None
-                n = anchors[at] if at < len(anchors) else None
-                if p is not None and n is not None:
-                    t = (ii - p) / (n - p)
-                    pe, ne = line_px[p], line_px[n]
-                    ext = [
-                        pe[0] + t * (ne[0] - pe[0]),
-                        pe[1] + t * (ne[1] - pe[1]),
-                    ]
-                elif p is not None:
-                    pe = line_px[p]
-                    d = (ii - p) * REF_LINE_PITCH_PX
-                    ext = [pe[0] + d, pe[1] + d]
-                else:
-                    ne = line_px[n]
-                    d = (n - ii) * REF_LINE_PITCH_PX
-                    ext = [ne[0] - d, ne[1] - d]
-            meas.append([float(ext[0]), float(ext[1]) - 1.0])
-        th_hard = REF_MIN_SPACING_HARD_SPLIT_PX
-        th_soft = REF_MIN_SPACING_SOFT_SPLIT_PX
-        th_single = REF_MIN_SINGLE_ROW_GROUP_HEIGHT_PX
-        th_title_sp = REF_TITLE_MIN_SPACING_PX
-        th_title_h = REF_TITLE_MIN_HEIGHT_PX
-        th_outer_lo, th_outer_hi = REF_OUTER_MERGE_MIN_SPACING_PX, None
-        th_compact = REF_COMPACT_MIN_SPACING_PX
-        th_block = None  # no text-space block rule: true gaps are known
+    # the sweep's previous spacing and row height: 0 at the second-last
+    # line, where it starts comparing
+    last_spacing[:-1] = spacing[1:]
+    last_height = nxt_height.copy()
+    second_last = hi[hi - lo >= 2] - 2
+    last_spacing[second_last] = last_height[second_last] = 0.0
+    # hierarchical outer-row merge (pseg.py:508-516, ref >=5px); in
+    # quantized mode gated below MIN_BLOCK_SPLIT so it never crosses a
+    # blank text line (always a block boundary there); the reference has
+    # no upper bound, so px mode has none
+    outer = (
+        (spacing >= th(REF_OUTER_MERGE_MIN_SPACING_PX, 2))
+        & (px | (spacing < MIN_BLOCK_SPLIT))
+        & (spacing >= last_spacing)
+        & (last_height < th_single)
+    )
+    title = (pat != 0) & (
+        ((height >= th(REF_TITLE_MIN_HEIGHT_PX, TITLE_MIN_HEIGHT))
+         & (spacing >= th(REF_TITLE_MIN_SPACING_PX, TITLE_MIN_SPACING)))
+        | (height <= spacing)
+    )
+    soft = spacing > th(REF_MIN_SPACING_SOFT_SPLIT_PX, MIN_SPACING_SOFT_SPLIT)
+    small = (height < th_single).tolist()
+    pat, spacing, hard, outer, title, soft, line = (
+        a.tolist() for a in (pat, spacing, hard, outer, title, soft, line)
+    )
 
-    # the sweep runs bottom-up, so rows/groups are accumulated in
-    # DESCENDING order with O(1) appends (cur[-1] = row processed last,
-    # physically lowest-index-so-far) and reversed once at the end --
-    # a front-insert here would make one big group O(n^2) and stall on
-    # degenerate 50k-line turns.  Groups hold INDICES into all_rows while
-    # sweeping (decisions read the measurement space, output the v-rows).
-    groups_desc: list[list[int]] = []
-    cur: list[int] = []
-    rows_spacings = 0.0
-    last_spacing = 0.0
-    last_row_height = 0.0
-    row_patterns = [False, False, False, False]
-    for i in reversed(range(len(all_rows))):
-        row_patterns[all_patterns[i]] = True
-        if not cur:
-            cur.append(i)
-            last_spacing = 0.0
-        else:
-            spacing = meas[cur[-1]][0] - meas[i][1]
-            height = meas[i][1] - meas[i][0]
-            prev0 = groups_desc[-1][-1] if groups_desc else None
-            if (
-                # hierarchical outer-row merge (pseg.py:508-516, ref >=5px);
-                # in quantized mode gated below MIN_BLOCK_SPLIT so it never
-                # crosses a blank text line (always a block boundary there);
-                # the reference has no upper bound, so px mode has none
-                spacing >= th_outer_lo
-                and (th_outer_hi is None or spacing < th_outer_hi)
-                and spacing >= last_spacing
-                and len(cur) == 1
-                and groups_desc
-                and meas[prev0][1] - meas[prev0][0] < th_single
-                and last_row_height < th_single
-            ):
-                # outer-level content row belongs to the group just formed
-                # (pseg.py:508-516)
-                groups_desc[-1].append(cur[-1])
+    # the bottom-up sweep per column.  Rows and groups accumulate in
+    # DESCENDING order with O(1) appends (cur[-1] = the line processed
+    # last) and are reversed once at the end -- a front-insert would make
+    # one big group O(n^2) and stall on degenerate 50k-line turns.
+    out = []
+    for a, b, v0, v1 in zip(
+        lo.tolist(), hi.tolist(), off[:-1].tolist(), off[1:].tolist()
+    ):
+        if a == b:
+            out.append(([], vspacings[v0:v1]))
+            continue
+        groups_desc: list[list[int]] = []
+        cur = [b - 1]
+        rows_spacings = 0.0
+        row_patterns = [False, False, False, False]
+        row_patterns[pat[b - 1]] = True
+        for i in range(b - 2, a - 1, -1):
+            p = pat[i]
+            row_patterns[p] = True
+            if (outer[i] and len(cur) == 1 and groups_desc
+                    and small[groups_desc[-1][-1]]):
+                # outer-level content row belongs to the group just
+                # formed (pseg.py:508-516)
+                groups_desc[-1].append(cur[0])
                 rows_spacings = 0.0
-                cur = []
-            elif (
-                spacing >= th_hard
-                # text-space block rule (quantized mode only)
-                or (th_block is not None and spacing >= th_block)
-                or (
-                    len(cur) >= 1
-                    and meas[cur[-1]][1] - meas[cur[-1]][0] >= th_single
-                    and spacing > th_compact
-                )
-                or (
-                    len(cur) >= 2
-                    and row_patterns[0]
-                    and row_patterns[1]
-                    and row_patterns[2]
-                    and all_patterns[i + 1] == 2
-                    and all_patterns[i] == 1
-                )
-                or (
-                    len(cur) >= 2
-                    and row_patterns[0]
-                    and row_patterns[1]
-                    and all_patterns[i + 1] == 0
-                    and all_patterns[i] == 1
-                    and spacing
-                    > rows_spacings / (len(cur) - 1) * MIN_SPACING_MULTIPLE
-                )
-                or (
-                    len(cur) >= 2
-                    and spacing
-                    > rows_spacings / (len(cur) - 1) * MIN_SPACING_MULTIPLE
-                    and spacing > th_soft
-                )
-                or (
-                    i == 0
-                    and all_patterns[i] != 0
-                    and (
-                        (height >= th_title_h and spacing >= th_title_sp)
-                        or height <= spacing
-                    )
-                )
+                cur = [i]
+                continue
+            sp = spacing[i]
+            if (
+                hard[i]
+                or (i == a and title[i])
+                or (len(cur) >= 2 and (
+                    (row_patterns[0] and row_patterns[1] and row_patterns[2]
+                     and pat[i + 1] == 2 and p == 1)
+                    or (sp > rows_spacings / (len(cur) - 1) * MIN_SPACING_MULTIPLE
+                        and (soft[i] or (row_patterns[0] and row_patterns[1]
+                                         and pat[i + 1] == 0 and p == 1)))
+                ))
             ):
                 groups_desc.append(cur)
                 row_patterns = [False, False, False, False]
                 rows_spacings = 0.0
-                cur = []
+                cur = [i]
             else:
-                rows_spacings += spacing
-            cur.append(i)
-            last_spacing = spacing
-            last_row_height = meas[i][1] - meas[i][0]
-    if cur:
+                rows_spacings += sp
+                cur.append(i)
         groups_desc.append(cur)
-    groups_desc.reverse()
-    return (
-        [[all_rows[j] for j in reversed(g)] for g in groups_desc],
-        row_vspacings,
-    )
+        out.append((
+            [[[V_UNIT * line[j], V_UNIT * line[j] + LINE_H] for j in reversed(g)]
+             for g in reversed(groups_desc)],
+            vspacings[v0:v1],
+        ))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -671,16 +703,10 @@ def row_hspacings_for_groups(
     content row, so one pass per stack equals one pass per group
     (tests/test_grid.py::test_hspacings_batched) at a fixed numpy cost
     per stack."""
-    h = np.array([len(rows) for _grid, _column, rows in groups], dtype=np.int64)
-    w = np.array([grid[:, column[0]: column[1]].shape[1]
-                  for grid, column, _rows in groups], dtype=np.int64)
-    starts = np.zeros(len(groups), dtype=np.int64)
-    np.cumsum(h[:-1] + 1, out=starts[1:])
-    m = np.zeros((int(starts[-1] + h[-1]), int(w.max())), dtype=np.uint8)
-    for (grid, column, rows), s, width in zip(groups, starts.tolist(), w.tolist()):
-        m[s: s + len(rows), :width] = grid[
-            [r0 // V_UNIT for (r0, _r1) in rows], column[0]: column[1]
-        ]
+    m, starts, h, w = _stack_grids([
+        grid[[r0 // V_UNIT for (r0, _r1) in rows], column[0]: column[1]]
+        for grid, column, rows in groups
+    ])
     row_w = np.repeat(w, h + 1)[: len(m)]
     sr, sc, ec = _fold_spacing_runs(m, row_w)
     first = np.zeros(len(m), dtype=np.int64)
@@ -1355,22 +1381,31 @@ def group_bboxes(
 # full per-turn parse (analogue of pseg.parse, pseg.py:17-111)
 # ---------------------------------------------------------------------------
 
-def _line_px_for_column(
-    column: list[int], line_geometry: list[dict] | None
-) -> dict[int, tuple[float, float]] | None:
-    """Pick the geometry region with max char-range overlap for a detected
-    column and return its {text_line: (y0_px, y1_px)} map (keys may arrive
-    as strings from JSON manifests)."""
-    if not line_geometry:
-        return None
+def _line_bands(lines, n_lines: int) -> tuple[np.ndarray, np.ndarray]:
+    """A geometry region's line bands as ``(lines, bands)`` arrays, kept
+    to lines ``0..n_lines-1``.  ``lines`` is ``{line: [y0_px, y1_px]}``
+    (keys may arrive as strings from JSON manifests; a None band is no
+    band) or already ``(lines, (k, 2) bands)``."""
+    if isinstance(lines, dict):
+        bands = {int(k): v for k, v in lines.items()}
+        bands = {k: v for k, v in bands.items() if v is not None}
+        idx = np.array(list(bands), dtype=np.int64)
+        y = np.array([[v[0], v[1]] for v in bands.values()], dtype=np.float64)
+        lines = idx, y.reshape(-1, 2)
+    idx, y = lines
+    keep = (idx >= 0) & (idx < n_lines)
+    return idx[keep], y[keep]
+
+
+def _line_px_for_column(column: list[int], regions: list | None):
+    """The line bands of the geometry region ``(x0, x1, bands)`` with
+    max char-range overlap for a detected column, or None."""
     best, besto = None, 0
-    for region in line_geometry:
-        o = min(column[1], region["x1"]) - max(column[0], region["x0"])
+    for x0, x1, bands in regions or ():
+        o = min(column[1], x1) - max(column[0], x0)
         if o > besto:
-            best, besto = region, o
-    if best is None:
-        return None
-    return {int(k): tuple(v) for k, v in best["lines"].items()}
+            best, besto = bands, o
+    return best
 
 
 def parse_grid(
@@ -1388,39 +1423,57 @@ def parse_grids(
     hough_pxs: list | None = None,
 ) -> list[dict]:
     """Run the full stage chain on a batch of occupancy grids, one result
-    dict per grid.  Columns, row groups (stages 1-2) and group boxes
-    (stage 6) run per grid; the hspacings folds and vertical lines
-    (stages 3-4, ``row_hspacings_for_groups``) and the rectangle chain
-    with the intersection search (stage 5, ``_stack_tables``) run once per
-    stack of row groups -- every row group of the batch, cut into stacks
-    by cells (``_stack_chunks``); ``build_table`` and ``find_cells`` run
-    per table.
+    dict per grid.  Columns and row groups (stages 1-2,
+    ``columns_from_grid`` and ``row_groups_from_column``) run once per
+    stack of grids; the hspacings folds and vertical lines (stages 3-4,
+    ``row_hspacings_for_groups``) and the rectangle chain with the
+    intersection search (stage 5, ``_stack_tables``) run once per stack of
+    row groups -- every row group of the batch.  Both kinds of stack are
+    cut by cells (``_stack_chunks``).  Group boxes (stage 6) run per grid,
+    ``build_table`` and ``find_cells`` per table.
 
     Per grid, ``line_geometries`` / ``hough_pxs`` (optional): true
     sub-char geometry from a caller that has it (PDF coordinates, the
     reference-fixture transcriber).  A line geometry is a list of regions
-    ``{"x0": char, "x1": char, "lines": {line: [y0_px, y1_px]}}``; each
-    detected column uses the region with max x-overlap for the reference-
-    threshold pixel sweep (see row_groups_from_column).  hough_px feeds
-    the pixel-space column stage (see columns_from_grid).  Both default
-    to None = pure text-space quantized behavior."""
+    ``{"x0": char, "x1": char, "lines": bands}``, bands being
+    ``{line: [y0_px, y1_px]}`` (keys may be strings, from JSON) or
+    pdfmini's ``(line indices, (k, 2) bands)`` arrays; they are turned
+    into arrays here, once.  Each detected column uses the region with
+    max x-overlap for the reference-threshold pixel sweep (see
+    row_groups_from_column).  hough_px feeds the pixel-space column stage
+    (see columns_from_grid).  Both default to None = pure text-space
+    quantized behavior."""
     n = len(grids)
     line_geometries = line_geometries or [None] * n
     hough_pxs = hough_pxs or [None] * n
+    # stages 1-2 once per stack of grids, cut like the row-group stacks
+    layout: list = [None] * n  # (columns, spacings, per column (groups, vspacings))
+    for chunk in _stack_chunks([g.shape[0] for g in grids],
+                               [g.shape[1] for g in grids]):
+        stack = _stack_grids([grids[i] for i in chunk])
+        found = columns_from_grid(stack, [hough_pxs[i] for i in chunk])
+        items = []
+        for k, i in enumerate(chunk):
+            regions = [
+                (r["x0"], r["x1"], _line_bands(r["lines"], grids[i].shape[0]))
+                for r in line_geometries[i] or ()
+            ]
+            items += [(k, column, _line_px_for_column(column, regions))
+                      for column in found[k][0]]
+        grouped = iter(row_groups_from_column(stack, items))
+        for k, i in enumerate(chunk):
+            layout[i] = (*found[k], [next(grouped) for _ in found[k][0]])
+
     out: list[dict] = []
     groups: list[tuple] = []  # (grid, column, rows) of every row group
     where: list[tuple] = []   # (result, col_idx, grp_idx) of each
-    for grid, geometry, hough_px in zip(grids, line_geometries, hough_pxs):
-        columns, spacings = columns_from_grid(grid, hough_px=hough_px)
+    for grid, (columns, spacings, col_rows) in zip(grids, layout):
         res: dict = {"columns": columns, "spacings": spacings,
                      "column_row_groups": {}, "column_row_vspacings": {}}
         for key in ("column_row_grp_row_spacings",
                     "column_row_grp_build_table", "column_row_grp_cells"):
             res[key] = {i: {} for i in range(len(columns))}
-        for col_idx, column in enumerate(columns):
-            col_groups, vspac = row_groups_from_column(
-                grid, column, line_px=_line_px_for_column(column, geometry)
-            )
+        for col_idx, (column, (col_groups, vspac)) in enumerate(zip(columns, col_rows)):
             res["column_row_groups"][col_idx] = col_groups
             res["column_row_vspacings"][col_idx] = vspac
             for grp_idx, rows in enumerate(col_groups):

@@ -35,6 +35,15 @@ text inside them anyway).
 
 The extracted lines feed the SAME grid kernel as plain-text turns, so PDF
 payloads get identical layout analysis (columns, tables, boilerplate).
+
+``pdf_text_lines_geometries`` decodes a batch of payloads (an Arrow batch
+in the pipeline).  The document walk -- object table, page order, fonts,
+``/Contents`` and ``/MediaBox``, or the raw-scan fallback's streams --
+runs per payload, with every pattern compiled once at import.  The
+content-stream interpreter (``_stream_lines_meta``) then runs once over
+every stream of the batch, and the lines' pixel bands are computed for
+the whole batch as arrays.  A batch holding more decoded stream bytes
+than ``_MAX_CHUNK_STREAM_BYTES`` does this a chunk of payloads at a time.
 """
 
 from __future__ import annotations
@@ -42,6 +51,11 @@ from __future__ import annotations
 import re
 import struct
 import zlib
+from itertools import chain
+
+import numpy as np
+
+from .grid import _ranges
 
 # the dict must be the one BELONGING to this stream: `[^<>]|<<.*?>>`
 # keeps the match inside a single (possibly one-level-nested) dict, so a
@@ -52,7 +66,25 @@ _STREAM_RE = re.compile(
 )
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d|\s+\d+\s+R)")
 _ENDSTREAM_RE = re.compile(rb"\s*endstream")
-_OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)\bendobj", re.DOTALL)
+# an object body runs to the first ``endobj`` after a word boundary; the
+# body is taken a non-``e`` run at a time, so only ``e`` bytes are tried
+_OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b((?:[^e]++|e)*?)\bendobj")
+_WS_RE = re.compile(rb"\s")
+_STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
+_W_RE = re.compile(rb"/W\s*\[([^\]]*)\]")
+_INDEX_RE = re.compile(rb"/Index\s*\[([^\]]*)\]")
+_SIZE_RE = re.compile(rb"/Size\s+(\d+)")
+_PREV_RE = re.compile(rb"/Prev\s+(\d+)")
+_N_RE = re.compile(rb"/N\s+(\d+)")
+_FIRST_RE = re.compile(rb"/First\s+(\d+)")
+_CATALOG_RE = re.compile(rb"/Type\s*/Catalog\b")
+_PAGE_RE = re.compile(rb"/Type\s*/Page\b")
+_KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]")
+_REFS_RE = re.compile(rb"(\d+)\s+\d+\s+R")
+_CONTENTS_RE = re.compile(rb"/Contents\s*(\[[^\]]*\]|\d+\s+\d+\s+R)")
+_MEDIA_BOX_RE = re.compile(
+    rb"/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)"
+)
 _ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"(": b"(", b")": b")", b"\\": b"\\",
@@ -147,7 +179,7 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes | None:
 
 
 def _asciihex_decode(data: bytes) -> bytes | None:
-    body = re.sub(rb"\s", b"", data.split(b">", 1)[0])
+    body = _WS_RE.sub(b"", data.split(b">", 1)[0])
     if len(body) % 2:
         body += b"0"
     try:
@@ -207,6 +239,13 @@ _CODECS = {
     b"RunLengthDecode": _runlength_decode,
 }
 _DECODE_PARMS_RE = re.compile(rb"/DecodeParms\s*(\[.*?\]|<<.*?>>)", re.S)
+_PARMS_ITEM_RE = re.compile(rb"<<.*?>>|[^\s<>]+", re.S)
+_FILTER_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
+_FILTER_NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
+_PARM_RE = {
+    key: re.compile(rb"/" + key + rb"\s+(\d+)")
+    for key in (b"EarlyChange", b"Predictor", b"Columns")
+}
 
 
 def _stage_parms(d: bytes, n_stages: int) -> list[bytes] | None:
@@ -220,7 +259,7 @@ def _stage_parms(d: bytes, n_stages: int) -> list[bytes] | None:
     value = m.group(1)
     parms = (
         [value] if value.startswith(b"<<")
-        else re.findall(rb"<<.*?>>|[^\s<>]+", value[1:-1], re.S)
+        else _PARMS_ITEM_RE.findall(value[1:-1])
     )
     # an indirect reference ("5 0 R") or a count mismatch fits no stage
     if len(parms) != n_stages or not all(
@@ -231,7 +270,7 @@ def _stage_parms(d: bytes, n_stages: int) -> list[bytes] | None:
 
 
 def _parm(parms: bytes, key: bytes, default: int) -> int:
-    m = re.search(rb"/" + key + rb"\s+(\d+)", parms)
+    m = _PARM_RE[key].search(parms)
     return int(m.group(1)) if m else default
 
 
@@ -242,8 +281,8 @@ def _decode_stream(d: bytes, data: bytes) -> bytes | None:
     inflates).  Each stage reads its own /DecodeParms entry: a PNG
     predictor is undone right after the Flate or LZW stage it belongs to,
     and LZW takes its /EarlyChange from there."""
-    fm = re.search(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)", d)
-    filters = re.findall(rb"/([A-Za-z0-9]+)", fm.group(1)) if fm else []
+    fm = _FILTER_RE.search(d)
+    filters = _FILTER_NAME_RE.findall(fm.group(1)) if fm else []
     stage_parms = _stage_parms(d, len(filters))
     if stage_parms is None:
         return None
@@ -302,7 +341,7 @@ def _xref_stream_entries(payload: bytes) -> dict[int, tuple[int, int, int]]:
     are the only pointer to objects packed inside object streams."""
     entries: dict[int, tuple[int, int, int]] = {}
     m = None
-    for m in re.finditer(rb"startxref\s+(\d+)", payload):
+    for m in _STARTXREF_RE.finditer(payload):
         pass  # last startxref wins (incremental updates)
     offset = int(m.group(1)) if m else None
     seen: set[int] = set()
@@ -318,16 +357,16 @@ def _xref_stream_entries(payload: bytes) -> dict[int, tuple[int, int, int]]:
         if not parts:
             break
         d, data = parts
-        wm = re.search(rb"/W\s*\[([^\]]*)\]", d)
+        wm = _W_RE.search(d)
         if not wm:
             break
         w = [int(x) for x in wm.group(1).split()]
         entry_len = sum(w)
-        im = re.search(rb"/Index\s*\[([^\]]*)\]", d)
+        im = _INDEX_RE.search(d)
         if im:
             idx = [int(x) for x in im.group(1).split()]
         else:
-            sm = re.search(rb"/Size\s+(\d+)", d)
+            sm = _SIZE_RE.search(d)
             idx = [0, int(sm.group(1))] if sm else [0, len(data) // entry_len]
         pos = 0
 
@@ -346,7 +385,7 @@ def _xref_stream_entries(payload: bytes) -> dict[int, tuple[int, int, int]]:
                 f3 = field(w[2], at + w[0] + w[1])
                 entries.setdefault(start + i, (t, f2, f3))
             pos += count * entry_len
-        pm = re.search(rb"/Prev\s+(\d+)", d)
+        pm = _PREV_RE.search(d)
         offset = int(pm.group(1)) if pm else None
     return entries
 
@@ -373,8 +412,8 @@ def _objects(payload: bytes) -> dict[int, bytes]:
         if not parts:
             continue
         d, data = parts
-        nm = re.search(rb"/N\s+(\d+)", d)
-        fm = re.search(rb"/First\s+(\d+)", d)
+        nm = _N_RE.search(d)
+        fm = _FIRST_RE.search(d)
         if not (nm and fm):
             continue
         n, first = int(nm.group(1)), int(fm.group(1))
@@ -395,33 +434,37 @@ def _objects(payload: bytes) -> dict[int, bytes]:
     return objs
 
 
+_REF_RE = {
+    name: re.compile(rb"/" + name + rb"\s+(\d+)\s+\d+\s+R")
+    for name in (b"Pages", b"ToUnicode")
+}
+_DICT_VALUE_RE = {
+    name: re.compile(rb"/" + name + rb"\s*(<<|\d+\s+\d+\s+R)")
+    for name in (b"Resources", b"Font", b"Encoding")
+}
+_DICT_DELIM_RE = re.compile(rb"<<|>>")
+
+
 def _ref(d: bytes, name: bytes) -> int | None:
-    m = re.search(rb"/" + name + rb"\s+(\d+)\s+\d+\s+R", d)
+    m = _REF_RE[name].search(d)
     return int(m.group(1)) if m else None
 
 
 def _balanced_dict(d: bytes, start: int) -> bytes | None:
-    """d[start:] begins with '<<'; return the balanced <<..>> slice."""
+    """d[start:] begins with '<<'; return the balanced <<..>> slice.  The
+    delimiters are scanned like a byte loop that steps two bytes over
+    each ``<<``/``>>`` and one over anything else."""
     depth = 0
-    i = start
-    while i < len(d) - 1:
-        pair = d[i: i + 2]
-        if pair == b"<<":
-            depth += 1
-            i += 2
-        elif pair == b">>":
-            depth -= 1
-            i += 2
-            if depth == 0:
-                return d[start:i]
-        else:
-            i += 1
+    for m in _DICT_DELIM_RE.finditer(d, start):
+        depth += 1 if d[m.start()] == 0x3C else -1
+        if depth == 0:
+            return d[start:m.end()]
     return None
 
 
 def _dict_value(objs: dict[int, bytes], d: bytes, name: bytes) -> bytes | None:
     """/Name <<inline dict>> or /Name N 0 R (resolved) -> dict bytes."""
-    m = re.search(rb"/" + name + rb"\s*(<<|\d+\s+\d+\s+R)", d)
+    m = _DICT_VALUE_RE[name].search(d)
     if not m:
         return None
     if m.group(1) == b"<<":
@@ -441,45 +484,44 @@ def _utf16be_hex(h: bytes) -> str:
     return raw.decode("utf-16-be", errors="replace")
 
 
+_CODESPACE_RE = re.compile(rb"begincodespacerange\s*<([0-9A-Fa-f]+)>")
+_BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.DOTALL)
+_BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.DOTALL)
+_HEX_RE = re.compile(rb"<([0-9A-Fa-f]+)>")
+_HEX_PAIR_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>")
+_RANGE_ARRAY_RE = re.compile(
+    rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*\[((?:\s*<[0-9A-Fa-f]+>)+)\s*\]"
+)
+_RANGE_BASE_RE = re.compile(
+    rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>"
+)
+
+
 def _parse_cmap(data: bytes) -> tuple[dict[int, str], int]:
     """ToUnicode CMap stream -> ({code: text}, code byte width)."""
     cmap: dict[int, str] = {}
     width = 0
-    m = re.search(
-        rb"begincodespacerange\s*<([0-9A-Fa-f]+)>", data
-    )
+    m = _CODESPACE_RE.search(data)
     if m:
         width = max(1, len(m.group(1)) // 2)
-    for block in re.finditer(
-        rb"beginbfchar(.*?)endbfchar", data, re.DOTALL
-    ):
-        for pm in re.finditer(
-            rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>", block.group(1)
-        ):
+    for block in _BFCHAR_RE.finditer(data):
+        for pm in _HEX_PAIR_RE.finditer(block.group(1)):
             src = int(pm.group(1), 16)
             if not width:
                 width = max(1, len(pm.group(1)) // 2)
             cmap[src] = _utf16be_hex(pm.group(2))
-    for block in re.finditer(
-        rb"beginbfrange(.*?)endbfrange", data, re.DOTALL
-    ):
+    for block in _BFRANGE_RE.finditer(data):
         body = block.group(1)
         # <lo> <hi> [<d1> <d2> ...] form
-        for rm in re.finditer(
-            rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*\[((?:\s*<[0-9A-Fa-f]+>)+)\s*\]",
-            body,
-        ):
+        for rm in _RANGE_ARRAY_RE.finditer(body):
             lo, hi = int(rm.group(1), 16), int(rm.group(2), 16)
             if not width:
                 width = max(1, len(rm.group(1)) // 2)
-            dsts = re.findall(rb"<([0-9A-Fa-f]+)>", rm.group(3))
+            dsts = _HEX_RE.findall(rm.group(3))
             for i, dst in enumerate(dsts[: hi - lo + 1]):
                 cmap[lo + i] = _utf16be_hex(dst)
         # <lo> <hi> <dst> form (dst increments)
-        for rm in re.finditer(
-            rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>",
-            body,
-        ):
+        for rm in _RANGE_BASE_RE.finditer(body):
             lo, hi = int(rm.group(1), 16), int(rm.group(2), 16)
             if not width:
                 width = max(1, len(rm.group(1)) // 2)
@@ -516,12 +558,18 @@ _GLYPH_NAMES = {
 }
 
 
+_UNI_NAME_RE = re.compile(r"uni[0-9A-Fa-f]{4}")
+_DIFFERENCES_RE = re.compile(rb"/Differences\s*\[(.*?)\]", re.DOTALL)
+_DIFFERENCES_TOK_RE = re.compile(rb"(\d+)|/([^\s/\[\]<>()]+)")
+_FONT_REF_RE = re.compile(rb"/([A-Za-z0-9_.+-]+)\s+(\d+)\s+\d+\s+R")
+
+
 def _glyph_to_text(name: str) -> str:
     if len(name) == 1:
         return name
     if name in _GLYPH_NAMES:
         return _GLYPH_NAMES[name]
-    if re.fullmatch(r"uni[0-9A-Fa-f]{4}", name):
+    if _UNI_NAME_RE.fullmatch(name):
         return chr(int(name[3:], 16))
     return "�"
 
@@ -530,12 +578,12 @@ def _parse_differences(enc: bytes) -> dict[int, str]:
     """/Encoding dict bytes -> {code: text} from its /Differences array
     (``[ code /name /name ... code /name ]`` — each number resets the
     code counter, each name consumes one code)."""
-    m = re.search(rb"/Differences\s*\[(.*?)\]", enc, re.DOTALL)
+    m = _DIFFERENCES_RE.search(enc)
     if not m:
         return {}
     out: dict[int, str] = {}
     code = 0
-    for tok in re.finditer(rb"(\d+)|/([^\s/\[\]<>()]+)", m.group(1)):
+    for tok in _DIFFERENCES_TOK_RE.finditer(m.group(1)):
         if tok.group(1) is not None:
             code = int(tok.group(1))
         else:
@@ -560,7 +608,7 @@ def _page_fonts(
     fd = _dict_value(objs, res, b"Font")
     if not fd:
         return fonts
-    for fm in re.finditer(rb"/([A-Za-z0-9_.+-]+)\s+(\d+)\s+\d+\s+R", fd):
+    for fm in _FONT_REF_RE.finditer(fd):
         fobj = objs.get(int(fm.group(2)))
         if not fobj:
             continue
@@ -630,14 +678,35 @@ _LIT = rb"(?:[^()\\]++|\\[\s\S])*+"
 for _ in range(_LIT_DEPTH):
     _LIT = rb"(?:[^()\\]++|\\[\s\S]|\(" + _LIT + rb"\))*+"
 
-# one token of a content stream we care about
+# one token of a content stream we care about; its first byte names its
+# kind.  The lookahead on the bytes a token can start with lets the scan
+# pass any other byte (blanks, delimiters) with one test instead of five.
 _TOK_RE = re.compile(
-    rb"\((?P<lit>" + _LIT + rb")\)"          # literal string
-    rb"|<(?P<hex>[0-9A-Fa-f\s]*)>"          # hex string
-    rb"|/(?P<name>[A-Za-z0-9_.+-]+)"        # name (font selection)
-    rb"|(?P<num>[-+]?\d*\.?\d+)"            # number
-    rb"|(?P<op>[A-Za-z'\"*]+)"              # operator
+    rb"(?=[(</\-+.0-9A-Za-z'\"*])(?:"
+    rb"\(" + _LIT + rb"\)"                  # literal string
+    rb"|<[0-9A-Fa-f\s]*>"                   # hex string
+    rb"|/[A-Za-z0-9_.+-]+"                  # name (font selection)
+    rb"|[-+]?\d*\.?\d+"                     # number
+    rb"|[A-Za-z'\"*]+"                      # operator
+    rb")"
 )
+# token kinds, by first byte
+_STR, _NAME, _NUM, _OP = range(1, 5)
+_KIND = np.zeros(256, dtype=np.int8)
+_KIND[list(b"(<")] = _STR
+_KIND[ord("/")] = _NAME
+_KIND[list(b"-+.0123456789")] = _NUM
+_KIND[list(b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz'\"*")] = _OP
+_KIND = _KIND.tobytes()  # looked up per token: indexing bytes gives an int
+
+# operator codes
+(_OTHER, _SHOW, _MOVE_SHOW, _NEXT_LINE, _TF, _TL, _TD, _TD_LEAD, _TM,
+ _BT_ET) = range(1, 11)
+_OP_CODE = {
+    b"Tj": _SHOW, b"TJ": _SHOW, b"'": _MOVE_SHOW, b'"': _MOVE_SHOW,
+    b"T*": _NEXT_LINE, b"Tf": _TF, b"TL": _TL, b"Td": _TD, b"TD": _TD_LEAD,
+    b"Tm": _TM, b"BT": _BT_ET, b"ET": _BT_ET,
+}
 
 
 def _show_text(
@@ -656,11 +725,23 @@ def _show_text(
     return "".join(out)
 
 
+def _string_bytes(tok: bytes) -> bytes:
+    """Raw bytes of a literal (``(..)``) or hex (``<..>``) string token."""
+    if tok[0] == 0x28:
+        return _decode_literal_bytes(tok[1:-1])
+    h = _WS_RE.sub(b"", tok[1:-1])
+    if len(h) % 2:
+        h += b"0"
+    return bytes.fromhex(h.decode("ascii"))
+
+
 def _stream_lines_meta(
-    data: bytes,
-    fonts: dict[bytes, tuple[dict[int, str], int]] | None = None,
-) -> tuple[list[str], list[tuple[float, float] | None]]:
-    """Walk one content stream's text operators -> (text lines, metas).
+    streams: list[tuple[bytes, dict[bytes, tuple[dict[int, str], int]] | None]],
+) -> tuple[list[list[str]], np.ndarray, np.ndarray, np.ndarray]:
+    """Walk the text operators of a batch of content streams, each given
+    with its page's font map (None: every string decodes as latin-1) ->
+    (text lines of each stream, then over all those lines in order:
+    placed, baseline ty in text space, font size).
 
     String tokens are buffered RAW until their show operator arrives (the
     current font decides decoding, and ``'`` / ``"`` mean
@@ -673,163 +754,134 @@ def _stream_lines_meta(
     * an empty-show line slot (``() Tj`` between two moves, the shape
       tool writers emit for blank source lines) yields a blank line;
     * a downward move materially larger than the nominal leading (the
-      smallest downward step seen so far, > 1.5x) yields
+      modal plausible downward step so far, > 1.5x) yields
       ``round(step/leading) - 1`` blank lines (writers that skip blank
       slots move 2x instead).
 
-    ``metas[i]`` is (baseline_ty_textspace, font_size) for line i, or
-    None for inserted blank lines / lines with no position info — the
-    geometry side-channel extract_turn threads into the kernel's true-
-    pixel thresholds."""
-    lines: list[str] = []
-    metas: list[tuple[float, float] | None] = []
-    cur: list[str] = []
-    strings: list[bytes] = []
-    nums: list[float] = []
-    last_name: bytes | None = None
-    font: tuple[dict[int, str], int] | None = None
-    ty: float | None = None   # current baseline y (text space, up)
-    size: float = 11.0        # current font size
-    leading: float | None = None  # TL / TD leading for T* ' "
-    unit: float | None = None     # nominal single-line downward step
-    step_counts: dict[float, int] = {}  # candidate leadings -> frequency
-    shown = False             # a show op happened on the current line
+    A line is placed when its baseline is known; inserted blank lines and
+    lines with no position info are not -- the geometry side-channel
+    extract_turn threads into the kernel's true-pixel thresholds.
 
-    def newline():
-        nonlocal cur, shown
-        text = "".join(cur).rstrip()
-        if text:
-            lines.append(text)
-            metas.append((ty, size) if ty is not None else None)
-        elif shown:
-            # an explicit empty line slot (blank source line)
-            lines.append("")
-            metas.append(None)
-        cur = []
-        shown = False
-
-    def vmove(dy: float | None, absolute_to: float | None = None):
-        """Flush the line, emit gap blank lines for multi-leading
-        downward moves, update ty."""
-        nonlocal ty, unit
-        newline()
-        if absolute_to is not None:
-            dy = (absolute_to - ty) if ty is not None else None
-            new_ty = absolute_to
-        else:
-            new_ty = (ty + dy) if (ty is not None and dy is not None) else None
-        if dy is not None and dy < 0:
-            step = -dy
-            gap = round(step / unit) if unit is not None else 0
-            if unit is not None and step > 1.5 * unit:
-                for _ in range(min(20, gap - 1)):
-                    lines.append("")
-                    metas.append(None)
-            # a step within 10% of a whole multiple (2x or more) of the
-            # leading is a paragraph gap and does not vote: one-line
-            # paragraphs would outvote the leading.  Other larger steps
-            # still vote, so a body leading 1.6x an earlier small-type
-            # leading takes over once it is the mode.
-            # The nominal leading is the MODAL plausible step, not the
-            # minimum: a single small positional move (2pt footnote /
-            # superscript shift, common in real writers) would poison a
-            # min for the rest of the document, turning every normal
-            # 14pt leading into ~6 spurious blank lines.  Plausible =
-            # at least 0.8x the current font size (glyphs can't
-            # single-space tighter than that); ties break to the
-            # smaller step so paragraph gaps never outvote leadings.
-            paragraph = gap >= 2 and abs(step - gap * unit) <= 0.1 * gap * unit
-            if not paragraph and step >= max(1.0, 0.8 * size):
-                key = round(step, 1)
-                n = step_counts[key] = step_counts.get(key, 0) + 1
-                # only this key's count rose, so the mode is it or unit
-                if unit is None or (n, -key) > (step_counts[unit], -unit):
-                    unit = key
-        ty = new_ty
-
-    def show():
-        nonlocal shown
-        cur.extend(_show_text(s, font) for s in strings)
-        shown = True
-
-    for m in _TOK_RE.finditer(data):
-        kind = m.lastgroup
-        if kind == "lit":
-            strings.append(_decode_literal_bytes(m.group(kind)))
-            continue
-        if kind == "hex":
-            h = re.sub(rb"\s", b"", m.group(kind))
-            if len(h) % 2:
-                h += b"0"
-            strings.append(bytes.fromhex(h.decode("ascii")))
-            continue
-        if kind == "name":
-            last_name = m.group(kind)
-            continue
-        if kind == "num":
-            try:
-                nums.append(float(m.group(kind)))
-            except ValueError:
-                pass
-            continue
-        op = m.group(kind)
-        if op in (b"Tj", b"TJ"):
-            show()
-        elif op in (b"'", b'"'):
-            vmove(-leading if leading is not None else None)
-            show()
-        elif op == b"T*":
-            vmove(-leading if leading is not None else None)
-        elif op == b"Tf" and last_name is not None:
-            if nums:
-                size = nums[-1] or size
-            if fonts is not None:
-                font = fonts.get(last_name)
-        elif op == b"TL" and nums:
-            leading = nums[-1]
-        elif op in (b"Td", b"TD"):
-            if op == b"TD" and len(nums) >= 2:
-                leading = -nums[-1]
-            # vertical move => new line; pure horizontal move keeps line
-            if len(nums) >= 2 and nums[-1] != 0:
-                if ty is None:
-                    # first positioning: establish ty, no gap analysis
-                    newline()
-                    ty = nums[-1]
+    Each stream is tokenized by one findall, and a token's first byte
+    names its kind; only the operands an operator reads become floats."""
+    out: list[list[str]] = []
+    tys: list[float | None] = []
+    sizes: list[float] = []
+    for data, fonts in streams:
+        lines: list[str] = []
+        metas: list[float | None] = []
+        msizes: list[float] = []
+        cur: list[str] = []      # pieces of the current line
+        shown = False            # a show op happened on the current line
+        strings: list[bytes] = []  # the operands since the last operator
+        nums: list[bytes] = []
+        name = font = None       # last font name; the selected font
+        ty = None                # current baseline y (text space, up)
+        size = 11.0              # current font size
+        leading = None           # TL / TD leading for T* ' "
+        unit = None              # nominal single-line downward step
+        votes: dict[float, int] = {}  # candidate leadings -> frequency
+        # the stream's end flushes the line like ET
+        for tok in chain(_TOK_RE.findall(data), (b"ET",)):
+            kind = _KIND[tok[0]]
+            if kind != _OP:
+                if kind == _STR:
+                    strings.append(tok)
+                elif kind == _NUM:
+                    nums.append(tok)
                 else:
-                    vmove(nums[-1])
-            elif len(nums) >= 2 and abs(nums[-2]) > 0 and cur:
-                cur.append(" ")
-        elif op == b"Tm":
-            if len(nums) >= 6:
-                if ty is None:
-                    newline()
-                    ty = nums[-1]
-                else:
-                    vmove(None, absolute_to=nums[-1])
-            else:
-                newline()
-        elif op in (b"BT", b"ET"):
-            # BT resets the text matrix: position unknown until set
-            newline()
-            ty = None
-        strings.clear()
-        nums.clear()
-    newline()
-    # trim leading/trailing blank lines (keep interior structure)
-    lo, hi = 0, len(lines)
-    while lo < hi and not lines[lo].strip():
-        lo += 1
-    while hi > lo and not lines[hi - 1].strip():
-        hi -= 1
-    return lines[lo:hi], metas[lo:hi]
-
-
-def _stream_lines(
-    data: bytes,
-    fonts: dict[bytes, tuple[dict[int, str], int]] | None = None,
-) -> list[str]:
-    return _stream_lines_meta(data, fonts)[0]
+                    name = tok[1:]
+                continue
+            op = _OP_CODE.get(tok, _OTHER)
+            flush, dy, new_ty = op in (_MOVE_SHOW, _NEXT_LINE, _TM, _BT_ET), None, ty
+            if op == _TF:
+                if name is not None:
+                    if nums:
+                        size = float(nums[-1]) or size
+                    if fonts is not None:
+                        font = fonts.get(name)
+            elif op == _TL:
+                if nums:
+                    leading = float(nums[-1])
+            elif op == _TD or op == _TD_LEAD:
+                if len(nums) >= 2:
+                    v = float(nums[-1])
+                    if op == _TD_LEAD:
+                        leading = -v
+                    if v != 0:  # a vertical move starts a new line
+                        flush, new_ty = True, v
+                        if ty is not None:  # not the first positioning
+                            dy, new_ty = v, ty + v
+                    elif cur and float(nums[-2]) != 0:
+                        cur.append(" ")
+            elif op == _TM:
+                if len(nums) >= 6:
+                    new_ty = float(nums[-1])
+                    if ty is not None:
+                        dy = new_ty - ty
+            elif op == _BT_ET:
+                new_ty = None  # BT resets the text matrix
+            elif op == _MOVE_SHOW or op == _NEXT_LINE:  # down by the leading
+                if leading is not None:
+                    dy = -leading
+                new_ty = ty + dy if ty is not None and dy is not None else None
+            if flush:
+                text = "".join(cur).rstrip()
+                if text or shown:  # a show of nothing visible: a blank line
+                    lines.append(text)
+                    metas.append(ty if text else None)
+                    msizes.append(size)
+                cur, shown = [], False
+                if dy is not None and dy < 0:
+                    step = -dy
+                    paragraph = False
+                    if unit is not None:
+                        n = round(step / unit)
+                        if step > 1.5 * unit:
+                            gap = max(0, min(20, n - 1))
+                            lines += [""] * gap
+                            metas += [None] * gap
+                            msizes += [size] * gap
+                        # a step within 10% of a whole multiple (2x or
+                        # more) of the leading is a paragraph gap and does
+                        # not vote: one-line paragraphs would outvote the
+                        # leading.  Other larger steps still vote, so a
+                        # body leading 1.6x an earlier small-type leading
+                        # takes over once it is the mode.
+                        paragraph = n >= 2 and abs(step - n * unit) <= 0.1 * n * unit
+                    # The nominal leading is the MODAL plausible step, not
+                    # the minimum: a single small positional move (2pt
+                    # footnote / superscript shift) would poison a min for
+                    # the rest of the document.  Plausible = at least 0.8x
+                    # the current font size; ties break to the smaller step
+                    # so paragraph gaps never outvote leadings.
+                    if not paragraph and step >= max(1.0, 0.8 * size):
+                        key = round(step, 1)
+                        votes[key] = nk = votes.get(key, 0) + 1
+                        # only this key's count rose, so the mode is it or unit
+                        if unit is None or (nk, -key) > (votes[unit], -unit):
+                            unit = key
+                ty = new_ty
+            if op == _SHOW or op == _MOVE_SHOW:
+                cur += [_show_text(_string_bytes(s), font) for s in strings]
+                shown = True
+            strings.clear()
+            nums.clear()
+        # trim leading/trailing blank lines (keep interior structure)
+        lo, hi = 0, len(lines)
+        while lo < hi and not lines[lo]:
+            lo += 1
+        while hi > lo and not lines[hi - 1]:
+            hi -= 1
+        out.append(lines[lo:hi])
+        tys += metas[lo:hi]
+        sizes += msizes[lo:hi]
+    return (
+        out,
+        np.array([t is not None for t in tys], dtype=bool),
+        np.array([0.0 if t is None else t for t in tys]),
+        np.array(sizes),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -840,7 +892,7 @@ def _page_order(objs: dict[int, bytes]) -> list[int] | None:
     """Page object numbers in Catalog -> Pages -> Kids order."""
     root = None
     for body in objs.values():
-        if re.search(rb"/Type\s*/Catalog\b", body):
+        if _CATALOG_RE.search(body):
             root = body
             break
     if root is None:
@@ -857,22 +909,22 @@ def _page_order(objs: dict[int, bytes]) -> list[int] | None:
             continue
         seen.add(num)
         body = objs[num]
-        if re.search(rb"/Type\s*/Page\b", body):
+        if _PAGE_RE.search(body):
             order.append(num)
             continue
-        km = re.search(rb"/Kids\s*\[([^\]]*)\]", body)
+        km = _KIDS_RE.search(body)
         if km:
-            kids = re.findall(rb"(\d+)\s+\d+\s+R", km.group(1))
+            kids = _REFS_RE.findall(km.group(1))
             stack = [int(k) for k in kids] + stack
     return order or None
 
 
 def _page_content(objs: dict[int, bytes], page: bytes) -> list[bytes]:
     """Decoded content stream(s) of one page."""
-    cm = re.search(rb"/Contents\s*(\[[^\]]*\]|\d+\s+\d+\s+R)", page)
+    cm = _CONTENTS_RE.search(page)
     if not cm:
         return []
-    refs = [int(n) for n in re.findall(rb"(\d+)\s+\d+\s+R", cm.group(1))]
+    refs = [int(n) for n in _REFS_RE.findall(cm.group(1))]
     out = []
     for num in refs:
         parts = _object_stream_parts(objs.get(num, b""))
@@ -887,104 +939,156 @@ _REF_RASTER_NARROW_PX = 400.0  # the reference rasterizes min(w,h) -> 400px
 
 def _media_box(page: bytes) -> tuple[float, float]:
     """Page (width, height) in points; US-Letter default when absent."""
-    m = re.search(
-        rb"/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)",
-        page,
-    )
+    m = _MEDIA_BOX_RE.search(page)
     if not m:
         return 612.0, 792.0
     x0, y0, x1, y1 = (float(v) for v in m.groups())
     return abs(x1 - x0) or 612.0, abs(y1 - y0) or 792.0
 
 
-def _document_lines_geometry(
-    payload: bytes,
-) -> tuple[list[str], dict[int, list[float]]] | None:
-    """Object-table path: pages in catalog order, per-page font CMaps.
-    None when the document structure is absent/unresolvable (raw-scan
-    fallback applies).
+def _document_pages(payload: bytes) -> list[tuple] | None:
+    """Object-table path: each page in catalog order as (font map,
+    decoded content streams, height in points, raster scale).  None when
+    the document structure is absent/unresolvable or no page has content
+    (raw-scan fallback applies).
 
-    Returns (lines, geometry): geometry maps a line index to its TRUE ink
-    band ``[y0_px, y1_px)`` at the reference's raster scale (narrow side
-    -> 400px), pages stacked by cumulative page height — the
-    ``line_px`` side-channel extract_turn threads into the kernel so the
-    group sweep runs the reference's own pixel thresholds instead of the
-    quantized text analogues.  Band = baseline - 0.75*size (cap height)
-    to baseline + 0.25*size (descender), the nominal Type1 metrics; only
-    RELATIVE gaps and heights reach the thresholds, so nominal metrics
-    suffice.  Lines with no position info are simply absent."""
+    The scale is the reference's: it rasterizes EVERY page at narrow side
+    -> 400px, so a mixed-size document (letter body + A5 appendix) must
+    not inherit page 1's scale (round-4 ADVICE)."""
     objs = _objects(payload)
     if not objs:
         return None
     order = _page_order(objs)
     if not order:
         return None
-    out: list[str] = []
-    geom: dict[int, list[float]] = {}
-    any_content = False
-    offset_px = 0.0
+    pages = []
     for num in order:
         page = objs[num]
         page_w, page_h = _media_box(page)
-        # per-page raster scale: the reference rasterizes EVERY page at
-        # narrow-side -> 400px, so a mixed-size document (letter body +
-        # A5 appendix) must not inherit page 1's scale (round-4 ADVICE);
-        # pages stack in PX space with each page at its own scale
         scale = _REF_RASTER_NARROW_PX / max(min(page_w, page_h), 1.0)
         fonts = _page_fonts(objs, page)
-        streams = _page_content(objs, page)
-        if streams:
-            any_content = True
-        lines: list[str] = []
-        metas: list[tuple[float, float] | None] = []
-        for data in streams:
-            ls, ms = _stream_lines_meta(data, fonts)
-            lines.extend(ls)
-            metas.extend(ms)
-        if lines and out:
-            out.append("")
-        base = len(out)
-        out.extend(lines)
-        for i, meta in enumerate(metas):
-            if meta is None:
-                continue
-            ty, size = meta
-            top_pt = (page_h - ty) - 0.75 * size
-            geom[base + i] = [
-                offset_px + top_pt * scale,
-                offset_px + (top_pt + size) * scale,
-            ]
-        offset_px += page_h * scale
-    return (out, geom) if any_content else None
+        pages.append((fonts, _page_content(objs, page), page_h, scale))
+    return pages if any(streams for _f, streams, _h, _s in pages) else None
+
+
+# decoded content-stream bytes one chunk of a batch holds at once; a lone
+# larger document still runs, alone
+_MAX_CHUNK_STREAM_BYTES = 4 << 20
+
+
+def _lines_geometries(
+    walks: list[tuple[list[tuple], bool]],
+) -> list[tuple[list[str], tuple[np.ndarray, np.ndarray] | None]]:
+    """The walked (pages, geometric) of a chunk of payloads -> per payload
+    (text lines, geometry or None): the chunk's streams through one
+    ``_stream_lines_meta`` call, its pixel bands as arrays."""
+    lines, placed, ty, size = _stream_lines_meta([
+        (data, fonts)
+        for pages, _geometric in walks
+        for fonts, streams, _h, _s in pages
+        for data in streams
+    ])
+    out = []
+    # per page with geometry: (first line, lines, base, h, scale, offset,
+    # payload)
+    geo = []
+    k = flat = 0
+    for p, (pages, geometric) in enumerate(walks):
+        text: list[str] = []
+        offset_px = 0.0
+        for _fonts, streams, page_h, scale in pages:
+            page_lines = [ln for ls in lines[k: k + len(streams)] for ln in ls]
+            k += len(streams)
+            if page_lines and text:
+                text.append("")
+            if geometric:
+                geo.append((flat, len(page_lines), len(text), page_h, scale,
+                            offset_px, p))
+                offset_px += page_h * scale
+            text += page_lines
+            flat += len(page_lines)
+        out.append(text)
+    cols = list(zip(*geo)) if geo else [()] * 7
+    first, count, base, pid = (
+        np.array(cols[i], dtype=np.int64) for i in (0, 1, 2, 6)
+    )
+    page_h, scale, offset_px = (np.array(c, dtype=np.float64) for c in cols[3:6])
+    at = _ranges(first, count)[0]
+    dest = np.repeat(base - first, count) + at
+    pid, page_h, scale, offset_px = (
+        np.repeat(a, count) for a in (pid, page_h, scale, offset_px)
+    )
+    sel = placed[at]
+    at, dest, pid, page_h, scale, offset_px = (
+        a[sel] for a in (at, dest, pid, page_h, scale, offset_px)
+    )
+    top_pt = (page_h - ty[at]) - 0.75 * size[at]
+    bands = np.column_stack((
+        offset_px + top_pt * scale, offset_px + (top_pt + size[at]) * scale
+    ))
+    cut = np.searchsorted(pid, np.arange(len(walks) + 1)).tolist()
+    return [
+        (text, (dest[a:b], bands[a:b]) if geometric else None)
+        for text, (_pages, geometric), a, b in zip(out, walks, cut, cut[1:])
+    ]
+
+
+def pdf_text_lines_geometries(
+    payloads: list[bytes],
+) -> list[tuple[list[str], tuple[np.ndarray, np.ndarray] | None]]:
+    """A batch of PDF payloads -> per payload (text lines, true line
+    geometry or None).
+
+    Per payload, the document walk (object table, page order, fonts,
+    contents, media box; the raw-scan fallback's streams when there is no
+    document structure) runs in Python; then every content stream of the
+    batch goes through one ``_stream_lines_meta`` call, and the geometry
+    is computed for the whole batch as arrays.  A batch whose decoded
+    content streams exceed ``_MAX_CHUNK_STREAM_BYTES`` runs as several
+    such chunks, so memory is bounded by the chunk, not the batch.
+
+    Pages (document path) / content streams (fallback) are separated by
+    one blank line so the downstream grid kernel never merges blocks
+    across page boundaries -- the text-space analogue of the reference's
+    per-page processing.
+
+    Geometry, on the document path only (the fallback has no MediaBox to
+    anchor a scale): ``(lines, bands)``, the indices of the lines whose
+    baseline is known and their TRUE ink bands ``[y0_px, y1_px)``, a
+    ``(k, 2)`` array at the reference's raster scale (narrow side ->
+    400px), pages stacked by cumulative page height -- the ``line_px``
+    side-channel extract_turns threads into the kernel so the group
+    sweep runs the reference's own pixel thresholds instead of the
+    quantized text analogues.  Band = baseline - 0.75*size (cap height)
+    to baseline + 0.25*size (descender), the nominal Type1 metrics; only
+    RELATIVE gaps and heights reach the thresholds, so nominal metrics
+    suffice."""
+    out: list[tuple[list[str], tuple[np.ndarray, np.ndarray] | None]] = []
+    walks: list[tuple[list[tuple], bool]] = []  # (pages, geometric)
+    held = 0  # decoded stream bytes in walks
+    for payload in payloads:
+        pages = _document_pages(payload) if looks_like_pdf(payload) else []
+        geometric = bool(pages)  # the fallback has no MediaBox: no geometry
+        if pages is None:  # raw-scan fallback: each stream a page
+            pages = [(None, [data], 0.0, 0.0) for data in _content_streams(payload)]
+        size = sum(len(data) for _f, streams, _h, _s in pages for data in streams)
+        if walks and held + size > _MAX_CHUNK_STREAM_BYTES:
+            out += _lines_geometries(walks)
+            walks, held = [], 0
+        walks.append((pages, geometric))
+        held += size
+    return out + _lines_geometries(walks)
 
 
 def pdf_text_lines_geometry(
     payload: bytes,
 ) -> tuple[list[str], dict[int, list[float]] | None]:
-    """PDF payload -> (text lines, optional true line geometry).
-
-    Pages (document path) / content streams (fallback) are separated by
-    one blank line so the downstream grid kernel never merges blocks
-    across page boundaries -- the text-space analogue of the reference's
-    per-page processing.  Geometry (see _document_lines_geometry) is
-    available only on the document path; the raw-scan fallback returns
-    None (no MediaBox to anchor a scale)."""
-    if not payload or not payload.startswith(b"%PDF"):
-        return [], None
-    doc = _document_lines_geometry(payload)
-    if doc is not None:
-        return doc
-    out: list[str] = []
-    for data in _content_streams(payload):
-        lines = _stream_lines(data)
-        if lines and out:
-            out.append("")
-        out.extend(lines)
-    return out, None
-
-
-def pdf_text_lines(payload: bytes) -> list[str]:
-    return pdf_text_lines_geometry(payload)[0]
+    """``pdf_text_lines_geometries`` on a batch of one, with the geometry
+    as ``{line: [y0_px, y1_px]}``."""
+    lines, geom = pdf_text_lines_geometries([payload])[0]
+    if geom is None:
+        return lines, None
+    return lines, dict(zip(geom[0].tolist(), geom[1].tolist()))
 
 
 def looks_like_pdf(payload: bytes) -> bool:

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .extract import extract_turns_auto, extracted_text
-from .pdfmini import looks_like_pdf, pdf_text_lines_geometry
+from .pdfmini import looks_like_pdf, pdf_text_lines_geometries
 from .schema import EXTRACTION_SCHEMA
 
 
@@ -124,20 +124,30 @@ def _driver_memory() -> str:
     return f"{min(total // 2, 24 << 30) >> 20}m"
 
 
-def _decode(value: str | bytes | None) -> tuple[str, dict | None]:
-    """One input value -> (text, true line geometry or None)."""
-    if isinstance(value, str):
-        return value, None
-    if value is None:
-        return "", None
-    payload = bytes(value)
-    if looks_like_pdf(payload):
-        lines, line_px = pdf_text_lines_geometry(payload)
-        return "\n".join(lines), line_px
-    try:
-        return payload.decode("utf-8"), None
-    except UnicodeDecodeError:
-        return "", None
+def _decode(values) -> tuple[list[str], list]:
+    """A batch of input values -> (texts, true line geometries): text as
+    is; PDF payloads through one pdfmini batch; other bytes as strict
+    UTF-8; None and undecodable bytes as empty text."""
+    texts: list[str] = []
+    pdfs: dict[int, bytes] = {}  # position -> PDF payload
+    for value in values:
+        payload = value if value is None or isinstance(value, str) else bytes(value)
+        if isinstance(payload, bytes) and looks_like_pdf(payload):
+            pdfs[len(texts)] = payload
+            payload = ""
+        elif isinstance(payload, bytes):
+            try:
+                payload = payload.decode("utf-8")
+            except UnicodeDecodeError:
+                payload = ""
+        texts.append(payload or "")
+    geoms = [None] * len(texts)
+    if pdfs:
+        decoded = pdf_text_lines_geometries(list(pdfs.values()))
+        for i, (lines, geom) in zip(pdfs, decoded):
+            texts[i] = "\n".join(lines)
+            geoms[i] = geom
+    return texts, geoms
 
 
 def extract_rows(values) -> list[tuple]:
@@ -145,21 +155,19 @@ def extract_rows(values) -> list[tuple]:
     ``EXTRACTION_SCHEMA`` columns after the keys: (segments,
     extracted_text, n_segments, n_tables, n_chars_in, n_chars_out).
 
-    Text is used as is.  Payload bytes are decoded: a PDF through
-    pdfmini, keeping its TRUE line geometry (baselines on the reference's
-    raster scale, so the grid kernel's group sweep runs the reference's
-    own pixel thresholds -- sub-char leading decisions match what the
-    reference sees in its rasterized pixels); anything else as strict
-    UTF-8, which the auto dispatch routes to the HTML or text-grid path.
-    ``None`` and undecodable bytes become empty text: zero segments,
-    ``n_chars_in`` 0.  The geometry stays inside this call; it never
-    crosses Arrow.  The grid kernel runs once over the batch
+    Text is used as is.  Payload bytes are decoded: PDFs through one
+    pdfmini batch, keeping their TRUE line geometry (baselines on the
+    reference's raster scale, so the grid kernel's group sweep runs the
+    reference's own pixel thresholds -- sub-char leading decisions match
+    what the reference sees in its rasterized pixels); anything else as
+    strict UTF-8, which the auto dispatch routes to the HTML or text-grid
+    path.  ``None`` and undecodable bytes become empty text: zero
+    segments, ``n_chars_in`` 0.  The geometry stays inside this call; it
+    never crosses Arrow.  The grid kernel runs once over the batch
     (``extract.extract_turns_auto``)."""
-    decoded = [_decode(v) for v in values]
+    texts, geoms = _decode(values)
     rows = []
-    for (text, _), segs in zip(decoded, extract_turns_auto(
-        [text for text, _ in decoded], [px for _, px in decoded]
-    )):
+    for text, segs in zip(texts, extract_turns_auto(texts, geoms)):
         etext = extracted_text(segs)
         rows.append((
             [{"cindex": i, "type": s["type"], "content": s["content"],

@@ -28,6 +28,16 @@ def _grid(text):
     return g, lines
 
 
+def _columns(grid):
+    """Stage 1 on a stack of one grid."""
+    return G.columns_from_grid(G._stack_grids([grid]))[0]
+
+
+def _row_groups(grid, column):
+    """Stage 2 on one column of a stack of one grid."""
+    return G.row_groups_from_column(G._stack_grids([grid]), [(0, column, None)])[0]
+
+
 def _hs(grid, column, rows):
     """One group's hspacings profile, as a stack of one."""
     return G.row_hspacings_for_groups([(grid, column, rows)]).hs(0)
@@ -96,7 +106,7 @@ def _row_pattern(crop_line: np.ndarray) -> int:
 class TestColumns:
     def test_single_column(self):
         g, _ = _grid(TABLE_TURN)
-        columns, spacings = G.columns_from_grid(g)
+        columns, spacings = _columns(g)
         assert len(columns) == 1
         assert columns[0][0] == 0
 
@@ -107,14 +117,14 @@ class TestColumns:
                  "third right line with words"]
         lines = [(l.ljust(36) + r) for l, r in zip(left, right)]
         g, _ = _grid("\n".join(lines))
-        columns, spacings = G.columns_from_grid(g)
+        columns, spacings = _columns(g)
         assert len(columns) == 2
         assert columns[0][0] == 0
         assert columns[1][0] == 36
 
     def test_empty(self):
         g, _ = _grid("   ")
-        columns, _ = G.columns_from_grid(g)
+        columns, _ = _columns(g)
         assert columns == []
 
 
@@ -173,15 +183,18 @@ class TestRowGroups:
         rng = np.random.default_rng(11)
         for w in (1, 2, 3, 4, 5, 9, 40):
             crop = (rng.random((64, w)) < 0.7).astype(np.uint8)
-            vec = G._row_patterns(crop)
+            content = np.zeros((64, w + 1), dtype=np.int32)
+            np.cumsum(crop == 0, axis=1, out=content[:, 1:])
+            vec = G._row_patterns(content, np.arange(64), np.zeros(64, int),
+                                  np.full(64, w))
             for i in range(crop.shape[0]):
                 assert vec[i] == _row_pattern(crop[i]), (w, i)
 
     def test_blank_line_splits_groups(self):
         text = "para one line a\npara one line b\n\npara two line a"
         g, _ = _grid(text)
-        cols, _ = G.columns_from_grid(g)
-        groups, vspac = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, vspac = _row_groups(g, cols[0])
         assert len(groups) == 2
         assert [r[0] // G.V_UNIT for r in groups[0]] == [0, 1]
         assert [r[0] // G.V_UNIT for r in groups[1]] == [3]
@@ -190,8 +203,8 @@ class TestRowGroups:
     def test_adjacent_lines_one_group(self):
         text = "a b c d e f g h\ni j k l m n o p\nq r s t u v w x"
         g, _ = _grid(text)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         assert len(groups) == 1
         assert len(groups[0]) == 3
 
@@ -202,8 +215,8 @@ class TestRowHspacings:
     def test_narrow_gap_is_content(self):
         text = "aa bb  cc\naa bb  cc"
         g, _ = _grid(text)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         hs = _hs(g, cols[0], groups[0])
         # single space at col 2 folded into content; 2-wide gap at 5-6 kept
         assert hs[0, 2] == 0
@@ -211,8 +224,8 @@ class TestRowHspacings:
 
     def test_shape(self):
         g, _ = _grid(TABLE_TURN)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         hs = _hs(g, cols[0], groups[-1])
         assert hs.shape[0] == 4  # 4 table lines
 
@@ -222,8 +235,8 @@ class TestRowHspacings:
 class TestVerticalLines:
     def test_table_gaps_found(self):
         g, _ = _grid(TABLE_TURN)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         hs = _hs(g, cols[0], groups[-1])
         lines = _vlines(hs)
         xs = {ln[0][0] for ln in lines if ln[1][1] - ln[0][1] == 3}
@@ -234,8 +247,8 @@ class TestVerticalLines:
     def test_prose_has_no_tall_lines(self):
         text = "plain prose with single spaces only\nanother prose line of words"
         g, _ = _grid(text)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         hs = _hs(g, cols[0], groups[0])
         interior = [
             ln for ln in _vlines(hs)
@@ -250,8 +263,8 @@ class TestVerticalLines:
 class TestTablevspan:
     def _rects(self, text):
         g, _ = _grid(text)
-        cols, _ = G.columns_from_grid(g)
-        groups, _ = G.row_groups_from_column(g, cols[0])
+        cols, _ = _columns(g)
+        groups, _ = _row_groups(g, cols[0])
         stack = G.row_hspacings_for_groups([(g, cols[0], groups[-1])])
         rects = G.group_adjacent_lines(stack.lines)
         rects = G.remove_smaller_adjacent_rectangles(rects)
@@ -373,9 +386,9 @@ def test_hspacings_batched():
         if not text.strip() or "<" in text:
             continue
         grid, _lines = G.occupancy_from_text(text)
-        columns, _sp = G.columns_from_grid(grid)
+        columns, _sp = _columns(grid)
         for column in columns:
-            groups, _v = G.row_groups_from_column(grid, column)
+            groups, _v = _row_groups(grid, column)
             flat.extend((grid, column, rws) for rws in groups)
     # a bullet-shaped row stacked with wider groups: its fold must use its
     # own quarter width (here: no fold), not the stack's

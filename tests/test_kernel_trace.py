@@ -46,7 +46,9 @@ def test_trace_sees_the_batched_stages():
     out = kt.trace(SimpleNamespace(name="pdf_payloads", sample=sample))
     for stage in ("grid.hspacings_s", "grid.rect_filters_s",
                   "grid.table_build_s", "extract.tokenize_lines_s",
-                  "extract.collect_s", "pdfmini.parse_s"):
+                  "extract.collect_s", "pdfmini.parse_s",
+                  "grid.columns_s", "grid.row_groups_s",
+                  "pdfmini.geometry_share"):
         assert out[stage] > 0, stage
     assert out["extract.path_count.pdf"] == 20
     assert out["extract.path_count.grid"] == 40

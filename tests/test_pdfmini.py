@@ -9,9 +9,13 @@ from crrf_det_spark.pdfmini import (
     _lzw_decode,
     looks_like_pdf,
     make_pdf,
-    pdf_text_lines,
     pdf_text_lines_geometry,
 )
+
+
+def pdf_text_lines(payload: bytes) -> list[str]:
+    """A payload's text lines, without their geometry."""
+    return pdf_text_lines_geometry(payload)[0]
 
 
 def test_roundtrip_compressed_and_raw():
@@ -192,7 +196,7 @@ def test_cid_cmap_objstm_xref_stream_roundtrip():
     the raw-scan fallback sees 2-byte codes as latin-1 soup."""
     from crrf_det_spark.pdfmini import (
         _content_streams,
-        _stream_lines,
+        _stream_lines_meta,
         _xref_stream_entries,
         make_pdf_cid,
     )
@@ -209,8 +213,8 @@ def test_cid_cmap_objstm_xref_stream_roundtrip():
     # the raw fallback on the same payload garbles (codes are offset from
     # their characters by construction), proving the CMap did the work
     raw = []
-    for data in _content_streams(payload):
-        raw.extend(_stream_lines(data))
+    for ls in _stream_lines_meta([(d, None) for d in _content_streams(payload)])[0]:
+        raw.extend(ls)
     assert raw != lines
 
 
@@ -443,7 +447,7 @@ def test_parse_differences_forms():
 def test_differences_lzw_pdf_roundtrip():
     # digits ride control codes 0x01-0x0A on the wire; exact extraction
     # proves the LZW decode AND the Differences remap both ran
-    from crrf_det_spark.pdfmini import make_pdf_diff, pdf_text_lines
+    from crrf_det_spark.pdfmini import make_pdf_diff
 
     lines = [
         "Account      Q1      Q2",
@@ -463,7 +467,7 @@ def test_small_shift_does_not_poison_leading_unit():
     # 14pt leading would insert round(14/2)-1 = 6 spurious blank lines
     # and fragment paragraphs (round-4 ADVICE); the modal unit with the
     # 0.8*size plausibility floor ignores the sub-line move entirely
-    from crrf_det_spark.pdfmini import make_pdf, pdf_text_lines
+    from crrf_det_spark.pdfmini import make_pdf
 
     lines = ["para one line", "x2", "para two line", "para three line"]
     got = pdf_text_lines(make_pdf(lines, leadings={1: 2}))
@@ -561,8 +565,6 @@ def test_decode_parms_apply_per_filter_stage():
 def test_ascii85_content_stream_extracts():
     # a whole single-page PDF whose content stream is ASCII85-framed
     import base64
-
-    from crrf_det_spark.pdfmini import pdf_text_lines
 
     ops = b"BT /F1 11 Tf 72 760 Td (filtered line one) Tj " \
           b"0 -14 Td (filtered line two) Tj ET"

@@ -217,9 +217,9 @@ def test_never_crashes_on_arbitrary_text(text):
 @settings(max_examples=150, deadline=None)
 @given(st.binary(max_size=600))
 def test_pdf_parser_never_crashes(payload):
-    from crrf_det_spark.pdfmini import pdf_text_lines
+    from crrf_det_spark.pdfmini import pdf_text_lines_geometry
 
-    for ln in pdf_text_lines(b"%PDF-1.4\n" + payload):
+    for ln in pdf_text_lines_geometry(b"%PDF-1.4\n" + payload)[0]:
         assert isinstance(ln, str)
 
 

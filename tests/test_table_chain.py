@@ -291,7 +291,7 @@ def busy_group():
             for _ in range(40)
         ))
     grid, _lines = G.occupancy_from_text("\n".join(lines))
-    rows = [[G.v_start(i), G.v_end(i)] for i in range(len(lines))]
+    rows = [[G.V_UNIT * i, G.V_UNIT * i + G.LINE_H] for i in range(len(lines))]
     return (grid, [0, grid.shape[1]], rows)
 
 
